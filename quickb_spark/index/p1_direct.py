@@ -77,6 +77,7 @@ from quickb_spark.index.xxh import (
     hash_int_tail,
     hash_long_array,
 )
+from quickb_spark.taskpack import job_description, lpt_bins, run_packed
 
 __all__ = [
     "list_parquet_files",
@@ -93,6 +94,10 @@ RUNS_MARKER = "_RUNS"
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
 
 _DOC_COLS = ["repo", "path", "commit", "lang", "content"]
+
+#: Phase-0 sample work units: fixed, so the sampled rows (and the hot set)
+#: do not depend on cluster size.
+_SAMPLE_UNITS = 64
 
 
 def list_parquet_files(uri: str) -> list[tuple[str, int]]:
@@ -117,15 +122,8 @@ def plan_groups(
     """LPT bin-packing: biggest file to the currently lightest group —
     size-balanced tasks kill end-of-wave stragglers without needing any
     statistics beyond the FS listing."""
-    n_groups = max(1, min(n_groups, len(files)))
-    order = sorted(files, key=lambda t: -t[1])
-    loads = [0] * n_groups
-    groups: list[list[str]] = [[] for _ in range(n_groups)]
-    for path, sz in order:
-        i = loads.index(min(loads))
-        groups[i].append(path)
-        loads[i] += sz
-    return [g for g in groups if g]
+    bins = lpt_bins([sz for _, sz in files], n_groups)
+    return [[files[i][0] for i in b] for b in bins]
 
 
 def _pos_slices(flat_pos: list[int], posting_tfs: list[int]):
@@ -476,7 +474,12 @@ def build_flat_runs(
         )
 
     sc = spark.sparkContext
-    rows = sc.parallelize(list(enumerate(groups)), len(groups)).map(_run).collect()
+    with job_description(sc, "qkb phase1: sorted runs"):
+        rows = (
+            sc.parallelize(list(enumerate(groups)), len(groups))
+            .map(_run)
+            .collect()
+        )
     ofs.create_dir(flat_root, recursive=True)
     with ofs.open_output_stream(f"{flat_root.rstrip('/')}/{RUNS_MARKER}") as f:
         f.write(json.dumps({"n_tasks": len(groups)}).encode())
@@ -540,13 +543,63 @@ def _sample_task(
         if not content:
             continue
         for text in split_document(content, lang, chunker_cfg):
-            toks = set(_TOKEN_RE.findall(text.lower()))
+            # distinct terms in first-occurrence order, not set order: the
+            # Counter's insertion order breaks df ties at the max_terms cut,
+            # and set order would tie it to the process's PYTHONHASHSEED
+            toks = list(dict.fromkeys(_TOKEN_RE.findall(text.lower())))
             if not toks:
                 continue
             n_chunks += 1
             n_postings += len(toks)
             df.update(toks)
     return n_chunks, n_postings, df
+
+
+def _sample_units(
+    files: list[tuple[str, int]], frac: float
+) -> tuple[list[tuple[str, int, int, float]], list[float], float]:
+    """Phase-0 sample plan over the sorted corpus listing.
+    -> (units [(path, k, nk, per_file_frac)], per-unit cost estimate,
+    effective sample fraction). A pure function of the listing: the same
+    rows are sampled at every cluster size."""
+    files_used = min(len(files), _SAMPLE_UNITS)
+    fstride = len(files) // files_used
+    chosen = files[::fstride][:files_used]
+    per_file_frac = min(1.0, frac * len(files) / files_used)
+    slices_per_file = max(1, _SAMPLE_UNITS // files_used)
+    eff_frac = files_used * per_file_frac / len(files)
+    units, costs = [], []
+    for path, sz in chosen:
+        for k in range(slices_per_file):
+            units.append((path, k, slices_per_file, per_file_frac))
+            costs.append(sz / slices_per_file)
+    return units, costs, eff_frac
+
+
+def _hot_from_samples(
+    parts: list[tuple[int, int, Counter]],
+    eff_frac: float,
+    cfg: EngineConfig,
+    sample_margin: float,
+    max_terms: int,
+) -> tuple[list[str], int]:
+    """Reduce per-unit sample results -> (hot_terms sorted, est_postings).
+    `parts` must be in unit order: Counter insertion order breaks df ties
+    at the max_terms cut."""
+    n_chunks = sum(p[0] for p in parts)
+    est_postings = int(sum(p[1] for p in parts) / eff_frac)
+    df: Counter = Counter()
+    for p in parts:
+        df.update(p[2])
+    thresh = (
+        max(
+            cfg.index.hot_term_min_df * eff_frac,
+            n_chunks * cfg.index.hot_term_doc_fraction,
+        )
+        * sample_margin
+    )
+    hot = [t for t, c in df.most_common(max_terms * 4) if c > thresh][:max_terms]
+    return sorted(hot), est_postings
 
 
 def presample_hot_direct(
@@ -563,45 +616,22 @@ def presample_hot_direct(
     -> (hot_terms sorted, est_total_postings).
 
     The sample is spread over a FIXED number of work units (64), each
-    reading an evenly-spaced row slice of one file: with a naive
-    one-task-per-sampled-file plan the presample is a ~6-task job whose
-    wall time is the same at every cluster size — a pure fixed cost that
-    the scaling protocol's wide level pays 4x harder. The unit count being
+    reading an evenly-spaced row slice of one file. The unit count being
     level-independent keeps the sampled rows (and therefore the hot set
-    and salt assignment) identical at every parallelism."""
-    files = list_parquet_files(corpus_uri)
-    n_units = 64
-    files_used = min(len(files), n_units)
-    fstride = len(files) // files_used
-    chosen = files[::fstride][:files_used]
-    per_file_frac = min(1.0, frac * len(files) / files_used)
-    slices_per_file = max(1, n_units // files_used)
-    eff_frac = files_used * per_file_frac / len(files)
+    and salt assignment) identical at every parallelism. The units are
+    LPT-packed into at most one task per slot (taskpack.run_packed): the
+    sampled work is small, so one task per unit would be almost all
+    Spark's per-task fixed cost. Results merge in unit order, so the hot
+    set does not depend on the packing either."""
+    units, costs, eff_frac = _sample_units(list_parquet_files(corpus_uri), frac)
     chunker_cfg = cfg.chunker
-
-    units = [
-        (path, k, slices_per_file, per_file_frac)
-        for path, _sz in chosen
-        for k in range(slices_per_file)
-    ]
 
     def _run(unit):
         path, k, nk, pf = unit
         return _sample_task(path, k, nk, pf, corpus_uri, chunker_cfg)
 
-    sc = spark.sparkContext
-    parts = sc.parallelize(units, len(units)).map(_run).collect()
-    n_chunks = sum(p[0] for p in parts)
-    est_postings = int(sum(p[1] for p in parts) / eff_frac)
-    df: Counter = Counter()
-    for p in parts:
-        df.update(p[2])
-    thresh = (
-        max(
-            cfg.index.hot_term_min_df * eff_frac,
-            n_chunks * cfg.index.hot_term_doc_fraction,
-        )
-        * sample_margin
+    parts = run_packed(
+        spark.sparkContext, _run, units, costs,
+        label="qkb phase0: hot-term sample",
     )
-    hot = [t for t, c in df.most_common(max_terms * 4) if c > thresh][:max_terms]
-    return sorted(hot), est_postings
+    return _hot_from_samples(parts, eff_frac, cfg, sample_margin, max_terms)

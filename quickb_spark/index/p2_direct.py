@@ -24,7 +24,9 @@ Two consumption modes over two checkpoint layouts:
   (term_h, salt) group lives entirely inside one file, so tasks are
   independent by construction.
 - `merge_encode_buckets` (sorted-runs layout, written by the direct
-  phase 1 — index/p1_direct.py): one task per BUCKET; the task k-way
+  phase 1 — index/p1_direct.py): one work unit per BUCKET (or per
+  term-split of a big bucket), LPT-packed into at most one Spark task per
+  slot (taskpack.run_packed); each unit k-way
   merges its bucket's per-task sorted runs (each run is already sorted by
   (term_h, salt, doc_id), so the merge is one stable lexsort over the
   concatenated columns plus a vectorized byte-slice gather), feeds the
@@ -35,8 +37,9 @@ Two consumption modes over two checkpoint layouts:
 
 Scale notes (the 100 TB story):
 - work units are whole checkpoint files / buckets (64-128MB on a real
-  cluster, a few MB here), so tasks stay uniform and biggest-first ordering
-  kills end-of-wave stragglers;
+  cluster, a few MB here); biggest-first ordering (per-file tasks) or LPT
+  packing of the units into per-slot tasks (merge mode) kills end-of-wave
+  stragglers;
 - a merge task holds one bucket's postings in memory (columnar numpy, ~30
   bytes/posting); `IndexConfig.term_buckets` is the knob that keeps a
   bucket at ~1-4 GB on a real corpus — the same dial as Spark's shuffle
@@ -68,6 +71,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from quickb_spark.taskpack import run_packed
 
 __all__ = [
     "encode_wave_direct",
@@ -504,7 +509,7 @@ def _merge_one_bucket(
     lexsort of the concatenated columns; position slices follow with one
     vectorized byte gather.
 
-    When nsplits > 1, this task handles only the TERMS with
+    When nsplits > 1, this unit handles only the TERMS with
     pmod(xxhash64(term_h), nsplits) == split_id: term-hash bucketing is
     Zipf-skewed (one popular term's postings all share a bucket), so big
     buckets would otherwise become the wave's straggler. The split filter
@@ -668,8 +673,11 @@ def merge_encode_buckets(
     ds_dir: str | None = None,
     task_mem_bytes: int | None = None,
 ) -> list[dict]:
-    """Merge-encode the given buckets' sorted-runs checkpoint, biggest work
-    first. A bucket is split into term-granular sub-tasks when its runs
+    """Merge-encode the given buckets' sorted-runs checkpoint. The work
+    units (one per bucket, or per term-split of a bucket) are LPT-packed by
+    their estimated bytes into at most one Spark task per slot
+    (taskpack.run_packed); a unit's output files do not depend on which
+    task runs it. A bucket is split into term-granular sub-units when its runs
     exceed ~1/256 of the wave's bytes (Zipf skew makes the hottest
     bucket several times the median — unsplit it IS the wave's makespan)
     OR when its estimated decoded working set (run bytes x
@@ -763,8 +771,10 @@ def merge_encode_buckets(
             block_size, store_positions, nsplits, k, ds_dir,
         )
 
-    sc = spark.sparkContext
-    parts = sc.parallelize(work, numSlices=len(work)).map(_run).collect()
+    parts = run_packed(
+        spark.sparkContext, _run, work, [t[4] for t in work],
+        label="qkb phase2: merge-encode buckets",
+    )
     agg: dict[int, dict] = {}
     for s in parts:
         a = agg.get(s["bucket"])

@@ -65,6 +65,7 @@ identity partitioning on `bucket` without touching the logic):
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -527,17 +528,40 @@ def build_index(
     _mark("phase1 flat checkpoint")
 
     # ---- phase 1b: doc stats + corpus scalars ----------------------------
-    from quickb_spark.index.p1_direct import RUNS_MARKER
+    from quickb_spark.index.p1_direct import RUNS_MARKER, list_parquet_files
 
-    flat_all = spark.read.parquet(flat_dir)
-    if "salt" not in flat_all.columns or "term_h" not in flat_all.columns:
-        raise RuntimeError(
-            f"flat checkpoint at {flat_dir} predates index format "
-            f"v{FORMAT_VERSION} (missing salt/term_h columns) — delete the "
-            "index dir and rebuild; resuming across format versions would "
-            "silently mis-encode"
-        )
+    def _check_format(columns) -> None:
+        if "salt" not in columns or "term_h" not in columns:
+            raise RuntimeError(
+                f"flat checkpoint at {flat_dir} predates index format "
+                f"v{FORMAT_VERSION} (missing salt/term_h columns) — delete "
+                "the index dir and rebuild; resuming across format versions "
+                "would silently mis-encode"
+            )
+
+    # The checkpoint as a Spark DataFrame is only read by the resume, channel
+    # and merge-fallback paths; its partition discovery lists every bucket
+    # dir in a Spark job, so it is created on first use only.
+    @functools.cache
+    def flat_all() -> DataFrame:
+        df = spark.read.parquet(flat_dir)
+        _check_format(df.columns)
+        return df
+
     runs_mode = fs.exists(join_path(flat_dir, RUNS_MARKER))
+    if runs_mode and p1_metrics is not None:
+        # fresh direct build: the format check needs only one run's footer
+        import pyarrow.parquet as pq
+
+        from quickb_spark.index.p2_direct import pyarrow_fs_for
+
+        runs = list_parquet_files(flat_dir)
+        if runs:
+            fsys, _ = pyarrow_fs_for(flat_dir)
+            with fsys.open_input_file(runs[0][0]) as f:
+                _check_format(pq.ParquetFile(f).schema_arrow.names)
+    else:
+        flat_all()
     if runs_mode and not fs.exists(stats_path):
         # sorted-runs layout: phase-1 tasks already wrote doc_stats runs; the
         # corpus scalars came back with the task summaries (or, on resume,
@@ -553,7 +577,7 @@ def build_index(
                 .collect()[0]
             )
             n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-            total_postings = flat_all.count()
+            total_postings = flat_all().count()
         fs.write_text_atomic(
             stats_path,
             json.dumps(
@@ -579,7 +603,7 @@ def build_index(
         prev_mpb1 = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         try:
-            flat_all.filter(F.col("first") == 1).select(
+            flat_all().filter(F.col("first") == 1).select(
                 "doc_id", "doc_len"
             ).write.mode("overwrite").parquet(join_path(index_dir, "doc_stats"))
         finally:
@@ -595,7 +619,7 @@ def build_index(
                 .collect()[0]
             )
             n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-            total_postings = flat_all.count()  # parquet metadata-only count
+            total_postings = flat_all().count()  # parquet metadata-only count
         fs.write_text_atomic(
             stats_path,
             json.dumps(
@@ -757,7 +781,7 @@ def _run_waves(
                 bin_bytes = max(4 << 20, 2 * p50)
                 spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
                 spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
-                wave_src = flat_all
+                wave_src = flat_all()
                 if "doc_len" not in wave_src.columns:
                     # current runs don't carry doc_len — restore it with one
                     # equi-join against the doc-stats runs (fallback path
@@ -822,11 +846,11 @@ def _run_waves(
                 spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
                 spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
                 _encode_wave_channel(
-                    spark, flat_all, segments_dir, wave, g, nb, cfg, False
+                    spark, flat_all(), segments_dir, wave, g, nb, cfg, False
                 )
         else:
             _encode_wave_channel(
-                spark, flat_all, segments_dir, wave, g, nb, cfg,
+                spark, flat_all(), segments_dir, wave, g, nb, cfg,
                 mode == "shuffle",
             )
         _mark(f"phase2 encode wave {wave[0]}-{wave[-1]}")

@@ -9,8 +9,11 @@ NEGATIVELY from N to 4N workers.
 
 The Searcher removes all of them from the per-batch path:
 
-- segment + lexicon DataFrames are created once (Spark caches the file
-  listing inside the DataFrame's InMemoryFileIndex);
+- segment + lexicon DataFrames are created lazily, on first use, and
+  then kept (Spark caches the file listing inside the DataFrame's
+  InMemoryFileIndex). Only the channel fallback and the lazy-lexicon
+  lookup read them; the direct path lists files with pyarrow, so opening
+  an index runs no listing job;
 - queries are tokenized DRIVER-side (the engine tokenizer is a plain regex
   — quickb_spark.functions.tokenize.tokenize_py — and a query is a short
   string; no Spark job to discover the term set);
@@ -97,8 +100,8 @@ class Searcher:
         lexicon file listings, and the df cache are all dropped."""
         self.stats = load_stats(self.index_dir)
         self.n_buckets = int(self.stats["term_buckets"])
-        self.seg = self.spark.read.parquet(f"{self.index_dir}/segments")
-        self.lex = self.spark.read.parquet(f"{self.index_dir}/lexicon")
+        self._seg: DataFrame | None = None
+        self._lex: DataFrame | None = None
         #: term -> global df; 0 for terms proven absent (negative caching —
         #: absent terms are the common case for open-vocabulary queries and
         #: must not re-probe storage per batch)
@@ -109,6 +112,20 @@ class Searcher:
         #: driver-resident term dictionary: (term_h sorted int64, df int64)
         #: arrays, loaded by load_lexicon()/preload(); None = lazy Spark path
         self._lex_mem: tuple | None = None
+
+    @property
+    def seg(self) -> DataFrame:
+        """Segment rows as a DataFrame (channel fallback), read on first use."""
+        if self._seg is None:
+            self._seg = self.spark.read.parquet(f"{self.index_dir}/segments")
+        return self._seg
+
+    @property
+    def lex(self) -> DataFrame:
+        """Lexicon rows as a DataFrame (lazy df lookup), read on first use."""
+        if self._lex is None:
+            self._lex = self.spark.read.parquet(f"{self.index_dir}/lexicon")
+        return self._lex
 
     def _files_for(self, buckets: list[int]) -> list[str] | None:
         """Cached candidate segment files for the buckets; None when the

@@ -497,3 +497,107 @@ def test_runs_checkpoint_resume(spark, both_indexes, tmp_path):
     a = sorted(map(tuple, Searcher(spark, idx_di).topk(qs, k=5).collect()))
     b = sorted(map(tuple, Searcher(spark, idx_copy).topk(qs, k=5).collect()))
     assert a == b and len(a) > 10
+
+
+@pytest.mark.parametrize("max_terms", [5, 2000])
+def test_presample_packed_matches_unit_by_unit(spark, corpus, max_terms):
+    """Packing the phase-0 sample units into per-slot tasks must not move
+    the hot set: the result equals running every unit one by one in the
+    driver and merging in unit order (Counter insertion order breaks df
+    ties at the max_terms cut, so the merge order is part of the answer)."""
+    import pyarrow as pa
+
+    from quickb_spark.index.p1_direct import (
+        _hot_from_samples,
+        _sample_task,
+        _sample_units,
+        presample_hot_direct,
+    )
+
+    cfg = _cfg()
+    frac, margin = 0.3, 0.5
+    units, _costs, eff = _sample_units(list_parquet_files(corpus), frac)
+    assert len(units) > spark.sparkContext.defaultParallelism
+    prev_cpus = pa.cpu_count()
+    try:
+        parts = [
+            _sample_task(p, k, nk, pf, corpus, cfg.chunker)
+            for p, k, nk, pf in units
+        ]
+    finally:
+        pa.set_cpu_count(prev_cpus)
+    want = _hot_from_samples(parts, eff, cfg, margin, max_terms)
+    got = presample_hot_direct(spark, corpus, cfg, frac, margin, max_terms)
+    assert got == want
+    assert 0 < len(got[0]) <= max_terms and got[1] > 0
+
+
+def test_packed_merge_files_match_unit_by_unit(spark, both_indexes, tmp_path):
+    """The packed phase 2 writes byte-identical segment and lexicon files
+    under the same names (bucket=<b>/part-m<split>.parquet) as running each
+    bucket's merge unit on its own."""
+    import re
+
+    import pyarrow as pa
+
+    from quickb_spark.index.p2_direct import _merge_one_bucket, list_bucket_files
+
+    _, idx_di = both_indexes
+    flat = os.path.join(idx_di, "flat")
+    seg_ref, lex_ref = str(tmp_path / "seg"), str(tmp_path / "lex")
+    by_bucket: dict[int, list[str]] = {}
+    for b, p, _sz in list_bucket_files(flat, list(range(8))):
+        by_bucket.setdefault(b, []).append(p)
+    prev_cpus = pa.cpu_count()
+    try:
+        for b, paths in by_bucket.items():
+            _merge_one_bucket(
+                b, paths, flat, seg_ref, lex_ref, 128, True,
+                ds_dir=os.path.join(idx_di, "doc_stats"),
+            )
+    finally:
+        pa.set_cpu_count(prev_cpus)
+
+    def _files(root):
+        out = {}
+        for d, _, names in os.walk(root):
+            for n in names:
+                if n.endswith(".parquet"):
+                    p = os.path.join(d, n)
+                    with open(p, "rb") as f:
+                        out[os.path.relpath(p, root)] = f.read()
+        return out
+
+    for built, ref in ((os.path.join(idx_di, "segments"), seg_ref),
+                       (os.path.join(idx_di, "lexicon"), lex_ref)):
+        got, want = _files(built), _files(ref)
+        assert sorted(got) == sorted(want) and len(got) == len(by_bucket)
+        assert all(re.fullmatch(r"bucket=\d+/part-m0000\.parquet", k)
+                   for k in got)
+        assert got == want
+
+
+def test_engine_jobs_keep_caller_job_labels(spark, corpus, tmp_path):
+    """Engine jobs carry their own descriptions but leave the caller's
+    job description and job group as they found them."""
+    sc = spark.sparkContext
+    idx = str(tmp_path / "labels")
+    _seed_hot(idx)
+    sc.setJobGroup("test-caller-group", "caller description")
+    try:
+        build_index(spark, index_dir=idx, cfg=_cfg(), corpus_uri=corpus)
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller description")
+        s = Searcher(spark, idx)
+        s.preload()
+        rows = s.topk(fixture_queries()[:3], k=3).collect()
+        assert rows
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller description")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "test-caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # no caller description: none is left behind either
+    s.topk(fixture_queries()[:3], k=3).collect()
+    assert sc.getLocalProperty("spark.job.description") is None
