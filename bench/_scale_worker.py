@@ -81,9 +81,8 @@ def _warm_batch_rusage(spark, searcher) -> dict:
     residual — host steal inflates wall, never utime."""
     from collections import defaultdict
 
-    from serve_probe import _plan
-
     from quickb_spark.corpus import fixture_queries
+    from quickb_spark.query.searcher import _tokenize
 
     def _run(payload):
         import resource as _r
@@ -101,7 +100,7 @@ def _warm_batch_rusage(spark, searcher) -> dict:
 
     k = 10
     t0 = time.perf_counter()
-    payloads, _ = _plan(searcher, fixture_queries())
+    payloads = searcher._plan(_tokenize(fixture_queries()), k).payloads()
     stats = (
         spark.sparkContext.parallelize(payloads, len(payloads))
         .map(_run).collect()
@@ -396,7 +395,7 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     # burst that lands on it at full weight (the round-4 pool recorded 4N
     # first-batches of 48-84s whose warm repeat seconds later ran 15s,
     # with zero /proc/vmstat reclaim, ext_cores 0.0 and normal task
-    # utime in q_acct — and bench/serve_probe4.py reproduced neither arm
+    # utime in q_acct — and a dedicated probe reproduced neither arm
     # on a quiet box). Every re-open's raw seconds are recorded.
     query_cold_batch_secs = []
     vm_cold = vm_preload = None
@@ -437,7 +436,7 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     # Three repeats because this guest cannot observe host-side vCPU
     # steal mid-window (measured 2026-08-19: 4N cold batches of 48-84s
     # with warm 15s right after, zero /proc/vmstat reclaim, ext_cores
-    # 0.0, normal pre-window cal_sec — and bench/serve_probe4.py
+    # 0.0, normal pre-window cal_sec — and a dedicated probe
     # reproduced neither arm on a quiet box, cold 14.2s). Steal is
     # strictly ADDITIVE noise, so the MIN over repeats estimates the
     # engine's time; every repeat is recorded raw.

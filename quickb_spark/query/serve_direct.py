@@ -1,52 +1,53 @@
-"""Direct-pyarrow BM25 serving: range tasks read segment files themselves.
+"""BM25 serving: docID-range tasks that read the segment files themselves.
 
-Why this exists: the channel serving path (query/wand.py) ships every
-candidate stream slice through the JVM->Python Arrow channel once per range
-(pruned scan -> JVM slicing -> shuffle -> applyInPandas). The round-3
-scaling pools measured query batches scaling at only ~half the build's rate
-(median q-eff 0.493 vs build 0.802, BENCH/BASELINE.md), and the Arrow
-channel is the one component of that path measured NOT to parallelize with
-cores in this environment — the same ceiling that drove the build's direct
-engine (index/p1_direct.py docstring). This module removes the channel from
-serving the same way the build did:
+This is the one path every BM25 query takes (`Searcher.topk`,
+`bm25_topk_segments` and `query_with_deltas` all plan a `RangePlan` and
+call `serve_topk_direct`):
 
   driver plans R docID ranges (ranges partition the doc space, so per-range
   top-k lists merge exactly) -> one Spark task per range reads the
   CANDIDATE segment rows itself with pyarrow (bucket-pruned file list from
-  the Searcher's cached listing + parquet row-group predicate pushdown on
-  term_h), slices each row's streams to its range via the per-block byte
-  offsets (the per-block absolute delta reset makes any block-aligned slice
-  independently decodable), and scores the whole query batch with the SAME
-  kernels as the channel scorer (query/wand._build_struct /
-  _score_query_set — bit-identity asserted in tests/test_searcher.py).
-  Only per-range top-k rows (<= R*Q*k) ever cross the Python<->JVM
-  boundary; the driver merges them exactly and builds the result DataFrame
-  locally — no shuffle, no window job, no stream bytes on the channel.
+  the Searcher's cached listing), slices each row's streams to its range
+  via the per-block byte offsets (the per-block absolute delta reset makes
+  any block-aligned slice independently decodable), merges each term's
+  parts with `wand._build_struct` and scores the whole query batch with
+  `wand._score_query_set`. Only per-range top-k rows (<= R*Q*k) ever cross
+  the Python<->JVM boundary; the driver merges them exactly and builds the
+  result DataFrame locally — no shuffle, no window job, no stream bytes on
+  the JVM<->Python Arrow channel.
+
+Why no Arrow channel: an earlier serving path shipped every candidate
+stream slice through the JVM->Python channel once per range (pruned scan
+-> JVM slicing -> a grouped pandas UDF). The round-3 scaling pools
+measured its query batches scaling at only ~half the build's rate (median
+q-eff 0.493 vs build 0.802, BENCH/BASELINE.md), and the channel was the
+one component measured NOT to parallelize with cores in this environment
+— the same ceiling that drove the build's direct engine (index/p1_direct.py).
 
 Candidate rows are consumed as zero-copy NumPy/buffer VIEWS over the Arrow
 table (offsets+values of the binary and list columns) — never `to_pylist`
 (materializing block-metadata lists as Python objects measured ~5x the
-parquet decode cost, 2026-08-18 probe on the 4M index) — and each file's
-DECODED table is kept in a per-worker-process LRU cache (Spark reuses
-Python workers): the R range tasks of a batch, and every later batch a
-serving process handles, re-read a candidate file zero times instead of
-once per range. This is the decoded-block cache every serving engine
-keeps; entries are fingerprinted by (size, mtime) so a rebuilt index
-invalidates, and the budget is QKB_SERVE_CACHE_MB per worker process
-(default 6144 — size it ABOVE the hot working set: a budget just under it
-turns the LRU into sequential-scan thrash; 0 disables). Measured on the
-4M index at 8 cores: warm 50-query batch 29.3s uncached -> 15.4s cached
-(see BENCH/query_decompose_r4.json). `Searcher.preload()` loads the
-tables at server construction — the Lucene-style index open — so even
-the FIRST batch skips the cold segment read.
+parquet decode cost on the 4M-doc index) — and each file's DECODED table
+is kept in a per-worker-process LRU cache (Spark reuses Python workers):
+the R range tasks of a batch, and every later batch a serving process
+handles, re-read a candidate file zero times instead of once per range.
+This is the decoded-block cache every serving engine keeps; entries are
+fingerprinted by (size, mtime) so a rebuilt index invalidates, and the
+budget is QKB_SERVE_CACHE_MB per worker process (default 6144 — size it
+ABOVE the hot working set: a budget just under it turns the LRU into
+sequential-scan thrash; 0 disables). Measured on the 4M index at 8
+cores: warm 50-query batch 29.3s uncached -> 15.4s cached (see
+BENCH/query_decompose_r4.json). `Searcher.preload()` loads the tables at
+server construction — the Lucene-style index open — so even the FIRST
+batch skips the cold segment read.
 
 Scale notes (the 100 TB story):
 - each range task re-reads the candidate rows (R-fold read amplification of
   candidate bytes). Reads are bucket-pruned, term-filtered, page-cached
   parquet, so the amplified cost is snappy decode — CPU that scales with
-  cores, unlike the channel transfer it replaces; total read work is fixed
-  per batch (R is postings-driven, not cluster-driven), so it spreads over
-  whatever cores exist. At object-store scale the knob is the range count
+  cores; total read work is fixed per batch (R is postings-driven, not
+  cluster-driven), so it spreads over whatever cores exist. At
+  object-store scale the knob is the range count
   (query/wand.RANGE_TARGET_POSTINGS): fewer, bigger ranges trade task
   memory for read amplification.
 - phrase verification is vectorized end to end: candidate docs come from
@@ -58,8 +59,9 @@ Scale notes (the 100 TB story):
   intersection WITHOUT the position verify (`_conj_topk`) — AND-mode
   retrieval at any-mode cost minus scoring of non-matching docs; works on
   positionless indexes.
-- the channel path remains the automatic fallback (FS schemes pyarrow can't
-  reach) and the A/B control (QKB_SERVE_CHANNEL=1).
+- postings that live outside the segment files (the streaming delta tier,
+  `RangePlan.extra`) ride in the plan; each range task trims them to its
+  range and adds them to the term's struct as one more part.
 
 Reference parity: this serves the same capability as the reference's
 ChromaDB top-k query (examples/chromadb_integration.ipynb cell 8); phrase
@@ -70,13 +72,14 @@ beside ANN in the same notebook.
 from __future__ import annotations
 
 from collections import OrderedDict, defaultdict
+from typing import NamedTuple
 
 import numpy as np
 
 from quickb_spark.index.encode import decode_posting_list, varbyte_decode
 from quickb_spark.taskpack import job_description, run_packed
 
-__all__ = ["serve_topk_direct", "list_segment_files", "preload_files"]
+__all__ = ["RangePlan", "serve_topk_direct", "preload_files"]
 
 #: Segment-row columns every serving read needs; position columns join in
 #: phrase mode only.
@@ -85,13 +88,6 @@ _BASE_COLS = [
     "block_last_doc", "block_doc_off", "block_tf_off", "block_dl_off",
 ]
 _POS_COLS = ["pos_stream", "block_pos_off"]
-
-
-def list_segment_files(index_dir: str, buckets: list[int]) -> list[str]:
-    """Candidate segment file paths for the given buckets (pyarrow FS)."""
-    from quickb_spark.index.p2_direct import list_bucket_files
-
-    return [p for _, p, _ in list_bucket_files(f"{index_dir}/segments", buckets)]
 
 
 #: Per-worker-process decoded-table cache: (path, want_pos) ->
@@ -388,8 +384,7 @@ class _RowView:
 def _slice_row(rv: _RowView, i: int, lo: int, hi: int, block_size: int,
                want_pos: bool):
     """Row i -> range-trimmed part, or None when it has no postings in
-    [lo, hi]. Mirrors the JVM slicing expressions in wand._slice_to_ranges
-    exactly: b_lo = #blocks entirely below lo, b_hi = min(nb, #blocks
+    [lo, hi]: b_lo = #blocks entirely below lo, b_hi = min(nb, #blocks
     starting <= hi + 1); the decoded slice is then trimmed to [lo, hi] so
     every doc is scored in exactly one range."""
     bld = rv.blocks("block_last_doc", i)
@@ -535,10 +530,44 @@ def _phrase_topk(structs, seq, k, block_size, slop: int = 0):
     slots = np.unique(keys >> np.int64(32))
     docs_v = cand[slots]
     score = np.zeros(len(slots))
-    for t in uniq:  # insertion order == channel concat order (fp-identical)
+    for t in uniq:  # same add order as _conj_topk (fp-identical)
         score += structs[t]["scores"][idx_of[t][slots]]
     order = np.lexsort((docs_v, -score))[:k]
     return docs_v[order].tolist(), score[order].tolist()
+
+
+class RangePlan(NamedTuple):
+    """Everything a batch's range tasks need, planned in the driver.
+
+    Term identity is the v4 int64 term_h throughout. `phrase_seqs`: qid ->
+    ordered term_h sequence turns the batch into phrase retrieval (same
+    BM25 scores, result set restricted to docs containing the terms in
+    order with successive gaps <= slop + 1; slop=0 = exact phrase).
+    `conj_seqs`: qid -> term_h list turns it into conjunctive (all-terms)
+    retrieval. `extra`: term_h -> (docs, tfs, dls) doc-sorted postings
+    that are not in `files` (the streaming delta tier); their doc ids must
+    be disjoint from the segment files' and they carry no positions."""
+
+    files: list[str]
+    terms_by_query: dict[str, list[int]]
+    dfs: dict[int, int]
+    n_docs: int
+    avgdl: float
+    block_size: int
+    k: int
+    k1: float
+    b: float
+    r_count: int
+    phrase_seqs: dict[str, list[int]] | None = None
+    conj_seqs: dict[str, list[int]] | None = None
+    slop: int = 0
+    extra: dict[int, tuple] | None = None
+
+    def payloads(self) -> list[tuple[int, int, "RangePlan"]]:
+        """One (lo, hi, plan) payload per docID range."""
+        from quickb_spark.query.wand import _range_bounds
+
+        return [(lo, hi, self) for _, lo, hi in _range_bounds(self.r_count)]
 
 
 def _serve_range_task(payload):
@@ -556,17 +585,15 @@ def _serve_range_task(payload):
         _score_query_set,
     )
 
-    (range_id, lo, hi, files, th_list, dfs, n_docs, avgdl, block_size,
-     terms_by_query, k, strategy, k1, b, phrase_seqs, conj_seqs,
-     slop) = payload
+    lo, hi, plan = payload
     pa.set_cpu_count(1)  # one core slot per task (see p1_direct._p1_task)
-    want_pos = phrase_seqs is not None
+    want_pos = plan.phrase_seqs is not None
     cols = _BASE_COLS + (_POS_COLS if want_pos else [])
-    th_set = list(map(int, th_list))
+    th_set = sorted(plan.dfs)
     th_arr = np.array(th_set, dtype=np.int64)
     parts: dict[int, list] = defaultdict(list)
     pos_parts: dict[int, list] = defaultdict(list)
-    for path in files:
+    for path in plan.files:
         try:
             full = _cached_table(path, want_pos)
         except OSError:
@@ -583,17 +610,23 @@ def _serve_range_task(payload):
         tbl = full if mask.all() else full.filter(pa.array(mask))
         rv = _RowView(tbl, want_pos)
         for i in range(rv.n):
-            sl = _slice_row(rv, i, lo, hi, block_size, want_pos)
+            sl = _slice_row(rv, i, lo, hi, plan.block_size, want_pos)
             if sl is None:
                 continue
             d, t, dl, pp = sl
             parts[int(rv.term_h[i])].append((d, t, dl))
             if want_pos:
                 pos_parts[int(rv.term_h[i])].append(pp)
+    for term, (d, t, dl) in (plan.extra or {}).items():
+        a = int(np.searchsorted(d, lo, "left"))
+        z = int(np.searchsorted(d, hi, "right"))
+        if a < z:
+            parts[term].append((d[a:z], t[a:z], dl[a:z]))
     structs = {}
     for term in sorted(parts):
         s = _build_struct(
-            parts[term], _idf_of(term, dfs, n_docs), k1, b, avgdl
+            parts[term], _idf_of(term, plan.dfs, plan.n_docs), plan.k1,
+            plan.b, plan.avgdl,
         )
         if want_pos:
             lens = np.array([len(p[0]) for p in parts[term]], dtype=np.int64)
@@ -604,64 +637,33 @@ def _serve_range_task(payload):
         structs[term] = s
     if want_pos:
         out = []
-        for qid in sorted(phrase_seqs):
+        for qid in sorted(plan.phrase_seqs):
             doc_ids, scores = _phrase_topk(
-                structs, phrase_seqs[qid], k, block_size, slop=slop
+                structs, plan.phrase_seqs[qid], plan.k, plan.block_size,
+                slop=plan.slop,
             )
             out.extend(
                 (qid, int(d), float(s)) for d, s in zip(doc_ids, scores)
             )
         return out
-    if conj_seqs is not None:
+    if plan.conj_seqs is not None:
         out = []
-        for qid in sorted(conj_seqs):
-            doc_ids, scores = _conj_topk(structs, conj_seqs[qid], k)
+        for qid in sorted(plan.conj_seqs):
+            doc_ids, scores = _conj_topk(structs, plan.conj_seqs[qid], plan.k)
             out.extend(
                 (qid, int(d), float(s)) for d, s in zip(doc_ids, scores)
             )
         return out
-    out_q, out_d, out_s, _ = _score_query_set(
-        structs, terms_by_query, k, strategy, k1, b, avgdl, emit_rank=False
+    out_q, out_d, out_s = _score_query_set(
+        structs, plan.terms_by_query, plan.k, plan.k1, plan.b, plan.avgdl
     )
     return list(zip(out_q, (int(d) for d in out_d), map(float, out_s)))
 
 
-def serve_topk_direct(
-    spark,
-    files: list[str],
-    qt_pairs_h: list[tuple[str, int]],
-    dfs_h: dict[int, int],
-    stats: dict,
-    k: int,
-    k1: float,
-    b: float,
-    strategy: str,
-    r_count: int,
-    phrase_seqs: dict[str, list[int]] | None = None,
-    conj_seqs: dict[str, list[int]] | None = None,
-    slop: int = 0,
-):
-    """(query_id, rank, doc_id, score) DataFrame via direct range tasks.
-
-    `files`: candidate segment files (bucket-pruned, from the Searcher's
-    cached listing). `phrase_seqs`: qid -> ordered term_h sequence turns
-    the batch into phrase retrieval (same BM25 scores, result set
-    restricted to docs containing the terms in order with successive gaps
-    <= slop + 1; slop=0 = exact phrase). `conj_seqs`: qid -> term_h
-    list turns it into conjunctive (all-terms) retrieval — same scores,
-    result set restricted to docs containing every term."""
-    from quickb_spark.query.wand import _range_bounds
-
-    terms_by_query: dict[str, list[int]] = {}
-    for qid, t in qt_pairs_h:
-        terms_by_query.setdefault(qid, []).append(t)
-    block_size = int(stats.get("block_size", 128))
-    payloads = [
-        (r, lo, hi, files, sorted(dfs_h), dfs_h, stats["n_docs"],
-         stats["avgdl"], block_size, terms_by_query, k, strategy, k1, b,
-         phrase_seqs, conj_seqs, slop)
-        for r, lo, hi in _range_bounds(r_count)
-    ]
+def serve_topk_direct(spark, plan: RangePlan):
+    """(query_id, rank, doc_id, score) DataFrame: one Spark job of
+    `plan.r_count` range tasks, then the exact driver-side merge."""
+    payloads = plan.payloads()
     sc = spark.sparkContext
     with job_description(sc, "qkb serve: range top-k"):
         chunks = sc.parallelize(payloads, len(payloads)).map(
@@ -676,7 +678,7 @@ def serve_topk_direct(
             per_q[qid].append((score, doc))
     rows = []
     for qid in sorted(per_q):
-        cands = sorted(per_q[qid], key=lambda t: (-t[0], t[1]))[:k]
+        cands = sorted(per_q[qid], key=lambda t: (-t[0], t[1]))[:plan.k]
         rows.extend(
             (qid, rank, doc, score)
             for rank, (score, doc) in enumerate(cands, start=1)

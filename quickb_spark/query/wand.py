@@ -1,82 +1,51 @@
-"""BM25 top-k over compressed segments: DAAT with block-max WAND pruning.
+"""BM25 top-k scoring kernels for the docID-range serving tasks.
 
-Query plan (SURVEY.md §2.11):
-
-  queries ─► tokenize ─► distinct terms (tiny, ONE driver round-trip that
-  also yields the scorer's query->terms closure and the term+bucket
-  pruning literals) ─► segment scan PRUNED to those bucket partitions +
-  term filter (pushed to parquet) ─► SLICE each matched row's streams into
-  docID ranges JVM-side (substring on the per-block byte offsets; the
-  per-block absolute delta reset makes any block-aligned slice
-  independently decodable) ─► groupBy(range_id).applyInPandas batch
-  scorer (query map + global dfs in the closure) ─► exact top-k merge
-  (window over Q·R·k rows).
+One path scores every BM25 query (query/serve_direct.py): the driver plans
+R docID ranges, each range task reads its candidate segment rows, trims
+them to the range, merges each term's parts into one struct
+(`_build_struct`) and scores the whole batch (`_score_query_set`).
 
 Parallel serving: docIDs are xxhash64 outputs, uniform over int64, so R
-equal int64 intervals split every posting list ~evenly. Each range task
-decodes ONLY its slices — a hot-term query no longer funnels its whole
-posting list through one Python task (the round-1 serving bottleneck), and
-per-task memory is bounded by candidate_postings/R. Streams cross the
-Arrow channel once per RANGE, not once per (query, range): a hot term
-shared by the whole batch ships once (the round-2 batch-serving
-bottleneck). Ranges partition the doc space, so per-range top-k lists
-merge exactly (a doc's full score is computed in exactly one range).
+equal int64 intervals (`_range_bounds`) split every posting list ~evenly.
+Each range task decodes ONLY its slices, so per-task memory is bounded by
+candidate_postings/R. Ranges partition the doc space, so per-range top-k
+lists merge exactly (a doc's full score is computed in exactly one range).
 
-The scorer decodes varbyte slices (NumPy), re-merges salted sub-lists per
-term (hot-term salting is a build-time artifact — queries see one logical
-posting list), recomputes block-max metadata on the merged arrays, and
-scores with one of four equivalent kernels (all bit-identical, including
-tie-breaks — verified in tests/test_segments_wand.py + test_wand_fuzz.py):
+`_build_struct` re-merges salted sub-lists per term (hot-term salting is
+a build-time artifact — queries see one logical posting list) and
+recomputes block-max metadata on the merged arrays. The batch kernel is
+`_dense_topk`: a shared sorted doc domain is built ONCE per range, each
+term gets a precomputed dense index column, and every query in the batch
+scores via buffered fancy-index adds into one reused accumulator. Above
+AUTO_EXACT_MAX_POSTINGS candidate postings per query it first applies the
+block-max segment-sweep masks (`_blockmax_masks`), which drop docID
+segments whose summed block upper bounds cannot reach the running kth
+score. `_conj_topk` serves AND-mode queries over the same structs.
 
-  - `_dense_topk` — the auto path: a shared sorted doc domain is built
-    ONCE per range, each term gets a precomputed dense index column, and
-    every query in the batch scores via buffered fancy-index adds into
-    one reused accumulator — no per-query sort or copy of shared posting
-    arrays. Above ~2M candidate postings it first applies the block-max
-    segment-sweep masks (`_blockmax_masks`), so pruning composes with
-    the dense path.
-  - `_exact_topk` — vectorized exhaustive accumulation over its own
-    concatenated postings; the self-contained baseline (strategy=
-    "exact") the others are fuzz-compared against.
-  - `_blockmax_topk` — block-max pruning vectorized as a θ-seed +
-    block-boundary segment sweep that masks out doc ranges whose summed
-    block upper bounds can't reach the running kth score, then exhaustive
-    scoring of the survivors. NumPy end to end — the same asymptotic win
-    as WAND without per-doc Python cost.
-  - `_wand_topk` (strategy="wand") — classic document-at-a-time block-max
-    WAND: a pivot is the first term (in current-docID order) at which
-    accumulated upper bounds reach θ; everything before it is skipped via
-    searchsorted jumps, and a block-level upper-bound check skips whole
-    blocks. The literature-faithful DAAT loop, kept as the equivalence
-    baseline; its per-step interpreter cost loses to the vectorized
-    kernels on multi-million-posting tasks.
+The kernel is fuzz-compared, bit for bit and ties included, against two
+oracles kept in tests/kernel_oracles.py: an exhaustive scorer and the
+literature's document-at-a-time block-max WAND loop.
 
 All pruning uses strict `< θ` so docs tying the kth score are still
-evaluated — results are EXACTLY the naive scorer's.
+evaluated — results are EXACTLY the exhaustive scorer's.
 
 Correctness guardrails:
 - upper bounds come from (max_tf, min_dl): BM25 is monotonically increasing
   in tf and decreasing in dl, so idf·S(max_tf, min_dl) bounds every doc in
   scope; block bounds are recomputed post-merge so salting can't break them.
-- df for idf is the GLOBAL per-term sum of df_part over all salted rows,
-  joined onto every slice — a range never sees a partial df.
-- slices are block-aligned (supersets of the range); the scorer trims the
-  decoded arrays to [lo, hi] so boundary docs are scored exactly once.
+- df for idf is the GLOBAL per-term df over all salted rows, planned in the
+  driver — a range never sees a partial df.
+- slices are block-aligned (supersets of the range); the range task trims
+  the decoded arrays to [lo, hi] so boundary docs are scored exactly once.
 """
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quickb_spark.config import BM25_B, BM25_K1
-from quickb_spark.index.encode import block_meta, decode_posting_list
-from quickb_spark.index.segments import load_stats
-from quickb_spark.query.bm25 import query_terms, topk_window
+from quickb_spark.index.encode import block_meta
 
 __all__ = ["bm25_topk_segments"]
 
@@ -87,184 +56,30 @@ def _bm25_vec(tf, dl, idf, k1, b, avgdl):
     return idf * tf * (k1 + 1.0) / norm
 
 
-def _exact_topk(terms, k):
-    """Vectorized exhaustive DAAT (verification / no-prune path)."""
-    if not terms:
-        return [], []
-    docs = np.concatenate([t["docs"] for t in terms])
-    scores = np.concatenate([t["scores"] for t in terms])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq))
-    np.add.at(acc, inv, scores)
-    order = np.lexsort((uniq, -acc))[:k]
-    return uniq[order].tolist(), acc[order].tolist()
-
-
-def _wand_topk(terms, k, k1, b, avgdl):
-    """Block-max WAND. terms: [{docs, tfs, dls, idf, blocks...}]."""
-    nt = len(terms)
-    if nt == 0:
-        return [], []
-    ptr = [0] * nt
-    lens = [len(t["docs"]) for t in terms]
-    # global upper bound per term
-    ub = []
-    for t in terms:
-        mtf = float(t["tfs"].max())
-        mdl = float(t["dls"].min())
-        ub.append(
-            t["idf"] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl))
-        )
-    heap: list[float] = []  # min-heap of top-k scores (θ = heap[0])
-    results: dict[int, float] = {}
-
-    def theta():
-        return heap[0] if len(heap) == k else -np.inf
-
-    while True:
-        active = [t for t in range(nt) if ptr[t] < lens[t]]
-        if not active:
-            break
-        active.sort(key=lambda t: terms[t]["docs"][ptr[t]])
-        acc = 0.0
-        pivot_i = None
-        for i, t in enumerate(active):
-            acc += ub[t]
-            if acc >= theta():
-                pivot_i = i
-                break
-        if pivot_i is None:
-            break  # no doc can reach θ anymore
-        pivot_t = active[pivot_i]
-        pivot_doc = int(terms[pivot_t]["docs"][ptr[pivot_t]])
-        # extend the prefix over ties: every term currently AT pivot_doc can
-        # contribute to its score and must be inside the pruning bound
-        while (
-            pivot_i + 1 < len(active)
-            and int(terms[active[pivot_i + 1]]["docs"][ptr[active[pivot_i + 1]]])
-            == pivot_doc
-        ):
-            pivot_i += 1
-
-        # block-max refinement (Ding & Suel BMW): bound the pivot-prefix
-        # contribution by the block maxima at pivot_doc
-        block_acc = 0.0
-        # min_block_end must stay an exact int: doc ids use up to 63 bits
-        # and float64 rounding of an id can land BELOW the pivot, turning
-        # the skip into a no-op (infinite loop)
-        min_block_end: int | None = None
-        for t in active[: pivot_i + 1]:
-            td = terms[t]
-            bidx = int(np.searchsorted(td["block_last_doc"], pivot_doc))
-            if bidx >= len(td["block_last_doc"]):
-                # this term's list ends before pivot_doc: it contributes
-                # nothing at or beyond the pivot, and imposes no skip bound
-                continue
-            mtf = float(td["block_max_tf"][bidx])
-            mdl = float(td["block_min_dl"][bidx])
-            block_acc += (
-                td["idf"] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl))
-            )
-            bend = int(td["block_last_doc"][bidx])
-            min_block_end = bend if min_block_end is None else min(min_block_end, bend)
-        if block_acc < theta():
-            # no doc in [pivot_doc, min_block_end] can reach θ from the
-            # prefix alone; docs beyond the next non-prefix cursor may gain
-            # other contributions, so never skip past that cursor
-            skip_to = min_block_end + 1
-            if pivot_i + 1 < len(active):
-                nxt = active[pivot_i + 1]
-                skip_to = min(skip_to, int(terms[nxt]["docs"][ptr[nxt]]))
-            for t in active[: pivot_i + 1]:
-                td = terms[t]
-                ptr[t] = int(np.searchsorted(td["docs"], skip_to))
-            continue
-
-        first_doc = int(terms[active[0]]["docs"][ptr[active[0]]])
-        if first_doc == pivot_doc:
-            # all prefix terms aligned on pivot_doc: evaluate it fully
-            s = 0.0
-            for t in active:
-                td = terms[t]
-                p = ptr[t]
-                if p < lens[t] and td["docs"][p] == pivot_doc:
-                    s += float(td["scores"][p])
-                    ptr[t] = p + 1
-            results[pivot_doc] = s
-            if len(heap) < k:
-                heapq.heappush(heap, s)
-            elif s > heap[0]:
-                heapq.heapreplace(heap, s)
-        else:
-            # advance the lagging term with the largest ub (fewest future
-            # evaluations) up to pivot_doc
-            lagging = [
-                t
-                for t in active[: pivot_i + 1]
-                if int(terms[t]["docs"][ptr[t]]) < pivot_doc
-            ]
-            lag = max(lagging, key=lambda t: ub[t])
-            ptr[lag] = int(np.searchsorted(terms[lag]["docs"], pivot_doc))
-
-    if not results:
-        return [], []
-    uniq = np.array(list(results.keys()), dtype=np.int64)
-    acc = np.array(list(results.values()))
-    order = np.lexsort((uniq, -acc))[:k]
-    return uniq[order].tolist(), acc[order].tolist()
-
-
-def _blockmax_topk(terms, k, k1, b, avgdl):
-    """Vectorized block-max pruning: same answers as `_exact_topk`, same
-    block-max bounds as `_wand_topk`, but NumPy end to end.
-
-    The pointer-chasing `_wand_topk` loop pays Python-interpreter cost per
-    DAAT step, which loses to the vectorized exhaustive kernel by >10x on
-    multi-million-posting tasks (measured: 7.5M postings scored exhaustively
-    in ~1s vs ~18s through the Python WAND loop, 2026-08-18 probe on the 4M
-    index). This scorer keeps the asymptotic win of block-max pruning
-    without the per-doc Python loop:
+def _blockmax_masks(terms, k, k1, b, avgdl):
+    """Lossless block-max pruning, vectorized: per-term boolean keep-masks
+    over postings (None entry = keep whole term). Returns None when fewer
+    than k candidate docs exist (no valid θ, nothing prunable).
 
       1. θ seed — per term, take its top-k posting scores' docs as
-         candidates; exact-sum those candidate docs across all terms
-         (searchsorted lookups, O(nt·k·log n)); the kth-largest candidate
-         sum is a valid LOWER bound on the true kth-best score (candidate
-         sums are exact scores of a subset of docs).
+         candidates and exact-sum them across all terms (searchsorted
+         lookups); the kth-largest candidate sum is a valid LOWER bound on
+         the true kth-best score. θ backs off 4 ulps so a different fp
+         summation order can't promote it past the exact kth score.
       2. Segment sweep — the union of all terms' block boundaries cuts the
          docID axis into segments, each covered by exactly one block per
-         term; the per-segment upper bound is the sum of covering-block
-         bounds (idf·S(block_max_tf, block_min_dl) — the `_wand_topk`
-         bound). Segments whose bound falls below θ cannot hold a top-k
-         doc and every posting in them is dropped with one boolean mask.
-      3. Exhaustive vectorized scoring of the survivors.
+         term; a segment's upper bound is the sum of its covering blocks'
+         idf·S(block_max_tf, block_min_dl). Segments strictly below θ
+         cannot hold a top-k doc.
 
-    Pruning uses strict `< θ` (with θ backed off 4 ulps so a different fp
-    summation order can't promote it past the exact path's kth score), so
-    ties at the kth score survive — bit-identical results to `_exact_topk`
-    including tie-breaks (fuzz-tested in tests/test_wand_fuzz.py)."""
-    masks = _blockmax_masks(terms, k, k1, b, avgdl)
-    if masks is None:
-        return _exact_topk(terms, k)  # fewer docs than k: nothing to prune
+    The pointer-chasing DAAT WAND loop gets the same pruning but pays
+    Python-interpreter cost per step: >10x slower than vectorized
+    scoring on multi-million-posting tasks (7.5M postings: ~1s vs ~18s,
+    measured on a 4M-doc index).
 
-    # mask each term's postings to surviving segments, score exactly
-    pruned = []
-    for t, m in zip(terms, masks):
-        if m is None:
-            pruned.append(t)
-        elif m.any():
-            pruned.append({"docs": t["docs"][m], "scores": t["scores"][m]})
-    return _exact_topk(pruned, k)
-
-
-def _blockmax_masks(terms, k, k1, b, avgdl):
-    """Steps 1-2 of the vectorized block-max pruner: per-term boolean
-    keep-masks over postings (None entry = keep whole term). Returns None
-    when fewer than k candidate docs exist (no valid θ, nothing prunable).
-
-    A mask drops a doc only when the summed covering-block upper bounds of
-    its docID segment fall strictly below θ; a doc is dropped from EVERY
-    term or from none (segments are shared across terms), so the surviving
-    docs' scores keep their full, order-identical contribution sums."""
+    A doc is dropped from EVERY term or from none (segments are shared
+    across terms), so the surviving docs' scores keep their full,
+    order-identical contribution sums."""
     nt = len(terms)
     if nt == 0:
         return None
@@ -338,7 +153,8 @@ def _dense_topk(terms, k, domain, acc, prune, k1, b, avgdl):
     adds — the same lossless block-max pruning, composed with the dense
     path.
 
-    Bit-identical to `_exact_topk`: for any doc the adds happen in the
+    Bit-identical to the exhaustive oracle (`_exact_topk` in
+    tests/kernel_oracles.py): for any doc the adds happen in the
     same order (term-major here == concatenation order there — all of
     term 0's contributions land before term 1's), fp addition is
     deterministic given order, and ties at the kth score are resolved by
@@ -414,8 +230,7 @@ def _build_struct(parts, idf, k1, b, avgdl):
     """Merge a term's range-trimmed slice parts (salt sub-lists + partial
     segment rows) into one scoring struct: stable argsort re-merge (keys
     are doc-disjoint across parts, so part order cannot affect results),
-    block-max metadata rebuilt on the merged arrays. Shared by the channel
-    scorer and the direct serving tasks — one code path, one bit pattern."""
+    block-max metadata rebuilt on the merged arrays."""
     docs = np.concatenate([p[0] for p in parts])
     tfs = np.concatenate([p[1] for p in parts])
     dls = np.concatenate([p[2] for p in parts])
@@ -445,10 +260,7 @@ def _conj_topk(structs, terms, k):
     EVERY query term, scored with the same BM25 sum as any-mode queries,
     ranked (score desc, doc asc). The candidate set is the sorted-array
     intersection of the terms' doc lists (smallest-first); ranges
-    partition the doc space, so per-range lists merge exactly. Lives here
-    (not serve_direct) because it is shared by BOTH serving paths — the
-    direct range tasks and the channel applyInPandas scorer — one code
-    path, one bit pattern."""
+    partition the doc space, so per-range lists merge exactly."""
     uniq = list(dict.fromkeys(terms))
     if not uniq or any(t not in structs for t in uniq):
         return [], []
@@ -463,323 +275,44 @@ def _conj_topk(structs, terms, k):
         if not len(cand):
             return [], []
     score = np.zeros(len(cand))
-    for t in uniq:  # insertion order == channel concat order (fp-identical)
+    for t in uniq:
         score += structs[t]["scores"][np.searchsorted(structs[t]["docs"], cand)]
     order = np.lexsort((cand, -score))[:k]
     return cand[order].tolist(), score[order].tolist()
 
 
-def _score_query_set(
-    structs, terms_by_query, k, strategy, k1, b, avgdl, emit_rank
-):
-    """Score every query of a batch against one range's term structs.
-    -> (query_ids, doc_ids, scores, ranks) column lists. The four kernels
-    (_dense/_exact/_blockmax/_wand) are bit-identical including tie-breaks
-    (fuzz-tested); `auto` builds the shared dense doc domain once per call.
-    Shared by the Arrow-channel scorer and the direct serving tasks."""
-    domain = None  # shared dense doc domain, built on first auto query
+def _score_query_set(structs, terms_by_query, k, k1, b, avgdl):
+    """Score every query of a batch against one range's term structs with
+    `_dense_topk` -> (query_ids, doc_ids, scores) column lists. The shared
+    dense doc domain is built once per call."""
+    domain = None  # shared dense doc domain, built on the first query
     acc = None
     out_q: list[str] = []
     out_d: list[int] = []
     out_s: list[float] = []
-    out_r: list[int] = []
     for qid in sorted(terms_by_query):
         terms = [structs[t] for t in terms_by_query[qid] if t in structs]
         if not terms:
             continue
-        total = sum(len(t["docs"]) for t in terms)
-        if strategy == "wand":
-            # explicit DAAT pointer-chasing WAND (reference algorithm;
-            # equivalence-tested, but Python-loop slow on big tasks)
-            doc_ids, scores = _wand_topk(terms, k, k1, b, avgdl)
-        elif strategy == "auto":
-            if domain is None:
-                # once per range: union doc domain + per-term dense
-                # indices into it; every query then scores via buffered
-                # adds into one reused accumulator (see _dense_topk)
-                domain = np.unique(
-                    np.concatenate([s["docs"] for s in structs.values()])
-                )
-                for s in structs.values():
-                    s["dense"] = np.searchsorted(domain, s["docs"])
-                acc = np.zeros(len(domain))
-            doc_ids, scores = _dense_topk(
-                terms, k, domain, acc,
-                total > AUTO_EXACT_MAX_POSTINGS, k1, b, avgdl,
+        if domain is None:
+            # once per range: union doc domain + per-term dense indices
+            # into it; every query then scores via buffered adds into one
+            # reused accumulator (see _dense_topk)
+            domain = np.unique(
+                np.concatenate([s["docs"] for s in structs.values()])
             )
-        else:
-            doc_ids, scores = _exact_topk(terms, k)
+            for s in structs.values():
+                s["dense"] = np.searchsorted(domain, s["docs"])
+            acc = np.zeros(len(domain))
+        total = sum(len(t["docs"]) for t in terms)
+        doc_ids, scores = _dense_topk(
+            terms, k, domain, acc, total > AUTO_EXACT_MAX_POSTINGS,
+            k1, b, avgdl,
+        )
         out_q.extend([qid] * len(doc_ids))
         out_d.extend(doc_ids)
         out_s.extend(scores)
-        if emit_rank:
-            # single-range mode: each query's top-k IS the final answer
-            # (scorer output is already (score desc, doc_id asc) ordered),
-            # so rank is assigned here and the merge is skipped entirely
-            out_r.extend(range(1, len(doc_ids) + 1))
-    return out_q, out_d, out_s, out_r
-
-
-def _make_batch_scorer(
-    qt_pairs, dfs, n_docs, avgdl, k, k1, b, strategy, block_size,
-    emit_rank=False, conj_seqs=None,
-):
-    """Per-RANGE scorer for a whole query batch.
-
-    The group holds each candidate term's stream slices ONCE (not once per
-    query): a hot term shared by many queries crosses the Arrow channel a
-    single time per range, and its salt re-merge + block-meta rebuild run
-    once. The (query -> term hashes) map and global dfs ride in the closure
-    — they are tiny, driver-known, and identical for every range. Term
-    identity everywhere in here is the v4 int64 term_h."""
-    terms_by_query: dict[str, list[int]] = {}
-    for qid, t in qt_pairs:
-        terms_by_query.setdefault(qid, []).append(t)
-
-    def scorer(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lo = int(pdf["lo"].iat[0])
-        hi = int(pdf["hi"].iat[0])
-        structs: dict[int, dict] = {}
-        for term, g in pdf.groupby("term_h", sort=True):
-            parts = []
-            for r in g.itertuples():
-                d, t, dl = decode_posting_list(
-                    r.doc_stream, r.tf_stream, int(r.n_sub), r.dl_stream,
-                    block_size=block_size,
-                )
-                # slices are block-aligned supersets of [lo, hi]: trim so
-                # every doc is scored in exactly one range
-                a = int(np.searchsorted(d, lo, "left"))
-                z = int(np.searchsorted(d, hi, "right"))
-                if a or z < len(d):
-                    d, t, dl = d[a:z], t[a:z], dl[a:z]
-                if len(d):
-                    parts.append((d, t, dl))
-            if parts:
-                structs[term] = _build_struct(
-                    parts, _idf_of(term, dfs, n_docs), k1, b, avgdl
-                )
-        if conj_seqs is not None:
-            # conjunctive (all-terms) mode: same structs, same BM25 sums,
-            # result set restricted by the shared _conj_topk kernel — the
-            # identical code path the direct range tasks run
-            out_q, out_d, out_s, out_r = [], [], [], []
-            for qid in sorted(conj_seqs):
-                doc_ids, scores = _conj_topk(structs, conj_seqs[qid], k)
-                out_q.extend([qid] * len(doc_ids))
-                out_d.extend(doc_ids)
-                out_s.extend(scores)
-                if emit_rank:
-                    out_r.extend(range(1, len(doc_ids) + 1))
-        else:
-            out_q, out_d, out_s, out_r = _score_query_set(
-                structs, terms_by_query, k, strategy, k1, b, avgdl,
-                emit_rank,
-            )
-        out = {"query_id": out_q, "doc_id": out_d, "score": out_s}
-        if emit_rank:
-            out["rank"] = out_r
-        return pd.DataFrame(out)
-
-    return scorer
-
-
-def _slice_to_ranges(
-    spark: SparkSession, joined: DataFrame, r_count: int, block_size: int
-) -> DataFrame:
-    """Fan each matched segment row out to the docID ranges it overlaps,
-    slicing streams + block metadata JVM-side (substring on the per-block
-    byte offsets). Shuffled bytes ≈ each stream byte once, not once per
-    range (and not once per query — the scorer groups by range only)."""
-    if r_count <= 1:
-        return joined.select(
-            "term_h",
-            F.lit(0).alias("range_id"),
-            F.lit(-(2**63)).alias("lo"),
-            F.lit(2**63 - 1).alias("hi"),
-            F.col("df_part").alias("n_sub"),
-            "doc_stream",
-            "tf_stream",
-            "dl_stream",
-        )
-    # Per-range block bounds are computed ONCE per (row, range) inside one
-    # array expression and materialized through explode() — a generator is
-    # an optimizer barrier, so the O(#blocks) filters can't be re-inlined
-    # into every downstream column (projection collapse would otherwise
-    # re-evaluate them ~10x per row).
-    nb = F.size("block_last_doc")
-    range_lits = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("range_id"),
-                F.lit(lo).alias("lo"),
-                F.lit(hi).alias("hi"),
-            )
-            for r, lo, hi in _range_bounds(r_count)
-        ]
-    )
-    slices = F.filter(
-        F.transform(
-            range_lits,
-            lambda rb: F.struct(
-                rb["range_id"].alias("range_id"),
-                rb["lo"].alias("lo"),
-                rb["hi"].alias("hi"),
-                F.size(
-                    F.filter("block_last_doc", lambda v: v < rb["lo"])
-                ).alias("b_lo"),
-                F.least(
-                    nb,
-                    F.size(F.filter("block_last_doc", lambda v: v <= rb["hi"]))
-                    + F.lit(1),
-                ).alias("b_hi"),
-            ),
-        ),
-        lambda s: s["b_lo"] < s["b_hi"],
-    )
-    x = joined.select(
-        "term_h",
-        "df_part",
-        "doc_stream",
-        "tf_stream",
-        "dl_stream",
-        "block_doc_off",
-        "block_tf_off",
-        "block_dl_off",
-        F.explode(slices).alias("rs"),
-    )
-
-    def sub(stream: str, off: str):
-        start = F.element_at(off, F.col("rs.b_lo") + 1)
-        end = F.when(
-            F.col("rs.b_hi") < F.size(off), F.element_at(off, F.col("rs.b_hi") + 1)
-        ).otherwise(F.length(stream).cast("long"))
-        return F.col(stream).substr(
-            (start + 1).cast("int"), (end - start).cast("int")
-        )
-
-    n_sub = (
-        F.least(F.col("df_part"), F.col("rs.b_hi").cast("long") * block_size)
-        - F.col("rs.b_lo").cast("long") * block_size
-    )
-    return x.select(
-        "term_h",
-        F.col("rs.range_id").alias("range_id"),
-        F.col("rs.lo").alias("lo"),
-        F.col("rs.hi").alias("hi"),
-        n_sub.alias("n_sub"),
-        sub("doc_stream", "block_doc_off").alias("doc_stream"),
-        sub("tf_stream", "block_tf_off").alias("tf_stream"),
-        sub("dl_stream", "block_dl_off").alias("dl_stream"),
-    )
-
-
-def _segment_candidates(
-    spark: SparkSession, index_dir: str, qt: DataFrame
-) -> DataFrame:
-    """Decode base-segment postings for query terms back to flat rows:
-    (query_id, term, doc_id, tf, doc_len, df_base). Used by the streaming
-    base+delta scorer, where base and delta tiers must share one stats view."""
-    stats = load_stats(index_dir)
-    block_size = int(stats.get("block_size", 128))
-    terms = [r["term"] for r in qt.select("term").distinct().collect()]
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, term string, doc_id long, tf long, doc_len long, df_base long"
-        )
-    from quickb_spark.functions.hashing import bucket_of, xxhash64
-
-    # (term, term_h) relation: segments are keyed by the v4 int64 hash;
-    # downstream (delta-tier joins) still speak term strings, so the tiny
-    # broadcast relation restores them after decode
-    th = {t: xxhash64(t) for t in terms}
-    tdf = spark.createDataFrame(
-        [(t, h) for t, h in th.items()], "term string, term_h long"
-    )
-    buckets = sorted({bucket_of(t, stats["term_buckets"]) for t in terms})
-    seg = (
-        spark.read.parquet(f"{index_dir}/segments")
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term_h").isin(list(th.values())))
-    )
-
-    decode_schema = "term_h long, doc_id long, tf long, doc_len long"
-
-    def explode_rows(batches):
-        for pdf in batches:
-            out_term, out_doc, out_tf, out_dl = [], [], [], []
-            for r in pdf.itertuples():
-                docs, tfs, dls = decode_posting_list(
-                    r.doc_stream, r.tf_stream, int(r.df_part), r.dl_stream,
-                    block_size=block_size,
-                )
-                out_term.extend([r.term_h] * len(docs))
-                out_doc.extend(docs.tolist())
-                out_tf.extend(tfs.tolist())
-                out_dl.extend(dls.tolist())
-            if out_term:
-                yield pd.DataFrame(
-                    {
-                        "term_h": out_term,
-                        "doc_id": out_doc,
-                        "tf": out_tf,
-                        "doc_len": out_dl,
-                    }
-                )
-
-    flat = seg.select(
-        "term_h", "df_part", "doc_stream", "tf_stream", "dl_stream"
-    ).mapInPandas(explode_rows, decode_schema)
-    df_base = seg.groupBy("term_h").agg(F.sum("df_part").alias("df_base"))
-    return (
-        flat.join(F.broadcast(tdf), "term_h")
-        .join(F.broadcast(qt), "term")
-        .join(F.broadcast(df_base), "term_h")
-        .select("query_id", "term", "doc_id", "tf", "doc_len", "df_base")
-    )
-
-
-def _score_segments(
-    spark: SparkSession,
-    seg: DataFrame,
-    qt_pairs: list[tuple[str, str]],
-    dfs: dict[str, int],
-    stats: dict,
-    k: int,
-    k1: float,
-    b: float,
-    strategy: str,
-    r_count: int,
-    conj_seqs: dict[str, list[int]] | None = None,
-) -> DataFrame:
-    """Shared scoring core: pruned segment rows → JVM-side range slicing
-    (per TERM, deduplicated across queries) → per-range batch scorer →
-    top-k. The (query, term) map and global dfs are driver-side values
-    carried in the scorer closure — no join fans segment streams out per
-    query, so a hot term shared by the whole batch ships once per range.
-    Used by bm25_topk_segments (self-contained) and Searcher (cached
-    stats/lexicon, minimal per-batch jobs). `conj_seqs` (qid -> term_h
-    list) switches the scorer to conjunctive (all-terms) mode — AND
-    retrieval needs no positions, so unlike phrase it works on the channel
-    path (HDFS-only deployments keep the feature)."""
-    block_size = int(stats.get("block_size", 128))
-    sliced = _slice_to_ranges(spark, seg, r_count, block_size)
-    scorer = _make_batch_scorer(
-        qt_pairs, dfs, stats["n_docs"], stats["avgdl"], k, k1, b, strategy,
-        block_size, emit_rank=(r_count == 1), conj_seqs=conj_seqs,
-    )
-    if r_count == 1:
-        # one range covers the full doc space: each query's top-k is final,
-        # rank comes from the scorer, no window merge needed
-        return sliced.groupBy("range_id").applyInPandas(
-            scorer, "query_id string, doc_id long, score double, rank int"
-        ).select("query_id", "rank", "doc_id", "score")
-    scored = sliced.groupBy("range_id").applyInPandas(
-        scorer, "query_id string, doc_id long, score double"
-    )
-    # exact merge: ranges partition docIDs, so the union of per-range
-    # partials contains every candidate doc exactly once
-    return topk_window(scored, k)
+    return out_q, out_d, out_s
 
 
 def _auto_ranges(total_postings: int, parallelism: int | None = None) -> int:
@@ -789,8 +322,7 @@ def _auto_ranges(total_postings: int, parallelism: int | None = None) -> int:
     Every extra range re-decodes its boundary blocks and re-runs the batch
     scorer once, so fan-out beyond available task slots is pure overhead:
     measured on a 4M-doc index at 8 cores, 16 ranges served the 50-query
-    batch in 15.5s vs 19.8s at 32 and 32.5s at 128 (bench/query_ranges_ab
-    .py). The fan-out is therefore capped at 2x the cluster's core count
+    batch in 15.5s vs 19.8s at 32 and 32.5s at 128. The fan-out is therefore capped at 2x the cluster's core count
     unless the per-task memory bound (~4x RANGE_TARGET_POSTINGS postings
     per task) forces more. On a large cluster the parallelism cap is not
     binding and the work-granule term decides, exactly as before. All
@@ -831,17 +363,9 @@ def bm25_topk_segments(
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    use_wand: bool | None = None,
-    strategy: str = "auto",
     ranges: int | str = "auto",
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) from the compressed segment index.
-
-    strategy: "auto" (default — vectorized exhaustive scoring for small
-    candidate sets, block-max WAND for large), "wand", or "exact". All three
-    return identical results (WAND pruning is lossless; tested); they differ
-    only in speed. use_wand=True/False is the explicit override used by the
-    equivalence tests.
 
     ranges: docID-range fan-out per query — "auto" sizes it from the
     candidate-posting count and the cluster's parallelism (see
@@ -849,49 +373,9 @@ def bm25_topk_segments(
     available task slots), an int forces it. All values return identical
     results (ranges partition the doc space; tested).
 
-    Self-contained one-shot form: re-lists the index and re-derives per-term
-    df per call. For serving (repeated batches against one index), use
-    quickb_spark.query.searcher.Searcher — same results, cached fixed costs.
-    """
-    if use_wand is True:
-        strategy = "wand"
-    elif use_wand is False:
-        strategy = "exact"
-    stats = load_stats(index_dir)
-    # ONE driver round-trip for the (query, term) map; term + bucket pruning
-    # literals and the scorer's query->terms closure all derive from it
-    qt_rows = query_terms(queries).collect()
-    qt_pairs = sorted({(r["query_id"], r["term"]) for r in qt_rows})
-    terms = sorted({t for _, t in qt_pairs})
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double"
-        )
-    from quickb_spark.functions.hashing import bucket_of, xxhash64
+    One-shot form of quickb_spark.query.searcher.Searcher: a fresh
+    Searcher per call. For repeated batches against one index keep a
+    Searcher, which caches the listing and the dfs."""
+    from quickb_spark.query.searcher import Searcher
 
-    # v4 term identity: hash query terms driver-side with the bit-identical
-    # xxhash64 mirror; bucket pruning literals derive from the same hash
-    th = {t: xxhash64(t) for t in terms}
-    buckets = sorted({bucket_of(t, stats["term_buckets"]) for t in terms})
-    seg = (
-        spark.read.parquet(f"{index_dir}/segments")
-        .filter(F.col("bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term_h").isin(list(th.values())))  # row-group pruning
-    )
-    # ONE driver round-trip for the global per-term dfs (idf + auto ranges)
-    dfs = {
-        int(r["term_h"]): int(r["df_total"])
-        for r in seg.groupBy("term_h")
-        .agg(F.sum("df_part").alias("df_total"))
-        .collect()
-    }
-    if ranges == "auto":
-        r_count = _auto_ranges(
-            sum(dfs.values()), spark.sparkContext.defaultParallelism
-        )
-    else:
-        r_count = int(ranges)
-    qt_pairs_h = [(q, th[t]) for q, t in qt_pairs]
-    return _score_segments(
-        spark, seg, qt_pairs_h, dfs, stats, k, k1, b, strategy, r_count
-    )
+    return Searcher(spark, index_dir, k1, b).topk(queries, k=k, ranges=ranges)

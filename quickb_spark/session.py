@@ -1,6 +1,6 @@
 """Worker-process memory tuning for build/serving sessions.
 
-Why this exists (measured, 2026-08-18, bench/serve_probe3.py on the 4M-doc
+Why this exists (measured, 2026-08-18, per-task rusage probes on the 4M-doc
 fixture index at local-cluster[4,2]): every serving range task minor-faulted
 ~850k pages (~3.3 GB) EVEN WARM — glibc munmaps large freed numpy temps and
 pyarrow's default jemalloc pool purges dirty pages back to the OS, so each

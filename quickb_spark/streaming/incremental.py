@@ -8,10 +8,13 @@ stream and become queryable in two tiers, the classic base+delta design:
    each micro-batch's flat postings to `<index>/flat_delta/ingest_batch=<n>`
    (append-only, naturally idempotent per epoch — Structured Streaming
    replays a failed epoch into the same directory).
-2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta flats.
-   Deltas are small and uncompressed; they join the query path through the
-   declarative scorer while the base uses WAND. Corpus stats (N, avgdl) are
-   recomputed cheaply from base stats + delta doc counts.
+2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta flats,
+   through the same plan and range tasks as `Searcher.topk`. The driver
+   reads the query terms' delta postings with pyarrow (deltas are small and
+   uncompressed), merges the corpus stats (N, avgdl, df) and ships the
+   postings with the range payload; each range task scores them beside
+   the segment parts. Delta docs are new docs, so scores are bit-identical
+   to a from-scratch rebuild, ties included.
 3. **Compact** (`fold_deltas_into_index`): fold accumulated deltas into the
    bucketed checkpoint and re-encode ONLY the buckets that received new
    postings (bucket pruning makes refresh cost proportional to the delta,
@@ -33,7 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from quickb_spark.config import BM25_B, BM25_K1, EngineConfig
 from quickb_spark.fs import IndexFS, join_path
 from quickb_spark.index.flatten import flat_postings_from_documents
-from quickb_spark.index.segments import _bucket_col, invalidate_buckets, load_stats
+from quickb_spark.index.segments import _bucket_col, invalidate_buckets
 
 __all__ = [
     "start_incremental_ingest",
@@ -85,84 +88,119 @@ def start_incremental_ingest(
     return writer.start()
 
 
-def _delta_flat(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    fs = IndexFS(index_dir, spark)
+def _delta_files(fs: IndexFS, index_dir: str) -> list[str]:
+    """The committed delta tier: the `.parquet` files directly inside the
+    top-level `ingest_batch=<n>` dirs. Names starting with `_` or `.` are
+    skipped, as Spark's reader skips them: a running micro-batch stages
+    its files under `flat_delta/.spark-staging-<job>/` and renames them
+    into place on commit, and checksum files start with `.`. Fold and
+    the unfolded query both read exactly this list."""
     d = _delta_dir(index_dir)
-    if not fs.exists(d) or not any(
-        n.startswith("ingest_batch=") for n in fs.listdir(d)
-    ):
+    if not fs.exists(d):
+        return []
+    out = []
+    for batch in fs.listdir(d):
+        if not batch.startswith("ingest_batch="):
+            continue
+        bdir = join_path(d, batch)
+        out += [
+            join_path(bdir, n) for n in fs.listdir(bdir)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+    return out
+
+
+def _delta_flat(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    files = _delta_files(IndexFS(index_dir, spark), index_dir)
+    if not files:
         return None
-    return spark.read.parquet(d)
+    return (
+        spark.read.option("basePath", _delta_dir(index_dir)).parquet(*files)
+    )
+
+
+def _delta_postings(spark: SparkSession, index_dir: str, terms: list[str]):
+    """The pending delta tier, read in the driver with pyarrow: the given
+    terms' postings plus the tier's doc count and token sum (from its
+    `first == 1` rows, one per doc). -> searcher.ExtraPostings, or None
+    when no delta is pending. Raises UnreachableIndexError when pyarrow
+    cannot reach the index's filesystem."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from quickb_spark.index.p2_direct import pyarrow_fs_for
+    from quickb_spark.query.searcher import ExtraPostings, UnreachableIndexError
+
+    files = _delta_files(IndexFS(index_dir, spark), index_dir)
+    if not files:
+        return None
+    d = _delta_dir(index_dir)
+    try:
+        fsys, root = pyarrow_fs_for(d)
+    except (OSError, ValueError, NotImplementedError) as e:
+        # pyarrow: ArrowInvalid (unknown scheme) / ArrowIOError /
+        # ArrowNotImplementedError, as in Searcher._files_for
+        raise UnreachableIndexError(
+            f"cannot reach the delta files of index {index_dir!r} with "
+            f"pyarrow: {e}"
+        ) from e
+    paths = [root + f[len(d):] for f in files]
+    tbl = ds.dataset(paths, format="parquet", filesystem=fsys).to_table(
+        columns=["term", "doc_id", "tf", "doc_len", "first"],
+        filter=pc.field("term").isin(pa.array(terms, pa.string()))
+        | (pc.field("first") == 1),
+    )
+    firsts = tbl.filter(pc.equal(tbl["first"], 1))
+    postings = {}
+    for t in terms:
+        rows = tbl.filter(pc.equal(tbl["term"], t))
+        if not rows.num_rows:
+            continue
+        docs = rows["doc_id"].to_numpy()
+        order = np.argsort(docs, kind="stable")
+        postings[t] = (
+            docs[order],
+            rows["tf"].to_numpy()[order],
+            rows["doc_len"].to_numpy()[order],
+        )
+    return ExtraPostings(
+        n_docs=firsts.num_rows,
+        tokens=int(pc.sum(firsts["doc_len"]).as_py() or 0),
+        postings=postings,
+    )
 
 
 def query_with_deltas(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | list[tuple[str, str]],
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
     """BM25 top-k over base segments plus any unfolded streaming deltas.
 
-    Base and delta partial scores share one (N, avgdl, df) statistics view,
-    so scores equal a from-scratch rebuild over base+delta (tested)."""
-    from quickb_spark.index.encode import decode_posting_list  # noqa: F401
-    from quickb_spark.query.bm25 import bm25_score_col, query_terms, topk_window
-    from quickb_spark.query.wand import _segment_candidates
+    Planned by a fresh Searcher with the delta tier merged in: N and the
+    token sum add up, df = df_base + df_delta (a delta-only term is live),
+    and each range task scores the delta postings of its range beside the
+    segment parts. Base and delta doc ids are disjoint, so results equal a
+    from-scratch rebuild over base+delta bit for bit (tested). Only the
+    query terms' lexicon rows are read driver-side, so the range job is
+    the only Spark job and no call loads the whole term dictionary.
+    With no delta pending this is a plain Searcher call."""
+    from quickb_spark.functions.hashing import bucket_of
+    from quickb_spark.query.searcher import Searcher, _tokenize
 
-    delta = _delta_flat(spark, index_dir)
-    stats = load_stats(index_dir)
-    qt = query_terms(queries)
-
-    if delta is None:
-        from quickb_spark.query.wand import bm25_topk_segments
-
-        return bm25_topk_segments(spark, index_dir, queries, k=k, k1=k1, b=b)
-
-    # merged corpus stats
-    drow = delta.agg(
-        F.countDistinct("doc_id").alias("n"),
-        F.sum("tf").alias("tokens"),
-    ).collect()[0]
-    n_delta = int(drow["n"] or 0)
-    delta_tokens = float(drow["tokens"] or 0.0)
-    n_docs = stats["n_docs"] + n_delta
-    avgdl = (
-        (stats["avgdl"] * stats["n_docs"] + delta_tokens) / n_docs if n_docs else 0.0
+    s = Searcher(spark, index_dir, k1, b)
+    toks_by_q = _tokenize(queries)
+    terms = sorted({t for toks in toks_by_q.values() for t in toks})
+    s._read_lexicon(
+        sorted({bucket_of(t, s.n_buckets) for t in terms}), terms=terms
     )
-
-    # per-(query, term, doc) partial rows from both tiers, then one agg
-    base = _segment_candidates(spark, index_dir, qt)  # (query_id, term, doc_id, tf, doc_len, df_base)
-    dterms = delta.join(F.broadcast(qt.select("term").distinct()), "term")
-    ddf = dterms.groupBy("term").agg(F.countDistinct("doc_id").alias("df_delta"))
-
-    df_all = (
-        base.select("term", "df_base")
-        .distinct()
-        .join(ddf, "term", "outer")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df_base"), F.lit(0))
-                + F.coalesce(F.col("df_delta"), F.lit(0))
-            ).alias("df"),
-        )
-    )
-    cand = (
-        base.select("query_id", "term", "doc_id", "tf", "doc_len")
-        .unionByName(
-            dterms.join(F.broadcast(qt), "term").select(
-                "query_id", "term", "doc_id", "tf", "doc_len"
-            )
-        )
-        .join(F.broadcast(df_all), "term")
-    )
-    partial = cand.select(
-        "query_id", "doc_id", bm25_score_col(n_docs, avgdl, k1, b).alias("partial")
-    )
-    scored = partial.groupBy("query_id", "doc_id").agg(F.sum("partial").alias("score"))
-    return topk_window(scored, k)
+    extra = _delta_postings(spark, index_dir, terms)
+    return s._serve(s._plan(toks_by_q, k, extra=extra))
 
 
 def _fold_marker(index_dir: str) -> str:

@@ -1,7 +1,10 @@
 """Serving-path Searcher: result identity with the one-shot query path,
-driver-side hashing parity, lexicon correctness, df caching."""
+driver-side hashing parity, lexicon correctness, df caching, and the error
+for an index filesystem pyarrow cannot list."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,11 +83,8 @@ def test_searcher_identical_to_one_shot(spark, built):
     got_df = _ranked(s.topk(qdf, k=10))
     assert got_list == want
     assert got_df == want
-    # forced range fan-out and strategy still identical
+    # forced range fan-out still identical
     assert _ranked(s.topk(fixture_queries()[:8], k=10, ranges=4)) == want
-    assert (
-        _ranked(s.topk(fixture_queries()[:8], k=10, strategy="wand")) == want
-    )
 
 
 def test_searcher_absent_and_empty_queries(spark, built):
@@ -151,36 +151,23 @@ def test_preload_warms_caches_and_preserves_results(spark, built):
     assert abs(third - warmed) <= max(64, warmed // 100)
     assert _ranked(s.topk(qs, k=10)) == want
 
-    # channel fallback (no pyarrow-reachable listing): preload is a no-op,
-    # not an error
-    s._seg_files = None
-    assert s.preload() == 0
 
+def test_unreachable_index_fs_raises(spark, built, monkeypatch):
+    """An index whose filesystem pyarrow cannot list has no serving path:
+    topk and preload raise an error naming the index, never an empty or
+    silently degraded result."""
+    from quickb_spark.index import p2_direct
+    from quickb_spark.query.searcher import UnreachableIndexError
 
-def test_direct_vs_channel_serving_identity(spark, built, monkeypatch):
-    """The direct (pyarrow range-task) serving path and the Arrow-channel
-    path must return identical results for every strategy and range count
-    — QKB_SERVE_CHANNEL=1 is the A/B switch."""
-    qs = fixture_queries()[:8]
+    def unreachable(*_args, **_kwargs):
+        raise OSError("no pyarrow filesystem for this scheme")
+
+    monkeypatch.setattr(p2_direct, "list_bucket_files", unreachable)
     s = Searcher(spark, built)
-    direct = {
-        ("auto", "auto"): _ranked(s.topk(qs, k=10)),
-        ("auto", 4): _ranked(s.topk(qs, k=10, ranges=4)),
-        ("exact", 1): _ranked(s.topk(qs, k=10, strategy="exact", ranges=1)),
-        ("wand", 2): _ranked(s.topk(qs, k=10, strategy="wand", ranges=2)),
-    }
-    monkeypatch.setenv("QKB_SERVE_CHANNEL", "1")
-    assert _ranked(s.topk(qs, k=10)) == direct[("auto", "auto")]
-    assert _ranked(s.topk(qs, k=10, ranges=4)) == direct[("auto", 4)]
-    assert (
-        _ranked(s.topk(qs, k=10, strategy="exact", ranges=1))
-        == direct[("exact", 1)]
-    )
-    assert (
-        _ranked(s.topk(qs, k=10, strategy="wand", ranges=2))
-        == direct[("wand", 2)]
-    )
-    assert len(direct[("auto", "auto")]) > 50
+    with pytest.raises(UnreachableIndexError, match=re.escape(built)):
+        s.topk(fixture_queries()[:4], k=5)
+    with pytest.raises(UnreachableIndexError, match=re.escape(built)):
+        s.preload()
 
 
 def test_driver_side_lexicon_identity(spark, built):

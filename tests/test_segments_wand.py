@@ -1,5 +1,5 @@
-"""Compressed segment build + WAND query: correctness vs the naive spine,
-salting behavior, resumability (SURVEY.md §5 items 2, 3, 6, 7)."""
+"""Compressed segment build + BM25 serving: correctness vs the brute-force
+oracle, salting behavior, resumability (SURVEY.md §5 items 2, 3, 6, 7)."""
 
 from __future__ import annotations
 
@@ -24,7 +24,8 @@ from quickb_spark.index.segments import (
     load_stats,
     segments_meta,
 )
-from quickb_spark.query.wand import _exact_topk, _wand_topk, bm25_topk_segments
+from quickb_spark.query.wand import bm25_topk_segments
+from tests.kernel_oracles import _exact_topk, _wand_topk
 from tests.oracle_bm25 import OracleIndex
 
 N_DOCS = 250
@@ -128,23 +129,15 @@ def test_segment_positions_roundtrip_to_oracle(spark, built, oracle):
 
 
 def test_wand_matches_naive_and_oracle(spark, built, oracle):
+    """The served top-k (block-max pruned kernel in docID-range tasks)
+    matches the brute-force oracle rank for rank."""
     queries = fixture_queries()
     qdf = spark.createDataFrame(queries, ["query_id", "query_text"])
-    wand = bm25_topk_segments(spark, built, qdf, k=10, use_wand=True).collect()
-    naive = bm25_topk_segments(spark, built, qdf, k=10, use_wand=False).collect()
-
-    def by_q(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
-        return {q: sorted(v) for q, v in out.items()}
-
-    wq, nq = by_q(wand), by_q(naive)
-    assert set(wq) == set(nq)
-    for q in nq:
-        assert [(r, d) for r, d, _ in wq[q]] == [(r, d) for r, d, _ in nq[q]], q
-        for (_, _, sa), (_, _, sb) in zip(wq[q], nq[q]):
-            assert abs(sa - sb) < 1e-9
+    wq: dict[str, list] = {}
+    for r in bm25_topk_segments(spark, built, qdf, k=10).collect():
+        wq.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], r["score"])
+        )
 
     hits = 0
     for qid, qtext in queries:
@@ -162,22 +155,19 @@ def test_wand_matches_naive_and_oracle(spark, built, oracle):
 @pytest.mark.parametrize("r_count", [2, 8, 32])
 def test_range_fanout_is_exact(spark, built, r_count):
     """docID-range parallel serving must be bit-identical to the
-    single-range plan, for both scorer strategies (slices are decoded via
-    the per-block byte offsets + absolute delta resets, then trimmed)."""
+    single-range plan (slices are decoded via the per-block byte offsets +
+    absolute delta resets, then trimmed)."""
     qdf = spark.createDataFrame(fixture_queries(), ["query_id", "query_text"])
     base = sorted(
         map(tuple, bm25_topk_segments(spark, built, qdf, k=10, ranges=1).collect())
     )
-    for use_wand in (True, False):
-        got = sorted(
-            map(
-                tuple,
-                bm25_topk_segments(
-                    spark, built, qdf, k=10, use_wand=use_wand, ranges=r_count
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            bm25_topk_segments(spark, built, qdf, k=10, ranges=r_count).collect(),
         )
-        assert got == base, (r_count, use_wand)
+    )
+    assert got == base, r_count
 
 
 def test_wand_prunes(built):
@@ -286,66 +276,38 @@ def test_format_version_fail_fast(spark, built, tmp_path):
         build_index(spark, index_dir=legacy, cfg=CFG)
 
 
-def test_segment_scan_prunes_partitions_and_pushes_filters(spark, built, tmp_path):
-    """The README's plan claim, asserted: the query-side segment scan must
-    (a) PARTITION-prune to the query terms' buckets, (b) push the term_h
-    predicate into the parquet scan (PushedFilters), and (c) prune columns
-    to the projection (ReadSchema). Guards the scan shape in
-    query/wand.py:555-559 — a regression here silently turns
-    O(query terms) serving into O(index).
-
-    Pruning is proven BEHAVIORALLY, not just by plan text: a poison
-    (non-parquet) file is planted in an extra bucket=999 partition; a
-    pruned scan never opens it, an unpruned scan dies on it."""
-    import io
-    from contextlib import redirect_stdout
-
-    from quickb_spark.functions.hashing import bucket_of, xxhash64
+def test_direct_serving_prunes_buckets(spark, built, tmp_path):
+    """Serving reads only the query terms' buckets, proven behaviourally:
+    a poison (non-parquet) segment file planted in a bucket the query does
+    not touch is never opened, while the same file in a bucket the query
+    touches fails the query. No preload, so the range tasks read the
+    segment files themselves — a regression here silently turns
+    O(query terms) serving into O(index)."""
+    from quickb_spark.functions.hashing import bucket_of
+    from quickb_spark.query.searcher import Searcher
 
     stats = load_stats(built)
     terms = ["def", "import", "return"]
-    buckets = sorted({bucket_of(t, stats["term_buckets"]) for t in terms})
-    hashes = [xxhash64(t) for t in terms]
-    assert len(buckets) < stats["term_buckets"], "fixture must actually prune"
+    touched = sorted({bucket_of(t, stats["term_buckets"]) for t in terms})
+    untouched = [b for b in range(stats["term_buckets"]) if b not in touched]
+    assert untouched, "fixture must actually prune"
+    queries = [("q1", " ".join(terms))]
+    want = sorted(map(tuple, Searcher(spark, built).topk(queries, k=10).collect()))
+    assert want
 
-    seg_copy = str(tmp_path / "segments")
-    shutil.copytree(f"{built}/segments", seg_copy)
-    os.makedirs(f"{seg_copy}/bucket=999")
-    with open(f"{seg_copy}/bucket=999/poison.parquet", "wb") as f:
-        f.write(b"this is not a parquet file")
-    # explicit schema: no footer sampling at read time, so ONLY partition
-    # pruning decides whether the poison file is ever opened
-    schema = spark.read.parquet(f"{built}/segments").schema
+    def poisoned(bucket):
+        idx = str(tmp_path / f"poison_{bucket}")
+        shutil.copytree(built, idx)
+        os.makedirs(f"{idx}/segments/bucket={bucket}", exist_ok=True)
+        with open(f"{idx}/segments/bucket={bucket}/poison.parquet", "wb") as f:
+            f.write(b"this is not a parquet file")
+        return Searcher(spark, idx)
 
-    def pruned(bucket_list):
-        return (
-            spark.read.schema(schema).parquet(seg_copy)
-            .filter(F.col("bucket").isin(bucket_list))
-            .filter(F.col("term_h").isin(hashes))
-            .select("term_h", "salt", "df_part", "doc_stream")
-        )
-
-    # (a) behavioral partition pruning: the poison partition is never read
-    assert pruned(buckets).count() > 0
-    # control: the poison IS poisonous when its partition survives pruning
+    got = poisoned(untouched[0]).topk(queries, k=10).collect()
+    assert sorted(map(tuple, got)) == want
+    # control: the poison IS poisonous when its bucket is a query bucket
     with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
-        pruned(buckets + [999]).count()
-
-    scan = pruned(buckets)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        scan.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    assert "In(term_h" in plan, f"term_h not pushed to parquet:\n{plan}"
-    read_schema = next(
-        line for line in plan.splitlines() if "ReadSchema" in line
-    )
-    for col in ("term_h", "doc_stream"):
-        assert col in read_schema
-    assert "block_max_tf" not in read_schema, (
-        "column pruning failed — unprojected columns reach the scan"
-    )
+        poisoned(touched[0]).topk(queries, k=10).collect()
 
 
 # --------------------------------------------------------------------------
@@ -517,11 +479,8 @@ def test_conjunctive_subset_of_any_mode_results(spark, built, chunks):
     assert phr <= cj
 
 
-def test_conjunctive_mode_guards(spark, built, chunks, monkeypatch):
-    """phrase+match_all rejected; slop validated; phrase still raises on
-    the channel path; conjunctive no longer does — AND-mode needs no
-    positions, so the channel scorer serves it (HDFS-only deployments keep
-    the feature), identical to the direct path."""
+def test_conjunctive_mode_guards(spark, built):
+    """phrase+match_all rejected; slop validated."""
     from quickb_spark.query.searcher import Searcher
 
     s = Searcher(spark, built)
@@ -531,17 +490,6 @@ def test_conjunctive_mode_guards(spark, built, chunks, monkeypatch):
         s.topk([("q1", "def import")], slop=2)
     with pytest.raises(ValueError, match="slop must be"):
         s.topk([("q1", "def import")], phrase=True, slop=-1)
-    queries = _conj_queries(chunks)[:5]
-    want = sorted(map(tuple, s.topk(queries, k=10, match_all=True).collect()))
-    monkeypatch.setenv("QKB_SERVE_CHANNEL", "1")
-    with pytest.raises(ValueError, match="direct serving path"):
-        s.topk([("q1", "def import")], phrase=True)
-    got = sorted(map(tuple, s.topk(queries, k=10, match_all=True).collect()))
-    assert [(q, r, d) for q, r, d, _ in got] == [
-        (q, r, d) for q, r, d, _ in want
-    ]
-    for (_, _, _, a), (_, _, _, b) in zip(got, want):
-        assert abs(a - b) < 1e-9
 
 
 # --------------------------------------------------------------------------

@@ -158,3 +158,108 @@ def test_gen_document_prefix_stability():
     assert [gen_document(i, 42) for i in range(10)] == [
         gen_document(i, 42) for i in range(10)
     ]
+
+
+def test_query_with_deltas_ties_match_rebuild_exactly(spark, tmp_path):
+    """Delta docs that copy base docs' content under new paths score
+    EXACTLY like their originals, so every copied hit is a kth-score tie.
+    The unfolded base+delta answer must equal a from-scratch rebuild bit
+    for bit — scores compared with ==, tied docs in doc_id-ascending
+    order — and run as exactly one Spark job."""
+    base = [gen_document(i, 9) for i in range(80)]
+    copies = [
+        (repo, f"{path}.copy", commit, lang, content)
+        for repo, path, commit, lang, content in base[:40]
+    ]
+    idx = str(tmp_path / "idx")
+    build_index(
+        spark, index_dir=idx, cfg=CFG,
+        documents=spark.createDataFrame(base, DOCUMENTS_SCHEMA),
+    )
+    src = str(tmp_path / "in")
+    spark.createDataFrame(copies, DOCUMENTS_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
+
+    queries = fixture_queries()[:20]
+    sc = spark.sparkContext
+    gid = "test-query-with-deltas-jobs"
+    sc.setJobGroup(gid, "unfolded base+delta query")
+    try:
+        merged = query_with_deltas(spark, idx, queries, k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 1
+
+    fresh = str(tmp_path / "fresh")
+    build_index(
+        spark, index_dir=fresh, cfg=CFG,
+        documents=spark.createDataFrame(base + copies, DOCUMENTS_SCHEMA),
+    )
+    got = sorted(map(tuple, merged.collect()))
+    want = sorted(map(tuple, bm25_topk_segments(spark, fresh, spark.createDataFrame(
+        queries, ["query_id", "query_text"]), k=10).collect()))
+    assert got == want  # exact float equality, ranks included
+
+    ties = 0
+    for (q1, r1, d1, s1), (q2, r2, d2, s2) in zip(got, got[1:]):
+        if q1 == q2:
+            assert (s1, -d1) > (s2, -d2), (q1, r1, r2)  # score desc, doc asc
+            ties += s1 == s2
+    assert ties >= 10, "copies must produce exact ties in the top k"
+
+
+def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch):
+    """A running micro-batch stages its files under
+    flat_delta/.spark-staging-<job>/ingest_batch=<n>/ before the commit
+    rename. Neither the unfolded query nor fold may read them, nor a
+    non-parquet file inside a committed batch dir."""
+    import shutil
+
+    import pyarrow as pa
+
+    from quickb_spark.index import p2_direct
+    from quickb_spark.query.searcher import UnreachableIndexError
+
+    base = generate_documents_df(spark, 60, seed=11, partitions=2)
+    alldocs = generate_documents_df(spark, 80, seed=11, partitions=2)
+    idx = tmp_path / "idx"
+    build_index(spark, index_dir=str(idx), cfg=CFG, documents=base)
+    only_delta = spark.createDataFrame(
+        [("r/x", "x/new.py", "c0", "python", "zzqxv zzqxv marker")],
+        DOCUMENTS_SCHEMA,
+    )
+    src = str(tmp_path / "in")
+    alldocs.exceptAll(base).unionByName(only_delta).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, str(idx), CFG).awaitTermination(120)
+
+    # a term no base doc holds is live through the delta alone
+    hit = query_with_deltas(spark, str(idx), [("qx", "zzqxv")], k=10).collect()
+    assert len(hit) == 1 and hit[0]["score"] > 0
+
+    qdf = spark.createDataFrame(fixture_queries()[:10], ["query_id", "query_text"])
+    clean = _collect_ranked(query_with_deltas(spark, str(idx), qdf, k=10))
+
+    delta = idx / "flat_delta"
+    committed = sorted(delta.glob("ingest_batch=*/*.parquet"))
+    assert committed
+    staged = delta / ".spark-staging-x" / "ingest_batch=99"
+    staged.mkdir(parents=True)
+    shutil.copy(committed[0], staged / "part-0.parquet")  # same doc ids again
+    (staged / "part-1.parquet").write_bytes(b"PAR1 half-written")  # no footer
+    (committed[0].parent / "notes.txt").write_text("not a delta file")
+
+    assert _collect_ranked(query_with_deltas(spark, str(idx), qdf, k=10)) == clean
+
+    def unreachable(uri):
+        raise pa.ArrowInvalid(f"unrecognized filesystem type in URI: {uri}")
+
+    with monkeypatch.context() as m:
+        m.setattr(p2_direct, "pyarrow_fs_for", unreachable)
+        with pytest.raises(UnreachableIndexError, match="idx"):
+            query_with_deltas(spark, str(idx), qdf, k=10)
+
+    assert fold_deltas_into_index(spark, str(idx), CFG) > 0
+    assert _collect_ranked(bm25_topk_segments(spark, str(idx), qdf, k=10)) == clean

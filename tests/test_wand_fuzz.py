@@ -1,12 +1,13 @@
-"""Pure-Python fuzz: block-max WAND must be bit-identical to the exhaustive
-scorer on random posting sets (lossless pruning — SURVEY.md §7 hard part b)."""
+"""Pure-Python fuzz: the serving kernel and the block-max WAND oracle must
+be bit-identical to the exhaustive scorer on random posting sets (lossless
+pruning — SURVEY.md §7 hard part b)."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from quickb_spark.index.encode import block_meta
-from quickb_spark.query.wand import _blockmax_topk, _exact_topk, _wand_topk
+from tests.kernel_oracles import _exact_topk, _wand_topk
 
 
 def _mk_term(rng, n_corpus, df, big_ids=False):
@@ -47,62 +48,6 @@ def test_wand_equals_exact_fuzz():
             assert np.allclose(sw, se, atol=1e-12)
 
 
-def test_blockmax_equals_exact_fuzz():
-    """The vectorized block-max pruner must be bit-identical to the
-    exhaustive scorer — same lossless-pruning bar as the DAAT WAND loop,
-    including kth-score ties and 63-bit doc ids."""
-    for trial in range(80):
-        rng = np.random.RandomState(1000 + trial)
-        n = int(rng.choice([50, 500, 3000]))
-        big = trial % 2 == 1
-        terms = [
-            _mk_term(rng, n, rng.randint(1, n + 1), big_ids=big)
-            for _ in range(rng.randint(1, 6))
-        ]
-        for k in (1, 3, 10):
-            ib, sb = _blockmax_topk(terms, k, 1.2, 0.75, 100.0)
-            ie, se = _exact_topk(terms, k)
-            assert ib == ie, (trial, k)
-            assert np.allclose(sb, se, atol=1e-12)
-
-
-def test_blockmax_tie_heavy():
-    """Constant tf/dl makes every posting of a term score identically —
-    maximal kth-score ties, the adversarial case for strict-< pruning."""
-    for trial in range(20):
-        rng = np.random.RandomState(7000 + trial)
-        n = 400
-        terms = []
-        for _ in range(rng.randint(1, 5)):
-            t = _mk_term(rng, n, rng.randint(5, n + 1))
-            t["tfs"][:] = 3
-            t["dls"][:] = 100
-            from quickb_spark.index.encode import block_meta as _bm
-
-            last, mtf, mdl = _bm(t["docs"], t["tfs"], t["dls"], 32)
-            t["block_last_doc"], t["block_max_tf"], t["block_min_dl"] = (
-                last, mtf, mdl,
-            )
-            t["scores"] = (
-                t["idf"] * t["tfs"] * 2.2
-                / (t["tfs"] + 1.2 * (0.25 + 0.75 * t["dls"] / 100.0))
-            )
-            terms.append(t)
-        for k in (1, 5, 10):
-            ib, sb = _blockmax_topk(terms, k, 1.2, 0.75, 100.0)
-            ie, se = _exact_topk(terms, k)
-            assert ib == ie, (trial, k)
-            assert np.allclose(sb, se, atol=1e-12)
-
-
-def test_blockmax_empty_and_small():
-    assert _blockmax_topk([], 10, 1.2, 0.75, 100.0) == ([], [])
-    rng = np.random.RandomState(0)
-    t = _mk_term(rng, 100, 1)
-    ids, sc = _blockmax_topk([t], 10, 1.2, 0.75, 100.0)
-    assert ids == t["docs"].tolist()
-
-
 def test_dense_equals_exact_fuzz():
     """The shared-domain dense batch kernel must be bit-identical to the
     exhaustive scorer — across a reused accumulator (stale residue from a
@@ -131,7 +76,7 @@ def test_dense_equals_exact_fuzz():
                     / (t["tfs"] + 1.2 * (0.25 + 0.75 * t["dls"] / 100.0))
                 )
         # once per "range": shared domain + dense indices + accumulator,
-        # exactly as _make_batch_scorer wires it
+        # exactly as _score_query_set wires it
         domain = np.unique(np.concatenate([t["docs"] for t in pool]))
         for t in pool:
             t["dense"] = np.searchsorted(domain, t["docs"])
