@@ -61,7 +61,7 @@ def main() -> None:
     result = Searcher(spark, args.index_dir).topk(
         queries, k=args.k, ranges=ranges, phrase=args.phrase,
         match_all=args.match_all, slop=args.slop,
-    )
+    ).toDF()
     if args.output:
         result.write.mode("overwrite").parquet(args.output)
     else:

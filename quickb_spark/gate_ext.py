@@ -216,7 +216,7 @@ def q_wand_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _gate_index(spark, sf_dir)
     qdf = spark.createDataFrame(gate.GATE_QUERIES, ["query_id", "query_text"])
-    return bm25_topk_segments(spark, idx, qdf, k=10)
+    return bm25_topk_segments(spark, idx, qdf, k=10).toDF()
 
 
 def q_phrase_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,7 +230,9 @@ def q_phrase_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quickb_spark.query.searcher import Searcher
 
     idx = _gate_index(spark, sf_dir)
-    return Searcher(spark, idx).topk(gate.PHRASE_QUERIES, k=10, phrase=True)
+    return Searcher(spark, idx).topk(
+        gate.PHRASE_QUERIES, k=10, phrase=True
+    ).toDF()
 
 
 def q_phrase_slop_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +247,7 @@ def q_phrase_slop_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _gate_index(spark, sf_dir)
     return Searcher(spark, idx).topk(
         gate.PHRASE_QUERIES, k=10, phrase=True, slop=2
-    )
+    ).toDF()
 
 
 def q_conjunctive_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,7 +261,9 @@ def q_conjunctive_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quickb_spark.query.searcher import Searcher
 
     idx = _gate_index(spark, sf_dir)
-    return Searcher(spark, idx).topk(gate.GATE_QUERIES, k=10, match_all=True)
+    return Searcher(spark, idx).topk(
+        gate.GATE_QUERIES, k=10, match_all=True
+    ).toDF()
 
 
 def q_segments_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

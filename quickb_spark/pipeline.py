@@ -98,7 +98,9 @@ def run_pipeline(
     queries: DataFrame | list[tuple[str, str]] | None = None,
 ) -> dict:
     """Execute the configured stage window. Returns the artifacts the run
-    produced: {"chunks": DataFrame?, "index_dir": str?, "results": DataFrame?}.
+    produced: {"chunks": DataFrame?, "index_dir": str?, "results": ...?}.
+    "results" is the Searcher's local TopK list, or the written parquet
+    read back as a DataFrame when `output_path` is set.
     """
     from quickb_spark.chunking.registry import chunk_documents_with
 
@@ -131,7 +133,7 @@ def run_pipeline(
             raise ValueError("QUERY stage needs queries")
         results = Searcher(spark, cfg.index_dir).topk(queries, k=cfg.k)
         if cfg.output_path:
-            results.write.mode("overwrite").parquet(cfg.output_path)
+            results.toDF().write.mode("overwrite").parquet(cfg.output_path)
             results = spark.read.parquet(cfg.output_path)
         out["results"] = results
 

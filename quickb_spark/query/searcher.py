@@ -1,10 +1,13 @@
 """Serving-path BM25: a Searcher bound to one index, fixed costs cached.
 
 Every BM25 query is served the same way: the driver plans (tokenize, df
-lookup, bucket listing, range split) and ONE Spark job of docID-range
-tasks scores the batch (query/serve_direct.py). A fresh Searcher per call
-is the one-shot form (`wand.bm25_topk_segments`); the streaming tier adds
-its delta postings to the same plan (`streaming.query_with_deltas`).
+lookup, bucket listing, range split) and the docID-range task scores the
+batch (query/serve_direct.py): in the driver for a small auto-ranged plan
+(no Spark job), else in ONE Spark job of range tasks. The result is a
+local `TopK` list of rows, so reading it runs no further job. A fresh
+Searcher per call is the one-shot form (`wand.bm25_topk_segments`); the
+streaming tier adds its delta postings to the same plan
+(`streaming.query_with_deltas`).
 
 A long-lived Searcher keeps the per-batch path free of fixed costs:
 
@@ -23,7 +26,7 @@ A long-lived Searcher keeps the per-batch path free of fixed costs:
   4M-doc fixture's vocabulary is ~3 orders of magnitude under that), the
   same way Lucene loads the term dictionary at reader open: a df lookup
   is then a searchsorted probe, and NO Spark job exists on the serving
-  path besides the scoring job (the round-4 pools measured the
+  path besides the range job, if any (the round-4 pools measured the
   fresh-server lexicon-scan job costing 1.5-17s at 4N depending on which
   executor JVMs the tiny scan landed on — a fixed cost no parallelism can
   shrink). Indexes whose lexicon exceeds the cap (or a Searcher that
@@ -54,9 +57,10 @@ from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.functions.hashing import bucket_of, xxhash64
 from quickb_spark.functions.tokenize import tokenize_py
 from quickb_spark.index.segments import load_stats
+from quickb_spark.query.serve_direct import TopK
 from quickb_spark.query.wand import _auto_ranges
 
-__all__ = ["Searcher", "UnreachableIndexError"]
+__all__ = ["Searcher", "TopK", "UnreachableIndexError"]
 
 #: Bound on the term->df negative/positive cache: serving processes are
 #: long-lived and open-vocabulary query streams would otherwise grow the
@@ -159,7 +163,7 @@ class Searcher:
         """Load the whole (term_h, df) lexicon driver-side as two sorted
         NumPy arrays — the term dictionary a search server holds in memory
         from reader open. A df lookup becomes a searchsorted probe and the
-        serving path runs ZERO Spark jobs besides the one scoring job.
+        serving path runs ZERO Spark jobs besides the range job, if any.
 
         Skipped (returns False) when the lexicon's on-disk parquet exceeds
         `max_mb` (default QKB_LEX_DRIVER_MB, 1024 — decoded pairs are 16
@@ -231,7 +235,9 @@ class Searcher:
         pretouch_mb additionally pre-grows each worker's malloc arena (see
         serve_direct.preload_files; default QKB_SERVE_PRETOUCH_MB).
         Also loads the term dictionary driver-side (load_lexicon) so no
-        per-batch Spark lookup job remains."""
+        per-batch Spark lookup job remains. Driver-path calls memory-map
+        the tables this publishes to the host-shared cache; with that
+        cache disabled, the driver decodes a file on its first use."""
         if self._lex_mem is None:
             self.load_lexicon()
         files = self._files_for(list(range(self.n_buckets)))
@@ -243,7 +249,9 @@ class Searcher:
                              pretouch_mb=pretouch_mb)
 
     def _lookup_dfs(self, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in terms if t not in self._df_cache]
+        # reads each cached value once: a concurrent call may evict it
+        out = {t: self._df_cache.get(t) for t in terms}
+        missing = [t for t, v in out.items() if v is None]
         if missing:
             # v4 lexicon is keyed by term_h; hash with the bit-identical
             # driver-side mirror, then map back to the query's strings
@@ -274,10 +282,10 @@ class Searcher:
             if len(self._df_cache) + len(missing) > _DF_CACHE_MAX:
                 drop = len(self._df_cache) + len(missing) - _DF_CACHE_MAX
                 for key in list(self._df_cache)[:drop]:
-                    del self._df_cache[key]
+                    self._df_cache.pop(key, None)
             for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+                out[t] = self._df_cache[t] = found.get(t, 0)
+        return out
 
     def topk(
         self,
@@ -287,11 +295,17 @@ class Searcher:
         phrase: bool = False,
         match_all: bool = False,
         slop: int = 0,
-    ) -> DataFrame:
-        """(query_id, rank, doc_id, score); queries as (query_id, text)
+    ) -> TopK:
+        """Ranked (query_id, rank, doc_id, score) rows as a local `TopK`
+        list (`.toDF()` for a DataFrame); queries as (query_id, text)
         pairs (preferred for serving — driver-side tokenize, zero extra
         jobs) or a (query_id, query_text) DataFrame (collected: a query
         batch is small by definition).
+
+        ranges="auto" sizes the docID-range fan-out from the candidate
+        postings and scores a small plan in the driver with no Spark job
+        (serve_direct.serve_topk_direct); an int always runs a range job
+        of that many tasks. Every value returns the same rows.
 
         phrase=True: phrase retrieval — each query's tokens must occur in
         a doc IN ORDER with successive-token position gaps <= slop + 1
@@ -320,12 +334,10 @@ class Searcher:
             match_all=match_all, slop=slop,
         ))
 
-    def _serve(self, plan) -> DataFrame:
-        """Run a plan's range job; an empty result when there is no plan."""
+    def _serve(self, plan) -> TopK:
+        """Score a plan; an empty result when there is no plan."""
         if plan is None:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+            return TopK([], self.spark)
         from quickb_spark.query import serve_direct
 
         return serve_direct.serve_topk_direct(self.spark, plan)
@@ -407,6 +419,7 @@ class Searcher:
             k1=self.k1,
             b=self.b,
             r_count=r_count,
+            auto_ranges=ranges == "auto",
             phrase_seqs=seqs if phrase else None,
             conj_seqs=seqs if match_all else None,
             slop=slop,

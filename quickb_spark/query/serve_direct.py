@@ -9,12 +9,19 @@ call `serve_topk_direct`):
   CANDIDATE segment rows itself with pyarrow (bucket-pruned file list from
   the Searcher's cached listing), slices each row's streams to its range
   via the per-block byte offsets (the per-block absolute delta reset makes
-  any block-aligned slice independently decodable), merges each term's
-  parts with `wand._build_struct` and scores the whole query batch with
-  `wand._score_query_set`. Only per-range top-k rows (<= R*Q*k) ever cross
-  the Python<->JVM boundary; the driver merges them exactly and builds the
-  result DataFrame locally — no shuffle, no window job, no stream bytes on
-  the JVM<->Python Arrow channel.
+  any block-aligned slice independently decodable), decodes each table's
+  slices in one pass, merges each term's parts with `wand._build_struct`
+  and scores the whole query batch with `wand._score_query_set`. Only
+  per-range top-k rows (<= R*Q*k) ever cross the Python<->JVM boundary;
+  the driver merges them exactly and returns them as a local `TopK` list —
+  no shuffle, no window job, no stream bytes on the JVM<->Python Arrow
+  channel, and no second job to materialize the result.
+
+Small plans skip the job: an auto-ranged plan of at most
+wand.DRIVER_MAX_POSTINGS candidate postings runs the same range task in
+the driver over the whole doc space, because a Spark job's fixed dispatch
+cost is larger than the scoring work (see the constant's comment). Those
+calls run no Spark job at all.
 
 Why no Arrow channel: an earlier serving path shipped every candidate
 stream slice through the JVM->Python channel once per range (pruned scan
@@ -28,7 +35,8 @@ Candidate rows are consumed as zero-copy NumPy/buffer VIEWS over the Arrow
 table (offsets+values of the binary and list columns) — never `to_pylist`
 (materializing block-metadata lists as Python objects measured ~5x the
 parquet decode cost on the 4M-doc index) — and each file's DECODED table
-is kept in a per-worker-process LRU cache (Spark reuses Python workers):
+is kept in a per-process LRU cache (Spark reuses Python workers; the
+driver keeps its own for driver-path plans):
 the R range tasks of a batch, and every later batch a serving process
 handles, re-read a candidate file zero times instead of once per range.
 This is the decoded-block cache every serving engine keeps; entries are
@@ -71,15 +79,17 @@ beside ANN in the same notebook.
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict, defaultdict
 from typing import NamedTuple
 
 import numpy as np
+from pyspark.sql import Row
 
-from quickb_spark.index.encode import decode_posting_list, varbyte_decode
+from quickb_spark.index.encode import from_u64, varbyte_decode
 from quickb_spark.taskpack import job_description, run_packed
 
-__all__ = ["RangePlan", "serve_topk_direct", "preload_files"]
+__all__ = ["RangePlan", "TopK", "serve_topk_direct", "preload_files"]
 
 #: Segment-row columns every serving read needs; position columns join in
 #: phrase mode only.
@@ -90,11 +100,14 @@ _BASE_COLS = [
 _POS_COLS = ["pos_stream", "block_pos_off"]
 
 
-#: Per-worker-process decoded-table cache: (path, want_pos) ->
-#: (fingerprint, table). LRU by access order, bounded by
-#: QKB_SERVE_CACHE_MB of Arrow buffer bytes per process.
+#: Per-process decoded-table cache (executor workers, and the driver for
+#: driver-path plans): (path, want_pos) -> (fingerprint, table). LRU by
+#: access order, bounded by QKB_SERVE_CACHE_MB of Arrow buffer bytes per
+#: process. Every read or write of it holds _TBL_LOCK: threads serving
+#: driver-path calls on one driver share it.
 _TBL_CACHE: "OrderedDict[tuple[str, bool], tuple]" = OrderedDict()
 _TBL_CACHE_BYTES = [0]
+_TBL_LOCK = threading.Lock()
 
 
 def _cache_budget() -> int:
@@ -252,11 +265,15 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
 
 
 def _cached_table(path: str, want_pos: bool):
-    """Decoded candidate table for one segment file, worker-cached.
+    """Decoded candidate table for one segment file, process-cached.
 
     The cache key includes want_pos (phrase batches read the position
-    columns too); the fingerprint is (size, mtime_ns) so replacing the
-    file — rebuild, re-fold — invalidates the entry."""
+    columns too); a want_pos=True table's columns are a superset, so it
+    also serves want_pos=False reads, from the LRU or the shared cache.
+    The fingerprint is (size, mtime_ns) so replacing the file — rebuild,
+    re-fold — invalidates the entry. The decode runs outside the lock;
+    two threads missing on one file both decode it, and the later insert
+    replaces the earlier."""
     import os
 
     import pyarrow.parquet as pq
@@ -264,31 +281,39 @@ def _cached_table(path: str, want_pos: bool):
     import pyarrow as pa
 
     budget = _cache_budget()
-    cols = _BASE_COLS + (_POS_COLS if want_pos else [])
     st = os.stat(path)
     fp = (st.st_size, st.st_mtime_ns)
-    key = (path, want_pos)
-    hit = _TBL_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        _TBL_CACHE.move_to_end(key)  # refresh LRU position
-        return hit[1]
+    modes = (True,) if want_pos else (False, True)
+    with _TBL_LOCK:
+        for m in modes:
+            hit = _TBL_CACHE.get((path, m))
+            if hit is not None and hit[0] == fp:
+                _TBL_CACHE.move_to_end((path, m))  # refresh LRU position
+                return hit[1]
     tbl = None
+    key = (path, want_pos)
     shm = _shm_dir()
     if shm:
-        sp = _shm_path(shm, path, fp, want_pos)
-        try:
-            tbl = pa.ipc.open_file(pa.memory_map(sp)).read_all()
-        except (OSError, pa.ArrowInvalid):
-            tbl = None
+        for m in modes:
+            try:
+                tbl = pa.ipc.open_file(
+                    pa.memory_map(_shm_path(shm, path, fp, m))
+                ).read_all()
+            except (OSError, pa.ArrowInvalid):
+                continue
+            key = (path, m)
+            break
     if tbl is None:
+        cols = _BASE_COLS + (_POS_COLS if want_pos else [])
         tbl = pq.read_table(path, columns=cols).combine_chunks()
         if shm:
             # publish the decoded form for the host's other workers
             # (atomic rename; racing writers converge on identical bytes
             # modulo writer, last rename wins)
+            sp = _shm_path(shm, path, fp, want_pos)
             try:
                 os.makedirs(shm, exist_ok=True)
-                tmp = f"{sp}.tmp.{os.getpid()}"
+                tmp = f"{sp}.tmp.{os.getpid()}.{threading.get_ident()}"
                 with pa.OSFile(tmp, "wb") as sink:
                     with pa.ipc.new_file(sink, tbl.schema) as writer:
                         writer.write_table(tbl)
@@ -301,15 +326,16 @@ def _cached_table(path: str, want_pos: bool):
                 pass
     if budget <= 0:
         return tbl
-    if hit is not None:
-        _TBL_CACHE_BYTES[0] -= hit[1].nbytes
-        del _TBL_CACHE[key]
-    while _TBL_CACHE and _TBL_CACHE_BYTES[0] + tbl.nbytes > budget:
-        _, old = _TBL_CACHE.popitem(last=False)
-        _TBL_CACHE_BYTES[0] -= old[1].nbytes
-    if tbl.nbytes <= budget:
-        _TBL_CACHE[key] = (fp, tbl)
-        _TBL_CACHE_BYTES[0] += tbl.nbytes
+    with _TBL_LOCK:
+        old = _TBL_CACHE.pop(key, None)
+        if old is not None:
+            _TBL_CACHE_BYTES[0] -= old[1].nbytes
+        while _TBL_CACHE and _TBL_CACHE_BYTES[0] + tbl.nbytes > budget:
+            _, old = _TBL_CACHE.popitem(last=False)
+            _TBL_CACHE_BYTES[0] -= old[1].nbytes
+        if tbl.nbytes <= budget:
+            _TBL_CACHE[key] = (fp, tbl)
+            _TBL_CACHE_BYTES[0] += tbl.nbytes
     return tbl
 
 
@@ -343,7 +369,6 @@ class _RowView:
     """Vectorized accessors over one candidate table's rows."""
 
     def __init__(self, tbl, want_pos: bool):
-        self.n = tbl.num_rows
         self.term_h = tbl.column("term_h").to_numpy(zero_copy_only=False)
         self.df_part = tbl.column("df_part").to_numpy(zero_copy_only=False)
         self.streams = {
@@ -365,57 +390,104 @@ class _RowView:
             )
         }
 
-    def blocks(self, name, i):
-        off, vals = self.lists[name]
-        return vals[off[i]: off[i + 1]]
+    def byte_ranges(self, name, rows, b_lo, b_hi):
+        """(start, end) byte positions in `name`'s values buffer covering
+        blocks [b_lo, b_hi) of each of `rows`, from the rows' per-block
+        byte offsets into the stream."""
+        soff, _ = self.streams[name]
+        loff, lvals = self.lists["block_" + name.split("_")[0] + "_off"]
+        base = soff[rows]
+        first = loff[rows]
+        start = base + lvals[first + b_lo]
+        inner = b_hi < loff[rows + 1] - first
+        end = np.where(
+            inner,
+            lvals[np.minimum(first + b_hi, len(lvals) - 1)],
+            soff[rows + 1] - base,
+        ) + base
+        return start, end
 
-    def stream_slice(self, name, i, b0, b1):
-        """Bytes of row i's `name` stream covering blocks [b0, b1) given
-        that row's block byte-offset array for the stream."""
-        soff, buf = self.streams[name]
-        boff = self.blocks("block_" + name.split("_")[0] + "_off", i)
-        start = int(soff[i]) + int(boff[b0])
-        end = int(soff[i]) + (
-            int(boff[b1]) if b1 < len(boff) else int(soff[i + 1] - soff[i])
+    def gather(self, name, start, end) -> bytes:
+        """The byte ranges of `name`'s stream, concatenated."""
+        buf = self.streams[name][1]
+        return b"".join(
+            buf[a:z] for a, z in zip(start.tolist(), end.tolist())
         )
-        return buf[start:end]
 
 
-def _slice_row(rv: _RowView, i: int, lo: int, hi: int, block_size: int,
-               want_pos: bool):
-    """Row i -> range-trimmed part, or None when it has no postings in
-    [lo, hi]: b_lo = #blocks entirely below lo, b_hi = min(nb, #blocks
-    starting <= hi + 1); the decoded slice is then trimmed to [lo, hi] so
-    every doc is scored in exactly one range."""
-    bld = rv.blocks("block_last_doc", i)
-    nb = len(bld)
-    b_lo = int(np.searchsorted(bld, lo, "left"))
-    b_hi = min(nb, int(np.searchsorted(bld, hi, "right")) + 1)
-    if b_lo >= b_hi:
-        return None
-    n_sub = min(int(rv.df_part[i]), b_hi * block_size) - b_lo * block_size
-    d, t, dl = decode_posting_list(
-        rv.stream_slice("doc_stream", i, b_lo, b_hi),
-        rv.stream_slice("tf_stream", i, b_lo, b_hi),
-        n_sub,
-        rv.stream_slice("dl_stream", i, b_lo, b_hi),
-        block_size=block_size,
+def _seg_counts(flags: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Per-segment count of True flags; segment i is flags[off[i]:off[i+1]]."""
+    cs = np.zeros(len(flags) + 1, dtype=np.int64)
+    np.cumsum(flags, out=cs[1:])
+    return cs[off[1:]] - cs[off[:-1]]
+
+
+def _slice_table(rv: _RowView, lo: int, hi: int, block_size: int,
+                 want_pos: bool) -> list[tuple]:
+    """Every row of one candidate table -> its range-trimmed part:
+    (term_h, docs, tfs, dls, pos_part) for rows with postings in [lo, hi].
+
+    Per row, b_lo = #blocks entirely below lo and b_hi = min(nb, #blocks
+    starting <= hi + 1). The rows' block-aligned slices are concatenated
+    and decoded with one varbyte_decode per stream; doc gaps become ids by
+    one cumsum that restarts at each block start (the per-block absolute
+    reset). The result is split per row and trimmed to [lo, hi], so every
+    doc is scored in exactly one range."""
+    boff, bvals = rv.lists["block_last_doc"]
+    b_lo = _seg_counts(bvals < lo, boff)
+    b_hi = np.minimum(np.diff(boff), _seg_counts(bvals <= hi, boff) + 1)
+    rows = np.flatnonzero(b_lo < b_hi)
+    if not len(rows):
+        return []
+    b_lo, b_hi = b_lo[rows], b_hi[rows]
+    n_sub = (
+        np.minimum(rv.df_part[rows].astype(np.int64), b_hi * block_size)
+        - b_lo * block_size
     )
-    a = int(np.searchsorted(d, lo, "left"))
-    z = int(np.searchsorted(d, hi, "right"))
-    pos_part = None
+    row_at = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(n_sub, out=row_at[1:])
+    total = int(row_at[-1])
+    streams = {
+        name: rv.gather(name, *rv.byte_ranges(name, rows, b_lo, b_hi))
+        for name in ("doc_stream", "tf_stream", "dl_stream")
+    }
+    c = np.cumsum(varbyte_decode(streams["doc_stream"], total),
+                  dtype=np.uint64)
+    # block starts of every row slice, in the concatenated posting order
+    n_blk = b_hi - b_lo
+    blk_at = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(n_blk, out=blk_at[1:])
+    starts = np.repeat(row_at[:-1], n_blk) + block_size * (
+        np.arange(blk_at[-1], dtype=np.int64) - np.repeat(blk_at[:-1], n_blk)
+    )
+    carry = np.concatenate(([np.uint64(0)], c[starts[1:] - 1]))
+    docs = from_u64(c - np.repeat(carry, np.diff(np.append(starts, total))))
+    tfs = varbyte_decode(streams["tf_stream"], total).view(np.int64)
+    dls = varbyte_decode(streams["dl_stream"], total).view(np.int64)
+    trim_a = _seg_counts(docs < lo, row_at)
+    trim_z = _seg_counts(docs <= hi, row_at)
     if want_pos:
-        pos_part = {
-            "tfs_slice": t,  # pre-trim slice tfs (position counts/posting)
-            "trim_a": a,
-            "n_sub": n_sub,
-            "pos_bytes": rv.stream_slice("pos_stream", i, b_lo, b_hi),
-        }
-    if a or z < len(d):
-        d, t, dl = d[a:z], t[a:z], dl[a:z]
-    if not len(d):
-        return None
-    return d, t, dl, pos_part
+        pos_buf = rv.streams["pos_stream"][1]
+        pos_a, pos_z = rv.byte_ranges("pos_stream", rows, b_lo, b_hi)
+    out = []
+    for j, i in enumerate(rows.tolist()):
+        r0, r1 = int(row_at[j]), int(row_at[j + 1])
+        a, z = r0 + int(trim_a[j]), r0 + int(trim_z[j])
+        if a >= z:
+            continue
+        pos_part = None
+        if want_pos:
+            pos_part = {
+                # pre-trim slice tfs (position counts per posting)
+                "tfs_slice": tfs[r0:r1],
+                "trim_a": a - r0,
+                "n_sub": r1 - r0,
+                "pos_bytes": pos_buf[int(pos_a[j]): int(pos_z[j])],
+            }
+        out.append(
+            (int(rv.term_h[i]), docs[a:z], tfs[a:z], dls[a:z], pos_part)
+        )
+    return out
 
 
 def _part_positions(p) -> tuple[np.ndarray, np.ndarray]:
@@ -546,7 +618,9 @@ class RangePlan(NamedTuple):
     `conj_seqs`: qid -> term_h list turns it into conjunctive (all-terms)
     retrieval. `extra`: term_h -> (docs, tfs, dls) doc-sorted postings
     that are not in `files` (the streaming delta tier); their doc ids must
-    be disjoint from the segment files' and they carry no positions."""
+    be disjoint from the segment files' and they carry no positions.
+    `auto_ranges`: the caller left the fan-out to the engine, so a plan
+    at or under wand.DRIVER_MAX_POSTINGS is served in the driver."""
 
     files: list[str]
     terms_by_query: dict[str, list[int]]
@@ -562,6 +636,7 @@ class RangePlan(NamedTuple):
     conj_seqs: dict[str, list[int]] | None = None
     slop: int = 0
     extra: dict[int, tuple] | None = None
+    auto_ranges: bool = False
 
     def payloads(self) -> list[tuple[int, int, "RangePlan"]]:
         """One (lo, hi, plan) payload per docID range."""
@@ -574,7 +649,8 @@ def _serve_range_task(payload):
     """One range's serving work: read candidate rows, slice via zero-copy
     views, build structs with the SHARED kernels, score the batch (or
     phrase-verify), return top-k tuples. Pure pyarrow/NumPy — nothing but
-    these rows crosses the Python<->JVM boundary."""
+    these rows crosses the Python<->JVM boundary. Runs in a range task
+    (`_range_job_task`) or, for a driver-path plan, in the driver."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -586,7 +662,6 @@ def _serve_range_task(payload):
     )
 
     lo, hi, plan = payload
-    pa.set_cpu_count(1)  # one core slot per task (see p1_direct._p1_task)
     want_pos = plan.phrase_seqs is not None
     cols = _BASE_COLS + (_POS_COLS if want_pos else [])
     th_set = sorted(plan.dfs)
@@ -608,15 +683,13 @@ def _serve_range_task(payload):
         if not mask.any():
             continue
         tbl = full if mask.all() else full.filter(pa.array(mask))
-        rv = _RowView(tbl, want_pos)
-        for i in range(rv.n):
-            sl = _slice_row(rv, i, lo, hi, plan.block_size, want_pos)
-            if sl is None:
-                continue
-            d, t, dl, pp = sl
-            parts[int(rv.term_h[i])].append((d, t, dl))
+        sliced = _slice_table(
+            _RowView(tbl, want_pos), lo, hi, plan.block_size, want_pos
+        )
+        for term, d, t, dl, pp in sliced:
+            parts[term].append((d, t, dl))
             if want_pos:
-                pos_parts[int(rv.term_h[i])].append(pp)
+                pos_parts[term].append(pp)
     for term, (d, t, dl) in (plan.extra or {}).items():
         a = int(np.searchsorted(d, lo, "left"))
         z = int(np.searchsorted(d, hi, "right"))
@@ -660,15 +733,73 @@ def _serve_range_task(payload):
     return list(zip(out_q, (int(d) for d in out_d), map(float, out_s)))
 
 
-def serve_topk_direct(spark, plan: RangePlan):
-    """(query_id, rank, doc_id, score) DataFrame: one Spark job of
-    `plan.r_count` range tasks, then the exact driver-side merge."""
-    payloads = plan.payloads()
-    sc = spark.sparkContext
-    with job_description(sc, "qkb serve: range top-k"):
-        chunks = sc.parallelize(payloads, len(payloads)).map(
-            _serve_range_task
-        ).collect()
+def _range_job_task(payload):
+    """The range job's task body. `pa.set_cpu_count` is process-global,
+    so it is set here, in the executor's worker (one core slot per task,
+    see p1_direct._p1_task), never in the driver."""
+    import pyarrow as pa
+
+    pa.set_cpu_count(1)
+    return _serve_range_task(payload)
+
+
+class TopK(list):
+    """Ranked `Row(query_id, rank, doc_id, score)` hits, already in the
+    driver: ordered by query_id, then rank. `collect()`, `count()` and
+    `toPandas()` read the list and run no Spark job; `toDF()` builds a
+    DataFrame for callers that want one (a write, a join)."""
+
+    SCHEMA = "query_id string, rank int, doc_id long, score double"
+    _ROW = Row("query_id", "rank", "doc_id", "score")
+
+    def __init__(self, rows=(), spark=None) -> None:
+        super().__init__(self._ROW(*r) for r in rows)
+        self._spark = spark
+
+    def collect(self) -> list:
+        return list(self)
+
+    def count(self) -> int:
+        return len(self)
+
+    def toPandas(self):
+        import pandas as pd
+
+        return pd.DataFrame({
+            "query_id": pd.Series([r[0] for r in self], dtype=object),
+            "rank": np.array([r[1] for r in self], dtype=np.int32),
+            "doc_id": np.array([r[2] for r in self], dtype=np.int64),
+            "score": np.array([r[3] for r in self], dtype=np.float64),
+        })
+
+    def toDF(self):
+        return self._spark.createDataFrame(list(self), self.SCHEMA)
+
+
+def serve_topk_direct(spark, plan: RangePlan) -> TopK:
+    """Score a plan -> TopK rows, then the exact driver-side merge.
+
+    An auto-ranged plan of at most wand.DRIVER_MAX_POSTINGS candidate
+    postings runs `_serve_range_task` in the driver over one payload that
+    covers the whole doc space: no Spark job, whose fixed dispatch cost
+    would exceed the scoring work. Every other plan runs one Spark job of
+    `plan.r_count` range tasks. Both give the same rows (ranges partition
+    the doc space; tested for every R). The driver path reads the files
+    the driver listed with pyarrow (Searcher._files_for), through this
+    process's decoded-table cache and the host-shared one."""
+    from quickb_spark.query import wand
+
+    if plan.auto_ranges and sum(plan.dfs.values()) <= wand.DRIVER_MAX_POSTINGS:
+        chunks = [
+            _serve_range_task(p) for p in plan._replace(r_count=1).payloads()
+        ]
+    else:
+        payloads = plan.payloads()
+        sc = spark.sparkContext
+        with job_description(sc, "qkb serve: range top-k"):
+            chunks = sc.parallelize(payloads, len(payloads)).map(
+                _range_job_task
+            ).collect()
     # exact driver-side merge: ranges partition the doc space, so each doc
     # appears in exactly one range's partial top-k; per query keep the k
     # best by (score desc, doc asc) and rank them
@@ -683,6 +814,4 @@ def serve_topk_direct(spark, plan: RangePlan):
             (qid, rank, doc, score)
             for rank, (score, doc) in enumerate(cands, start=1)
         )
-    return spark.createDataFrame(
-        rows, "query_id string, rank int, doc_id long, score double"
-    )
+    return TopK(rows, spark)

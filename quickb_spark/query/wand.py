@@ -41,11 +41,16 @@ Correctness guardrails:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.index.encode import block_meta
+
+if TYPE_CHECKING:
+    from quickb_spark.query.serve_direct import TopK
 
 __all__ = ["bm25_topk_segments"]
 
@@ -211,6 +216,20 @@ AUTO_EXACT_MAX_POSTINGS = 2_000_000
 
 #: auto range split: one docID range per this many candidate postings.
 RANGE_TARGET_POSTINGS = 2_000_000
+
+#: auto-ranged plans of at most this many candidate postings are scored in
+#: the driver (serve_direct.serve_topk_direct): below the crossover, the
+#: range job's fixed dispatch cost exceeds what its slots save. Measured
+#: on a 4-vCPU VM at 2 task slots (local[2], warm, preloaded 25k-doc
+#: index; medians of 5): the driver costs ~0.015-0.03 s + 0.51 us (any
+#: mode) / 0.76 us (phrase) per candidate posting; the range job
+#: ~0.24 s + 0.33 / 0.49 us. 35k postings: driver 0.016 s vs job 0.24 s;
+#: 394k: 0.18 vs 0.34 s (phrase 0.26 vs 0.42 s); 852k: 0.43 vs 0.51 s
+#: (phrase 0.59 vs 0.70 s); 1.0M: 0.51 vs 0.57 s, but phrase 0.77 vs
+#: 0.72 s. Crossovers: ~1.2M any mode, ~0.77M phrase; more task slots
+#: pull both down (the job's per-posting cost falls), so the threshold
+#: sits below the phrase crossover.
+DRIVER_MAX_POSTINGS = 500_000
 MAX_RANGES = 32
 
 
@@ -364,14 +383,17 @@ def bm25_topk_segments(
     k1: float = BM25_K1,
     b: float = BM25_B,
     ranges: int | str = "auto",
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) from the compressed segment index.
+) -> TopK:
+    """(query_id, rank, doc_id, score) rows from the compressed segment
+    index, as a local `TopK` list (`.toDF()` for a DataFrame).
 
     ranges: docID-range fan-out per query — "auto" sizes it from the
     candidate-posting count and the cluster's parallelism (see
     _auto_ranges: one range per ~2M postings, capped at 32 and at 2x the
-    available task slots), an int forces it. All values return identical
-    results (ranges partition the doc space; tested).
+    available task slots) and scores a plan of at most
+    DRIVER_MAX_POSTINGS candidate postings in the driver; an int forces
+    a range job of that many tasks. All values return identical results
+    (ranges partition the doc space; tested).
 
     One-shot form of quickb_spark.query.searcher.Searcher: a fresh
     Searcher per call. For repeated batches against one index keep a

@@ -9,7 +9,7 @@ stream and become queryable in two tiers, the classic base+delta design:
    (append-only, naturally idempotent per epoch — Structured Streaming
    replays a failed epoch into the same directory).
 2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta flats,
-   through the same plan and range tasks as `Searcher.topk`. The driver
+   through the same plan and range task as `Searcher.topk`. The driver
    reads the query terms' delta postings with pyarrow (deltas are small and
    uncompressed), merges the corpus stats (N, avgdl, df) and ships the
    postings with the range payload; each range task scores them beside
@@ -37,6 +37,7 @@ from quickb_spark.config import BM25_B, BM25_K1, EngineConfig
 from quickb_spark.fs import IndexFS, join_path
 from quickb_spark.index.flatten import flat_postings_from_documents
 from quickb_spark.index.segments import _bucket_col, invalidate_buckets
+from quickb_spark.query.serve_direct import TopK
 
 __all__ = [
     "start_incremental_ingest",
@@ -179,17 +180,20 @@ def query_with_deltas(
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
-) -> DataFrame:
-    """BM25 top-k over base segments plus any unfolded streaming deltas.
+) -> TopK:
+    """BM25 top-k over base segments plus any unfolded streaming deltas,
+    as a local `TopK` list of (query_id, rank, doc_id, score) rows.
 
     Planned by a fresh Searcher with the delta tier merged in: N and the
     token sum add up, df = df_base + df_delta (a delta-only term is live),
     and each range task scores the delta postings of its range beside the
     segment parts. Base and delta doc ids are disjoint, so results equal a
     from-scratch rebuild over base+delta bit for bit (tested). Only the
-    query terms' lexicon rows are read driver-side, so the range job is
-    the only Spark job and no call loads the whole term dictionary.
-    With no delta pending this is a plain Searcher call."""
+    query terms' lexicon rows are read driver-side, so a small plan runs
+    no Spark job (it is scored in the driver, see
+    serve_direct.serve_topk_direct), a larger one only the range job, and
+    no call loads the whole term dictionary. With no delta pending this
+    is a plain Searcher call."""
     from quickb_spark.functions.hashing import bucket_of
     from quickb_spark.query.searcher import Searcher, _tokenize
 

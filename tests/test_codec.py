@@ -110,3 +110,56 @@ def test_compression_actually_compresses():
     dls = np.full(100_000, 100, dtype=np.int64)
     enc = encode_posting_list(ids, tfs, dls)
     assert len(enc["doc_stream"]) < 100_000 * 2  # ≥4x better than raw int64
+
+
+def test_table_slice_decode_matches_per_list_decode():
+    """The serving path decodes many rows' block-aligned slices at once
+    (serve_direct._slice_table). For any doc range, each row's part must
+    equal that row's own full decode trimmed to the range, positions
+    included."""
+    import pyarrow as pa
+
+    from quickb_spark.query import serve_direct as sd
+
+    rng = np.random.RandomState(11)
+    bs = 8
+    rows, lists = [], []
+    for n in (1, 7, 8, 9, 40, 130):
+        docs = np.unique(rng.randint(-(2**63), 2**63 - 1, size=n, dtype=np.int64))
+        if len(docs) > 2:  # the int64 extremes sit on range bounds
+            docs[0], docs[-1] = -(2**63), 2**63 - 1
+        tfs = rng.randint(1, 5, size=len(docs))
+        dls = rng.randint(1, 300, size=len(docs))
+        pos = [np.sort(rng.choice(500, t, replace=False)) for t in tfs]
+        enc = encode_posting_list(docs, tfs, dls, positions=pos, block_size=bs)
+        rows.append(enc)
+        lists.append((docs, tfs, dls, pos))
+    cols = {
+        "term_h": pa.array(np.arange(len(rows)), pa.int64()),
+        "df_part": pa.array([r["n_docs"] for r in rows], pa.int64()),
+    }
+    for c in ("doc_stream", "tf_stream", "dl_stream", "pos_stream"):
+        cols[c] = pa.array([r[c] for r in rows], pa.binary())
+    for c in ("block_last_doc", "block_doc_off", "block_tf_off",
+              "block_dl_off", "block_pos_off"):
+        cols[c] = pa.array([r[c] for r in rows], pa.list_(pa.int64()))
+    rv = sd._RowView(pa.table(cols), True)
+    bounds = [(-(2**63), 2**63 - 1), (5, 4)] + [
+        tuple(sorted(rng.randint(-(2**63), 2**63 - 1, size=2, dtype=np.int64)))
+        for _ in range(40)
+    ]
+    for lo, hi in bounds:
+        got = {p[0]: p for p in sd._slice_table(rv, int(lo), int(hi), bs, True)}
+        for term, (docs, tfs, dls, pos) in enumerate(lists):
+            keep = (docs >= lo) & (docs <= hi)
+            if not keep.any():
+                assert term not in got
+                continue
+            _, d, t, dl, part = got[term]
+            assert np.array_equal(d, docs[keep])
+            assert np.array_equal(t, tfs[keep])
+            assert np.array_equal(dl, dls[keep])
+            flat, offs = sd._part_positions(part)
+            for j, i in enumerate(np.flatnonzero(keep)):
+                s = part["trim_a"] + j
+                assert np.array_equal(flat[offs[s]: offs[s + 1]], pos[i])

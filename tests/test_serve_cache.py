@@ -92,6 +92,33 @@ def test_cache_disable_reads_fresh(tmp_path, monkeypatch):
     assert a is not b and not sd._TBL_CACHE and sd._TBL_CACHE_BYTES[0] == 0
 
 
+def test_cache_thread_safe_under_eviction(tmp_path, monkeypatch):
+    """Threads sharing one process's LRU (driver-path callers) while the
+    budget forces evictions: every read returns its file's table and the
+    byte count matches the entries left."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "1")
+    paths = []
+    for i in range(6):
+        p = tmp_path / f"seg{i}.parquet"
+        _seg_file(p, 2000, seed=20 + i)
+        paths.append(str(p))
+    want = {p: pq.read_table(p).column("term_h") for p in paths}
+
+    def read(i):
+        p = paths[i % len(paths)]
+        return p, sd._cached_table(p, want_pos=False)
+
+    with ThreadPoolExecutor(8) as ex:
+        for p, tbl in ex.map(read, range(1200)):
+            assert tbl.column("term_h").equals(want[p])
+    assert sd._TBL_CACHE_BYTES[0] == sum(
+        t.nbytes for _, t in sd._TBL_CACHE.values()
+    )
+    assert sd._TBL_CACHE_BYTES[0] <= 1 << 20
+
+
 # --------------------------------------------------------------------------
 # host-shared decoded-table cache (Arrow IPC in /dev/shm — the per-host
 # segment cache that makes the server open's decode once-per-HOST instead

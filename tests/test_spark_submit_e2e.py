@@ -151,6 +151,7 @@ def test_spark_submit_py_files_cluster_e2e(spark, tmp_path):
     want = (
         Searcher(spark, idx_local)
         .topk(qset, k=5)
+        .toDF()
         .select("query_id", "rank", "doc_id", F.round("score", 6).alias("score"))
         .collect()
     )

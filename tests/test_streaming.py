@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import DOCUMENTS_SCHEMA, fixture_queries, gen_document, generate_documents_df
 from quickb_spark.index.segments import build_index
+from quickb_spark.query import wand
 from quickb_spark.query.wand import bm25_topk_segments
 from quickb_spark.streaming.incremental import (
     fold_deltas_into_index,
@@ -160,12 +161,25 @@ def test_gen_document_prefix_stability():
     ]
 
 
-def test_query_with_deltas_ties_match_rebuild_exactly(spark, tmp_path):
+def _jobs_in_group(sc, gid, fn):
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_query_with_deltas_ties_match_rebuild_exactly(
+    spark, tmp_path, monkeypatch
+):
     """Delta docs that copy base docs' content under new paths score
     EXACTLY like their originals, so every copied hit is a kth-score tie.
     The unfolded base+delta answer must equal a from-scratch rebuild bit
     for bit — scores compared with ==, tied docs in doc_id-ascending
-    order — and run as exactly one Spark job."""
+    order. The small plan is scored in the driver with no Spark job; with
+    the driver path off it is one range job, with the same rows."""
     base = [gen_document(i, 9) for i in range(80)]
     copies = [
         (repo, f"{path}.copy", commit, lang, content)
@@ -183,14 +197,19 @@ def test_query_with_deltas_ties_match_rebuild_exactly(spark, tmp_path):
 
     queries = fixture_queries()[:20]
     sc = spark.sparkContext
-    gid = "test-query-with-deltas-jobs"
-    sc.setJobGroup(gid, "unfolded base+delta query")
-    try:
-        merged = query_with_deltas(spark, idx, queries, k=10)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 1
+    merged, jobs = _jobs_in_group(
+        sc, "test-query-with-deltas-jobs",
+        lambda: query_with_deltas(spark, idx, queries, k=10),
+    )
+    assert jobs == 0
+    with monkeypatch.context() as m:
+        m.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+        ranged, jobs = _jobs_in_group(
+            sc, "test-query-with-deltas-range-job",
+            lambda: query_with_deltas(spark, idx, queries, k=10),
+        )
+    assert jobs == 1
+    assert ranged == merged
 
     fresh = str(tmp_path / "fresh")
     build_index(
