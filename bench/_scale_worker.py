@@ -299,38 +299,28 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     # measure the engine.
     warm_idx = os.path.join(work_dir, f"index_warm_{cpus}")
     shutil.rmtree(warm_idx, ignore_errors=True)
-    if os.environ.get("QKB_P1_CHANNEL") == "1":
-        # channel A/B: warm the Arrow-channel kernel + shuffle machinery
-        build_index(
-            spark,
-            index_dir=warm_idx,
-            cfg=cfg,
-            wave_size=64,
-            documents=docs.limit(20_000).repartition(cpus * 2),
+    # direct-path warm: run the REAL build (pyarrow tasks end-to-end) over
+    # a ~2% symlinked file subset — forks + imports every Python worker
+    # slot and JITs the (much smaller) JVM surface the direct build still
+    # uses (RDD collect, parquet metadata reads)
+    warm_corpus = os.path.join(work_dir, f"corpus_warm_{cpus}")
+    shutil.rmtree(warm_corpus, ignore_errors=True)
+    os.makedirs(warm_corpus)
+    names = sorted(
+        n for n in os.listdir(corpus_path) if n.endswith(".parquet")
+    )
+    # at least two files per task slot so the warm build touches EVERY
+    # Python worker in EVERY executor (imports + allocator warm-up)
+    take = max(2 * cpus, len(names) // 50)
+    for n in names[:: max(1, len(names) // take)][:take]:
+        os.symlink(
+            os.path.join(corpus_path, n), os.path.join(warm_corpus, n)
         )
-    else:
-        # direct-path warm: run the REAL build (pyarrow tasks end-to-end)
-        # over a ~2% symlinked file subset — forks + imports every Python
-        # worker slot and JITs the (much smaller) JVM surface the direct
-        # build still uses (RDD collect, parquet metadata reads)
-        warm_corpus = os.path.join(work_dir, f"corpus_warm_{cpus}")
-        shutil.rmtree(warm_corpus, ignore_errors=True)
-        os.makedirs(warm_corpus)
-        names = sorted(
-            n for n in os.listdir(corpus_path) if n.endswith(".parquet")
-        )
-        # at least two files per task slot so the warm build touches EVERY
-        # Python worker in EVERY executor (imports + allocator warm-up)
-        take = max(2 * cpus, len(names) // 50)
-        for n in names[:: max(1, len(names) // take)][:take]:
-            os.symlink(
-                os.path.join(corpus_path, n), os.path.join(warm_corpus, n)
-            )
-        build_index(
-            spark, index_dir=warm_idx, cfg=cfg, wave_size=64,
-            corpus_uri=warm_corpus,
-        )
-        shutil.rmtree(warm_corpus, ignore_errors=True)
+    build_index(
+        spark, index_dir=warm_idx, cfg=cfg, wave_size=64,
+        corpus_uri=warm_corpus,
+    )
+    shutil.rmtree(warm_corpus, ignore_errors=True)
     qwarm = spark.createDataFrame(fixture_queries()[:4], ["query_id", "query_text"])
     bm25_topk_segments(spark, warm_idx, qwarm, k=10).count()
     Searcher(spark, warm_idx).topk(fixture_queries()[:4], k=10).count()
@@ -363,7 +353,7 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     t0 = time.perf_counter()
     build_index(
         spark, index_dir=idx, cfg=cfg, wave_size=64, documents=docs,
-        corpus_uri=corpus_path,  # direct phase 1 unless QKB_P1_CHANNEL=1
+        corpus_uri=corpus_path,
         timings=phases,
     )
     build_sec = time.perf_counter() - t0

@@ -75,9 +75,8 @@ def main() -> None:
         cfg=cfg,
         wave_size=args.wave_size,
         documents=docs,
-        # parquet inputs also get the direct (no-Arrow-channel) phase 1;
-        # iceberg stays on the DataFrame path (snapshot resolution happens
-        # in the JVM reader, not in a file listing)
+        # parquet inputs are read in place; an iceberg snapshot (resolved
+        # by the JVM reader, not a file listing) is staged to parquet first
         corpus_uri=args.input if args.input_format == "parquet" else None,
     )
     meta = segments_meta(spark, args.index_dir)

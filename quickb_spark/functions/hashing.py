@@ -73,5 +73,6 @@ def xxhash64(data: bytes | str, seed: int = 42) -> int:
 
 
 def bucket_of(term: str, n_buckets: int) -> int:
-    """Driver-side mirror of segments._bucket_col: pmod(xxhash64(term), n)."""
+    """Driver-side term bucket: pmod(xxhash64(term), n), as every build
+    path buckets term_h."""
     return xxhash64(term) % n_buckets

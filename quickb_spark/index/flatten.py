@@ -1,18 +1,15 @@
-"""Fused chunk+tokenize kernel: documents -> flat postings in ONE crossing.
+"""Chunk tokenize kernel for the chunks= build: pre-chunked text -> flat
+postings in ONE Arrow crossing.
 
-`chunk_documents` + `term_frequencies_udf` is the modular two-step path, but
-it crosses JVM<->Python twice and ships every chunk's text back to the JVM
-just to send it to Python again. On the build path nothing downstream needs
-the chunk text — only (term, tf, positions, doc_len) — so this fused pandas
-UDF runs the reference-exact splitter and the tokenizer in one Arrow pass
-and never returns the text. The doc_id stays JVM-side
-(xxhash64(repo, path, commit, chunk_idx)), identical to chunking/udf.py, so
-both paths mint the same ids (asserted in tests/test_segments_wand.py).
+`build_index(chunks=...)` takes text the caller already chunked (doc_id
+minted JVM-side by chunking.udf, xxhash64(repo, path, commit, chunk_idx)),
+so this pandas UDF only tokenizes. Documents go through the direct engine
+instead (index/p1_direct.py), which never crosses the Arrow channel.
 
 Emit shape (the 100x-scale cost lesson): Python emits ONE row per CHUNK —
 (terms[], tfs[], position byte-ranges[], one position stream) — not one row
 per posting. Building tens of millions of per-posting Python tuples cost
-more than the tokenize itself; the per-posting fan-out now happens JVM-side
+more than the tokenize itself; the per-posting fan-out happens JVM-side
 (posexplode over arrays_zip, whole-stage codegen). Token positions are
 delta+varbyte encoded HERE, once, vectorized across the whole Arrow batch
 (quickb_spark.index.encode.varbyte_encode), and flow through the shuffle as
@@ -39,11 +36,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from quickb_spark.config import TOKEN_PATTERN, ChunkerConfig, EngineConfig
-from quickb_spark.chunking.splitter import split_document
+from quickb_spark.config import TOKEN_PATTERN
 from quickb_spark.index.encode import varbyte_encode, varbyte_lengths
 
-__all__ = ["flat_postings_from_documents", "flat_postings_from_chunks"]
+__all__ = ["flat_postings_from_chunks"]
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
 
@@ -127,20 +123,6 @@ class _BatchAccumulator:
         return out
 
 
-def _fused_udf(cfg: ChunkerConfig):
-    @F.pandas_udf(_FLAT_SCHEMA)
-    def _flat(content: pd.Series, lang: pd.Series) -> pd.Series:
-        acc = _BatchAccumulator()
-        for row, (c, l) in enumerate(zip(content, lang)):
-            if not c:
-                continue
-            for ci, text in enumerate(split_document(c, l, cfg)):
-                acc.add_chunk(row, ci, _TOKEN_RE.findall(text.lower()))
-        return pd.Series(acc.flush(len(content)))
-
-    return _flat
-
-
 def _chunked_udf():
     """Per-row (pre-chunked text) variant: one chunk struct per input row."""
 
@@ -182,29 +164,12 @@ def _explode_chunks(df: DataFrame, doc_id_col) -> DataFrame:
     )
 
 
-def flat_postings_from_documents(
-    docs: DataFrame, cfg: EngineConfig | None = None
-) -> DataFrame:
-    """documents(repo, path, commit, lang, content) ->
-    (term, doc_id, tf, pos_vb, doc_len, first) — one Python crossing total."""
-    cfg = cfg or EngineConfig()
-    udf = _fused_udf(cfg.chunker)
-    c = docs.select(
-        "repo",
-        "path",
-        "commit",
-        F.explode(udf(F.col("content"), F.col("lang"))).alias("c"),
-    )
-    return _explode_chunks(
-        c, F.xxhash64("repo", "path", "commit", F.col("c.chunk_idx"))
-    )
-
-
 def flat_postings_from_chunks(
     chunks: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Pre-chunked (doc_id, text) -> same flat-posting shape as the fused
-    documents path (used when the caller chunked with chunking.udf)."""
+    """Pre-chunked (doc_id, text) -> (term, doc_id, tf, pos_vb, doc_len,
+    first) flat postings (used when the caller chunked with chunking.udf);
+    `first` is 1 on each chunk's first posting."""
     udf = _chunked_udf()
     c = chunks.select(
         F.col(id_col).alias("_did"),

@@ -1,7 +1,7 @@
 """Phase-1 build as batched direct-pyarrow tasks writing sorted runs.
 
-Why this exists (round-3 measurement, bench/p1_decompose.py): the fused
-chunk+tokenize pandas UDF (index/flatten.py) is the right kernel, but its
+Why this exists (round-3 measurement): the fused chunk+tokenize pandas
+UDF (then index/flatten.py) is the right kernel, but its
 OUTPUT — ~10^8 per-chunk term arrays — crosses the JVM<->Python Arrow
 channel, and on this box that channel has a large component that does NOT
 parallelize with cores (decomposed: kernel+channel 131.4s @4c -> 60.3s
@@ -33,16 +33,21 @@ Scale notes (the 100 TB story):
   object store but coarse. The knobs are the same ones Spark's sort-based
   shuffle turns: raise per-task input (fewer, larger runs), or add one
   merge level (tasks write runs, a mid tier merges task-group runs per
-  bucket, phase 2 merges the merged runs). The in-channel shuffle path
-  (QKB_P1_CHANNEL=1) remains as the everything-through-Spark alternative
-  and the A/B control.
+  bucket, phase 2 merges the merged runs).
+- the round-3 A/B against the in-channel phase 1 (index/flatten.py fused
+  kernel -> JVM repartition + sort) is the measurement above; that path
+  now serves only pre-chunked `chunks=` input, and documents= DataFrames
+  are staged to parquet and built here (segments.build_index).
 - every run is written through `pyarrow.fs.FileSystem.from_uri`, so
   file:// and s3:// work identically; schemes pyarrow cannot reach raise
-  at planning time and build_index falls back to the channel path.
+  at planning time.
+- the streaming delta tier runs the same tasks per micro-batch
+  (streaming/incremental.py), salted with the base's persisted hot set;
+  a fold moves those runs into the base checkpoint unchanged.
 - hot-term salting happens in-task from the pre-sampled hot set (phase 0),
   with salt = pmod(xxhash64(doc_id), salt_buckets) bit-identical to the
-  JVM column, so the channel and direct paths build semantically identical
-  indexes (asserted in tests/test_p1_direct.py).
+  JVM column, so the chunks= channel path and this one build semantically
+  identical indexes (asserted in tests/test_p1_direct.py).
 - determinism/idempotency: run file names are a pure function of the task
   id, the group plan is a pure function of the (sorted) file listing, and
   a task retry rewrites exactly its own files; the run layout is committed
@@ -93,7 +98,8 @@ RUNS_MARKER = "_RUNS"
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
 
-_DOC_COLS = ["repo", "path", "commit", "lang", "content"]
+#: The documents columns phase 1 reads.
+DOC_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 
 #: Phase-0 sample work units: fixed, so the sampled rows (and the hot set)
 #: do not depend on cluster size.
@@ -299,7 +305,7 @@ def _p1_task(
             # row-group iteration bounds task memory by the writer's row
             # group size, not the file size (256MB corpus files stay cheap)
             for batch in pf.iter_batches(
-                batch_size=sub_batch_docs, columns=_DOC_COLS
+                batch_size=sub_batch_docs, columns=DOC_COLUMNS
             ):
                 d = batch.to_pydict()
                 live = [
@@ -411,6 +417,7 @@ def _p1_task(
         "n_docs": int(len(cid)),
         "sum_dl": int(cdl.sum()) if len(cdl) else 0,
         "n_postings": int(n),
+        "buckets": np.flatnonzero(np.diff(bounds)).tolist(),
     }
 
 
@@ -423,10 +430,11 @@ def build_flat_runs(
     hot_terms: list[str],
     n_tasks: int | None = None,
 ) -> dict:
-    """Plan + run the direct phase 1. -> {n_docs, sum_dl, n_postings}.
+    """Plan + run the direct phase 1. -> {n_docs, sum_dl, n_postings,
+    buckets}; `buckets` lists the term buckets that received postings.
 
     Raises (before launching any task) if the corpus/flat FS scheme is not
-    reachable from Python — build_index falls back to the channel path.
+    reachable from Python.
     """
     files = list_parquet_files(corpus_uri)
     if not files:
@@ -489,6 +497,7 @@ def build_flat_runs(
         "n_docs": sum(r["n_docs"] for r in rows),
         "sum_dl": sum(r["sum_dl"] for r in rows),
         "n_postings": sum(r["n_postings"] for r in rows),
+        "buckets": sorted({b for r in rows for b in r["buckets"]}),
     }
 
 

@@ -19,8 +19,8 @@ fix is to keep both sides and drop the hop in between:
 
 Two consumption modes over two checkpoint layouts:
 
-- `encode_wave_direct` (complete-group layout, written by the channel
-  phase 1's repartition+sort): one task per checkpoint file; every
+- `encode_wave_direct` (complete-group layout, written by the chunks=
+  channel phase 1's repartition+sort): one task per checkpoint file; every
   (term_h, salt) group lives entirely inside one file, so tasks are
   independent by construction.
 - `merge_encode_buckets` (sorted-runs layout, written by the direct
@@ -49,7 +49,13 @@ Scale notes (the 100 TB story):
   s3:// checkpoints work the same way (object stores are the realistic home
   of a 10^12-file index; there is no data-locality to lose). Schemes
   pyarrow cannot open locally (e.g. hdfs:// without libhdfs) raise at
-  listing time and `build_index` falls back to the in-channel encoder;
+  listing time; for a chunks= checkpoint `build_index` then falls back to
+  the in-channel encoder;
+- a merge unit that finds its runs malformed (a group not strictly
+  doc_id-sorted, e.g. a duplicated posting) returns the ValueError as its
+  summary and `merge_encode_buckets` re-raises it in the driver, so
+  `build_index` fails with the bucket named instead of a Spark task
+  failure;
 - idempotency: output file names are a pure function of input file names
   (merge mode: of the bucket id), and `build_index` deletes the segment +
   lexicon dirs of UNCOMMITTED buckets before each wave, so task retries and
@@ -472,12 +478,15 @@ def encode_wave_direct(
     buckets: list[int],
     block_size: int,
     store_positions: bool,
+    files: list[tuple[int, str, int]] | None = None,
 ) -> list:
     """Encode the given buckets' checkpoint files, one Spark task per file,
     biggest files first (no end-of-wave straggler). Returns the collected
-    per-file summary rows. Raises if the checkpoint FS scheme is unusable
-    from Python (caller falls back to the in-channel encoder)."""
-    files = list_bucket_files(flat_dir, buckets)
+    per-file summary rows. `files`: the buckets' list_bucket_files listing,
+    if the caller already has it. Raises if the checkpoint FS scheme is
+    unusable from Python (caller falls back to the in-channel encoder)."""
+    if files is None:
+        files = list_bucket_files(flat_dir, buckets)
     if not files:
         return []
     files.sort(key=lambda t: -t[2])
@@ -766,15 +775,21 @@ def merge_encode_buckets(
 
     def _run(item):
         b, paths, nsplits, k, _est = item
-        return _merge_one_bucket(
-            b, paths, flat_dir, seg_dir, lex_dir,
-            block_size, store_positions, nsplits, k, ds_dir,
-        )
+        try:
+            return _merge_one_bucket(
+                b, paths, flat_dir, seg_dir, lex_dir,
+                block_size, store_positions, nsplits, k, ds_dir,
+            )
+        except ValueError as e:  # malformed runs: deterministic, no retry
+            return {"bucket": b, "error": str(e)}
 
     parts = run_packed(
         spark.sparkContext, _run, work, [t[4] for t in work],
         label="qkb phase2: merge-encode buckets",
     )
+    for s in parts:
+        if "error" in s:
+            raise ValueError(s["error"])
     agg: dict[int, dict] = {}
     for s in parts:
         a = agg.get(s["bucket"])

@@ -1,66 +1,61 @@
 """Compressed, salted, bucketed index segments — the real index layout.
 
-Build pipeline (SURVEY.md §7 step 3, north-star core) — format v4, exactly
-ONE postings-wide shuffle end to end (and that shuffle carries 8-byte
-term hashes, not strings — see FORMAT_VERSION):
+Build pipeline (SURVEY.md §7 step 3, north-star core) — format v5. One
+engine builds every `corpus_uri=` and `documents=` index, and feeds the
+streaming delta tier (streaming/incremental.py):
 
-  documents ──► phase 0: hot-term detection on a ~2% input sample, BEFORE
-             phase 1 (so the salt is known up front), persisted to
-             meta/hot_terms.json                       [sample-sized job]
-          ──► phase 1: fused chunk+tokenize kernel → flat postings with
-             positions pre-varbyte'd map-side (index/flatten.py), salt
-             baked in, term hashed to term_h = xxhash64(term), then ONE
-             shuffle keyed by (bucket, subgroup(term_h, salt)) +
-             partition-local sort on (bucket, term_h, salt, doc_id),
-             persisted as the CHECKPOINT: parquet partitioned by `bucket`.
-             The partition key is a pure function of (term_h, salt), so
-             every checkpoint FILE holds only complete, sorted
-             posting-list groups.                          [THE shuffle]
-          ──► phase 2: per bucket-wave, scan → mapInPandas encoder
-             (delta-gap + varbyte + block-max) → write. NO shuffle: scan
-             partitions are whole checkpoint files (maxPartitionBytes is
-             raised above the largest file so byte-range splits can't
-             occur; a split would merely yield an extra partial segment
-             row — the query path merges partials exactly like salted
-             sub-lists — but whole files keep segments canonical). Write
-             parallelism scales with cores, not bucket count (the round-1
-             killer). QKB_P2_SHUFFLE=1 forces the explicit
-             repartition+sort path (A/B control).
-          ──► phase 3: term_h → global-df lexicon parquet (tiny), the
-             serve-time fixed-cost killer used by query.searcher.Searcher.
+  documents ──► (documents= only) one Spark parquet write stages the
+             DataFrame to <index>/_staged_input/, deleted once phase 1
+             has committed
+          ──► phase 0: hot-term detection on a ~2% file-striped input
+             sample, BEFORE phase 1 (so the salt is known up front),
+             persisted to meta/hot_terms.json   (p1_direct, one packed job)
+          ──► phase 1: batched pyarrow tasks chunk + tokenize their files,
+             hash terms to term_h = xxhash64(term), salt hot terms, and
+             write one run per (task, bucket) sorted by (term_h, salt,
+             doc_id), plus a doc-stats run; the corpus scalars come back
+             with the task summaries          (p1_direct.build_flat_runs)
+          ──► phase 2: per wave, one unit per bucket (or per term split of
+             a big bucket), LPT-packed into at most one task per slot,
+             k-way merges the bucket's runs and writes its delta-gap +
+             varbyte + block-max segment AND its (term_h, df) lexicon
+             in-task              (p2_direct.merge_encode_buckets)
+
+Nothing but task summaries crosses the JVM<->Python Arrow channel. A
+pre-chunked `chunks=` DataFrame keeps the in-channel phase 1
+(index/flatten.py): a JVM repartition + sort writes complete posting-list
+groups, and phase 2 encodes each checkpoint file in one task
+(p2_direct.encode_wave_direct; QKB_P2_CHANNEL / QKB_P2_SHUFFLE select the
+in-channel encoders).
 
 Skew (the Zipfian `def`/`import` problem): hot terms get
 `salt = pmod(xxhash64(doc_id), S)` so no single encode group exceeds
 df_hot/S postings. The sampled threshold keeps a 2x safety margin —
 salting a borderline-cold term is harmless (query-side re-merge is
 unconditional), missing a hot one is not. Salted sub-lists are re-merged
-at query time (quickb_spark.query.wand). AQE cannot fix groupBy skew —
-this is deliberate app-level salting.
+at query time (quickb_spark.query.wand).
 
-Corpus scalars (n_docs, avgdl, posting count) ride on the phase-1 write via
-`DataFrame.observe` — zero extra jobs. Per-bucket lineage metrics are
-aggregated from the (small, compressed) segment rows AFTER each wave lands,
-not from a postings-wide pre-pass.
-
-Resumability: phase 1 is one atomic parquet write (its _SUCCESS marker is
-the checkpoint). Phase 2 is per-bucket idempotent: a bucket's segment
-directory is rewritten wholly (dynamic partition overwrite), then its meta
-JSON (with metrics + timings) is written last; on restart, buckets with
-committed meta are skipped and their data is untouched (lineage preserved).
+Resumability: phase 1 commits with flat/_SUCCESS. Phase 2 is per-bucket
+idempotent: a bucket's segment and lexicon dirs are rewritten wholly, then
+the wave's commits are saved in the ledger; on restart, committed buckets
+are skipped and their data is untouched (lineage preserved). A fold
+(streaming/incremental.py) moves delta runs into flat/, invalidates the
+touched buckets and calls build_index to merge-encode them again.
 `segments_meta()` exposes the whole build history as a DataFrame.
 
 Layout on disk (Iceberg-ready: swap parquet dirs for an Iceberg table with
 identity partitioning on `bucket` without touching the logic):
 
-  <index_dir>/flat/bucket=<b>/...          phase-1 checkpoint (sorted, salted)
-  <index_dir>/segments/bucket=<b>/...      encoded posting lists
-  <index_dir>/lexicon/bucket=<b>/...       (term_h, df) global-df lexicon
-  <index_dir>/meta/hot_terms.json          pre-sampled hot-term set
-  <index_dir>/meta/commits.json            per-partition lineage + metrics
-                                           ledger (one atomic file; one
-                                           entry per bucket)
-  <index_dir>/meta/stats.json              corpus scalars, config, format_version
-  <index_dir>/doc_stats/...                (doc_id, doc_len) parquet
+  <index_dir>/flat/bucket=<b>/run-*.parquet  phase-1 sorted runs (_RUNS marker)
+  <index_dir>/doc_stats/run-*.parquet        (doc_id, doc_len) runs
+  <index_dir>/segments/bucket=<b>/...        encoded posting lists
+  <index_dir>/lexicon/bucket=<b>/...         (term_h, df) global-df lexicon
+  <index_dir>/meta/hot_terms.json            pre-sampled hot-term set
+  <index_dir>/meta/commits.json              per-partition lineage + metrics
+                                             ledger (one atomic file; one
+                                             entry per bucket)
+  <index_dir>/meta/stats.json                corpus scalars, config,
+                                             format_version
 """
 
 from __future__ import annotations
@@ -79,7 +74,6 @@ from pyspark.sql.types import (
     BinaryType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -89,10 +83,7 @@ import numpy as np
 from quickb_spark.config import EngineConfig
 from quickb_spark.fs import IndexFS, join_path
 from quickb_spark.index.encode import encode_posting_list
-from quickb_spark.index.flatten import (
-    flat_postings_from_chunks,
-    flat_postings_from_documents,
-)
+from quickb_spark.index.flatten import flat_postings_from_chunks
 
 __all__ = [
     "build_index",
@@ -134,14 +125,10 @@ def flat_postings_with_dl(chunks: DataFrame, text_col: str = "text") -> DataFram
     return flat_postings_from_chunks(chunks, text_col=text_col)
 
 
-def _bucket_col(term_col, n_buckets: int):
-    return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
-
-
 def _bucket_col_h(term_h_col, n_buckets: int):
-    """Bucket from an already-hashed term id: pmod(term_h, nb). Identical to
-    _bucket_col on the original string (term_h IS xxhash64(term)), so the
-    driver-side mirror functions.hashing.bucket_of stays valid for both."""
+    """Bucket from an already-hashed term id: pmod(term_h, nb). term_h IS
+    xxhash64(term), so the driver-side mirror functions.hashing.bucket_of
+    gives the same bucket from the term string."""
     return F.pmod(term_h_col, F.lit(n_buckets)).cast("int")
 
 
@@ -161,6 +148,19 @@ def _bucket_col_h(term_h_col, n_buckets: int):
 #: decodable too, which is what lets the phrase query path position-verify
 #: only candidate postings instead of decoding whole hot posting lists.
 FORMAT_VERSION = 5
+
+#: Where build_index(documents=...) stages its input (deleted after phase 1).
+STAGED_INPUT = "_staged_input"
+
+def stage_documents(spark: SparkSession, documents: DataFrame, dest: str) -> None:
+    """Write a documents DataFrame to parquet at `dest` (one Spark write
+    job, overwriting) so the direct engine can read it with pyarrow."""
+    from quickb_spark.index.p1_direct import DOC_COLUMNS
+    from quickb_spark.taskpack import job_description
+
+    with job_description(spark.sparkContext, "qkb phase1: stage documents"):
+        documents.select(*DOC_COLUMNS).write.mode("overwrite").parquet(dest)
+
 
 #: Input-sample fraction for PRE-phase-1 hot-term detection (tokenizes ~2%
 #: of the raw input once; detecting hot terms before phase 1 lets the salt
@@ -362,18 +362,19 @@ def build_index(
 ) -> None:
     """Build (or resume) the compressed index.
 
-    Input is a pre-chunked `chunks` DataFrame, the raw `documents` table
-    (fused chunk+tokenize kernel, index/flatten.py), or — fastest —
-    `corpus_uri`: the documents table's parquet location, consumed by the
-    DIRECT phase 1 (index/p1_direct.py): batched pyarrow tasks that chunk,
-    tokenize and write per-bucket sorted runs without ever crossing the
-    JVM<->Python Arrow channel, k-way merge-encoded by phase 2
-    (p2_direct.merge_encode_buckets). All three paths mint bit-identical
-    doc_ids/term hashes/salts (tests/test_p1_direct.py) and produce
-    query-identical indexes. QKB_P1_CHANNEL=1 forces the in-channel
-    phase 1 even when corpus_uri is given (A/B control); an FS scheme
-    pyarrow cannot reach falls back to the channel path automatically
-    (which then needs chunks=/documents=).
+    Input is `corpus_uri` (the documents table's parquet location), the
+    `documents` DataFrame, or a pre-chunked `chunks` DataFrame. The first
+    two run the direct engine: phase 0 samples hot terms
+    (p1_direct.presample_hot_direct), phase 1 writes per-bucket sorted runs
+    in batched pyarrow tasks that never cross the JVM<->Python Arrow
+    channel (p1_direct.build_flat_runs), and phase 2 k-way merge-encodes
+    them (p2_direct.merge_encode_buckets). A `documents` DataFrame is
+    first staged to `<index_dir>/_staged_input/` with one Spark parquet
+    write, and the staged copy is deleted once phase 1 has committed.
+    `corpus_uri` wins when both are given. `chunks` runs the in-channel
+    phase 1 (index/flatten.py) and a per-file phase-2 encode. All paths
+    mint bit-identical doc_ids, term hashes and salts
+    (tests/test_p1_direct.py) and build query-identical indexes.
     """
     if chunks is not None and documents is not None:
         raise ValueError("pass at most one of chunks= or documents=")
@@ -399,33 +400,31 @@ def build_index(
     flat_dir = join_path(index_dir, "flat")
     stats_path = join_path(index_dir, "meta", "stats.json")
     hot_path = join_path(index_dir, "meta", "hot_terms.json")
+    staged_dir = join_path(index_dir, STAGED_INPUT)
 
-    # ---- phase 0: hot-term detection on a ~2% input sample, BEFORE phase 1.
-    # Salt is a pure function of (term in hot set, doc_id), so knowing the
-    # hot set up front lets phase 1 write the checkpoint already salted,
-    # keyed and sorted — phase 2 then encodes straight off the scan with no
-    # postings-wide shuffle. Persisted before phase 1 so a crashed build
-    # resumes with the same salt assignment it started with.
     p1_needed = not fs.exists(join_path(flat_dir, "_SUCCESS"))
-    direct_p1 = False
-    if p1_needed and corpus_uri and os.environ.get("QKB_P1_CHANNEL") != "1":
-        try:
-            from quickb_spark.index.p1_direct import list_parquet_files
-
-            direct_p1 = bool(list_parquet_files(corpus_uri))
-            if not direct_p1:
-                raise ValueError(f"no parquet files under {corpus_uri}")
-        except Exception as e:
-            print(
-                f"[build_index] direct phase-1 unavailable ({e!r}) — "
-                "falling back to the in-channel path",
-                flush=True,
-            )
-    if p1_needed and not direct_p1 and chunks is None and documents is None:
+    if p1_needed and corpus_uri is None and documents is not None:
+        stage_documents(spark, documents, staged_dir)
+        corpus_uri = staged_dir
+        _mark("phase1 stage documents")
+    direct_p1 = p1_needed and corpus_uri is not None
+    if p1_needed and not direct_p1 and chunks is None:
         raise ValueError(
             "no usable input (chunks=/documents=/corpus_uri=) and no "
             f"existing flat checkpoint at {flat_dir}"
         )
+    if direct_p1:
+        from quickb_spark.index.p1_direct import list_parquet_files
+
+        if not list_parquet_files(corpus_uri):
+            raise ValueError(f"no parquet data files under {corpus_uri}")
+
+    # ---- phase 0: hot-term detection on a ~2% input sample, BEFORE phase 1.
+    # Salt is a pure function of (term in hot set, doc_id), so knowing the
+    # hot set up front lets phase 1 write the checkpoint already salted,
+    # keyed and sorted. Persisted before phase 1 so a crashed build resumes
+    # with the same salt assignment it started with; the streaming delta
+    # tier salts with the same persisted set.
     if p1_needed and not fs.exists(hot_path):
         frac = _HOT_PRESAMPLE_FRACTION
         if direct_p1:
@@ -436,16 +435,10 @@ def build_index(
                 _HOT_MAX_TERMS,
             )
         else:
-            sample_flat = (
-                flat_postings_from_documents(
-                    documents.sample(False, frac, seed=42), cfg
-                )
-                if documents is not None
-                else flat_postings_from_chunks(
-                    chunks.sample(False, frac, seed=42)
-                )
+            hot, est_postings = _presample_hot_terms(
+                flat_postings_from_chunks(chunks.sample(False, frac, seed=42)),
+                frac, cfg,
             )
-            hot, est_postings = _presample_hot_terms(sample_flat, frac, cfg)
         fs.write_text_atomic(
             hot_path,
             json.dumps(
@@ -461,30 +454,20 @@ def build_index(
         json.loads(fs.read_text(hot_path)) if fs.exists(hot_path) else {}
     )
     hot_terms: list[str] = _hot_payload.get("hot_terms", [])
-    # subgroup count: persisted estimate keeps g (and thus the checkpoint
-    # layout + salt-independent grouping) stable across resumes and levels
+    # subgroup count of the chunks= checkpoint: the persisted estimate keeps
+    # g (and thus the checkpoint layout) stable across resumes and levels
     g = _subgroups_per_bucket(
         cores, nb, int(_hot_payload.get("est_postings", 0)), cfg
     )
-    salt_col = (
-        F.when(
-            F.col("term").isin(hot_terms),
-            F.pmod(F.xxhash64("doc_id"), F.lit(cfg.index.salt_buckets)).cast("int"),
-        ).otherwise(F.lit(0))
-        if hot_terms
-        else F.lit(0).cast("int")
-    )
 
-    # ---- phase 1: one tokenize pass straight into the bucketed checkpoint,
-    # written pre-salted, pre-grouped and pre-sorted: the repartition key is
-    # a pure function of (bucket, term, salt) — every partition holds only
-    # COMPLETE posting-list groups — and the partition-local sort means the
-    # phase-2 encoder can walk the scan directly. This is the only shuffle
-    # of the whole build. (No .persist() — the checkpoint parquet IS the
-    # reuse point, which also holds at 100 TB where executor memory could
-    # never cache the postings.)
+    # ---- phase 1 ---------------------------------------------------------
+    # direct: sorted runs per (task, bucket) plus doc-stats runs; chunks=:
+    # one tokenize pass straight into the bucketed checkpoint, written
+    # pre-salted, pre-grouped and pre-sorted (the repartition key is a pure
+    # function of (bucket, term, salt), so every partition holds only
+    # COMPLETE posting-list groups) — the only shuffle of that build.
     p1_metrics: dict | None = None
-    if p1_needed and direct_p1:
+    if direct_p1:
         from quickb_spark.index.p1_direct import build_flat_runs
 
         p1_metrics = build_flat_runs(
@@ -492,18 +475,23 @@ def build_index(
             join_path(index_dir, "doc_stats"), cfg, hot_terms,
         )
     elif p1_needed:
-        flat = (
-            flat_postings_from_documents(documents, cfg)
-            if documents is not None
-            else flat_postings_from_chunks(chunks)
-        )
         # corpus scalars ride on the write action — no separate agg jobs
         obs = Observation("qkb_p1")
-        flat = flat.observe(
+        flat = flat_postings_from_chunks(chunks).observe(
             obs,
             F.sum(F.col("first")).alias("n_docs"),
             F.sum(F.col("first") * F.col("doc_len")).alias("sum_dl"),
             F.count(F.lit(1)).alias("n_postings"),
+        )
+        salt_col = (
+            F.when(
+                F.col("term").isin(hot_terms),
+                F.pmod(
+                    F.xxhash64("doc_id"), F.lit(cfg.index.salt_buckets)
+                ).cast("int"),
+            ).otherwise(F.lit(0))
+            if hot_terms
+            else F.lit(0).cast("int")
         )
         # v4: salt needs the term STRING (hot-set membership); everything
         # after needs only equality, so the string is hashed to the 8-byte
@@ -524,6 +512,10 @@ def build_index(
             .parquet(flat_dir)
         )
         p1_metrics = {k: int(v or 0) for k, v in obs.get.items()}
+    # phase 1 has committed (its _SUCCESS exists), so a staged documents
+    # copy is no longer needed, also when an earlier call crashed before
+    # deleting it
+    fs.delete(staged_dir)
 
     _mark("phase1 flat checkpoint")
 
@@ -539,9 +531,9 @@ def build_index(
                 "would silently mis-encode"
             )
 
-    # The checkpoint as a Spark DataFrame is only read by the resume, channel
-    # and merge-fallback paths; its partition discovery lists every bucket
-    # dir in a Spark job, so it is created on first use only.
+    # The checkpoint as a Spark DataFrame is only read by the resume and
+    # chunks= paths; its partition discovery lists every bucket dir in a
+    # Spark job, so it is created on first use only.
     @functools.cache
     def flat_all() -> DataFrame:
         df = spark.read.parquet(flat_dir)
@@ -549,8 +541,8 @@ def build_index(
         return df
 
     runs_mode = fs.exists(join_path(flat_dir, RUNS_MARKER))
-    if runs_mode and p1_metrics is not None:
-        # fresh direct build: the format check needs only one run's footer
+    if runs_mode:
+        # sorted runs: the format check needs only one run's footer
         import pyarrow.parquet as pq
 
         from quickb_spark.index.p2_direct import pyarrow_fs_for
@@ -562,53 +554,27 @@ def build_index(
                 _check_format(pq.ParquetFile(f).schema_arrow.names)
     else:
         flat_all()
-    if runs_mode and not fs.exists(stats_path):
-        # sorted-runs layout: phase-1 tasks already wrote doc_stats runs; the
-        # corpus scalars came back with the task summaries (or, on resume,
-        # one agg over doc_stats + a parquet metadata-only postings count)
-        if p1_metrics is not None:
-            n_docs = p1_metrics["n_docs"]
-            avgdl = p1_metrics["sum_dl"] / n_docs if n_docs else 0.0
-            total_postings = p1_metrics["n_postings"]
-        else:
-            row = (
-                spark.read.parquet(join_path(index_dir, "doc_stats"))
-                .agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl"))
-                .collect()[0]
+    if not fs.exists(stats_path):
+        if not runs_mode:
+            # chunks= checkpoint: doc-level stats via the `first` marker, a
+            # narrow filtered scan of the checkpoint. Small scan bins: at
+            # default 128MB bins this scan gets fewer tasks than cores.
+            prev_mpb1 = spark.conf.get(
+                "spark.sql.files.maxPartitionBytes", "134217728"
             )
-            n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-            total_postings = flat_all().count()
-        fs.write_text_atomic(
-            stats_path,
-            json.dumps(
-                {
-                    "format_version": FORMAT_VERSION,
-                    "n_docs": n_docs,
-                    "avgdl": avgdl,
-                    "n_postings": total_postings,
-                    "term_buckets": nb,
-                    "salt_buckets": cfg.index.salt_buckets,
-                    "block_size": cfg.index.block_size,
-                    "store_positions": cfg.index.store_positions,
-                    "hot_terms": hot_terms,
-                }
-            ),
-        )
-    elif not fs.exists(stats_path):
-        # doc-level stats via the `first` marker: a narrow filtered scan of
-        # the checkpoint — no distinct-shuffle over all postings. Small scan
-        # bins: at default 128MB bins this scan gets fewer tasks than cores
-        # and serializes a (fixed, per-build) cost the wide level feels 4x
-        # harder than the narrow one.
-        prev_mpb1 = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        try:
-            flat_all().filter(F.col("first") == 1).select(
-                "doc_id", "doc_len"
-            ).write.mode("overwrite").parquet(join_path(index_dir, "doc_stats"))
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb1)
+            spark.conf.set(
+                "spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024)
+            )
+            try:
+                flat_all().filter(F.col("first") == 1).select(
+                    "doc_id", "doc_len"
+                ).write.mode("overwrite").parquet(
+                    join_path(index_dir, "doc_stats")
+                )
+            finally:
+                spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb1)
         if p1_metrics is not None:
+            # the scalars came back with phase 1 (task summaries / observe)
             n_docs = p1_metrics["n_docs"]
             avgdl = p1_metrics["sum_dl"] / n_docs if n_docs else 0.0
             total_postings = p1_metrics["n_postings"]
@@ -640,16 +606,16 @@ def build_index(
     _mark("phase1b stats")
 
     # ---- phase 2: per-bucket-wave encode, idempotent, resumable ----------
-    # The checkpoint is already salted, grouped and sorted, so phase 2 is
-    # embarrassingly parallel per checkpoint FILE. Default mode is the
-    # DIRECT path (index/p2_direct.py): one Spark task per file, pyarrow
-    # read -> NumPy encode -> pyarrow write, nothing but a summary row on
-    # the Python<->JVM channel (the channel was the measured scaling
-    # ceiling of the whole build — see p2_direct's module docstring).
-    # QKB_P2_CHANNEL=1 forces the in-channel mapInPandas encoder (also the
-    # automatic fallback when the checkpoint's FS scheme isn't reachable
-    # from Python, e.g. hdfs:// without libhdfs); QKB_P2_SHUFFLE=1 forces
-    # the explicit repartition+sort channel path (A/B control).
+    # A sorted-runs checkpoint is k-way merge-encoded (p2_direct.
+    # merge_encode_buckets): one job per wave, segments AND lexicon written
+    # in-task. A chunks= checkpoint is already salted, grouped and sorted,
+    # so its phase 2 is embarrassingly parallel per checkpoint FILE: the
+    # DIRECT mode runs one Spark task per file (pyarrow read -> NumPy
+    # encode -> pyarrow write, nothing but a summary row on the channel).
+    # For that layout QKB_P2_CHANNEL=1 forces the in-channel mapInPandas
+    # encoder (also the fallback when pyarrow cannot reach the checkpoint's
+    # filesystem, e.g. hdfs:// without libhdfs) and QKB_P2_SHUFFLE=1 the
+    # explicit repartition+sort channel path (A/B controls).
     if commit_protocol is None:
         from quickb_spark.index.commit_protocol import LedgerCommitProtocol
 
@@ -657,34 +623,16 @@ def build_index(
     commits = commit_protocol.load()
     pending = [b for b in range(nb) if b not in commits]
     segments_dir = join_path(index_dir, "segments")
-    force_shuffle = os.environ.get("QKB_P2_SHUFFLE") == "1"
-    force_channel = os.environ.get("QKB_P2_CHANNEL") == "1"
     if runs_mode:
-        # sorted-runs checkpoints are k-way merge-encoded; the channel
-        # encoders can only consume them through a full repartition+sort
-        # (groups are split across runs), so both force-flags map to the
-        # shuffle path here
-        mode = "shuffle" if (force_shuffle or force_channel) else "merge"
+        mode = "merge"
+    elif os.environ.get("QKB_P2_SHUFFLE") == "1":
+        mode = "shuffle"
+    elif os.environ.get("QKB_P2_CHANNEL") == "1":
+        mode = "channel"
     else:
-        mode = "shuffle" if force_shuffle else (
-            "channel" if force_channel else "direct"
-        )
+        mode = "direct"
     prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     prev_open = spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-    if pending and mode in ("shuffle", "channel"):
-        # channel modes: scan partition sizing is the whole game for a
-        # CPU-bound Python encode — bin ~2x the MEDIAN checkpoint file so
-        # each (uniform, subgroup-sized) file becomes one balanced task;
-        # openCost >= bin/2 stops tiny-file packing from merging more than
-        # ~2 files per task. Outlier files above the bin get byte-range
-        # split — harmless: a split merely yields an extra partial segment
-        # row per straddled group, and the query path merges partials
-        # exactly like salted sub-lists.
-        sizes = sorted(fs.file_sizes(flat_dir))
-        p50 = sizes[len(sizes) // 2] if sizes else 0
-        bin_bytes = max(4 << 20, 2 * p50)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
     try:
         _run_waves(
             spark, fs, index_dir, flat_all, segments_dir, pending,
@@ -759,64 +707,39 @@ def _run_waves(
                     for b in wave:
                         if f"bucket={b}" in existing:
                             fs.delete(join_path(d, f"bucket={b}"))
-            summaries = None
-            try:
-                from quickb_spark.index.p2_direct import merge_encode_buckets
+            from quickb_spark.index.p2_direct import merge_encode_buckets
 
-                summaries = merge_encode_buckets(
-                    spark, flat_dir, segments_dir,
-                    join_path(index_dir, "lexicon"), wave,
-                    cfg.index.block_size, cfg.index.store_positions,
-                    ds_dir=join_path(index_dir, "doc_stats"),
-                    task_mem_bytes=cfg.index.p2_task_mem_bytes,
-                )
-            except Exception as e:
-                print(
-                    f"[build_index] merge phase-2 unavailable ({e!r}) — "
-                    "falling back to the shuffle channel encoder",
-                    flush=True,
-                )
-                sizes = sorted(fs.file_sizes(flat_dir))
-                p50 = sizes[len(sizes) // 2] if sizes else 0
-                bin_bytes = max(4 << 20, 2 * p50)
-                spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
-                spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
-                wave_src = flat_all()
-                if "doc_len" not in wave_src.columns:
-                    # current runs don't carry doc_len — restore it with one
-                    # equi-join against the doc-stats runs (fallback path
-                    # only; the shuffle encoder re-sorts afterwards anyway)
-                    wave_src = wave_src.join(
-                        spark.read.parquet(join_path(index_dir, "doc_stats")),
-                        "doc_id",
-                    )
-                _encode_wave_channel(
-                    spark, wave_src, segments_dir, wave, g, nb, cfg, True
-                )
-            if summaries is not None:
-                _mark(f"phase2 merge wave {wave[0]}-{wave[-1]}")
-                by_bucket = {s["bucket"]: s for s in summaries}
-                build_ms = int(
-                    (time.perf_counter() - t0) * 1000 / max(len(wave), 1)
-                )
-                for b in wave:
-                    s = by_bucket.get(b)
-                    commits[b] = {
-                        "segment_id": f"seg-{b:05d}",
-                        "partition_id": b,
-                        "salt": int(s["max_salt"]) if s else 0,
-                        "term_count": int(s["n_terms"]) if s else 0,
-                        "posting_count": int(s["n_postings"]) if s else 0,
-                        "input_rows": int(s["n_postings"]) if s else 0,
-                        "build_time_ms": build_ms,
-                        "checkpoint_path": f"segments/bucket={b}",
-                        "status": "done",
-                        "committed_at": time.time(),
-                    }
-                commit_protocol.save(commits)
-                _mark("phase2 meta commits")
-                continue
-        elif mode == "direct":
+            summaries = merge_encode_buckets(
+                spark, flat_dir, segments_dir,
+                join_path(index_dir, "lexicon"), wave,
+                cfg.index.block_size, cfg.index.store_positions,
+                ds_dir=join_path(index_dir, "doc_stats"),
+                task_mem_bytes=cfg.index.p2_task_mem_bytes,
+            )
+            _mark(f"phase2 merge wave {wave[0]}-{wave[-1]}")
+            by_bucket = {s["bucket"]: s for s in summaries}
+            build_ms = int(
+                (time.perf_counter() - t0) * 1000 / max(len(wave), 1)
+            )
+            for b in wave:
+                s = by_bucket.get(b)
+                commits[b] = {
+                    "segment_id": f"seg-{b:05d}",
+                    "partition_id": b,
+                    "salt": int(s["max_salt"]) if s else 0,
+                    "term_count": int(s["n_terms"]) if s else 0,
+                    "posting_count": int(s["n_postings"]) if s else 0,
+                    "input_rows": int(s["n_postings"]) if s else 0,
+                    "build_time_ms": build_ms,
+                    "checkpoint_path": f"segments/bucket={b}",
+                    "status": "done",
+                    "committed_at": time.time(),
+                }
+            commit_protocol.save(commits)
+            _mark("phase2 meta commits")
+            continue
+        files = None
+        if mode == "direct":
             # idempotent resume: wipe UNCOMMITTED bucket dirs before the
             # direct tasks write into them (the channel path gets the same
             # effect from dynamic partition overwrite)
@@ -827,28 +750,40 @@ def _run_waves(
                 for b in wave:
                     if f"bucket={b}" in existing:
                         fs.delete(join_path(segments_dir, f"bucket={b}"))
-            try:
-                from quickb_spark.index.p2_direct import encode_wave_direct
+            from quickb_spark.index.p2_direct import list_bucket_files
 
-                encode_wave_direct(
-                    spark, flat_dir, segments_dir, wave,
-                    cfg.index.block_size, cfg.index.store_positions,
-                )
-            except Exception as e:  # e.g. FS scheme unreachable from Python
+            try:
+                files = list_bucket_files(flat_dir, wave)
+            except (OSError, ValueError, NotImplementedError) as e:
+                # pyarrow cannot reach the checkpoint's filesystem
+                # (ArrowIOError / ArrowInvalid for an unknown scheme /
+                # ArrowNotImplementedError), as in Searcher._files_for
                 print(
                     f"[build_index] direct phase-2 unavailable ({e!r}) — "
                     "falling back to the in-channel encoder",
                     flush=True,
                 )
-                sizes = sorted(fs.file_sizes(flat_dir))
-                p50 = sizes[len(sizes) // 2] if sizes else 0
-                bin_bytes = max(4 << 20, 2 * p50)
-                spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
-                spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
-                _encode_wave_channel(
-                    spark, flat_all(), segments_dir, wave, g, nb, cfg, False
-                )
+        if files is not None:
+            from quickb_spark.index.p2_direct import encode_wave_direct
+
+            encode_wave_direct(
+                spark, flat_dir, segments_dir, wave,
+                cfg.index.block_size, cfg.index.store_positions, files=files,
+            )
         else:
+            # channel modes: scan partition sizing is the whole game for a
+            # CPU-bound Python encode — bin ~2x the MEDIAN checkpoint file so
+            # each (uniform, subgroup-sized) file becomes one balanced task;
+            # openCost >= bin/2 stops tiny-file packing from merging more
+            # than ~2 files per task. Outlier files above the bin get
+            # byte-range split — harmless: a split merely yields an extra
+            # partial segment row per straddled group, and the query path
+            # merges partials exactly like salted sub-lists.
+            sizes = sorted(fs.file_sizes(flat_dir))
+            p50 = sizes[len(sizes) // 2] if sizes else 0
+            bin_bytes = max(4 << 20, 2 * p50)
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(bin_bytes))
+            spark.conf.set("spark.sql.files.openCostInBytes", str(bin_bytes // 2))
             _encode_wave_channel(
                 spark, flat_all(), segments_dir, wave, g, nb, cfg,
                 mode == "shuffle",

@@ -30,9 +30,10 @@ A long-lived Searcher keeps the per-batch path free of fixed costs:
   fresh-server lexicon-scan job costing 1.5-17s at 4N depending on which
   executor JVMs the tiny scan landed on — a fixed cost no parallelism can
   shrink). Indexes whose lexicon exceeds the cap (or a Searcher that
-  never preloads) fall back to the bucket-pruned Spark lookup, cached per
-  term with negative caching — a serving workload's repeated terms never
-  touch storage twice;
+  never preloads) read only the missing terms' rows from their buckets'
+  lexicon files with pyarrow — no Spark job either — cached per term with
+  negative caching, so a serving workload's repeated terms never touch
+  storage twice;
 - the auto range split is computed from those cached dfs.
 
 Phrase mode (`topk(..., phrase=True)`): exact-phrase retrieval — BM25
@@ -51,7 +52,6 @@ import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.functions.hashing import bucket_of, xxhash64
@@ -118,7 +118,6 @@ class Searcher:
         lexicon file listings, and the df cache are all dropped."""
         self.stats = load_stats(self.index_dir)
         self.n_buckets = int(self.stats["term_buckets"])
-        self._lex: DataFrame | None = None
         #: term -> global df; 0 for terms proven absent (negative caching —
         #: absent terms are the common case for open-vocabulary queries and
         #: must not re-probe storage per batch)
@@ -126,15 +125,8 @@ class Searcher:
         #: bucket -> candidate segment file paths
         self._seg_files: dict[int, list[str]] = {}
         #: driver-resident term dictionary: (term_h sorted int64, df int64)
-        #: arrays, loaded by load_lexicon()/preload(); None = lazy Spark path
+        #: arrays, loaded by load_lexicon()/preload(); None = per-term reads
         self._lex_mem: tuple | None = None
-
-    @property
-    def lex(self) -> DataFrame:
-        """Lexicon rows as a DataFrame (lazy df lookup), read on first use."""
-        if self._lex is None:
-            self._lex = self.spark.read.parquet(f"{self.index_dir}/lexicon")
-        return self._lex
 
     def _files_for(self, buckets: list[int]) -> list[str]:
         """Cached candidate segment files for the buckets."""
@@ -162,66 +154,64 @@ class Searcher:
     def load_lexicon(self, max_mb: int | None = None) -> bool:
         """Load the whole (term_h, df) lexicon driver-side as two sorted
         NumPy arrays — the term dictionary a search server holds in memory
-        from reader open. A df lookup becomes a searchsorted probe and the
-        serving path runs ZERO Spark jobs besides the range job, if any.
+        from reader open. A df lookup becomes a searchsorted probe.
 
         Skipped (returns False) when the lexicon's on-disk parquet exceeds
         `max_mb` (default QKB_LEX_DRIVER_MB, 1024 — decoded pairs are 16
         bytes/term, so the parquet cap keeps the driver arrays well under
-        ~2 GB even at ~100M terms) or the FS is not pyarrow-reachable; the
-        bucket-pruned Spark lookup then remains the lazy path."""
+        ~2 GB even at ~100M terms); lookups then read each missing term's
+        rows. Raises UnreachableIndexError when pyarrow cannot list the
+        index's filesystem."""
         if max_mb is None:
             max_mb = int(os.environ.get("QKB_LEX_DRIVER_MB", "1024"))
-        return self._read_lexicon(list(range(self.n_buckets)), max_mb)
+        lex = self._read_lexicon(list(range(self.n_buckets)), max_mb)
+        if lex is None:
+            return False
+        self._lex_mem = lex
+        return True
 
     def _read_lexicon(self, buckets: list[int], max_mb: int | None = None,
-                      terms: list[str] | None = None) -> bool:
-        """Read the lexicon rows of `buckets` driver-side into `_lex_mem`;
-        False (nothing loaded) when their parquet exceeds `max_mb` or the
-        FS is not pyarrow-reachable. With `terms`, only those terms' rows
-        are read: a partial dictionary, valid for lookups of `terms` only,
-        for a Searcher that plans a single call (query_with_deltas); it
-        skips the whole dictionary's driver copy and sort."""
+                      terms: list[str] | None = None):
+        """-> (term_h sorted int64, df int64): the lexicon rows of
+        `buckets`, read driver-side with pyarrow, or None when their
+        parquet exceeds `max_mb`. With `terms`, only those terms' rows are
+        read: a partial dictionary, valid for lookups of `terms` only.
+        Raises UnreachableIndexError when pyarrow cannot list the index's
+        filesystem."""
         import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
+        from quickb_spark.index import p2_direct
+
+        lex_dir = f"{self.index_dir}/lexicon"
         try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            from quickb_spark.index.p2_direct import (
-                list_bucket_files,
-                pyarrow_fs_for,
+            fsys, _ = p2_direct.pyarrow_fs_for(lex_dir)
+            listed = p2_direct.list_bucket_files(lex_dir, buckets)
+        except (OSError, ValueError, NotImplementedError) as e:
+            # as in _files_for
+            raise UnreachableIndexError(
+                f"cannot list the lexicon files of index {self.index_dir!r} "
+                f"with pyarrow: {e}"
+            ) from e
+        if max_mb is not None and sum(sz for _, _, sz in listed) > max_mb << 20:
+            return None
+        keep = None if terms is None else pc.field("term_h").isin(
+            pa.array([xxhash64(t) for t in terms], pa.int64())
+        )
+        th_parts = [np.empty(0, dtype=np.int64)]
+        df_parts = [np.empty(0, dtype=np.int64)]
+        for _b, path, _sz in listed:
+            t = pq.read_table(
+                path, columns=["term_h", "df"], filesystem=fsys, filters=keep,
             )
-
-            lex_dir = f"{self.index_dir}/lexicon"
-            listed = list_bucket_files(lex_dir, buckets)
-            if not listed or (
-                max_mb is not None
-                and sum(sz for _, _, sz in listed) > max_mb << 20
-            ):
-                return False
-            keep = None if terms is None else pc.field("term_h").isin(
-                pa.array([xxhash64(t) for t in terms], pa.int64())
-            )
-            fsys, _ = pyarrow_fs_for(lex_dir)
-            th_parts, df_parts = [], []
-            for _b, path, _sz in listed:
-                t = pq.read_table(
-                    path, columns=["term_h", "df"], filesystem=fsys,
-                    filters=keep,
-                )
-                th_parts.append(
-                    t.column("term_h").to_numpy(zero_copy_only=False)
-                )
-                df_parts.append(t.column("df").to_numpy(zero_copy_only=False))
-        except Exception:
-            return False
+            th_parts.append(t.column("term_h").to_numpy(zero_copy_only=False))
+            df_parts.append(t.column("df").to_numpy(zero_copy_only=False))
         th = np.concatenate(th_parts).astype(np.int64, copy=False)
         df = np.concatenate(df_parts).astype(np.int64, copy=False)
         order = np.argsort(th, kind="stable")
-        self._lex_mem = (th[order], df[order])
-        return True
+        return th[order], df[order]
 
     def preload(self, phrase: bool = False,
                 pretouch_mb: int | None = None) -> int:
@@ -255,30 +245,21 @@ class Searcher:
         if missing:
             # v4 lexicon is keyed by term_h; hash with the bit-identical
             # driver-side mirror, then map back to the query's strings
-            mh = {xxhash64(t): t for t in missing}
-            if self._lex_mem is not None:
-                import numpy as np
+            import numpy as np
 
-                th_arr, df_arr = self._lex_mem
-                probe = np.fromiter(mh, dtype=np.int64, count=len(mh))
-                pos = np.searchsorted(th_arr, probe)
-                ok = pos < len(th_arr)
-                ok[ok] = th_arr[pos[ok]] == probe[ok]
-                found = {
-                    mh[int(h)]: int(df_arr[int(p)])
-                    for h, p, o in zip(probe, pos, ok) if o
-                }
-            else:
-                buckets = sorted(
-                    {bucket_of(t, self.n_buckets) for t in missing}
-                )
-                rows = (
-                    self.lex.filter(F.col("bucket").isin(buckets))
-                    .filter(F.col("term_h").isin(list(mh)))
-                    .select("term_h", "df")
-                    .collect()
-                )
-                found = {mh[int(r["term_h"])]: int(r["df"]) for r in rows}
+            mh = {xxhash64(t): t for t in missing}
+            th_arr, df_arr = self._lex_mem or self._read_lexicon(
+                sorted({bucket_of(t, self.n_buckets) for t in missing}),
+                terms=missing,
+            )
+            probe = np.fromiter(mh, dtype=np.int64, count=len(mh))
+            pos = np.searchsorted(th_arr, probe)
+            ok = pos < len(th_arr)
+            ok[ok] = th_arr[pos[ok]] == probe[ok]
+            found = {
+                mh[int(h)]: int(df_arr[int(p)])
+                for h, p, o in zip(probe, pos, ok) if o
+            }
             if len(self._df_cache) + len(missing) > _DF_CACHE_MAX:
                 drop = len(self._df_cache) + len(missing) - _DF_CACHE_MAX
                 for key in list(self._df_cache)[:drop]:

@@ -1,24 +1,42 @@
-"""Incremental index refresh via Structured Streaming.
+"""Incremental index refresh via Structured Streaming, on the build engine.
 
 The batch build (index/segments.py) is the base; new documents arrive as a
-stream and become queryable in two tiers, the classic base+delta design:
+stream and become queryable in two tiers, the classic base+delta design.
+Every tier is written by the same direct engine as the base build:
 
 1. **Ingest** (`start_incremental_ingest`): readStream over a documents
-   source → the same fused chunk+tokenize kernel → `foreachBatch` appends
-   each micro-batch's flat postings to `<index>/flat_delta/ingest_batch=<n>`
-   (append-only, naturally idempotent per epoch — Structured Streaming
-   replays a failed epoch into the same directory).
-2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta flats,
+   source → `foreachBatch` stages each micro-batch to parquet and runs the
+   phase-1 tasks on it (p1_direct.build_flat_runs), salted with the base's
+   persisted hot set. A batch lands as
+
+     flat_delta/ingest_batch=<stream>-<epoch>/flat/bucket=<b>/run-t<t>.parquet
+     flat_delta/ingest_batch=<stream>-<epoch>/doc_stats/run-t<t>.parquet
+     flat_delta/ingest_batch=<stream>-<epoch>/_BATCH.json
+
+   The runs have the schema of the base's flat/ runs. `_BATCH.json` is the
+   batch's commit marker, written last: {n_docs, sum_dl, n_postings,
+   buckets}. Only marked batches exist for readers. `<stream>` is the
+   first 8 characters of the streaming query's id, which its checkpoint
+   keeps across restarts, so two streams never share a batch name. A
+   replayed epoch rewrites its batch whole; a replayed epoch that a fold
+   already consumed is skipped (meta/folded_epochs.json records the last
+   folded epoch per stream), the idempotent `foreachBatch` pattern.
+2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta runs,
    through the same plan and range task as `Searcher.topk`. The driver
-   reads the query terms' delta postings with pyarrow (deltas are small and
-   uncompressed), merges the corpus stats (N, avgdl, df) and ships the
-   postings with the range payload; each range task scores them beside
-   the segment parts. Delta docs are new docs, so scores are bit-identical
-   to a from-scratch rebuild, ties included.
-3. **Compact** (`fold_deltas_into_index`): fold accumulated deltas into the
-   bucketed checkpoint and re-encode ONLY the buckets that received new
-   postings (bucket pruning makes refresh cost proportional to the delta,
-   not the index).
+   reads the query terms' delta postings with pyarrow (only the runs of
+   the query terms' buckets, filtered by term_h) and the tier's doc count
+   and token sum from the markers, merges the corpus stats (N, avgdl, df)
+   and ships the postings with the range payload. Delta docs are new
+   docs, so scores are bit-identical to a from-scratch rebuild, ties
+   included.
+3. **Compact** (`fold_deltas_into_index`): the fold marker
+   (meta/fold_commit.json: the batches consumed, the touched buckets and
+   the new stats.json) is the commit point. The batches' runs are then
+   moved into flat/bucket=<b>/ and doc_stats/ under batch-unique names,
+   stats.json becomes base + marker sums, the touched buckets are
+   invalidated and build_index merge-encodes them (one packed job): no
+   Spark aggregation, no shuffle, no re-sort. A batch that commits while
+   a fold runs stays pending for the next fold.
 
 Watermarks/event-time windows are not needed for index refresh (postings
 are monotone accumulations, not windowed aggregates); the ingest trigger
@@ -27,16 +45,20 @@ interval bounds staleness instead.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from quickb_spark.config import BM25_B, BM25_K1, EngineConfig
 from quickb_spark.fs import IndexFS, join_path
-from quickb_spark.index.flatten import flat_postings_from_documents
-from quickb_spark.index.segments import _bucket_col, invalidate_buckets
+from quickb_spark.index.segments import (
+    STAGED_INPUT,
+    invalidate_buckets,
+    load_stats,
+    stage_documents,
+)
 from quickb_spark.query.serve_direct import TopK
 
 __all__ = [
@@ -45,9 +67,73 @@ __all__ = [
     "fold_deltas_into_index",
 ]
 
+#: Commit marker of one ingested micro-batch, written after its runs.
+BATCH_MARKER = "_BATCH.json"
+
+_BATCH_PREFIX = "ingest_batch="
+
 
 def _delta_dir(index_dir: str) -> str:
     return join_path(index_dir, "flat_delta")
+
+
+def _batch_dir(index_dir: str, key: str) -> str:
+    return join_path(_delta_dir(index_dir), _BATCH_PREFIX + key)
+
+
+def _fold_marker(index_dir: str) -> str:
+    return join_path(index_dir, "meta", "fold_commit.json")
+
+
+def _folded_path(index_dir: str) -> str:
+    return join_path(index_dir, "meta", "folded_epochs.json")
+
+
+def _folded_epochs(fs: IndexFS, index_dir: str) -> dict[str, int]:
+    """stream -> the last epoch a fold consumed."""
+    p = _folded_path(index_dir)
+    return json.loads(fs.read_text(p)) if fs.exists(p) else {}
+
+
+def _split_key(key: str) -> tuple[str, int]:
+    stream, _, epoch = key.rpartition("-")
+    return stream, int(epoch)
+
+
+def _ingest_batch(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    cfg: EngineConfig,
+    stream: str,
+    epoch: int,
+) -> None:
+    """Write one micro-batch of documents as a committed delta batch."""
+    from quickb_spark.index.p1_direct import build_flat_runs
+
+    fs = IndexFS(index_dir, spark)
+    if epoch <= _folded_epochs(fs, index_dir).get(stream, -1):
+        return  # a replay of an epoch a fold already consumed
+    bdir = _batch_dir(index_dir, f"{stream}-{epoch}")
+    fs.delete(bdir)  # a replayed epoch rewrites its batch whole
+    stats = load_stats(index_dir)
+    # bucket and salt exactly as the base did, whatever cfg says
+    icfg = dataclasses.replace(
+        cfg,
+        index=dataclasses.replace(
+            cfg.index,
+            term_buckets=int(stats["term_buckets"]),
+            salt_buckets=int(stats["salt_buckets"]),
+        ),
+    )
+    staged = join_path(bdir, STAGED_INPUT)
+    stage_documents(spark, docs, staged)
+    summary = build_flat_runs(
+        spark, staged, join_path(bdir, "flat"), join_path(bdir, "doc_stats"),
+        icfg, stats["hot_terms"],
+    )
+    fs.delete(staged)
+    fs.write_text_atomic(join_path(bdir, BATCH_MARKER), json.dumps(summary))
 
 
 def start_incremental_ingest(
@@ -60,27 +146,25 @@ def start_incremental_ingest(
 ) -> StreamingQuery:
     """stream_docs: a STREAMING DataFrame with the documents schema.
 
-    Each micro-batch lands as an append under flat_delta/ingest_batch=<n>.
-    """
+    Each micro-batch lands as a committed delta batch under
+    flat_delta/ingest_batch=<stream>-<epoch>. The index must already have
+    a base (build_index), whose buckets, salts and hot set the batches
+    reuse. The checkpoint (default <index>/stream_checkpoint) outlives
+    folds, so a restarted stream resumes after the files it has read."""
     cfg = cfg or EngineConfig()
-    nb = cfg.index.term_buckets
-    out = _delta_dir(index_dir)
+    ckpt = checkpoint or join_path(index_dir, "stream_checkpoint")
+    stream_id: list[str] = []
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        flat = flat_postings_from_documents(batch_df, cfg).withColumn(
-            "bucket", _bucket_col(F.col("term"), nb)
-        )
-        (
-            flat.withColumn("ingest_batch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(out)
-        )
+        if not stream_id:
+            # the query id, written to the checkpoint before any batch runs
+            meta = IndexFS(ckpt, spark).read_text(join_path(ckpt, "metadata"))
+            stream_id.append(json.loads(meta.splitlines()[0])["id"][:8])
+        _ingest_batch(spark, batch_df, index_dir, cfg, stream_id[0],
+                      int(epoch_id))
 
     writer = stream_docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation",
-        checkpoint or join_path(index_dir, "stream_checkpoint"),
+        "checkpointLocation", ckpt
     )
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
@@ -89,57 +173,54 @@ def start_incremental_ingest(
     return writer.start()
 
 
-def _delta_files(fs: IndexFS, index_dir: str) -> list[str]:
-    """The committed delta tier: the `.parquet` files directly inside the
-    top-level `ingest_batch=<n>` dirs. Names starting with `_` or `.` are
-    skipped, as Spark's reader skips them: a running micro-batch stages
-    its files under `flat_delta/.spark-staging-<job>/` and renames them
-    into place on commit, and checksum files start with `.`. Fold and
-    the unfolded query both read exactly this list."""
+def _delta_batches(fs: IndexFS, index_dir: str) -> list[tuple[str, dict]]:
+    """The committed, unfolded delta tier: [(batch key, marker)] of every
+    `ingest_batch=<key>` dir that holds a BATCH_MARKER, in key order.
+    Fold and the unfolded query both read exactly this list."""
     d = _delta_dir(index_dir)
     if not fs.exists(d):
         return []
+    folded = _folded_epochs(fs, index_dir)
     out = []
-    for batch in fs.listdir(d):
-        if not batch.startswith("ingest_batch="):
+    for name in fs.listdir(d):
+        marker = join_path(d, name, BATCH_MARKER)
+        if not name.startswith(_BATCH_PREFIX) or not fs.exists(marker):
             continue
-        bdir = join_path(d, batch)
-        out += [
-            join_path(bdir, n) for n in fs.listdir(bdir)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        ]
+        key = name[len(_BATCH_PREFIX):]
+        stream, epoch = _split_key(key)
+        if epoch > folded.get(stream, -1):
+            out.append((key, json.loads(fs.read_text(marker))))
     return out
 
 
-def _delta_flat(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    files = _delta_files(IndexFS(index_dir, spark), index_dir)
-    if not files:
-        return None
-    return (
-        spark.read.option("basePath", _delta_dir(index_dir)).parquet(*files)
-    )
-
-
-def _delta_postings(spark: SparkSession, index_dir: str, terms: list[str]):
-    """The pending delta tier, read in the driver with pyarrow: the given
-    terms' postings plus the tier's doc count and token sum (from its
-    `first == 1` rows, one per doc). -> searcher.ExtraPostings, or None
-    when no delta is pending. Raises UnreachableIndexError when pyarrow
-    cannot reach the index's filesystem."""
+def _delta_postings(index_dir: str, batches, terms: list[str], n_buckets: int):
+    """The given terms' postings in the delta tier, read in the driver with
+    pyarrow from the runs of the terms' buckets, plus the tier's doc count
+    and token sum from the batch markers. -> searcher.ExtraPostings.
+    Raises UnreachableIndexError when pyarrow cannot reach the index's
+    filesystem."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    from quickb_spark.index.p2_direct import pyarrow_fs_for
+    from quickb_spark.functions.hashing import xxhash64
+    from quickb_spark.index import p2_direct
+    from quickb_spark.index.p1_direct import list_parquet_files
     from quickb_spark.query.searcher import ExtraPostings, UnreachableIndexError
 
-    files = _delta_files(IndexFS(index_dir, spark), index_dir)
-    if not files:
-        return None
-    d = _delta_dir(index_dir)
+    by_h = {xxhash64(t): t for t in terms}
+    want = {h % n_buckets for h in by_h}
     try:
-        fsys, root = pyarrow_fs_for(d)
+        fsys, _ = p2_direct.pyarrow_fs_for(index_dir)
+        paths = [
+            p
+            for key, m in batches
+            for _b, p, _sz in p2_direct.list_bucket_files(
+                join_path(_batch_dir(index_dir, key), "flat"),
+                sorted(want.intersection(m["buckets"])),
+            )
+        ]
     except (OSError, ValueError, NotImplementedError) as e:
         # pyarrow: ArrowInvalid (unknown scheme) / ArrowIOError /
         # ArrowNotImplementedError, as in Searcher._files_for
@@ -147,28 +228,42 @@ def _delta_postings(spark: SparkSession, index_dir: str, terms: list[str]):
             f"cannot reach the delta files of index {index_dir!r} with "
             f"pyarrow: {e}"
         ) from e
-    paths = [root + f[len(d):] for f in files]
-    tbl = ds.dataset(paths, format="parquet", filesystem=fsys).to_table(
-        columns=["term", "doc_id", "tf", "doc_len", "first"],
-        filter=pc.field("term").isin(pa.array(terms, pa.string()))
-        | (pc.field("first") == 1),
-    )
-    firsts = tbl.filter(pc.equal(tbl["first"], 1))
     postings = {}
-    for t in terms:
-        rows = tbl.filter(pc.equal(tbl["term"], t))
-        if not rows.num_rows:
-            continue
-        docs = rows["doc_id"].to_numpy()
-        order = np.argsort(docs, kind="stable")
-        postings[t] = (
-            docs[order],
-            rows["tf"].to_numpy()[order],
-            rows["doc_len"].to_numpy()[order],
+    if paths:
+        dset = ds.dataset(paths, format="parquet", filesystem=fsys)
+        dl_in_runs = "doc_len" in dset.schema.names
+        tbl = dset.to_table(
+            columns=["term_h", "doc_id", "tf"] + (["doc_len"] if dl_in_runs else []),
+            filter=pc.field("term_h").isin(pa.array(list(by_h), pa.int64())),
         )
+        th = tbl["term_h"].to_numpy()
+        docs = tbl["doc_id"].to_numpy()
+        tfs = tbl["tf"].to_numpy()
+        if dl_in_runs:
+            dls = tbl["doc_len"].to_numpy()
+        else:  # shed runs: doc_len comes from the batches' doc-stats runs
+            stats_tbl = ds.dataset(
+                [
+                    p for key, _m in batches
+                    for p, _sz in list_parquet_files(
+                        join_path(_batch_dir(index_dir, key), "doc_stats")
+                    )
+                ],
+                format="parquet", filesystem=fsys,
+            ).to_table(columns=["doc_id", "doc_len"])
+            ids = stats_tbl["doc_id"].to_numpy()
+            order = np.argsort(ids)
+            dls = stats_tbl["doc_len"].to_numpy()[order][
+                np.searchsorted(ids[order], docs)
+            ]
+        for h, t in by_h.items():
+            rows = np.flatnonzero(th == h)
+            if len(rows):
+                rows = rows[np.argsort(docs[rows], kind="stable")]
+                postings[t] = (docs[rows], tfs[rows], dls[rows])
     return ExtraPostings(
-        n_docs=firsts.num_rows,
-        tokens=int(pc.sum(firsts["doc_len"]).as_py() or 0),
+        n_docs=sum(m["n_docs"] for _, m in batches),
+        tokens=sum(m["sum_dl"] for _, m in batches),
         postings=postings,
     )
 
@@ -188,55 +283,73 @@ def query_with_deltas(
     token sum add up, df = df_base + df_delta (a delta-only term is live),
     and each range task scores the delta postings of its range beside the
     segment parts. Base and delta doc ids are disjoint, so results equal a
-    from-scratch rebuild over base+delta bit for bit (tested). Only the
-    query terms' lexicon rows are read driver-side, so a small plan runs
-    no Spark job (it is scored in the driver, see
-    serve_direct.serve_topk_direct), a larger one only the range job, and
-    no call loads the whole term dictionary. With no delta pending this
-    is a plain Searcher call."""
-    from quickb_spark.functions.hashing import bucket_of
+    from-scratch rebuild over base+delta bit for bit (tested). The fresh
+    Searcher reads only the query terms' lexicon rows, so a small plan
+    runs no Spark job (it is scored in the driver, see
+    serve_direct.serve_topk_direct), a larger one only the range job.
+    With no delta pending this is a plain Searcher call."""
     from quickb_spark.query.searcher import Searcher, _tokenize
 
     s = Searcher(spark, index_dir, k1, b)
     toks_by_q = _tokenize(queries)
-    terms = sorted({t for toks in toks_by_q.values() for t in toks})
-    s._read_lexicon(
-        sorted({bucket_of(t, s.n_buckets) for t in terms}), terms=terms
-    )
-    extra = _delta_postings(spark, index_dir, terms)
+    batches = _delta_batches(IndexFS(index_dir, spark), index_dir)
+    extra = None
+    if batches:
+        terms = sorted({t for toks in toks_by_q.values() for t in toks})
+        extra = _delta_postings(index_dir, batches, terms, s.n_buckets)
     return s._serve(s._plan(toks_by_q, k, extra=extra))
 
 
-def _fold_marker(index_dir: str) -> str:
-    return join_path(index_dir, "meta", "fold_commit.json")
+def _move_runs(fs: IndexFS, src: str, dst: str, key: str) -> None:
+    """Move src's run files into dst as run-b<key>-<rest>: names unique
+    across batches. Files already moved by an earlier attempt are gone
+    from src, so a retry moves only the rest."""
+    if not fs.exists(src):
+        return
+    fs.mkdirs(dst)
+    for name in fs.listdir(src):
+        if name.startswith("run-") and name.endswith(".parquet"):
+            fs.rename(
+                join_path(src, name), join_path(dst, f"run-b{key}-{name[4:]}")
+            )
 
 
-def _finish_fold(fs: IndexFS, index_dir: str, touched: list[int]) -> None:
-    """Commit point passed: swap staged bucket dirs into the flat checkpoint
-    and clear deltas/stale metadata. Every step is idempotent, so a crashed
-    fold resumes here from the marker and converges to exactly-once.
+def _finish_fold(
+    spark: SparkSession, fs: IndexFS, index_dir: str, marker: dict,
+    cfg: EngineConfig,
+) -> None:
+    """Commit point passed: move the marker's batches into the base,
+    write its stats, re-encode its buckets. Every step is idempotent, so a
+    crashed fold resumes here from the marker and converges to
+    exactly-once. The marker is deleted last, after build_index returns."""
+    from quickb_spark.index.segments import build_index
 
-    The fold marker itself is NOT deleted here: it must outlive the
-    build_index re-encode that follows, so a crash anywhere between the
-    swap and the finished re-encode is repaired by the next fold call
-    (marker present -> re-run this idempotent cleanup + build_index). The
-    caller deletes the marker only after build_index returns."""
+    folded = _folded_epochs(fs, index_dir)
+    for key in marker["batches"]:
+        stream, epoch = _split_key(key)
+        folded[stream] = max(folded.get(stream, -1), epoch)
+    fs.write_text_atomic(_folded_path(index_dir), json.dumps(folded))
     flat_dir = join_path(index_dir, "flat")
-    stage_dir = join_path(index_dir, "flat_stage")
-    # delta dirs first: once the marker exists, the staged merge is the
-    # single source of truth for the touched buckets — a retry must never
-    # union deltas in a second time
-    fs.delete(_delta_dir(index_dir))
-    fs.delete(join_path(index_dir, "stream_checkpoint"))
-    for b in touched:
-        staged = join_path(stage_dir, f"bucket={b}")
-        if fs.exists(staged):  # not yet swapped by a prior attempt
-            fs.rename(staged, join_path(flat_dir, f"bucket={b}"))
-    stats_path = join_path(index_dir, "meta", "stats.json")
-    if fs.exists(stats_path):
-        fs.delete(stats_path, recursive=False)
-    invalidate_buckets(fs, index_dir, touched)
-    fs.delete(stage_dir)
+    for key in marker["batches"]:
+        bdir = _batch_dir(index_dir, key)
+        if not fs.exists(bdir):  # moved and deleted by an earlier attempt
+            continue
+        _move_runs(
+            fs, join_path(bdir, "doc_stats"), join_path(index_dir, "doc_stats"),
+            key,
+        )
+        for b in marker["touched"]:
+            _move_runs(
+                fs, join_path(bdir, "flat", f"bucket={b}"),
+                join_path(flat_dir, f"bucket={b}"), key,
+            )
+        fs.delete(bdir)
+    fs.write_text_atomic(
+        join_path(index_dir, "meta", "stats.json"), json.dumps(marker["stats"])
+    )
+    invalidate_buckets(fs, index_dir, marker["touched"])
+    build_index(spark, index_dir=index_dir, cfg=cfg)
+    fs.delete(_fold_marker(index_dir), recursive=False)
 
 
 def fold_deltas_into_index(
@@ -244,94 +357,50 @@ def fold_deltas_into_index(
     index_dir: str,
     cfg: EngineConfig | None = None,
 ) -> int:
-    """Compact deltas into the base: merge into the flat checkpoint, then
-    re-encode only the buckets the deltas touched. Returns #buckets redone.
+    """Compact the committed delta batches into the base: move their runs
+    into the flat checkpoint, then re-encode only the buckets they touched.
+    Returns #buckets redone.
 
-    Crash-safe (exactly-once): the merge lands in a STAGING dir (never a
-    read-and-overwrite of the live checkpoint), then a fold-commit marker is
-    written atomically; only after the marker do deltas get deleted and the
-    staged buckets swapped in. A crash before the marker leaves the live
-    index + deltas untouched; a crash after it is finished idempotently by
-    the next call via the marker."""
+    Crash-safe (exactly-once): the fold marker, written atomically before
+    anything moves, names the batches consumed and holds the new
+    stats.json. A crash before the marker leaves the index and deltas
+    untouched; a crash after it is finished idempotently by the next call.
+    Raises ValueError on an index built from chunks=, whose checkpoint is
+    not sorted runs."""
+    from quickb_spark.index.p1_direct import RUNS_MARKER
+
     cfg = cfg or EngineConfig()
-    from quickb_spark.index.segments import build_index
-
     fs = IndexFS(index_dir, spark)
-    # finish a previously crashed fold before looking at new deltas: the
-    # marker survives until build_index completes, so a crash anywhere
-    # after the commit point (including between cleanup and re-encode —
-    # the window that used to orphan the index with no stats.json) is
-    # repaired here idempotently
     if fs.exists(_fold_marker(index_dir)):
-        prev = json.loads(fs.read_text(_fold_marker(index_dir)))["touched"]
-        _finish_fold(fs, index_dir, prev)
-        build_index(spark, index_dir=index_dir, cfg=cfg)
-        fs.delete(_fold_marker(index_dir), recursive=False)
-
-    delta = _delta_flat(spark, index_dir)
-    if delta is None:
-        return 0
-    flat_dir = join_path(index_dir, "flat")
-    stage_dir = join_path(index_dir, "flat_stage")
-    touched = [
-        int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
-    ]
-    # salt delta rows with the SAME persisted hot set the base build used
-    # (salt assignment must stay a pure function of (term, doc_id) across
-    # folds; correctness is salt-invariant — queries re-merge sub-lists —
-    # but a stable assignment keeps segments canonical), then restore the
-    # v3 checkpoint invariant: partitions keyed by (bucket, subgroup(term,
-    # salt)) and sorted, so the no-shuffle phase-2 encode applies to folded
-    # buckets too.
-    hot_path = join_path(index_dir, "meta", "hot_terms.json")
-    payload = (
-        json.loads(fs.read_text(hot_path)) if fs.exists(hot_path) else {}
-    )
-    hot = payload.get("hot_terms", [])
-    salt_col = (
-        F.when(
-            F.col("term").isin(hot),
-            F.pmod(F.xxhash64("doc_id"), F.lit(cfg.index.salt_buckets)).cast("int"),
-        ).otherwise(F.lit(0))
-        if hot
-        else F.lit(0).cast("int")
-    )
-    from quickb_spark.index.segments import _subgroups_per_bucket
-
-    g = _subgroups_per_bucket(
-        spark.sparkContext.defaultParallelism,
-        cfg.index.term_buckets,
-        int(payload.get("est_postings", 0)),
-        cfg,
-    )
-    # delta rows still carry term STRINGS (the delta tier joins queries by
-    # string); convert to the v4 checkpoint identity (salt from the hot-set
-    # strings, then term_h) before unioning with the already-v4 base
-    delta_v4 = (
-        delta.drop("ingest_batch")
-        .withColumn("salt", salt_col)
-        .withColumn("term_h", F.xxhash64("term"))
-        .drop("term")
-    )
-    merged = (
-        spark.read.parquet(flat_dir)
-        .filter(F.col("bucket").isin(touched))
-        .unionByName(delta_v4)
-        .repartition(
-            max(len(touched), 1) * g,
-            F.col("bucket"),
-            F.pmod(F.xxhash64("term_h", "salt"), F.lit(g)),
+        _finish_fold(
+            spark, fs, index_dir,
+            json.loads(fs.read_text(_fold_marker(index_dir))), cfg,
         )
-        .sortWithinPartitions("bucket", "term_h", "salt", "doc_id")
-    )
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(stage_dir)
-    fs.write_text_atomic(
-        _fold_marker(index_dir), json.dumps({"touched": touched})
-    )  # atomic commit point
-    _finish_fold(fs, index_dir, touched)
-
-    # no input DataFrame: the merged phase-1 checkpoint already exists, so
-    # build_index only recomputes stats and re-encodes the meta-less buckets
-    build_index(spark, index_dir=index_dir, cfg=cfg)
-    fs.delete(_fold_marker(index_dir), recursive=False)
-    return len(touched)
+    batches = _delta_batches(fs, index_dir)
+    if not batches:
+        return 0
+    if not fs.exists(join_path(index_dir, "flat", RUNS_MARKER)):
+        raise ValueError(
+            f"index at {index_dir} was built from chunks=, whose checkpoint "
+            "is not sorted runs, so deltas cannot be folded into it; "
+            "rebuild it with build_index(documents=...) or corpus_uri=..."
+        )
+    stats = load_stats(index_dir)
+    n0 = int(stats["n_docs"])
+    n_docs = n0 + sum(m["n_docs"] for _, m in batches)
+    # avgdl * n recovers the base's integer token sum, so the new avgdl is
+    # the one a rebuild would compute
+    tokens = round(stats["avgdl"] * n0) + sum(m["sum_dl"] for _, m in batches)
+    marker = {
+        "batches": [key for key, _ in batches],
+        "touched": sorted({b for _, m in batches for b in m["buckets"]}),
+        "stats": stats | {
+            "n_docs": n_docs,
+            "avgdl": tokens / n_docs if n_docs else 0.0,
+            "n_postings": int(stats["n_postings"])
+            + sum(m["n_postings"] for _, m in batches),
+        },
+    }
+    fs.write_text_atomic(_fold_marker(index_dir), json.dumps(marker))
+    _finish_fold(spark, fs, index_dir, marker, cfg)
+    return len(marker["touched"])

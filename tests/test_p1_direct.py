@@ -1,12 +1,14 @@
 """Direct (no-Arrow-channel) build path: bit-identity + index equivalence.
 
 The direct phase 1 (index/p1_direct.py) mints doc_ids, term hashes and
-salts in Python; the channel phase 1 mints them with JVM expressions. These
-tests pin (a) bit-identity of every hash the two paths share, and (b) full
-index equivalence — stats, doc stats, lexicon, decoded posting lists,
-positions, and query results — between an index built via
-`build_index(corpus_uri=...)` (direct p1 + k-way merge p2) and one built
-via `build_index(documents=...)` (channel p1 + per-file direct p2).
+salts in Python; the chunks= channel phase 1 mints them with JVM
+expressions (doc ids in chunking.udf.chunk_documents, term hashes and
+salts in segments.build_index). These tests pin (a) bit-identity of every
+hash the two paths share, and (b) full index equivalence — stats, doc
+stats, lexicon, decoded posting lists, positions, and query results —
+between an index built via `build_index(corpus_uri=...)` (direct p1 +
+k-way merge p2) and one built via `build_index(chunks=...)` over the same
+documents (channel p1 + per-file direct p2).
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from quickb_spark.chunking.udf import chunk_documents
 from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 from quickb_spark.functions.hashing import xxhash64 as xxh_str
@@ -73,7 +76,7 @@ def both_indexes(spark, corpus, tmp_path_factory):
     _seed_hot(idx_di)
     build_index(
         spark, index_dir=idx_ch, cfg=_cfg(),
-        documents=spark.read.parquet(corpus),
+        chunks=chunk_documents(spark.read.parquet(corpus), _cfg()),
     )
     build_index(spark, index_dir=idx_di, cfg=_cfg(), corpus_uri=corpus)
     return idx_ch, idx_di
@@ -499,6 +502,61 @@ def test_runs_checkpoint_resume(spark, both_indexes, tmp_path):
     assert a == b and len(a) > 10
 
 
+def _parquet_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                p = os.path.join(d, n)
+                with open(p, "rb") as f:
+                    out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_documents_build_equals_corpus_uri_build(spark, corpus, both_indexes,
+                                                 tmp_path):
+    """build_index(documents=...) stages the DataFrame and runs the same
+    engine: segment and lexicon files byte-identical to the corpus_uri=
+    build, equal stats and doc stats, and no staged copy left behind."""
+    from quickb_spark.index.segments import STAGED_INPUT
+
+    _, idx_di = both_indexes
+    idx = str(tmp_path / "from_documents")
+    _seed_hot(idx)
+    build_index(
+        spark, index_dir=idx, cfg=_cfg(), documents=spark.read.parquet(corpus)
+    )
+    assert not os.path.exists(os.path.join(idx, STAGED_INPUT))
+    assert load_stats(idx) == load_stats(idx_di)
+    for sub in ("segments", "lexicon"):
+        got = _parquet_bytes(os.path.join(idx, sub))
+        assert got and got == _parquet_bytes(os.path.join(idx_di, sub)), sub
+    ds = [
+        sorted(map(tuple, spark.read.parquet(os.path.join(p, "doc_stats"))
+                   .select("doc_id", "doc_len").collect()))
+        for p in (idx, idx_di)
+    ]
+    assert ds[0] == ds[1]
+
+
+def test_duplicated_posting_fails_loudly(spark, both_indexes, tmp_path):
+    """A runs checkpoint holding a posting twice (here: one run copied
+    under a second name) makes phase 2 raise a ValueError naming the
+    bucket — no fallback encodes the bad data."""
+    from quickb_spark.index.segments import invalidate_buckets
+    from quickb_spark.fs import IndexFS
+
+    _, idx_di = both_indexes
+    idx = str(tmp_path / "dup")
+    shutil.copytree(idx_di, idx)
+    bdir = os.path.join(idx, "flat", "bucket=3")
+    run = sorted(n for n in os.listdir(bdir) if n.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(bdir, run), os.path.join(bdir, "run-dup.parquet"))
+    invalidate_buckets(IndexFS(idx, spark), idx, [3])
+    with pytest.raises(ValueError, match=r"bucket=3\b"):
+        build_index(spark, index_dir=idx, cfg=_cfg())
+
+
 @pytest.mark.parametrize("max_terms", [5, 2000])
 def test_presample_packed_matches_unit_by_unit(spark, corpus, max_terms):
     """Packing the phase-0 sample units into per-slot tasks must not move
@@ -558,19 +616,9 @@ def test_packed_merge_files_match_unit_by_unit(spark, both_indexes, tmp_path):
     finally:
         pa.set_cpu_count(prev_cpus)
 
-    def _files(root):
-        out = {}
-        for d, _, names in os.walk(root):
-            for n in names:
-                if n.endswith(".parquet"):
-                    p = os.path.join(d, n)
-                    with open(p, "rb") as f:
-                        out[os.path.relpath(p, root)] = f.read()
-        return out
-
     for built, ref in ((os.path.join(idx_di, "segments"), seg_ref),
                        (os.path.join(idx_di, "lexicon"), lex_ref)):
-        got, want = _files(built), _files(ref)
+        got, want = _parquet_bytes(built), _parquet_bytes(ref)
         assert sorted(got) == sorted(want) and len(got) == len(by_bucket)
         assert all(re.fullmatch(r"bucket=\d+/part-m0000\.parquet", k)
                    for k in got)

@@ -5,6 +5,7 @@ passes (index/p2_direct.py); the channel path runs the original per-group
 encoder (index/segments.py _partition_encoder -> encode.encode_posting_list).
 Both must produce BYTE-IDENTICAL segment rows — streams, block metadata and
 offsets — or the query path's lazy block-sliced decode would silently skew.
+Both encode the complete-group checkpoint a chunks= build writes.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import os
 
 import pytest
 
+from quickb_spark.chunking.udf import chunk_documents
 from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 from quickb_spark.index.segments import build_index
@@ -50,12 +52,14 @@ def _rows(spark, idx):
 
 
 def test_direct_vs_channel_byte_identity(spark, tmp_path):
-    docs = generate_documents_df(spark, 220, seed=11, partitions=4)
+    chunks = chunk_documents(
+        generate_documents_df(spark, 220, seed=11, partitions=4), CFG
+    )
     ia, ib = str(tmp_path / "direct"), str(tmp_path / "channel")
-    build_index(spark, index_dir=ia, cfg=CFG, documents=docs)
+    build_index(spark, index_dir=ia, cfg=CFG, chunks=chunks)
     os.environ["QKB_P2_CHANNEL"] = "1"
     try:
-        build_index(spark, index_dir=ib, cfg=CFG, documents=docs)
+        build_index(spark, index_dir=ib, cfg=CFG, chunks=chunks)
     finally:
         del os.environ["QKB_P2_CHANNEL"]
 

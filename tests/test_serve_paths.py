@@ -176,3 +176,19 @@ def test_concurrent_topk_matches_serial(spark, built, monkeypatch):
         entries = list(sd._TBL_CACHE.values())
         assert sd._TBL_CACHE_BYTES[0] == sum(t.nbytes for _, t in entries)
     assert sd._TBL_CACHE_BYTES[0] <= 1 << 20
+
+
+def test_one_shot_driver_path_runs_no_spark_job(spark, built):
+    """A Searcher that never loaded its term dictionary (the one-shot
+    bm25_topk_segments form) reads the query terms' lexicon rows with
+    pyarrow: a driver-path call runs 0 Spark jobs and answers exactly
+    like a preloaded Searcher, absent terms included."""
+    idx, _ = built
+    sc = spark.sparkContext
+    queries = QUERIES + [("absent", "zzqqxxnotaterm")]
+    rows, jobs, _ = _run(
+        sc, lambda: wand.bm25_topk_segments(spark, idx, queries, k=10)
+    )
+    assert jobs == 0
+    assert rows == _searcher(spark, idx).topk(queries, k=10)
+    assert len(rows) > 50

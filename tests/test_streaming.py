@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 
 from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import DOCUMENTS_SCHEMA, fixture_queries, gen_document, generate_documents_df
-from quickb_spark.index.segments import build_index
+from quickb_spark.index.segments import build_index, load_stats
 from quickb_spark.query import wand
+from quickb_spark.query.searcher import Searcher
 from quickb_spark.query.wand import bm25_topk_segments
+from quickb_spark.streaming import incremental
 from quickb_spark.streaming.incremental import (
     fold_deltas_into_index,
     query_with_deltas,
@@ -77,13 +79,11 @@ def test_ingest_query_compact_equivalence(spark, dirs, tmp_path_factory):
     assert _collect_ranked(query_with_deltas(spark, idx, qdf, k=10)) == expected
 
 
-def test_fold_crash_recovery_exactly_once(spark, tmp_path):
-    """A fold that crashes AFTER its commit marker (staged merge written,
-    deltas not yet cleared, buckets not swapped) must converge to exactly
-    the same index on the next fold call — deltas must never be folded in
-    twice (the round-1 double-union hazard)."""
-    from quickb_spark.corpus import DOCUMENTS_SCHEMA
-    from quickb_spark.streaming.incremental import _fold_marker
+def test_fold_crash_recovery_exactly_once(spark, tmp_path, monkeypatch):
+    """A fold that crashes AFTER its commit marker, with part of the delta
+    runs already moved into the base, must converge on the next fold call
+    to the from-scratch index — no delta run folded in twice or lost."""
+    from quickb_spark.fs import IndexFS
 
     base = generate_documents_df(spark, 80, seed=5, partitions=2)
     alldocs = generate_documents_df(spark, 110, seed=5, partitions=2)
@@ -96,60 +96,166 @@ def test_fold_crash_recovery_exactly_once(spark, tmp_path):
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
     start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
 
-    # simulate the crash point: run the pre-commit part manually — staged
-    # merge + marker exist, but deltas/buckets/metas untouched
-    import json as _json
+    real_move = incremental._move_runs
+    moved = []
 
-    from pyspark.sql import functions as F  # noqa: F811
-    from quickb_spark.fs import IndexFS, join_path
+    def crash_on_third_move(*args):
+        if len(moved) == 2:
+            raise RuntimeError("simulated crash")
+        moved.append(args)
+        real_move(*args)
 
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_move_runs", crash_on_third_move)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            fold_deltas_into_index(spark, idx, CFG)
     fs = IndexFS(idx, spark)
-    delta = spark.read.parquet(join_path(idx, "flat_delta"))
-    touched = [int(r["bucket"]) for r in delta.select("bucket").distinct().collect()]
-    # mirror the product fold's pre-commit staging exactly: delta rows get
-    # the persisted hot-set salt, and the staged buckets are re-keyed and
-    # sorted to the v4 checkpoint invariant (the no-shuffle phase-2 encode
-    # depends on group-aligned, doc_id-sorted files)
-    hot = _json.loads(fs.read_text(join_path(idx, "meta", "hot_terms.json")))[
-        "hot_terms"
-    ]
-    salt_col = (
-        F.when(
-            F.col("term").isin(hot),
-            F.pmod(F.xxhash64("doc_id"), F.lit(CFG.index.salt_buckets)).cast("int"),
-        ).otherwise(F.lit(0))
-        if hot
-        else F.lit(0).cast("int")
-    )
-    delta_v4 = (
-        delta.drop("ingest_batch")
-        .withColumn("salt", salt_col)
-        .withColumn("term_h", F.xxhash64("term"))
-        .drop("term")
-    )
-    merged = (
-        spark.read.parquet(join_path(idx, "flat"))
-        .filter(F.col("bucket").isin(touched))
-        .unionByName(delta_v4)
-        .repartition(max(len(touched), 1), F.col("bucket"), F.xxhash64("term_h", "salt"))
-        .sortWithinPartitions("bucket", "term_h", "salt", "doc_id")
-    )
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(
-        join_path(idx, "flat_stage")
-    )
-    fs.write_text_atomic(_fold_marker(idx), _json.dumps({"touched": touched}))
-    # "crash" here — now the public API must recover and finish exactly-once
-    n = fold_deltas_into_index(spark, idx, CFG)
-    assert n == 0  # the interrupted fold consumed all deltas; no new ones
-    assert not fs.exists(_fold_marker(idx))
-    assert not fs.exists(join_path(idx, "flat_stage"))
+    assert fs.exists(incremental._fold_marker(idx))
+    # the public API recovers from the marker and finishes exactly once
+    assert fold_deltas_into_index(spark, idx, CFG) == 0
+    assert not fs.exists(incremental._fold_marker(idx))
+    assert not list((tmp_path / "idx" / "flat_delta").glob("ingest_batch=*"))
 
     fresh = str(tmp_path / "fresh")
     build_index(spark, index_dir=fresh, cfg=CFG, documents=alldocs)
+    got_stats, want_stats = load_stats(idx), load_stats(fresh)
+    for k in ("n_docs", "avgdl", "n_postings"):
+        assert got_stats[k] == want_stats[k], k
     qdf = spark.createDataFrame(fixture_queries()[:10], ["query_id", "query_text"])
     got = _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10))
     want = _collect_ranked(bm25_topk_segments(spark, fresh, qdf, k=10))
     assert got == want
+
+
+def test_fold_keeps_a_batch_that_commits_during_the_fold(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch that commits after fold has listed the delta tier
+    must survive the fold: it stays pending, query_with_deltas serves it,
+    and the next fold consumes it."""
+    from quickb_spark.fs import IndexFS
+
+    base = generate_documents_df(spark, 60, seed=13, partitions=2)
+    mid = generate_documents_df(spark, 80, seed=13, partitions=2)
+    alldocs = generate_documents_df(spark, 95, seed=13, partitions=2)
+    idx = str(tmp_path / "idx")
+    build_index(spark, index_dir=idx, cfg=CFG, documents=base)
+    src = str(tmp_path / "in")
+    mid.exceptAll(base).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
+
+    late = alldocs.exceptAll(mid)
+    real_finish = incremental._finish_fold
+
+    def commit_late_batch_then_finish(*args, **kwargs):
+        incremental._ingest_batch(spark, late, idx, CFG, "late0000", 0)
+        return real_finish(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_finish_fold", commit_late_batch_then_finish)
+        assert fold_deltas_into_index(spark, idx, CFG) > 0
+    pending = incremental._delta_batches(IndexFS(idx, spark), idx)
+    assert [key for key, _ in pending] == ["late0000-0"]
+
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, index_dir=fresh, cfg=CFG, documents=alldocs)
+    qdf = spark.createDataFrame(fixture_queries()[:12], ["query_id", "query_text"])
+    want = _collect_ranked(bm25_topk_segments(spark, fresh, qdf, k=10))
+    assert _collect_ranked(query_with_deltas(spark, idx, qdf, k=10)) == want
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    assert _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10)) == want
+    assert load_stats(idx)["n_docs"] == load_stats(fresh)["n_docs"]
+
+
+def test_restarted_stream_does_not_reingest_folded_docs(spark, tmp_path):
+    """Fold keeps the stream checkpoint: restarting the stream with no new
+    source files ingests nothing, and a replay of an epoch the fold
+    already consumed (its commit-log entry removed, so Spark re-runs it)
+    is a no-op. stats.json stays as the fold left it."""
+    from quickb_spark.fs import IndexFS
+
+    base = generate_documents_df(spark, 60, seed=17, partitions=2)
+    alldocs = generate_documents_df(spark, 90, seed=17, partitions=2)
+    idx = tmp_path / "idx"
+    build_index(spark, index_dir=str(idx), cfg=CFG, documents=base)
+    src = str(tmp_path / "in")
+    alldocs.exceptAll(base).write.parquet(src)
+
+    def run_stream():
+        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+        q = start_incremental_ingest(spark, stream, str(idx), CFG)
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    n_base = load_stats(str(idx))["n_docs"]
+    run_stream()
+    assert fold_deltas_into_index(spark, str(idx), CFG) > 0
+    stats = (idx / "meta" / "stats.json").read_text()
+    assert load_stats(str(idx))["n_docs"] > n_base
+
+    run_stream()  # nothing new to read
+    fs = IndexFS(str(idx), spark)
+    assert incremental._delta_batches(fs, str(idx)) == []
+
+    commits = idx / "stream_checkpoint" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    run_stream()  # replays the folded epoch
+    assert (commits / str(last)).exists(), "the epoch was not replayed"
+    assert not list((idx / "flat_delta").glob("ingest_batch=*"))
+    assert incremental._delta_batches(fs, str(idx)) == []
+    assert fold_deltas_into_index(spark, str(idx), CFG) == 0
+    assert (idx / "meta" / "stats.json").read_text() == stats
+
+
+def test_fold_on_corpus_uri_index_equals_rebuild(spark, tmp_path):
+    """Fold on an index built with corpus_uri= (the direct engine users
+    run) equals a from-scratch corpus_uri= build over base + delta bit for
+    bit: stats, lexicon and segment rows, and top-k compared with ==,
+    ties included (the delta copies base docs under new paths)."""
+    import json
+    import os
+
+    rows = [gen_document(i, 21) for i in range(150)]
+    base, new = rows[:120], rows[120:]
+    new += [(r, f"{p}.copy", c, lang, text) for r, p, c, lang, text in base[:20]]
+    hot = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
+           "est_postings": 0}
+
+    def build(name, docs):
+        corpus = str(tmp_path / f"{name}_corpus")
+        spark.createDataFrame(docs, DOCUMENTS_SCHEMA).write.parquet(corpus)
+        idx = str(tmp_path / name)
+        os.makedirs(os.path.join(idx, "meta"))
+        with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
+            json.dump(hot, f)
+        build_index(spark, index_dir=idx, cfg=CFG, corpus_uri=corpus)
+        return idx
+
+    idx = build("idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    fresh = build("fresh", base + new)
+
+    assert load_stats(idx) == load_stats(fresh)
+    for sub in ("lexicon", "segments"):
+        got, want = (
+            sorted(map(tuple, spark.read.parquet(f"{p}/{sub}").collect()))
+            for p in (idx, fresh)
+        )
+        assert got and got == want, sub
+    queries = fixture_queries()[:20]
+    got = sorted(map(tuple, Searcher(spark, idx).topk(queries, k=10)))
+    want = sorted(map(tuple, Searcher(spark, fresh).topk(queries, k=10)))
+    assert got == want
+    assert sum(
+        a[0] == b[0] and a[3] == b[3] for a, b in zip(got, got[1:])
+    ) >= 10, "copies must produce exact ties in the top k"
 
 
 def test_gen_document_prefix_stability():
@@ -230,10 +336,10 @@ def test_query_with_deltas_ties_match_rebuild_exactly(
 
 
 def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch):
-    """A running micro-batch stages its files under
-    flat_delta/.spark-staging-<job>/ingest_batch=<n>/ before the commit
-    rename. Neither the unfolded query nor fold may read them, nor a
-    non-parquet file inside a committed batch dir."""
+    """Only committed delta batches (an `ingest_batch=<key>` dir holding
+    its _BATCH.json marker) exist for the unfolded query and for fold: a
+    batch whose marker is not written yet, a dir under any other name,
+    and a non-parquet file inside a committed batch are never read."""
     import shutil
 
     import pyarrow as pa
@@ -262,13 +368,18 @@ def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch)
     clean = _collect_ranked(query_with_deltas(spark, str(idx), qdf, k=10))
 
     delta = idx / "flat_delta"
-    committed = sorted(delta.glob("ingest_batch=*/*.parquet"))
-    assert committed
-    staged = delta / ".spark-staging-x" / "ingest_batch=99"
-    staged.mkdir(parents=True)
-    shutil.copy(committed[0], staged / "part-0.parquet")  # same doc ids again
-    (staged / "part-1.parquet").write_bytes(b"PAR1 half-written")  # no footer
-    (committed[0].parent / "notes.txt").write_text("not a delta file")
+    (committed,) = delta.glob("ingest_batch=*")
+    stream_id = committed.name.split("=")[1].rsplit("-", 1)[0]
+    # the same doc ids again, in a batch that has not committed yet
+    pending = delta / f"ingest_batch={stream_id}-99"
+    shutil.copytree(committed, pending)
+    (pending / incremental.BATCH_MARKER).unlink()
+    (pending / "flat" / "bucket=0" / "run-t99999.parquet").write_bytes(
+        b"PAR1 half-written"
+    )  # no footer
+    shutil.copytree(committed, delta / ".spark-staging-x")
+    run_dir = next(committed.glob("flat/bucket=*"))
+    (run_dir / "notes.txt").write_text("not a delta file")
 
     assert _collect_ranked(query_with_deltas(spark, str(idx), qdf, k=10)) == clean
 
@@ -281,4 +392,32 @@ def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch)
             query_with_deltas(spark, str(idx), qdf, k=10)
 
     assert fold_deltas_into_index(spark, str(idx), CFG) > 0
+    assert pending.exists()  # not committed, so not consumed
     assert _collect_ranked(bm25_topk_segments(spark, str(idx), qdf, k=10)) == clean
+
+
+def test_shed_layout_delta_tier_matches_rebuild(spark, tmp_path):
+    """With runs that carry no doc_len (p1_dl_in_runs=False), the delta
+    query takes doc lengths from the batches' doc-stats runs and the fold
+    from the merged doc stats: both equal a from-scratch rebuild."""
+    import dataclasses
+
+    cfg = dataclasses.replace(
+        CFG, index=dataclasses.replace(CFG.index, p1_dl_in_runs=False)
+    )
+    base = generate_documents_df(spark, 60, seed=23, partitions=2)
+    alldocs = generate_documents_df(spark, 85, seed=23, partitions=2)
+    idx = str(tmp_path / "idx")
+    build_index(spark, index_dir=idx, cfg=cfg, documents=base)
+    src = str(tmp_path / "in")
+    alldocs.exceptAll(base).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, cfg).awaitTermination(120)
+
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, index_dir=fresh, cfg=cfg, documents=alldocs)
+    qdf = spark.createDataFrame(fixture_queries()[:12], ["query_id", "query_text"])
+    want = _collect_ranked(bm25_topk_segments(spark, fresh, qdf, k=10))
+    assert _collect_ranked(query_with_deltas(spark, idx, qdf, k=10)) == want
+    assert fold_deltas_into_index(spark, idx, cfg) > 0
+    assert _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10)) == want
