@@ -57,7 +57,7 @@ from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.functions.hashing import bucket_of, xxhash64
 from quickb_spark.functions.tokenize import tokenize_py
 from quickb_spark.index.segments import load_stats
-from quickb_spark.query.serve_direct import TopK
+from quickb_spark.query.serve_direct import TopK, driver_map
 from quickb_spark.query.wand import _auto_ranges
 
 __all__ = ["Searcher", "TopK", "UnreachableIndexError"]
@@ -154,7 +154,8 @@ class Searcher:
     def load_lexicon(self, max_mb: int | None = None) -> bool:
         """Load the whole (term_h, df) lexicon driver-side as two sorted
         NumPy arrays — the term dictionary a search server holds in memory
-        from reader open. A df lookup becomes a searchsorted probe.
+        from reader open. A df lookup becomes a searchsorted probe. The
+        bucket files are read on the driver_map pool, no Spark job.
 
         Skipped (returns False) when the lexicon's on-disk parquet exceeds
         `max_mb` (default QKB_LEX_DRIVER_MB, 1024 — decoded pairs are 16
@@ -200,34 +201,43 @@ class Searcher:
         keep = None if terms is None else pc.field("term_h").isin(
             pa.array([xxhash64(t) for t in terms], pa.int64())
         )
-        th_parts = [np.empty(0, dtype=np.int64)]
-        df_parts = [np.empty(0, dtype=np.int64)]
-        for _b, path, _sz in listed:
+
+        def _read(entry):
             t = pq.read_table(
-                path, columns=["term_h", "df"], filesystem=fsys, filters=keep,
+                entry[1], columns=["term_h", "df"], filesystem=fsys,
+                filters=keep,
             )
-            th_parts.append(t.column("term_h").to_numpy(zero_copy_only=False))
-            df_parts.append(t.column("df").to_numpy(zero_copy_only=False))
-        th = np.concatenate(th_parts).astype(np.int64, copy=False)
-        df = np.concatenate(df_parts).astype(np.int64, copy=False)
+            return (t.column("term_h").to_numpy(zero_copy_only=False),
+                    t.column("df").to_numpy(zero_copy_only=False))
+
+        # the whole-lexicon load is index-open work, on the driver pool;
+        # a per-term read touches few files and stays a plain loop
+        parts = [(np.empty(0, dtype=np.int64),) * 2] + (
+            driver_map(self.spark.sparkContext, _read, listed)
+            if terms is None else [_read(e) for e in listed]
+        )
+        th = np.concatenate([p[0] for p in parts]).astype(np.int64, copy=False)
+        df = np.concatenate([p[1] for p in parts]).astype(np.int64, copy=False)
         order = np.argsort(th, kind="stable")
         return th[order], df[order]
 
     def preload(self, phrase: bool = False,
                 pretouch_mb: int | None = None) -> int:
-        """Index-open for serving: load every segment file's decoded table
-        into the executor workers' caches (best-effort, one task per slot
-        x2 rounds) so the first query batch pays no cold segment reads —
-        the same warm-open any search server does before taking traffic.
-        Opt-in: sparse workloads may prefer lazy loading. Returns the
-        per-worker decoded byte count; raises UnreachableIndexError when
-        pyarrow cannot list the index's filesystem.
-        pretouch_mb additionally pre-grows each worker's malloc arena (see
-        serve_direct.preload_files; default QKB_SERVE_PRETOUCH_MB).
-        Also loads the term dictionary driver-side (load_lexicon) so no
-        per-batch Spark lookup job remains. Driver-path calls memory-map
-        the tables this publishes to the host-shared cache; with that
-        cache disabled, the driver decodes a file on its first use."""
+        """Index-open for serving (the warm open a search server does
+        before taking traffic): load the term dictionary driver-side
+        (load_lexicon), then decode every segment file once so the first
+        query batch pays no cold segment reads (serve_direct.preload_files).
+        On a local / local-cluster master with the host-shared
+        decoded-table cache enabled, both run on a driver thread pool and
+        no Spark job: the driver publishes the decoded tables to the
+        shared cache and keeps them memory-mapped for driver-path calls,
+        and range tasks memory-map the same entries. Otherwise a decode job
+        and per-slot worker rounds warm the executor workers; pretouch_mb
+        (default QKB_SERVE_PRETOUCH_MB) also pre-grows each worker's
+        malloc arena and always takes that path. Opt-in: sparse workloads
+        may prefer lazy loading. Returns the decoded byte count; raises
+        UnreachableIndexError when pyarrow cannot list the index's
+        filesystem."""
         if self._lex_mem is None:
             self.load_lexicon()
         files = self._files_for(list(range(self.n_buckets)))

@@ -143,6 +143,64 @@ def _shm_dir() -> str | None:
     return "/dev/shm/qkb_serve_cache" if os.path.isdir("/dev/shm") else None
 
 
+#: The host-shared cache may fill this share of the smaller of its
+#: filesystem's size and physical RAM, at most _SHM_BUDGET_CAP, when
+#: QKB_SERVE_SHM_MB is unset. Half of a 16 GB host (7.8 GiB) holds both
+#: decoded forms (with and without positions) of the 4M-doc scale index,
+#: 4.8 GiB by a linear fit of 50k- and 400k-doc builds (CHANGES.md); a
+#: quarter (3.9 GiB) would hold only one.
+_SHM_BUDGET_DIVISOR = 2
+_SHM_BUDGET_CAP = 16384 << 20
+#: shm dir -> default budget in bytes, derived once per process.
+_SHM_BUDGETS: dict[str, int] = {}
+
+
+def _phys_ram_bytes() -> int:
+    """Physical RAM of this host in bytes (0 when unknown)."""
+    import os
+
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (OSError, ValueError):
+        return 0
+
+
+def _shm_budget(shm: str) -> int:
+    """Byte budget of the shared cache dir: QKB_SERVE_SHM_MB when set,
+    else 1/_SHM_BUDGET_DIVISOR of min(size of the filesystem holding
+    `shm`, physical RAM), capped at _SHM_BUDGET_CAP — a tmpfs /dev/shm is
+    backed by RAM, so a flat budget above it lets the cache claim the
+    whole host. The filesystem's size, not its free space: the cache's
+    own entries use that space, so a budget from free space would shrink
+    with every process that opens against a full cache."""
+    import logging
+    import os
+
+    env = os.environ.get("QKB_SERVE_SHM_MB")
+    if env is not None:
+        return int(env) << 20
+    budget = _SHM_BUDGETS.get(shm)
+    if budget is None:
+        probe = shm
+        while not os.path.isdir(probe) and os.path.dirname(probe) != probe:
+            probe = os.path.dirname(probe)
+        try:
+            st = os.statvfs(probe)
+            fs_bytes = st.f_frsize * st.f_blocks
+        except OSError:
+            fs_bytes = 0
+        ram = _phys_ram_bytes()
+        sizes = [b for b in (fs_bytes, ram) if b > 0]
+        budget = min([b // _SHM_BUDGET_DIVISOR for b in sizes]
+                     + [_SHM_BUDGET_CAP])
+        _SHM_BUDGETS[shm] = budget
+        logging.getLogger(__name__).info(
+            "shared decoded-table cache %s: budget %d MiB (filesystem %d MiB, "
+            "RAM %d MiB)", shm, budget >> 20, fs_bytes >> 20, ram >> 20,
+        )
+    return budget
+
+
 def _shm_evict(shm: str, budget: int) -> None:
     """Bound the shared cache dir to `budget` bytes, oldest-mtime first
     (best-effort; concurrent removals are fine)."""
@@ -184,15 +242,78 @@ def _shm_path(shm: str, path: str, fp: tuple, want_pos: bool) -> str:
     return os.path.join(shm, f"{key}.arrow")
 
 
+def _shm_table(sp: str):
+    """The published table at `sp`, memory-mapped (None when absent)."""
+    import pyarrow as pa
+
+    try:
+        return pa.ipc.open_file(pa.memory_map(sp)).read_all()
+    except (OSError, pa.ArrowInvalid):
+        return None
+
+
+def _workers_share_cache(sc) -> bool:
+    """True when every executor runs on the driver's host (a local or
+    local-cluster master) and its Python workers resolve the same shared
+    cache dir and budget as the driver, so the entries the driver
+    publishes are the ones range tasks map. A worker's environment is the
+    driver JVM's (fixed when the session started) overlaid with
+    spark.executorEnv.* (sc.environment), which may differ from the
+    driver's os.environ."""
+    import os
+
+    m = sc.master
+    if not (m == "local" or m.startswith(("local[", "local-cluster["))):
+        return False
+    for k in ("QKB_SERVE_SHM_DIR", "QKB_SERVE_SHM_MB"):
+        seen = sc.environment.get(k)
+        if seen is None:
+            seen = sc._jvm.System.getenv(k)
+        if seen != os.environ.get(k):
+            return False
+    return True
+
+
+def driver_map(sc, fn, items: list) -> list:
+    """[fn(x) for x in items] on a driver thread pool of
+    sc.defaultParallelism threads (pyarrow reads and decodes release the
+    GIL). Index-open work runs here instead of in a Spark job, whose fixed
+    cost is seconds when the work behind it takes milliseconds."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = min(max(1, sc.defaultParallelism), len(items))
+    if n <= 1:
+        return [fn(x) for x in items]
+    with ThreadPoolExecutor(n, thread_name_prefix="qkb-open") as pool:
+        return list(pool.map(fn, items))
+
+
 def preload_files(spark, files: list[str], want_pos: bool = False,
                   rounds: int = 2, pretouch_mb: int | None = None) -> int:
-    """Best-effort warm of every executor worker's decoded-table cache —
-    the index-open step of a serving process (Lucene-style: segments load
-    at reader open, not on the first query). One task per task slot, each
-    loading every candidate file; `rounds` repeats catch workers the
-    scheduler skipped in an earlier round (worker reuse makes repeats
-    near-free). Returns the per-worker decoded byte count of the last
-    round's first task.
+    """Best-effort warm open of the serving caches — the index-open step
+    of a serving process (Lucene-style: segments load at reader open, not
+    on the first query). Returns the decoded byte count of every file as
+    one process loaded them.
+
+    When every worker shares the driver's host and its shared-cache
+    settings (_workers_share_cache) and the host-shared decoded-table
+    cache is enabled (_shm_dir), the driver
+    does it all with no Spark job: a driver_map pool decodes each file
+    once and publishes it to the shared cache, then evicts the cache dir
+    once. The driver keeps the memory-mapped entries; range tasks
+    memory-map the same entries on first use, in milliseconds. A Spark
+    job would cost seconds here for milliseconds of decode.
+
+    Otherwise (workers on other hosts cannot see the driver's cache,
+    workers set another QKB_SERVE_SHM_DIR / QKB_SERVE_SHM_MB than the
+    driver, the cache is off, or pretouch_mb > 0) the open is two-phase Spark work:
+    with the cache enabled, a DISTRIBUTED decode first — each file is one
+    work unit, LPT-packed by size into at most one task per slot
+    (taskpack.run_packed) — publishes every file to the workers' host
+    caches; then `rounds` jobs of one task per slot load every file into
+    their worker's cache (mapping published entries instead of
+    re-decoding; repeats catch workers the scheduler skipped). The return
+    value is then the last round's first task's byte count.
 
     pretouch_mb (default QKB_SERVE_PRETOUCH_MB, 0=off): additionally grow
     each worker's malloc arena by this many MB of touched-then-freed 32MB
@@ -202,29 +323,33 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
     instead of paying DRAM-bound page zeroing inside the batch (measured:
     the first post-preload batch's tasks fault ~1M pages each without
     this). Without that env the blocks are munmapped on free and the
-    pretouch is wasted work, so it defaults off.
-
-    With the shared decoded-table cache enabled (_shm_dir), the open is
-    two-phase: first a DISTRIBUTED decode — each segment file is one work
-    unit, LPT-packed by file size into at most one task per slot
-    (taskpack.run_packed), so 4x the executors decode the index ~4x
-    faster — publishing each file's decoded Arrow form to the host's
-    shared cache; then the per-slot rounds below, which memory-map the
-    published entries instead of each worker re-decoding every file (the
-    round-4 fresh-open cost that GREW with cluster size: cold-warm gap
-    1.6s @N vs 12.3s @4N, VERDICT r4 #4)."""
+    pretouch is wasted work, so it defaults off. It needs the worker
+    rounds, so it selects the job path."""
     import os
 
     sc = spark.sparkContext
     par = max(1, sc.defaultParallelism)
     if pretouch_mb is None:
         pretouch_mb = int(os.environ.get("QKB_SERVE_PRETOUCH_MB", "0"))
+    shm = _shm_dir()
 
-    if _shm_dir() is not None and len(files) > 1:
-        # phase A: decode once per file, spread over every task slot
+    if shm is not None and not pretouch_mb and _workers_share_cache(sc):
+        try:
+            return sum(driver_map(
+                sc, lambda f: _cached_table(f, want_pos, evict=False).nbytes,
+                files,
+            ))
+        except OSError:
+            return 0  # non-local FS: nothing to preload
+        finally:
+            _shm_evict(shm, _shm_budget(shm))
+
+    if shm is not None and len(files) > 1:
+        # phase A: decode once per file, spread over every task slot; the
+        # rounds below evict once per task after loading
         def _decode_one(f):
             try:
-                return _cached_table(f, want_pos).nbytes
+                return _cached_table(f, want_pos, evict=False).nbytes
             except OSError:
                 return 0
 
@@ -239,9 +364,12 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
         total = 0
         for f in files:
             try:
-                total += _cached_table(f, want_pos).nbytes
+                total += _cached_table(f, want_pos, evict=False).nbytes
             except OSError:
                 return 0  # non-local FS: nothing to preload
+        ws = _shm_dir()  # this worker's host cache
+        if ws:
+            _shm_evict(ws, _shm_budget(ws))
         if pretouch_mb:
             # 32MB blocks stay under any configured mmap threshold, so
             # freeing them leaves the pages arena-resident for the first
@@ -264,7 +392,7 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
     return out
 
 
-def _cached_table(path: str, want_pos: bool):
+def _cached_table(path: str, want_pos: bool, evict: bool = True):
     """Decoded candidate table for one segment file, process-cached.
 
     The cache key includes want_pos (phrase batches read the position
@@ -273,7 +401,13 @@ def _cached_table(path: str, want_pos: bool):
     The fingerprint is (size, mtime_ns) so replacing the file — rebuild,
     re-fold — invalidates the entry. The decode runs outside the lock;
     two threads missing on one file both decode it, and the later insert
-    replaces the earlier."""
+    replaces the earlier.
+
+    A miss decodes the parquet and, with the shared cache enabled,
+    publishes the decoded form there and keeps the memory-mapped
+    published file instead of the heap copy, so the process never holds
+    a segment twice (heap and tmpfs). `evict` bounds the shared dir after
+    publishing; preload passes False and evicts once when it is done."""
     import os
 
     import pyarrow.parquet as pq
@@ -295,14 +429,10 @@ def _cached_table(path: str, want_pos: bool):
     shm = _shm_dir()
     if shm:
         for m in modes:
-            try:
-                tbl = pa.ipc.open_file(
-                    pa.memory_map(_shm_path(shm, path, fp, m))
-                ).read_all()
-            except (OSError, pa.ArrowInvalid):
-                continue
-            key = (path, m)
-            break
+            tbl = _shm_table(_shm_path(shm, path, fp, m))
+            if tbl is not None:
+                key = (path, m)
+                break
     if tbl is None:
         cols = _BASE_COLS + (_POS_COLS if want_pos else [])
         tbl = pq.read_table(path, columns=cols).combine_chunks()
@@ -311,19 +441,27 @@ def _cached_table(path: str, want_pos: bool):
             # (atomic rename; racing writers converge on identical bytes
             # modulo writer, last rename wins)
             sp = _shm_path(shm, path, fp, want_pos)
+            tmp = f"{sp}.tmp.{os.getpid()}.{threading.get_ident()}"
             try:
                 os.makedirs(shm, exist_ok=True)
-                tmp = f"{sp}.tmp.{os.getpid()}.{threading.get_ident()}"
                 with pa.OSFile(tmp, "wb") as sink:
                     with pa.ipc.new_file(sink, tbl.schema) as writer:
                         writer.write_table(tbl)
                 os.replace(tmp, sp)
-                _shm_evict(
-                    shm,
-                    int(os.environ.get("QKB_SERVE_SHM_MB", "16384")) << 20,
-                )
             except OSError:
-                pass
+                # e.g. ENOSPC on a full tmpfs: eviction only counts
+                # *.arrow entries, so a left-over temp file would hold
+                # its RAM for good
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
+            else:
+                mapped = _shm_table(sp)
+                if mapped is not None:
+                    tbl = mapped
+                if evict:
+                    _shm_evict(shm, _shm_budget(shm))
     if budget <= 0:
         return tbl
     with _TBL_LOCK:

@@ -185,3 +185,145 @@ def test_shm_disabled_publishes_nothing(tmp_path, monkeypatch):
     _seg_file(p, 10, seed=9)
     sd._cached_table(str(p), want_pos=False)
     assert sd._shm_dir() is None
+
+
+def test_shm_failed_publish_leaves_no_temp_file(tmp_path, monkeypatch):
+    """A publish that fails mid-write (ENOSPC on a full tmpfs) still
+    returns the decoded table and removes its temp file: eviction counts
+    only *.arrow entries, so a left-over temp file would never go."""
+    shm = tmp_path / "shm"
+    monkeypatch.setenv("QKB_SERVE_SHM_DIR", str(shm))
+    p = tmp_path / "seg.parquet"
+    want = _seg_file(p, 40, seed=11)
+
+    def _full(*a, **k):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(pa.ipc, "new_file", _full)
+    tbl = sd._cached_table(str(p), want_pos=False)
+    assert tbl.num_rows == want.num_rows
+    assert tbl.column("term_h").equals(want.column("term_h"))
+    assert not [f for f in os.listdir(shm) if ".tmp." in f]
+
+
+def test_shm_publish_keeps_the_mapped_table(tmp_path, monkeypatch):
+    """After publishing, the process caches the memory-mapped entry, not
+    the heap table it decoded: the Arrow pool does not keep the bytes."""
+    shm = tmp_path / "shm"
+    monkeypatch.setenv("QKB_SERVE_SHM_DIR", str(shm))
+    p = tmp_path / "seg.parquet"
+    _seg_file(p, 4000, seed=12)
+    before = pa.total_allocated_bytes()
+    tbl = sd._cached_table(str(p), want_pos=False)
+    assert tbl.nbytes > 200_000
+    assert pa.total_allocated_bytes() - before < tbl.nbytes // 10
+
+
+class _FakeJvm:
+    class System:
+        getenv = staticmethod(os.environ.get)
+
+
+class _FakeSc:
+    master = "local[2]"
+    defaultParallelism = 2
+    environment: dict = {}
+    _jvm = _FakeJvm()
+
+
+class _FakeSpark:
+    sparkContext = _FakeSc()
+
+
+def test_preload_evicts_once_for_many_files(tmp_path, monkeypatch):
+    """A driver-side preload publishes every file, then evicts the shared
+    dir once: one listing per preload, not one per published file."""
+    shm = tmp_path / "shm"
+    monkeypatch.setenv("QKB_SERVE_SHM_DIR", str(shm))
+    paths = []
+    for i in range(64):
+        p = tmp_path / f"seg{i}.parquet"
+        _seg_file(p, 20, seed=100 + i)
+        paths.append(str(p))
+    calls = []
+    real = sd._shm_evict
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(sd, "_shm_evict", counted)
+    # a fake session: any Spark job would fail on it
+    got = sd.preload_files(_FakeSpark(), paths, want_pos=False)
+    assert got == sum(sd._cached_table(p, False).nbytes for p in paths)
+    assert len(calls) <= 1
+    assert len(list(shm.glob("*.arrow"))) == 64
+    # a lazy miss outside preload still bounds the dir itself
+    p = tmp_path / "late.parquet"
+    _seg_file(p, 20, seed=99)
+    sd._cached_table(str(p), want_pos=False)
+    assert len(calls) == 2
+
+
+def test_shm_budget_default_fits_a_small_host(tmp_path, monkeypatch):
+    """Without QKB_SERVE_SHM_MB the budget is a share of the smaller of
+    the cache filesystem and RAM, so a small host's cache stays below its
+    RAM even on a large tmpfs."""
+    monkeypatch.delenv("QKB_SERVE_SHM_MB", raising=False)
+    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    ram = 2 << 30
+
+    class _Vfs:
+        f_frsize = 4096
+        f_blocks = (64 << 30) // 4096
+
+    monkeypatch.setattr(sd, "_phys_ram_bytes", lambda: ram)
+    monkeypatch.setattr(os, "statvfs", lambda _p: _Vfs())
+    shm = str(tmp_path / "not_yet_created")
+    budget = sd._shm_budget(shm)
+    assert 0 < budget < ram
+    # a small filesystem bounds it too
+    _Vfs.f_blocks = (256 << 20) // 4096
+    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    assert 0 < sd._shm_budget(shm) < 256 << 20
+    # computed once per process: a later call reuses the value
+    _Vfs.f_blocks = (64 << 30) // 4096
+    assert sd._shm_budget(shm) < 256 << 20
+    # a large host is capped
+    monkeypatch.setattr(sd, "_phys_ram_bytes", lambda: 256 << 30)
+    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    assert sd._shm_budget(shm) == sd._SHM_BUDGET_CAP
+    # the env var still overrides
+    monkeypatch.setenv("QKB_SERVE_SHM_MB", "7")
+    assert sd._shm_budget(shm) == 7 << 20
+
+
+def test_driver_open_needs_the_workers_cache_settings(tmp_path,
+                                                      monkeypatch):
+    """The driver publishes only where range tasks will look: a
+    same-host master whose workers resolve the driver's cache dir and
+    budget. A dir or budget set for the executors only, or a driver
+    environment changed after the JVM started, takes the job path."""
+    monkeypatch.setenv("QKB_SERVE_SHM_DIR", str(tmp_path / "shm"))
+    monkeypatch.delenv("QKB_SERVE_SHM_MB", raising=False)
+    sc = _FakeSc()
+    assert sd._workers_share_cache(sc)
+    sc.master = "local-cluster[2,1,1024]"
+    assert sd._workers_share_cache(sc)
+    sc.master = "spark://elsewhere:7077"
+    assert not sd._workers_share_cache(sc)
+    sc.master = "local[2]"
+    sc.environment = {"QKB_SERVE_SHM_DIR": str(tmp_path / "other")}
+    assert not sd._workers_share_cache(sc)
+    sc.environment = {"QKB_SERVE_SHM_MB": "64"}
+    assert not sd._workers_share_cache(sc)
+    sc.environment = {"QKB_SERVE_SHM_DIR": str(tmp_path / "shm")}
+    assert sd._workers_share_cache(sc)
+
+    class _OldJvm:
+        class System:
+            getenv = staticmethod({"QKB_SERVE_SHM_DIR": "/started/with"}.get)
+
+    sc.environment = {}
+    sc._jvm = _OldJvm()
+    assert not sd._workers_share_cache(sc)

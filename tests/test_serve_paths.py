@@ -75,6 +75,27 @@ def _run(sc, fn):
     return out, len(jobs), tasks
 
 
+def _jobs_anywhere(sc, fn):
+    """fn() -> (result, Spark jobs started while it ran, from any thread
+    or job group). Job ids are sequential, so the ids of two probe jobs
+    around fn() bound every job it started, including jobs from threads
+    that do not inherit the caller's job group."""
+    def probe():
+        gid = f"test-serve-paths-probe-{next(_GROUP)}"
+        sc.setJobGroup(gid, gid)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        (jid,) = sc.statusTracker().getJobIdsForGroup(gid)
+        return jid
+
+    first = probe()
+    out = fn()
+    return out, probe() - first - 1
+
+
 def _mode(mode, phrases):
     return {
         "any": (QUERIES, {}),
@@ -192,3 +213,86 @@ def test_one_shot_driver_path_runs_no_spark_job(spark, built):
     assert jobs == 0
     assert rows == _searcher(spark, idx).topk(queries, k=10)
     assert len(rows) > 50
+
+
+def _fresh_copy(built, tmp_path, name):
+    """A copy of the index at new paths: no shared-cache entries yet."""
+    idx = str(tmp_path / name)
+    shutil.copytree(built[0], idx)
+    return idx
+
+
+def _published(shm, files, want_pos):
+    out = []
+    for f in files:
+        st = os.stat(f)
+        fp = (st.st_size, st.st_mtime_ns)
+        out.append(os.path.exists(sd._shm_path(shm, f, fp, want_pos)))
+    return out
+
+
+def test_same_host_preload_runs_no_spark_job(spark, built, tmp_path):
+    """On a local master with the shared cache on, preload decodes and
+    publishes every segment file from the driver: 0 Spark jobs, the
+    driver keeps memory-mapped tables (not heap copies), and both serving
+    paths answer exactly like a Searcher that never preloaded."""
+    shm = sd._shm_dir()
+    if shm is None:
+        pytest.skip("no host-shared decoded-table cache on this host")
+    sc = spark.sparkContext
+    assert sd._workers_share_cache(sc)
+    # the counter sees a job that a pool thread starts outside the group
+    with ThreadPoolExecutor(1) as ex:
+        _, jobs = _jobs_anywhere(sc, lambda: ex.submit(
+            lambda: sc.parallelize([1], 1).count()).result())
+    assert jobs == 1
+    idx, phrases = built
+    cold = Searcher(spark, idx)
+    want = cold.topk(QUERIES, k=10, ranges=2)
+    want_phrase = cold.topk(phrases, k=10, ranges=2, phrase=True)
+
+    s = Searcher(spark, _fresh_copy(built, tmp_path, "open"))
+    files = s._files_for(list(range(s.n_buckets)))
+    assert files
+    before = pa.total_allocated_bytes()
+    decoded, jobs = _jobs_anywhere(sc, lambda: s.preload(phrase=True))
+    assert jobs == 0
+    assert decoded > 0
+    assert all(_published(shm, files, True))
+    # the driver's cached tables are the mapped entries
+    assert pa.total_allocated_bytes() - before < decoded // 4
+
+    got, jobs = _jobs_anywhere(sc, lambda: s.topk(QUERIES, k=10))
+    assert jobs == 0
+    assert got == want
+    assert s.topk(QUERIES, k=10, ranges=2) == want
+    assert s.topk(phrases, k=10, phrase=True) == want_phrase
+    assert s.topk(phrases, k=10, ranges=2, phrase=True) == want_phrase
+
+
+def test_off_host_preload_runs_the_job_path(spark, built, tmp_path,
+                                            monkeypatch):
+    """Workers on other hosts cannot see the driver's cache: with the
+    same-host check off, the decode job and the worker rounds run, and
+    the answers are unchanged."""
+    idx, _ = built
+    want = Searcher(spark, idx).topk(QUERIES, k=10)
+    monkeypatch.setattr(sd, "_workers_share_cache", lambda _sc: False)
+    s = Searcher(spark, _fresh_copy(built, tmp_path, "off_host"))
+    decoded, jobs, _ = _run(spark.sparkContext, lambda: s.preload())
+    assert decoded > 0
+    assert jobs == (3 if sd._shm_dir() else 2)  # decode job + 2 rounds
+    assert s.topk(QUERIES, k=10) == want
+    assert s.topk(QUERIES, k=10, ranges=2) == want
+
+
+def test_pretouch_preload_runs_the_worker_rounds(spark, built, tmp_path):
+    """Pretouch grows worker malloc arenas, so it keeps the worker
+    rounds even on a local master."""
+    s = Searcher(spark, _fresh_copy(built, tmp_path, "pretouch"))
+    _, jobs, tasks = _run(spark.sparkContext,
+                          lambda: s.preload(pretouch_mb=32))
+    par = spark.sparkContext.defaultParallelism
+    rounds = (jobs - 1) if sd._shm_dir() else jobs
+    assert rounds == 2
+    assert tasks >= 2 * par
