@@ -237,13 +237,12 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.local.dir", "/dev/shm/qkb_spark_local")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # the corpus/checkpoint dirs hold many few-MB files in this sandbox;
-        # default 128MB maxPartitionBytes + 4MB openCost would coalesce them
-        # into a handful of scan partitions and serialize downstream stages.
-        # Small bins let the corpus SCAN supply the parallelism — no extra
-        # repartition shuffle before the chunk+tokenize kernel (at
-        # production scale files are row-group sized and this is moot;
-        # build_index temporarily overrides these for its phase-2 scan)
+        # the scale corpus dirs hold many few-MB files; default
+        # 128MB maxPartitionBytes + 4MB openCost would coalesce them into a
+        # handful of scan partitions for the Spark-side scans (the
+        # documents= staging write, the verification reads). build_index's
+        # phases read their files with pyarrow and never consult these (at
+        # production scale files are row-group sized and this is moot)
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         # lz4 shuffle compression ON (the Spark default): even with shuffle

@@ -91,15 +91,6 @@ class IndexConfig:
     #: Store token positions in postings (needed for phrase queries; costs
     #: space). The north star's posting tuple is (docID, tf, positions).
     store_positions: bool = True
-    #: Target postings per checkpoint subgroup file (phase-1 partition
-    #: sizing). The subgroup count per bucket is
-    #: max(ceil(cores*8/buckets), ceil(est_postings/(buckets*this))): the
-    #: first term guarantees write parallelism on small corpora, the second
-    #: keeps checkpoint files small and UNIFORM so the phase-2 no-shuffle
-    #: scan gets one balanced encode task per file instead of bin-packed
-    #: stragglers. ~250k postings ≈ a few MB of checkpoint parquet; raise
-    #: it on real clusters where 64-128MB files are the sweet spot.
-    subgroup_target_postings: int = 250_000
     #: Phase-2 merge task memory budget (index/p2_direct.py). A bucket whose
     #: estimated decoded working set exceeds this is term-granularly split
     #: (each split filters its terms per run at read time, so the split IS a
@@ -114,24 +105,12 @@ class IndexConfig:
     #: 10-20x its input bytes (postings + vocab + sort buffers); raise
     #: this only with executor memory to spare.
     p1_task_bytes: int = 32 << 20
-    #: Carry doc_len as a per-posting run column (legacy v4 layout) instead
-    #: of re-attaching it from the doc-stats runs at phase-2 encode time.
-    #: Round-5 A/B (bench/p2_dl_ab.py): the re-attach is a per-posting
-    #: binary search over the corpus doc-stats table — ~20+ cache-missing
-    #: DRAM probes per posting on the already-DRAM-bound merge phase —
-    #: which measured strictly slower at every level than the 8
-    #: bytes/posting of extra sequential run traffic it saves. Default ON
-    #: (= the layout that won the A/B); the shed layout stays available
-    #: for corpora where run bytes, not merge DRAM, are the bottleneck.
-    p1_dl_in_runs: bool = True
 
     def __post_init__(self) -> None:
         if not 0.0 < self.hot_term_doc_fraction <= 1.0:
             raise ValueError("hot_term_doc_fraction must be in (0, 1]")
         if self.salt_buckets < 1 or self.block_size < 1 or self.term_buckets < 1:
             raise ValueError("salt_buckets/block_size/term_buckets must be >= 1")
-        if self.subgroup_target_postings < 1:
-            raise ValueError("subgroup_target_postings must be >= 1")
         if self.p2_task_mem_bytes < 1 << 20:
             raise ValueError("p2_task_mem_bytes must be >= 1 MiB")
         if self.p1_task_bytes < 1:

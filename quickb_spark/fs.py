@@ -62,18 +62,6 @@ class IndexFS:
         it = self._fs.listStatus(self._path(path))
         return sorted(s.getPath().getName() for s in it)
 
-    def file_sizes(self, path: str) -> list[int]:
-        """Data-file sizes (bytes) under `path`, recursive. Used by the
-        phase-2 no-shuffle encode to size the scan's maxPartitionBytes from
-        the checkpoint's actual file-size distribution."""
-        it = self._fs.listFiles(self._path(path), True)
-        out = []
-        while it.hasNext():
-            s = it.next()
-            if s.isFile():
-                out.append(int(s.getLen()))
-        return out
-
     def read_text(self, path: str) -> str:
         stream = self._fs.open(self._path(path))
         try:

@@ -116,8 +116,8 @@ def varbyte_decode(buf: bytes, count: int) -> np.ndarray:
 def varbyte_lengths(vals: np.ndarray) -> np.ndarray:
     """Bytes varbyte_encode emits per value (1 + one per extra 7-bit plane).
     Lets callers compute byte offsets into a stream without re-scanning it
-    (map-side position slicing in index/flatten.py; per-block stream offsets
-    for lazy query-time decode)."""
+    (per-posting position slices in index/p1_direct.py; per-block stream
+    offsets for lazy query-time decode)."""
     v = vals.astype(np.uint64, copy=False)
     return 1 + np.searchsorted(_VB_THRESHOLDS, v, side="right")
 
@@ -153,10 +153,14 @@ def encode_posting_list(
 ) -> dict:
     """Encode one sorted posting list. Returns the segment-row payload.
 
+    The reference codec: the build encodes whole buckets at once with
+    p2_direct.encode_sorted_groups, which the tests hold byte-identical to
+    this per-list form (tests/test_p2_direct.py).
+
     Positions come in one of two forms: `positions` (per-posting int arrays,
     delta+varbyte encoded here) or `pos_vb` (per-posting ALREADY-varbyte
-    byte slices from the map-side kernel, index/flatten.py — the build path;
-    the streams are simply concatenated in doc order, identical format).
+    byte slices, as phase 1 writes them into the runs; the streams are
+    simply concatenated in doc order, identical format).
 
     The doc-gap delta RESETS to an absolute value at every block start, and
     per-block BYTE offsets into the three streams are returned — together

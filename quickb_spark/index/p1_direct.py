@@ -1,25 +1,35 @@
 """Phase-1 build as batched direct-pyarrow tasks writing sorted runs.
 
-Why this exists (round-3 measurement): the fused chunk+tokenize pandas
-UDF (then index/flatten.py) is the right kernel, but its
-OUTPUT — ~10^8 per-chunk term arrays — crosses the JVM<->Python Arrow
-channel, and on this box that channel has a large component that does NOT
-parallelize with cores (decomposed: kernel+channel 131.4s @4c -> 60.3s
-@16c, only 2.18x on 4x cores, while the JVM-side shuffle+sort+write of the
-same postings scales 4.57x and a pure-multiprocessing run of the same
-kernel scales ~3.6-4x). A second probe (bench/p2_probe.py) showed Spark's
-per-task fixed cost is ~70ms SERIAL per task, so one-task-per-file is also
-wrong at 500+ files. The design that follows from both measurements:
+This is the only phase 1 of the engine: every build input (`corpus_uri=`,
+a staged `documents=` or `chunks=` DataFrame) and every streaming delta
+batch runs it. Why it looks like this (round-3 measurement): a fused
+chunk+tokenize pandas UDF whose OUTPUT — ~10^8 per-chunk term arrays —
+crosses the JVM<->Python Arrow channel has a large component that does
+NOT parallelize with cores (decomposed: kernel+channel 131.4s @4c ->
+60.3s @16c, only 2.18x on 4x cores, while the JVM-side shuffle+sort+write
+of the same postings scales 4.57x and a pure-multiprocessing run of the
+same kernel scales ~3.6-4x). Spark's per-task fixed cost is also ~70ms
+SERIAL per task, so one-task-per-file is wrong at 500+ files. The design
+that follows from both measurements:
 
   driver plans FEW, BIG, size-balanced file groups (LPT assignment,
   ~2-4 tasks per core) -> one Spark task per group -> each task reads ITS
-  corpus parquet files with pyarrow, runs the reference-exact chunker +
-  tokenizer (byte-identical splits, same TOKEN_PATTERN), mints doc_ids
-  bit-identical to the JVM expression xxhash64(repo, path, commit,
-  chunk_idx) (index/xxh.py), vectorizes position delta+varbyte encoding
-  per sub-batch, then lexsorts its postings by (bucket, term_h, salt,
-  doc_id) and writes ONE SORTED RUN per term bucket plus a doc-stats run —
-  only a one-row summary ever crosses the Python<->JVM boundary.
+  input parquet files with pyarrow, tokenizes, hashes terms, salts hot
+  terms, lexsorts its postings by (bucket, term_h, salt, doc_id) and
+  writes ONE SORTED RUN per term bucket plus a doc-stats run — only a
+  one-row summary ever crosses the Python<->JVM boundary.
+
+Two input shapes, passed down from build_index as `chunked`:
+
+- documents (repo, path, commit, lang, content): the task runs the
+  reference-exact chunker (chunking/splitter.py) and mints
+  doc_id = xxhash64(repo, path, commit, chunk_idx) bit-identical to the
+  JVM expression of chunking.udf (index/xxh.py);
+- pre-chunked (doc_id, text) rows: each row is one chunk whose doc_id is
+  taken as given. This is how chunkers that cannot run inside a task (the
+  registry's semantic and fixed-token chunkers) reach the engine. A
+  `chunks=chunk_documents(docs)` build writes the same runs as a
+  documents build of `docs` (tests/test_p1_direct.py).
 
 Phase 2 then k-way merges each bucket's sorted runs and encodes (see
 index/p2_direct.merge_encode_buckets) — the layout the north star asks
@@ -34,10 +44,6 @@ Scale notes (the 100 TB story):
   shuffle turns: raise per-task input (fewer, larger runs), or add one
   merge level (tasks write runs, a mid tier merges task-group runs per
   bucket, phase 2 merges the merged runs).
-- the round-3 A/B against the in-channel phase 1 (index/flatten.py fused
-  kernel -> JVM repartition + sort) is the measurement above; that path
-  now serves only pre-chunked `chunks=` input, and documents= DataFrames
-  are staged to parquet and built here (segments.build_index).
 - every run is written through `pyarrow.fs.FileSystem.from_uri`, so
   file:// and s3:// work identically; schemes pyarrow cannot reach raise
   at planning time.
@@ -46,8 +52,7 @@ Scale notes (the 100 TB story):
   a fold moves those runs into the base checkpoint unchanged.
 - hot-term salting happens in-task from the pre-sampled hot set (phase 0),
   with salt = pmod(xxhash64(doc_id), salt_buckets) bit-identical to the
-  JVM column, so the chunks= channel path and this one build semantically
-  identical indexes (asserted in tests/test_p1_direct.py).
+  JVM expression (asserted in tests/test_p1_direct.py).
 - determinism/idempotency: run file names are a pure function of the task
   id, the group plan is a pure function of the (sorted) file listing, and
   a task retry rewrites exactly its own files; the run layout is committed
@@ -56,7 +61,7 @@ Scale notes (the 100 TB story):
 
 Reference parity: the chunking semantics inside the kernel are the
 reference's RecursiveTokenChunker (see chunking/splitter.py, conformance-
-tested byte-identical against /root/reference/src/chunking/
+tested byte-identical against the reference's
 recursive_token_chunker.py); this module only changes WHERE the kernel
 runs, not what it computes.
 """
@@ -92,14 +97,17 @@ __all__ = [
     "RUNS_MARKER",
 ]
 
-#: Marker file (inside flat/) telling phase 2 this checkpoint is a sorted-
-#: runs layout (merge mode) rather than the shuffled complete-group layout.
+#: Marker file (inside flat/) stamping the checkpoint as this engine's
+#: sorted-runs layout; a flat/ without it is an older engine's and is
+#: refused on resume and fold.
 RUNS_MARKER = "_RUNS"
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
 
 #: The documents columns phase 1 reads.
 DOC_COLUMNS = ["repo", "path", "commit", "lang", "content"]
+#: The pre-chunked columns phase 1 reads (`chunked` input shape).
+CHUNK_COLUMNS = ["doc_id", "text"]
 
 #: Phase-0 sample work units: fixed, so the sampled rows (and the hot set)
 #: do not depend on cluster size.
@@ -134,8 +142,8 @@ def plan_groups(
 
 def _pos_slices(flat_pos: list[int], posting_tfs: list[int]):
     """Vectorized delta+varbyte encode of all token positions of a
-    sub-batch (same stream format as index/flatten._BatchAccumulator:
-    absolute first position per posting, deltas after).
+    sub-batch (encode_posting_list's pos_stream format: absolute first
+    position per posting, deltas after).
     -> (buf bytes, per-posting byte offsets int64[n+1])."""
     if not posting_tfs:
         return b"", np.zeros(1, dtype=np.int64)
@@ -160,13 +168,18 @@ class _TaskAccumulator:
     sub-batch (~2k docs); flushes produce compact numpy columns. Terms are
     interned to LOCAL ids in the hot loop; the XXH64 of each NEW distinct
     term is computed once per flush with the vectorized batch hash
-    (hash_bytes_vec) — no scalar hashing on the per-posting path."""
+    (hash_bytes_vec) — no scalar hashing on the per-posting path.
 
-    def __init__(self, dl_in_runs: bool = True) -> None:
+    A chunk is keyed by (key, chunk_idx): documents pass the doc's chained
+    (repo, path, commit) hash and the chunk index, and flush mints the
+    doc_ids from both; pre-chunked rows (`chunked`) pass the doc_id itself
+    as the key, which flush keeps as is."""
+
+    def __init__(self, chunked: bool = False) -> None:
         self.vocab: dict[str, int] = {}
         self.new_terms: list[str] = []
         self.id2hash = np.empty(0, dtype=np.int64)
-        self.dl_in_runs = dl_in_runs
+        self.chunked = chunked
         self.reset()
         # flushed sub-batches
         self.parts: list[tuple] = []
@@ -182,7 +195,7 @@ class _TaskAccumulator:
         self.c_dl: list[int] = []
         self.c_nterms: list[int] = []
 
-    def add_chunk(self, prefix_seed: int, chunk_idx: int, toks: list[str]) -> None:
+    def add_chunk(self, key: int, chunk_idx: int, toks: list[str]) -> None:
         pos: dict[str, list[int]] = defaultdict(list)
         for i, t in enumerate(toks):
             pos[t].append(i)
@@ -198,10 +211,7 @@ class _TaskAccumulator:
             tid_list.append(tid)
             self.tfs.append(len(plist))
             self.flat_pos.extend(plist)
-        # doc_len is NOT carried per posting: runs stay 8 bytes/posting
-        # lighter and the phase-2 merge (the DRAM-bound phase) re-attaches
-        # it from the doc-stats runs at encode time (p2_direct)
-        self.c_seed.append(prefix_seed)
+        self.c_seed.append(key)
         self.c_idx.append(chunk_idx)
         self.c_dl.append(len(toks))
         self.c_nterms.append(len(pos))
@@ -219,7 +229,7 @@ class _TaskAccumulator:
         idxs = np.asarray(self.c_idx, dtype=np.int64)
         dls = np.asarray(self.c_dl, dtype=np.int64)
         nt = np.asarray(self.c_nterms, dtype=np.int64)
-        doc_ids = hash_int_tail(idxs, seeds)
+        doc_ids = seeds if self.chunked else hash_int_tail(idxs, seeds)
         buf, off = _pos_slices(self.flat_pos, self.tfs)
         self.parts.append(
             (
@@ -228,7 +238,7 @@ class _TaskAccumulator:
                 np.asarray(self.tfs, dtype=np.int32),
                 buf,
                 off,
-                np.repeat(dls, nt) if self.dl_in_runs else None,
+                np.repeat(dls, nt),
             )
         )
         self.chunk_ids.append(doc_ids)
@@ -236,14 +246,13 @@ class _TaskAccumulator:
         self.reset()
 
     def concat(self):
-        """-> (term_h, doc_id, tf, pos_buf, pos_off, posting_dl|None) over
-        the whole task, plus per-chunk (doc_id, doc_len)."""
+        """-> (term_h, doc_id, tf, pos_buf, pos_off, posting_dl) over the
+        whole task, plus per-chunk (doc_id, doc_len)."""
         if not self.parts:
             z = np.empty(0, dtype=np.int64)
             return (
-                z, z, z.astype(np.int32), b"",
-                np.zeros(1, dtype=np.int64),
-                z if self.dl_in_runs else None, z, z,
+                z, z, z.astype(np.int32), b"", np.zeros(1, dtype=np.int64),
+                z, z, z,
             )
         th = np.concatenate([p[0] for p in self.parts])
         did = np.concatenate([p[1] for p in self.parts])
@@ -257,11 +266,7 @@ class _TaskAccumulator:
             [offs[0][:1]] + [o[1:] + b for o, b in zip(offs, base)]
         )
         pos_buf = b"".join(bufs)
-        pdl = (
-            np.concatenate([p[5] for p in self.parts])
-            if self.dl_in_runs
-            else None
-        )
+        pdl = np.concatenate([p[5] for p in self.parts])
         cid = np.concatenate(self.chunk_ids)
         cdl = np.concatenate(self.chunk_dls)
         return th, did, tf, pos_buf, pos_off, pdl, cid, cdl
@@ -277,11 +282,12 @@ def _p1_task(
     hot_h_sorted: np.ndarray,
     nb: int,
     salt_buckets: int,
+    chunked: bool = False,
     sub_batch_docs: int = 2048,
-    dl_in_runs: bool = True,
 ) -> dict:
-    """One build task: read own corpus files -> chunk+tokenize -> sorted
-    per-bucket runs + doc-stats run. Returns the task summary."""
+    """One build task: read own input files -> chunk (documents only) +
+    tokenize -> sorted per-bucket runs + doc-stats run. Returns the task
+    summary. `chunked`: the files hold pre-chunked (doc_id, text) rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -296,7 +302,7 @@ def _p1_task(
     ofs, flat_root = pyarrow_fs_for(flat_uri)
     _, ds_root = pyarrow_fs_for(ds_uri)
 
-    acc = _TaskAccumulator(dl_in_runs=dl_in_runs)
+    acc = _TaskAccumulator(chunked=chunked)
     repo_h: dict[str, int] = {}
     pending = 0
     for path in paths:
@@ -305,9 +311,19 @@ def _p1_task(
             # row-group iteration bounds task memory by the writer's row
             # group size, not the file size (256MB corpus files stay cheap)
             for batch in pf.iter_batches(
-                batch_size=sub_batch_docs, columns=DOC_COLUMNS
+                batch_size=sub_batch_docs,
+                columns=CHUNK_COLUMNS if chunked else DOC_COLUMNS,
             ):
                 d = batch.to_pydict()
+                if chunked:
+                    # each row is one chunk; a batch is one sub-batch
+                    for did, text in zip(d["doc_id"], d["text"]):
+                        if text:
+                            acc.add_chunk(
+                                did, 0, _TOKEN_RE.findall(text.lower())
+                            )
+                    acc.flush()
+                    continue
                 live = [
                     (repo, p, c, lang, content)
                     for repo, p, c, lang, content in zip(
@@ -366,33 +382,33 @@ def _p1_task(
     salt_s = salt[order]
     doc_s = doc_id[order]
     tf_s = tf[order]
-    dl_s = pdl[order] if dl_in_runs else None
+    dl_s = pdl[order]
     pos_vals, pos_off_s = _gather_slices(pos_buf, pos_off, order)
 
     # one run per present bucket, rows already contiguous after the sort.
-    # doc_len IS a run column by default (p1_dl_in_runs): the round-4
-    # shed-and-re-attach layout saved 8 bytes/posting of merge traffic but
-    # paid a per-posting binary search over the doc-stats table at encode
-    # time — measured strictly slower at every level (round-5 A/B,
-    # bench/p2_dl_ab.py). The shed layout remains selectable per config.
+    # doc_len is a run column: re-attaching it from the doc-stats runs at
+    # merge time saved 8 bytes/posting of run traffic but paid a
+    # per-posting binary search over the corpus doc-stats table, measured
+    # strictly slower at every level (round-5 A/B; at 4M docs phase 2 took
+    # 148-150 s against 79-94 s at 32 cores)
     bounds = np.searchsorted(bucket_s, np.arange(nb + 1), side="left")
     for b in range(nb):
         lo, hi = int(bounds[b]), int(bounds[b + 1])
         if lo == hi:
             continue
         off_b = pos_off_s[lo : hi + 1] - pos_off_s[lo]
-        cols = {
-            "term_h": pa.array(term_s[lo:hi], type=pa.int64()),
-            "salt": pa.array(salt_s[lo:hi], type=pa.int32()),
-            "doc_id": pa.array(doc_s[lo:hi], type=pa.int64()),
-            "tf": pa.array(tf_s[lo:hi], type=pa.int32()),
-        }
-        if dl_in_runs:
-            cols["doc_len"] = pa.array(dl_s[lo:hi], type=pa.int64())
-        cols["pos_vb"] = _binary_array(
-            pos_vals[int(pos_off_s[lo]) : int(pos_off_s[hi])], off_b
+        run = pa.table(
+            {
+                "term_h": pa.array(term_s[lo:hi], type=pa.int64()),
+                "salt": pa.array(salt_s[lo:hi], type=pa.int32()),
+                "doc_id": pa.array(doc_s[lo:hi], type=pa.int64()),
+                "tf": pa.array(tf_s[lo:hi], type=pa.int32()),
+                "doc_len": pa.array(dl_s[lo:hi], type=pa.int64()),
+                "pos_vb": _binary_array(
+                    pos_vals[int(pos_off_s[lo]) : int(pos_off_s[hi])], off_b
+                ),
+            }
         )
-        run = pa.table(cols)
         dest_dir = f"{flat_root.rstrip('/')}/bucket={b}"
         ofs.create_dir(dest_dir, recursive=True)
         with ofs.open_output_stream(
@@ -429,9 +445,12 @@ def build_flat_runs(
     cfg: EngineConfig,
     hot_terms: list[str],
     n_tasks: int | None = None,
+    chunked: bool = False,
 ) -> dict:
-    """Plan + run the direct phase 1. -> {n_docs, sum_dl, n_postings,
-    buckets}; `buckets` lists the term buckets that received postings.
+    """Plan + run the direct phase 1 over the parquet files under
+    `corpus_uri`: documents, or pre-chunked (doc_id, text) rows when
+    `chunked`. -> {n_docs, sum_dl, n_postings, buckets}; `buckets` lists
+    the term buckets that received postings.
 
     Raises (before launching any task) if the corpus/flat FS scheme is not
     reachable from Python.
@@ -471,14 +490,13 @@ def build_flat_runs(
     chunker_cfg = cfg.chunker
     nb = cfg.index.term_buckets
     sb = cfg.index.salt_buckets
-    dl_in_runs = cfg.index.p1_dl_in_runs
     hot_h = np.sort(np.array([_xxh_str(t) for t in hot_terms], dtype=np.int64))
 
     def _run(item):
         tid, paths = item
         return _p1_task(
             tid, paths, corpus_uri, flat_dir, doc_stats_dir,
-            chunker_cfg, hot_h, nb, sb, dl_in_runs=dl_in_runs,
+            chunker_cfg, hot_h, nb, sb, chunked,
         )
 
     sc = spark.sparkContext
@@ -503,10 +521,11 @@ def build_flat_runs(
 
 def _sample_task(
     path: str, k: int, nk: int, per_file_frac: float,
-    corpus_uri: str, chunker_cfg: ChunkerConfig,
+    corpus_uri: str, chunker_cfg: ChunkerConfig, chunked: bool = False,
 ) -> tuple[int, int, Counter]:
     """Hot-term presample worker: df-per-term over the k-th of nk evenly
-    spaced row slices of one file, sampling per_file_frac of its rows."""
+    spaced row slices of one file, sampling per_file_frac of its rows
+    (documents, or pre-chunked rows when `chunked`)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -541,26 +560,35 @@ def _sample_task(
             for i in range(len(rg_rows))
             if rg_starts[i] < lo + take and rg_starts[i + 1] > lo
         ]
+        cols = ["text"] if chunked else ["lang", "content"]
         if take and pick:
-            tbl = pf.read_row_groups(pick, columns=["lang", "content"])
+            tbl = pf.read_row_groups(pick, columns=cols)
             sl = tbl.slice(lo - rg_starts[pick[0]], take)
         else:
             sl = pf.schema_arrow.empty_table()
-    for lang, content in zip(
-        sl.column("lang").to_pylist(), sl.column("content").to_pylist()
-    ):
-        if not content:
+    if chunked:
+        texts = sl.column("text").to_pylist()
+    else:
+        texts = (
+            text
+            for lang, content in zip(
+                sl.column("lang").to_pylist(), sl.column("content").to_pylist()
+            )
+            if content
+            for text in split_document(content, lang, chunker_cfg)
+        )
+    for text in texts:
+        if not text:
             continue
-        for text in split_document(content, lang, chunker_cfg):
-            # distinct terms in first-occurrence order, not set order: the
-            # Counter's insertion order breaks df ties at the max_terms cut,
-            # and set order would tie it to the process's PYTHONHASHSEED
-            toks = list(dict.fromkeys(_TOKEN_RE.findall(text.lower())))
-            if not toks:
-                continue
-            n_chunks += 1
-            n_postings += len(toks)
-            df.update(toks)
+        # distinct terms in first-occurrence order, not set order: the
+        # Counter's insertion order breaks df ties at the max_terms cut,
+        # and set order would tie it to the process's PYTHONHASHSEED
+        toks = list(dict.fromkeys(_TOKEN_RE.findall(text.lower())))
+        if not toks:
+            continue
+        n_chunks += 1
+        n_postings += len(toks)
+        df.update(toks)
     return n_chunks, n_postings, df
 
 
@@ -618,10 +646,11 @@ def presample_hot_direct(
     frac: float,
     sample_margin: float,
     max_terms: int,
+    chunked: bool = False,
 ) -> tuple[list[str], int]:
     """Phase-0 hot-term detection over a ~frac row sample, striped across
-    FILES (the direct analogue of segments._presample_hot_terms; striping
-    has the same df statistics on uniformly written corpora).
+    FILES (a row sample's df statistics on uniformly written corpora) of
+    documents, or of pre-chunked rows when `chunked`.
     -> (hot_terms sorted, est_total_postings).
 
     The sample is spread over a FIXED number of work units (64), each
@@ -637,7 +666,7 @@ def presample_hot_direct(
 
     def _run(unit):
         path, k, nk, pf = unit
-        return _sample_task(path, k, nk, pf, corpus_uri, chunker_cfg)
+        return _sample_task(path, k, nk, pf, corpus_uri, chunker_cfg, chunked)
 
     parts = run_packed(
         spark.sparkContext, _run, units, costs,

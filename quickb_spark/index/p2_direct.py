@@ -1,45 +1,24 @@
-"""Phase-2 segment encode as file-granular Python tasks (direct pyarrow IO).
+"""Phase-2 k-way merge-encode of the sorted runs (direct pyarrow IO).
 
-Why this exists: the v3 checkpoint is already salted, grouped and sorted, so
-phase 2 is embarrassingly parallel per checkpoint FILE. Routing those ~56M
-per-posting rows through Spark's Python-UDF Arrow channel (scan -> JVM
-ArrowWriter -> socket -> worker) was measured to cost ~20-30s per million
-documents in THIS sandbox *regardless of core count* — the channel, not the
-encode kernel, was the scaling ceiling of the whole build (bench notes in
-BENCH/BASELINE.md). A pure-JVM scan of the same files takes ~2s and the
-pure-Python encode scales like the multiprocessing hardware control, so the
-fix is to keep both sides and drop the hop in between:
-
-  driver lists checkpoint files -> one Spark TASK per file (biggest first)
-  -> each task opens ITS file with pyarrow (native columnar decode; term
-  identity is the v4 int64 `term_h`, so no per-posting strings exist at
-  all), slices posting-list groups as zero-copy NumPy views, runs the varbyte
-  encoder, and writes the segment parquet for that file directly — only a
-  one-row summary ever crosses the Python<->JVM boundary.
-
-Two consumption modes over two checkpoint layouts:
-
-- `encode_wave_direct` (complete-group layout, written by the chunks=
-  channel phase 1's repartition+sort): one task per checkpoint file; every
-  (term_h, salt) group lives entirely inside one file, so tasks are
-  independent by construction.
-- `merge_encode_buckets` (sorted-runs layout, written by the direct
-  phase 1 — index/p1_direct.py): one work unit per BUCKET (or per
-  term-split of a big bucket), LPT-packed into at most one Spark task per
-  slot (taskpack.run_packed); each unit k-way
-  merges its bucket's per-task sorted runs (each run is already sorted by
-  (term_h, salt, doc_id), so the merge is one stable lexsort over the
-  concatenated columns plus a vectorized byte-slice gather), feeds the
-  same encode core, and writes BOTH the bucket's segment file and its
-  (term_h, df) lexicon rows — no postings shuffle and no per-wave Spark
-  lexicon job exist in this mode at all. This is the north star's layout:
-  per-partition sorted posting lists, k-way merged and compressed.
+Phase 1 (index/p1_direct.py) leaves one run per (task, bucket), each
+sorted by (term_h, salt, doc_id). `merge_encode_buckets` turns a wave of
+buckets into segments: one work unit per BUCKET (or per term-split of a
+big bucket), LPT-packed into at most one Spark task per slot
+(taskpack.run_packed). Each unit reads its bucket's runs with pyarrow,
+merges them (the runs are disjoint by doc, so the global order is one
+stable lexsort over the concatenated columns plus one byte-slice gather),
+encodes every (term_h, salt) group in whole-input NumPy passes
+(`encode_sorted_groups`) and writes BOTH the bucket's segment file and its
+(term_h, df) lexicon rows. Only a one-row summary per unit crosses the
+Python<->JVM boundary: routing per-posting rows through Spark's Python-UDF
+Arrow channel was measured as the scaling ceiling of the whole build
+(~20-30 s per million documents regardless of core count, BENCH/
+BASELINE.md). This is the north star's layout: per-partition sorted
+posting lists, k-way merged and compressed.
 
 Scale notes (the 100 TB story):
-- work units are whole checkpoint files / buckets (64-128MB on a real
-  cluster, a few MB here); biggest-first ordering (per-file tasks) or LPT
-  packing of the units into per-slot tasks (merge mode) kills end-of-wave
-  stragglers;
+- work units are buckets (64-128MB on a real cluster, a few MB here); LPT
+  packing of the units into per-slot tasks kills end-of-wave stragglers;
 - a merge task holds one bucket's postings in memory (columnar numpy, ~30
   bytes/posting); `IndexConfig.term_buckets` is the knob that keeps a
   bucket at ~1-4 GB on a real corpus — the same dial as Spark's shuffle
@@ -49,122 +28,42 @@ Scale notes (the 100 TB story):
   s3:// checkpoints work the same way (object stores are the realistic home
   of a 10^12-file index; there is no data-locality to lose). Schemes
   pyarrow cannot open locally (e.g. hdfs:// without libhdfs) raise at
-  listing time; for a chunks= checkpoint `build_index` then falls back to
-  the in-channel encoder;
+  listing time and fail the build;
 - a merge unit that finds its runs malformed (a group not strictly
   doc_id-sorted, e.g. a duplicated posting) returns the ValueError as its
   summary and `merge_encode_buckets` re-raises it in the driver, so
   `build_index` fails with the bucket named instead of a Spark task
   failure;
-- idempotency: output file names are a pure function of input file names
-  (merge mode: of the bucket id), and `build_index` deletes the segment +
-  lexicon dirs of UNCOMMITTED buckets before each wave, so task retries and
-  crash-resume both converge to the same layout (the commit ledger stays
-  the commit marker).
+- idempotency: output file names are a pure function of the bucket id and
+  split, and `build_index` deletes the segment + lexicon dirs of
+  UNCOMMITTED buckets before each wave, so task retries and crash-resume
+  both converge to the same layout (the commit ledger stays the commit
+  marker).
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import SparkSession
 
 from quickb_spark.taskpack import run_packed
 
 __all__ = [
-    "encode_wave_direct",
     "merge_encode_buckets",
+    "encode_sorted_groups",
     "list_bucket_files",
     "pyarrow_fs_for",
     "gather_slices",
     "binary_array",
-    "SUMMARY_SCHEMA",
 ]
 
-#: One row per encoded checkpoint file — the only data that crosses the
-#: Python->JVM boundary in the direct phase-2 path.
-SUMMARY_SCHEMA = StructType(
-    [
-        StructField("bucket", IntegerType()),
-        StructField("src_file", StringType()),
-        StructField("n_groups", LongType()),
-        StructField("n_postings", LongType()),
-        StructField("max_salt", IntegerType()),
-        StructField("out_bytes", LongType()),
-    ]
-)
-
+#: The sorted-run columns phase 2 reads (pos_vb only with positions).
 _CHECKPOINT_COLS = ["term_h", "salt", "doc_id", "tf", "doc_len", "pos_vb"]
-
-#: Shed sorted-runs layout (p1_dl_in_runs=False): doc_len is NOT carried
-#: per posting — the merge re-attaches it from the doc-stats runs (see
-#: _doc_len_lookup). NOT the default: the re-attach is a per-posting
-#: binary search over the corpus doc-stats table, and at 4M docs (lookup
-#: > LLC) it measured phase 2 at 148-150s vs 79-94s with dl in the runs
-#: (32 cores, bench/p2_dl_ab_4m.py) — random DRAM probes on the
-#: DRAM-bound phase cost far more than 8 sequential bytes/posting.
-_RUN_COLS = ["term_h", "salt", "doc_id", "tf", "pos_vb"]
 
 #: Conservative decoded-working-set multiplier over a bucket's on-disk run
 #: bytes (snappy parquet -> numpy columns + sort/gather scratch). Used by
 #: the merge memory guard to size term-granular splits.
 _RUN_MEM_EXPANSION = 3
-
-#: Per-worker-process cache of the corpus doc-length lookup (sorted ids +
-#: aligned lengths). One entry per doc-stats dir, validated against the
-#: dir's file listing so a rebuild into the same path invalidates it.
-_DS_CACHE: dict[str, tuple] = {}
-
-
-def _doc_len_lookup(ds_dir: str):
-    """-> (doc_ids int64 sorted asc, doc_len int64 aligned) for the corpus.
-
-    Loaded once per worker process and shared by every merge task it runs
-    (Spark reuses Python workers). Memory is 16 bytes/doc — ~64 MB at 4M
-    docs. This trade only wins while the doc-stats table fits comfortably
-    in task memory; merge_encode_buckets enforces that bound driver-side
-    and prescribes dl-carrying runs past it (see its docstring)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    if not ds_dir:
-        raise ValueError(
-            "runs checkpoint carries no doc_len column and no doc-stats "
-            "dir was provided — pass ds_dir= to merge_encode_buckets"
-        )
-    fsys, root = pyarrow_fs_for(ds_dir)
-    files = tuple(
-        sorted(
-            (i.path, int(i.size or 0), i.mtime_ns or 0)
-            for i in fsys.get_file_info(pafs.FileSelector(root, recursive=True))
-            if i.type == pafs.FileType.File and i.base_name.endswith(".parquet")
-        )
-    )
-    hit = _DS_CACHE.get(ds_dir)
-    if hit is not None and hit[0] == files:
-        return hit[1], hit[2]
-    tbls = []
-    for p, _, _ in files:
-        with fsys.open_input_file(p) as f:
-            tbls.append(pq.read_table(f, columns=["doc_id", "doc_len"]))
-    tbl = pa.concat_tables(tbls) if len(tbls) != 1 else tbls[0]
-    ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-    dls = tbl.column("doc_len").to_numpy(zero_copy_only=False)
-    order = np.argsort(ids, kind="stable")
-    ids = np.ascontiguousarray(ids[order])
-    dls = np.ascontiguousarray(dls[order])
-    _DS_CACHE[ds_dir] = (files, ids, dls)
-    return ids, dls
 
 
 def pyarrow_fs_for(uri: str):
@@ -241,20 +140,6 @@ def binary_array(values, off: np.ndarray):
         [None, pa.py_buffer(off.astype(np.int64).tobytes()),
          pa.py_buffer(values)],
     )
-
-
-def _pos_arrays(tbl, n: int):
-    """Extract (pos_off int64[n+1] zero-based, pos bytes) from a checkpoint
-    table's pos_vb column, zero-copy via the Arrow offsets buffer."""
-    import pyarrow as pa
-
-    pos_col = tbl.column("pos_vb").combine_chunks().cast(pa.large_binary())
-    if pos_col.offset != 0:  # defensive: realign a sliced array
-        pos_col = pa.concat_arrays([pos_col])
-    pos_off = np.frombuffer(pos_col.buffers()[1], dtype=np.int64)[: n + 1]
-    pos_buf = pos_col.buffers()[2]
-    pos_bytes = memoryview(pos_buf)[: pos_off[-1]] if n else memoryview(b"")
-    return pos_off, pos_bytes
 
 
 def encode_sorted_groups(
@@ -398,108 +283,6 @@ def encode_sorted_groups(
     return out_tbl, n_groups, max_salt
 
 
-def _encode_one_file(
-    fsys, ofs, src_path: str, bucket: int, seg_root: str, block_size: int,
-    store_positions: bool,
-) -> dict:
-    """Read one sorted checkpoint file, encode every (term_h, salt) group,
-    write the segment parquet next to its siblings. Pure pyarrow/NumPy."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pa.set_cpu_count(1)  # one core slot per task (see p1_direct._p1_task)
-
-    cols = _CHECKPOINT_COLS if store_positions else _CHECKPOINT_COLS[:-1]
-    with fsys.open_input_file(src_path) as f:
-        tbl = pq.read_table(f, columns=cols)
-
-    n = tbl.num_rows
-    # v4 checkpoint: term identity is already an int64 hash — group-change
-    # detection runs straight on the numpy view, no dictionary decode
-    idx = tbl.column("term_h").to_numpy(zero_copy_only=False)
-    salt = tbl.column("salt").to_numpy(zero_copy_only=False)
-    doc_id = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-    tf = tbl.column("tf").to_numpy(zero_copy_only=False)
-    doc_len = tbl.column("doc_len").to_numpy(zero_copy_only=False)
-    if store_positions:
-        # zero-copy slicing of the flat values buffer via the offsets buffer:
-        # rows are doc_id-sorted within each group (v3 checkpoint invariant),
-        # so a group's pos stream is ONE contiguous slice.
-        pos_off, pos_bytes = _pos_arrays(tbl, n)
-    else:
-        pos_off, pos_bytes = np.zeros(n + 1, dtype=np.int64), b""
-
-    out_tbl, n_groups, max_salt = encode_sorted_groups(
-        idx, salt, doc_id, tf, doc_len, pos_off, pos_bytes,
-        block_size, store_positions, src_path,
-    )
-    base = os.path.basename(src_path)
-    dest_dir = f"{seg_root.rstrip('/')}/bucket={bucket}"
-    ofs.create_dir(dest_dir, recursive=True)
-    dest = f"{dest_dir}/{base}"
-    with ofs.open_output_stream(dest) as out:
-        pq.write_table(out_tbl, out, compression="snappy")
-    sz = ofs.get_file_info(dest).size or 0
-    return {
-        "bucket": bucket,
-        "src_file": base,
-        "n_groups": int(n_groups),
-        "n_postings": int(n),
-        "max_salt": max_salt,
-        "out_bytes": int(sz),
-    }
-
-
-def _encode_files_udf(flat_dir: str, seg_dir: str, block_size: int,
-                      store_positions: bool):
-    def run(batches):
-        fsys = ofs = seg_root = None
-        for pdf in batches:
-            for bucket, path in zip(pdf["bucket"], pdf["path"]):
-                if fsys is None:
-                    fsys, _ = pyarrow_fs_for(flat_dir)
-                    ofs, seg_root = pyarrow_fs_for(seg_dir)
-                yield pd.DataFrame(
-                    [
-                        _encode_one_file(
-                            fsys, ofs, path, int(bucket), seg_root,
-                            block_size, store_positions,
-                        )
-                    ]
-                )
-
-    return run
-
-
-def encode_wave_direct(
-    spark: SparkSession,
-    flat_dir: str,
-    seg_dir: str,
-    buckets: list[int],
-    block_size: int,
-    store_positions: bool,
-    files: list[tuple[int, str, int]] | None = None,
-) -> list:
-    """Encode the given buckets' checkpoint files, one Spark task per file,
-    biggest files first (no end-of-wave straggler). Returns the collected
-    per-file summary rows. `files`: the buckets' list_bucket_files listing,
-    if the caller already has it. Raises if the checkpoint FS scheme is
-    unusable from Python (caller falls back to the in-channel encoder)."""
-    if files is None:
-        files = list_bucket_files(flat_dir, buckets)
-    if not files:
-        return []
-    files.sort(key=lambda t: -t[2])
-    rows = [(b, p) for b, p, _ in files]
-    rdd = spark.sparkContext.parallelize(rows, numSlices=len(rows))
-    df: DataFrame = spark.createDataFrame(rdd, "bucket int, path string")
-    out = df.mapInPandas(
-        _encode_files_udf(flat_dir, seg_dir, block_size, store_positions),
-        SUMMARY_SCHEMA,
-    )
-    return out.collect()
-
-
 def _merge_one_bucket(
     bucket: int,
     run_paths: list[str],
@@ -510,7 +293,6 @@ def _merge_one_bucket(
     store_positions: bool,
     nsplits: int = 1,
     split_id: int = 0,
-    ds_dir: str | None = None,
 ) -> dict:
     """k-way merge one bucket's sorted runs -> one segment file + its
     lexicon rows. Each run is sorted by (term_h, salt, doc_id) and the keys
@@ -530,13 +312,7 @@ def _merge_one_bucket(
     exactly once, and the extra cost is only re-reading the bucket's runs
     per split. At a larger scale the next step down is (term, salt)-
     granular splitting with a df-summing lexicon read; not needed at this
-    corpus size.
-
-    doc_len: runs carry it per posting by default (p1_dl_in_runs; the
-    round-5 A/B showed the shed layout's per-posting doc-stats searchsorted
-    nearly doubling this phase at 4M docs — bench/p2_dl_ab_4m.py). Shed
-    runs (no doc_len column) are still consumed: the merge re-attaches
-    from the per-worker-cached doc-stats lookup."""
+    corpus size."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -547,12 +323,7 @@ def _merge_one_bucket(
     ofs, seg_root = pyarrow_fs_for(seg_dir)
     _, lex_root = pyarrow_fs_for(lex_dir)
 
-    with fsys.open_input_file(run_paths[0]) as f:
-        run_fields = set(pq.ParquetFile(f).schema_arrow.names)
-    dl_in_runs = "doc_len" in run_fields
-    cols = list(_CHECKPOINT_COLS if dl_in_runs else _RUN_COLS)
-    if not store_positions:
-        cols.remove("pos_vb")
+    cols = _CHECKPOINT_COLS if store_positions else _CHECKPOINT_COLS[:-1]
     tbls = []
     for p in run_paths:
         with fsys.open_input_file(p) as f:
@@ -571,29 +342,13 @@ def _merge_one_bucket(
     doc_id = tbl.column("doc_id").to_numpy(zero_copy_only=False)
     tf = tbl.column("tf").to_numpy(zero_copy_only=False)
 
-    # merge: signed-int64 lexsort matches both the runs' in-task sort and
-    # the JVM channel path's sortWithinPartitions order
+    # merge: signed-int64 lexsort, the runs' in-task sort order
     order = np.lexsort((doc_id, salt, idx))
     idx_s = idx[order]
     salt_s = salt[order]
     doc_s = doc_id[order]
     tf_s = tf[order]
-    if dl_in_runs:
-        dl_s = tbl.column("doc_len").to_numpy(zero_copy_only=False)[order]
-    elif n:
-        ds_ids, ds_dls = _doc_len_lookup(ds_dir)
-        pos = np.minimum(
-            np.searchsorted(ds_ids, doc_s), max(len(ds_ids) - 1, 0)
-        )
-        if not len(ds_ids) or not (ds_ids[pos] == doc_s).all():
-            raise ValueError(
-                f"bucket={bucket}: posting doc_ids missing from doc-stats "
-                f"runs at {ds_dir} — checkpoint and doc_stats are out of "
-                "sync; rebuild the flat checkpoint"
-            )
-        dl_s = ds_dls[pos]
-    else:
-        dl_s = np.empty(0, dtype=np.int64)
+    dl_s = tbl.column("doc_len").to_numpy(zero_copy_only=False)[order]
     if store_positions:
         # byte-slice reorder via Arrow's C++ take — ~4x less memory traffic
         # than a per-byte numpy index gather (A/B'd; byte-identical)
@@ -679,7 +434,6 @@ def merge_encode_buckets(
     block_size: int,
     store_positions: bool,
     target_bytes: int | None = None,
-    ds_dir: str | None = None,
     task_mem_bytes: int | None = None,
 ) -> list[dict]:
     """Merge-encode the given buckets' sorted-runs checkpoint. The work
@@ -698,12 +452,7 @@ def merge_encode_buckets(
     prescription instead of thrashing re-reads. Writes segments AND the
     per-bucket lexicon in-task; returns per-BUCKET summary dicts (sub-task
     summaries pre-aggregated here) — the caller commits them without
-    running any further Spark job.
-
-    `ds_dir` (the doc-stats runs) is required for checkpoints whose runs
-    do not carry doc_len (the current layout). The driver also verifies
-    the doc-stats lookup itself fits the task budget: its residency is
-    16 bytes/doc, the knob past that scale is carrying dl in the runs."""
+    running any further Spark job."""
     files = list_bucket_files(flat_dir, buckets)
     by_bucket: dict[int, list[tuple[str, int]]] = {}
     for b, p, sz in files:
@@ -724,34 +473,6 @@ def merge_encode_buckets(
     # grows into the thousands long before executor counts do.
     target = target_bytes or max(32 << 20, total // max(64, len(by_bucket)))
     mem_budget = task_mem_bytes or (4 << 30)
-    # the doc-stats residency bound only applies when the runs were written
-    # without a doc_len column (the shed layout) — sniff one run's schema
-    # (a metadata-only read) rather than guessing from config
-    dl_in_runs = False
-    if files:
-        import pyarrow.parquet as pq
-
-        fsys0, _ = pyarrow_fs_for(flat_dir)
-        with fsys0.open_input_file(files[0][1]) as f:
-            dl_in_runs = "doc_len" in pq.ParquetFile(f).schema_arrow.names
-    if ds_dir is not None and not dl_in_runs:
-        from pyarrow import fs as pafs
-
-        fsys, root = pyarrow_fs_for(ds_dir)
-        ds_bytes = sum(
-            int(i.size or 0)
-            for i in fsys.get_file_info(
-                pafs.FileSelector(root, recursive=True, allow_not_found=True)
-            )
-            if i.type == pafs.FileType.File
-        )
-        if ds_bytes * 3 > mem_budget:
-            raise ValueError(
-                f"doc-stats lookup (~{ds_bytes * 3 >> 20} MB decoded) "
-                f"exceeds the p2 task memory budget ({mem_budget >> 20} MB)"
-                " — at this doc count carry doc_len in the runs instead "
-                "(legacy layout) or raise IndexConfig.p2_task_mem_bytes"
-            )
     work: list[tuple[int, list[str], int, int, float]] = []
     for b, paths in by_bucket.items():
         bsize = sum(s for _, s in paths)
@@ -778,7 +499,7 @@ def merge_encode_buckets(
         try:
             return _merge_one_bucket(
                 b, paths, flat_dir, seg_dir, lex_dir,
-                block_size, store_positions, nsplits, k, ds_dir,
+                block_size, store_positions, nsplits, k,
             )
         except ValueError as e:  # malformed runs: deterministic, no retry
             return {"bucket": b, "error": str(e)}

@@ -2,7 +2,8 @@
 
 The direct phase-1 build tasks (index/p1_direct.py) mint doc_ids and term
 hashes in Python but MUST produce the same values as the JVM expressions
-used by the in-channel build path and the query planner:
+of chunking.udf.chunk_documents (whose doc_ids a `chunks=` build keeps)
+and of Spark-side readers of the index:
 
   doc_id = F.xxhash64("repo", "path", "commit", chunk_idx)   (strings + int)
   term_h = F.xxhash64("term")                                 (string)

@@ -194,8 +194,7 @@ def ngram_jaccard_pairs(
     (id, shingle) set feeds three aggregations, but it is NOT persisted:
     all three consumers sit in one plan, so Catalyst reuses the
     explode+distinct exchange (ReusedExchange) without materializing a
-    cache — the controlled A/B (bench/jaccard_ab.py, sf0.1, interleaved
-    best-of-3) measured hash-only 11.6s vs hash+persist 14.6s vs
+    cache — the controlled A/B (sf0.1, interleaved best-of-3) measured hash-only 11.6s vs hash+persist 14.6s vs
     neither 12.6s; persist only adds a cache write+read pass on top of
     the shuffle files Spark already keeps.
     """
@@ -205,8 +204,8 @@ def ngram_jaccard_pairs(
         F.col(id_col).alias("id"),
         F.explode(shingles_col(text_col, shingle_n)).alias("_s"),
     )
-    # hash_to_int64/persist toggles exist for controlled A/B measurement
-    # (bench/jaccard_ab.py); production keeps both on
+    # hash_to_int64/persist toggles exist for controlled A/B measurement;
+    # production keeps both on
     if hash_to_int64:
         sh = sh.select("id", F.xxhash64("_s").alias("shingle"))
     else:

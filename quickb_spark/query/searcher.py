@@ -289,9 +289,13 @@ class Searcher:
     ) -> TopK:
         """Ranked (query_id, rank, doc_id, score) rows as a local `TopK`
         list (`.toDF()` for a DataFrame); queries as (query_id, text)
-        pairs (preferred for serving — driver-side tokenize, zero extra
-        jobs) or a (query_id, query_text) DataFrame (collected: a query
-        batch is small by definition).
+        pairs or a (query_id, query_text) DataFrame.
+
+        Query input cost: a list is tokenized in the driver and runs no
+        Spark job. A DataFrame costs one Spark collect per call (a query
+        batch is small by definition), and the first collect after the
+        index is opened also pays the JVM warm-up, about 1.4 s on the
+        `fixed-cost` benchmark index. Serving loops should pass lists.
 
         ranges="auto" sizes the docID-range fan-out from the candidate
         postings and scores a small plan in the driver with no Spark job

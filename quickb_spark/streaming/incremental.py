@@ -55,6 +55,7 @@ from quickb_spark.config import BM25_B, BM25_K1, EngineConfig
 from quickb_spark.fs import IndexFS, join_path
 from quickb_spark.index.segments import (
     STAGED_INPUT,
+    check_flat_layout,
     invalidate_buckets,
     load_stats,
     stage_documents,
@@ -206,7 +207,6 @@ def _delta_postings(index_dir: str, batches, terms: list[str], n_buckets: int):
 
     from quickb_spark.functions.hashing import xxhash64
     from quickb_spark.index import p2_direct
-    from quickb_spark.index.p1_direct import list_parquet_files
     from quickb_spark.query.searcher import ExtraPostings, UnreachableIndexError
 
     by_h = {xxhash64(t): t for t in terms}
@@ -230,32 +230,14 @@ def _delta_postings(index_dir: str, batches, terms: list[str], n_buckets: int):
         ) from e
     postings = {}
     if paths:
-        dset = ds.dataset(paths, format="parquet", filesystem=fsys)
-        dl_in_runs = "doc_len" in dset.schema.names
-        tbl = dset.to_table(
-            columns=["term_h", "doc_id", "tf"] + (["doc_len"] if dl_in_runs else []),
+        tbl = ds.dataset(paths, format="parquet", filesystem=fsys).to_table(
+            columns=["term_h", "doc_id", "tf", "doc_len"],
             filter=pc.field("term_h").isin(pa.array(list(by_h), pa.int64())),
         )
         th = tbl["term_h"].to_numpy()
         docs = tbl["doc_id"].to_numpy()
         tfs = tbl["tf"].to_numpy()
-        if dl_in_runs:
-            dls = tbl["doc_len"].to_numpy()
-        else:  # shed runs: doc_len comes from the batches' doc-stats runs
-            stats_tbl = ds.dataset(
-                [
-                    p for key, _m in batches
-                    for p, _sz in list_parquet_files(
-                        join_path(_batch_dir(index_dir, key), "doc_stats")
-                    )
-                ],
-                format="parquet", filesystem=fsys,
-            ).to_table(columns=["doc_id", "doc_len"])
-            ids = stats_tbl["doc_id"].to_numpy()
-            order = np.argsort(ids)
-            dls = stats_tbl["doc_len"].to_numpy()[order][
-                np.searchsorted(ids[order], docs)
-            ]
+        dls = tbl["doc_len"].to_numpy()
         for h, t in by_h.items():
             rows = np.flatnonzero(th == h)
             if len(rows):
@@ -287,7 +269,12 @@ def query_with_deltas(
     Searcher reads only the query terms' lexicon rows, so a small plan
     runs no Spark job (it is scored in the driver, see
     serve_direct.serve_topk_direct), a larger one only the range job.
-    With no delta pending this is a plain Searcher call."""
+    With no delta pending this is a plain Searcher call.
+
+    As for Searcher.topk, list input runs no Spark job; a DataFrame of
+    queries costs one Spark collect per call, and the first collect after
+    open also pays the JVM warm-up (about 1.4 s on the `fixed-cost`
+    benchmark index)."""
     from quickb_spark.query.searcher import Searcher, _tokenize
 
     s = Searcher(spark, index_dir, k1, b)
@@ -365,10 +352,9 @@ def fold_deltas_into_index(
     anything moves, names the batches consumed and holds the new
     stats.json. A crash before the marker leaves the index and deltas
     untouched; a crash after it is finished idempotently by the next call.
-    Raises ValueError on an index built from chunks=, whose checkpoint is
-    not sorted runs."""
-    from quickb_spark.index.p1_direct import RUNS_MARKER
-
+    Raises RuntimeError, before anything moves, on an index whose
+    checkpoint is an older engine layout (segments.check_flat_layout); it
+    must be rebuilt."""
     cfg = cfg or EngineConfig()
     fs = IndexFS(index_dir, spark)
     if fs.exists(_fold_marker(index_dir)):
@@ -379,12 +365,9 @@ def fold_deltas_into_index(
     batches = _delta_batches(fs, index_dir)
     if not batches:
         return 0
-    if not fs.exists(join_path(index_dir, "flat", RUNS_MARKER)):
-        raise ValueError(
-            f"index at {index_dir} was built from chunks=, whose checkpoint "
-            "is not sorted runs, so deltas cannot be folded into it; "
-            "rebuild it with build_index(documents=...) or corpus_uri=..."
-        )
+    # deltas fold only into this engine's sorted runs; an older engine
+    # layout is refused here, before the fold marker, so nothing moves
+    check_flat_layout(fs, join_path(index_dir, "flat"))
     stats = load_stats(index_dir)
     n0 = int(stats["n_docs"])
     n_docs = n0 + sum(m["n_docs"] for _, m in batches)

@@ -1,14 +1,15 @@
-"""Direct (no-Arrow-channel) build path: bit-identity + index equivalence.
+"""The build engine: bit-identity of its hashes + input-shape equivalence.
 
-The direct phase 1 (index/p1_direct.py) mints doc_ids, term hashes and
-salts in Python; the chunks= channel phase 1 mints them with JVM
-expressions (doc ids in chunking.udf.chunk_documents, term hashes and
-salts in segments.build_index). These tests pin (a) bit-identity of every
-hash the two paths share, and (b) full index equivalence — stats, doc
-stats, lexicon, decoded posting lists, positions, and query results —
-between an index built via `build_index(corpus_uri=...)` (direct p1 +
-k-way merge p2) and one built via `build_index(chunks=...)` over the same
-documents (channel p1 + per-file direct p2).
+Phase 1 (index/p1_direct.py) mints doc_ids, term hashes and salts in
+Python; chunking.udf.chunk_documents mints doc ids with the JVM
+expression xxhash64(repo, path, commit, chunk_idx). These tests pin (a)
+bit-identity of every hash the two share with the JVM expressions, and
+(b) full index equivalence — stats, doc stats, lexicon, decoded posting
+lists, positions, query results and segment/lexicon file bytes — between
+an index built via `build_index(corpus_uri=...)` (documents read in place)
+and one built via `build_index(chunks=chunk_documents(...))` over the same
+documents (JVM-minted doc ids, pre-chunked rows staged and read by the
+same phase-1 tasks).
 """
 
 from __future__ import annotations
@@ -38,9 +39,9 @@ from quickb_spark.query.searcher import Searcher
 
 N_DOCS = 400
 
-# pinned hot set: the two paths estimate hot terms from DIFFERENT sample
-# designs (row-sample vs file-sample) — equivalence must be tested under
-# the same salt assignment, so both builds read this pre-seeded file
+# pinned hot set: the two input shapes sample DIFFERENT rows (chunk rows
+# vs document rows) — equivalence must be tested under the same salt
+# assignment, so both builds read this pre-seeded file
 _HOT = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
         "est_postings": 60_000}
 
@@ -70,7 +71,7 @@ def _seed_hot(index_dir: str) -> None:
 @pytest.fixture(scope="module")
 def both_indexes(spark, corpus, tmp_path_factory):
     root = tmp_path_factory.mktemp("p1idx")
-    idx_ch = str(root / "channel")
+    idx_ch = str(root / "chunks")
     idx_di = str(root / "direct")
     _seed_hot(idx_ch)
     _seed_hot(idx_di)
@@ -80,6 +81,63 @@ def both_indexes(spark, corpus, tmp_path_factory):
     )
     build_index(spark, index_dir=idx_di, cfg=_cfg(), corpus_uri=corpus)
     return idx_ch, idx_di
+
+
+def _sha256_tree(index_dir: str) -> dict[str, str]:
+    """relative path -> sha256 of every segments/ and lexicon/ parquet file
+    and meta/stats.json."""
+    import hashlib
+
+    out = {}
+    for sub in ("segments", "lexicon"):
+        for d, _, names in os.walk(os.path.join(index_dir, sub)):
+            for n in names:
+                if n.endswith(".parquet"):
+                    p = os.path.join(d, n)
+                    with open(p, "rb") as f:
+                        out[os.path.relpath(p, index_dir)] = hashlib.sha256(
+                            f.read()).hexdigest()
+    with open(os.path.join(index_dir, "meta", "stats.json"), "rb") as f:
+        out["meta/stats.json"] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def test_chunks_build_byte_identical_to_corpus_uri_build(both_indexes):
+    """build_index(chunks=chunk_documents(docs)) runs the same phase-1
+    tasks over the staged (doc_id, text) rows: under the same hot set its
+    segment and lexicon files and stats.json are byte-identical to the
+    corpus_uri= build, and no staged copy is left behind."""
+    from quickb_spark.index.segments import STAGED_INPUT
+
+    idx_ch, idx_di = both_indexes
+    got, want = _sha256_tree(idx_ch), _sha256_tree(idx_di)
+    assert len(got) > 2 * 8 and got == want
+    assert not os.path.exists(os.path.join(idx_ch, STAGED_INPUT))
+
+
+def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
+                                                           tmp_path):
+    """A chunks= build stages its input with one Spark write and then runs
+    the documents= build's jobs: phase 0, phase 1 and one phase-2 wave.
+    Jobs are counted with the status tracker over a job group the test
+    owns."""
+    sc = spark.sparkContext
+    docs = spark.read.parquet(corpus)
+    counts = {}
+    for name, inp in (
+        ("documents", {"documents": docs}),
+        ("chunks", {"chunks": chunk_documents(docs, _cfg())}),
+    ):
+        gid = f"test-build-jobs-{name}"
+        sc.setJobGroup(gid, gid)
+        try:
+            build_index(spark, index_dir=str(tmp_path / name), cfg=_cfg(),
+                        **inp)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts[name] = len(sc.statusTracker().getJobIdsForGroup(gid))
+    assert counts["chunks"] == counts["documents"] == 4, counts
 
 
 def test_hash_bit_identity(spark):
@@ -239,7 +297,6 @@ def test_split_merge_identical(spark, both_indexes, tmp_path):
     summaries = merge_encode_buckets(
         spark, flat, seg2, lex2, list(range(8)), 128, True,
         target_bytes=1,  # force max splitting on every bucket
-        ds_dir=os.path.join(idx_di, "doc_stats"),
     )
     assert any("/" in s["src_file"] and not s["src_file"].endswith("/1)")
                for s in summaries), "no bucket actually split"
@@ -295,43 +352,13 @@ def _run_schemas(idx_dir: str) -> set[str]:
 
 
 def test_runs_carry_doc_len_by_default(spark, both_indexes):
-    """Pin the round-5 default layout: doc_len IS a per-posting run column.
-    The round-4 shed-and-re-attach layout (8 bytes/posting lighter runs,
+    """Pin the run layout: doc_len IS a per-posting run column. The
+    round-4 shed-and-re-attach layout (8 bytes/posting lighter runs,
     per-posting searchsorted at merge) measured strictly slower at every
-    level (bench/p2_dl_ab.py) and is now opt-in via p1_dl_in_runs=False."""
+    level and is gone."""
     _, idx_di = both_indexes
     names = _run_schemas(idx_di)
     assert {"term_h", "salt", "doc_id", "tf", "doc_len", "pos_vb"} <= names
-
-
-def test_shed_layout_builds_identical_index(spark, corpus, both_indexes,
-                                            tmp_path):
-    """The opt-in shed layout (p1_dl_in_runs=False) writes runs WITHOUT
-    doc_len, and the merge's doc-stats re-attach produces an index whose
-    query results are identical to the default layout's."""
-    _, idx_di = both_indexes
-    idx_shed = str(tmp_path / "shed")
-    _seed_hot(idx_shed)
-    cfg = _cfg()
-    import dataclasses
-
-    cfg = dataclasses.replace(
-        cfg, index=dataclasses.replace(cfg.index, p1_dl_in_runs=False)
-    )
-    build_index(spark, index_dir=idx_shed, cfg=cfg, corpus_uri=corpus)
-    assert "doc_len" not in _run_schemas(idx_shed)
-    queries = fixture_queries()[:6]
-    a = Searcher(spark, idx_di).topk(queries, k=10).collect()
-    b = Searcher(spark, idx_shed).topk(queries, k=10).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    a, b = sorted(a, key=key), sorted(b, key=key)
-    assert [
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in a
-    ] == [
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in b
-    ]
 
 
 def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
@@ -346,7 +373,7 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
     from quickb_spark.index.p2_direct import merge_encode_buckets
 
     rng = np.random.default_rng(7)
-    # few docs (tiny doc-stats) x many terms (big bucket): each term's
+    # few docs x many terms (big bucket): each term's
     # postings are a sorted subset of the doc pool, so every (term, salt)
     # group is strictly doc-increasing while the bucket's bytes are
     # dominated by incompressible per-posting position payloads
@@ -371,6 +398,7 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
             "salt": pa.array(np.zeros(n, np.int32), type=pa.int32()),
             "doc_id": pa.array(did, type=pa.int64()),
             "tf": pa.array(np.ones(n, np.int32), type=pa.int32()),
+            "doc_len": pa.array(np.full(n, 3, np.int64), type=pa.int64()),
             "pos_vb": pa.Array.from_buffers(
                 pa.binary(), n,
                 [None, pa.py_buffer(pos_off.tobytes()),
@@ -380,22 +408,13 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
     )
     pq.write_table(run, str(bdir / "run-t00000.parquet"),
                    compression="snappy")
-    ds = tmp_path / "doc_stats"
-    ds.mkdir()
-    pq.write_table(
-        pa.table({"doc_id": pa.array(pool, type=pa.int64()),
-                  "doc_len": pa.array(
-                      np.full(n_pool, 3, np.int64), type=pa.int64()
-                  )}),
-        str(ds / "run-t00000.parquet"), compression="snappy",
-    )
     bsize = os.path.getsize(bdir / "run-t00000.parquet")
     assert bsize > 256 * 8192 // 3, "synthetic bucket too small"
 
     def _merge(seg, lex, budget):
         return merge_encode_buckets(
             spark, str(flat), seg, lex, [0], 128, True,
-            ds_dir=str(ds), task_mem_bytes=budget,
+            task_mem_bytes=budget,
             target_bytes=1 << 40,  # work-balance splitting off: memory only
         )
 
@@ -415,9 +434,8 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
     ]
     assert pm[0] == pm[1]
     assert sum(len(p) for p, _ in pm[0].values()) == n
-    # fail fast: a budget needing >256 splits (but above the ds floor)
-    ds_bytes = os.path.getsize(ds / "run-t00000.parquet")
-    tiny = max(3 * ds_bytes + 1, (3 * bsize) // 400)
+    # fail fast: a budget needing >256 splits
+    tiny = (3 * bsize) // 400
     assert tiny < (3 * bsize) // 256, "budget window empty — enlarge fixture"
     with pytest.raises(ValueError, match="term_buckets"):
         _merge(str(tmp_path / "seg_c"), str(tmp_path / "lex_c"), tiny)
@@ -611,7 +629,6 @@ def test_packed_merge_files_match_unit_by_unit(spark, both_indexes, tmp_path):
         for b, paths in by_bucket.items():
             _merge_one_bucket(
                 b, paths, flat, seg_ref, lex_ref, 128, True,
-                ds_dir=os.path.join(idx_di, "doc_stats"),
             )
     finally:
         pa.set_cpu_count(prev_cpus)

@@ -18,7 +18,6 @@ from quickb_spark.index.encode import decode_posting_list
 from quickb_spark.fs import IndexFS
 from quickb_spark.index.segments import (
     build_index,
-    flat_postings_with_dl,
     invalidate_buckets,
     load_commits,
     load_stats,

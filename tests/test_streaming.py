@@ -396,28 +396,116 @@ def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch)
     assert _collect_ranked(bm25_topk_segments(spark, str(idx), qdf, k=10)) == clean
 
 
-def test_shed_layout_delta_tier_matches_rebuild(spark, tmp_path):
-    """With runs that carry no doc_len (p1_dl_in_runs=False), the delta
-    query takes doc lengths from the batches' doc-stats runs and the fold
-    from the merged doc stats: both equal a from-scratch rebuild."""
-    import dataclasses
+def _ranked_exact(rows):
+    """Sorted (query_id, rank, doc_id, score) tuples, scores unrounded;
+    checks that ties are ordered by doc_id ascending."""
+    got = sorted(map(tuple, rows))
+    ties = 0
+    for (q1, r1, d1, s1), (q2, r2, d2, s2) in zip(got, got[1:]):
+        if q1 == q2:
+            assert (s1, -d1) > (s2, -d2), (q1, r1, r2)  # score desc, doc asc
+            ties += s1 == s2
+    return got, ties
 
-    cfg = dataclasses.replace(
-        CFG, index=dataclasses.replace(CFG.index, p1_dl_in_runs=False)
-    )
-    base = generate_documents_df(spark, 60, seed=23, partitions=2)
-    alldocs = generate_documents_df(spark, 85, seed=23, partitions=2)
+
+def test_fold_on_pipeline_index_equals_rebuild(spark, tmp_path):
+    """An index built by run_pipeline (CHUNK + INDEX, so build_index
+    chunks=) takes streaming deltas like any other: query_with_deltas and
+    then the folded index equal a documents= rebuild over base + delta,
+    scores compared with ==, tied docs in doc_id order."""
+    import json
+    import os
+
+    from quickb_spark.pipeline import PipelineConfig, run_pipeline
+
+    rows = [gen_document(i, 31) for i in range(120)]
+    base, new = rows[:100], rows[100:]
+    new += [(r, f"{p}.copy", c, lang, text) for r, p, c, lang, text in base[:20]]
+    hot = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
+           "est_postings": 0}
+
+    def seed_hot(idx):
+        os.makedirs(os.path.join(idx, "meta"))
+        with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
+            json.dump(hot, f)
+
+    docs_path = str(tmp_path / "docs")
+    spark.createDataFrame(base, DOCUMENTS_SCHEMA).write.parquet(docs_path)
     idx = str(tmp_path / "idx")
-    build_index(spark, index_dir=idx, cfg=cfg, documents=base)
+    seed_hot(idx)
+    run_pipeline(
+        spark,
+        PipelineConfig(documents_path=docs_path, index_dir=idx, engine=CFG,
+                       to_stage="INDEX"),
+    )
     src = str(tmp_path / "in")
-    alldocs.exceptAll(base).write.parquet(src)
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
-    start_incremental_ingest(spark, stream, idx, cfg).awaitTermination(120)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
 
     fresh = str(tmp_path / "fresh")
-    build_index(spark, index_dir=fresh, cfg=cfg, documents=alldocs)
-    qdf = spark.createDataFrame(fixture_queries()[:12], ["query_id", "query_text"])
-    want = _collect_ranked(bm25_topk_segments(spark, fresh, qdf, k=10))
-    assert _collect_ranked(query_with_deltas(spark, idx, qdf, k=10)) == want
-    assert fold_deltas_into_index(spark, idx, cfg) > 0
-    assert _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10)) == want
+    seed_hot(fresh)
+    build_index(
+        spark, index_dir=fresh, cfg=CFG,
+        documents=spark.createDataFrame(base + new, DOCUMENTS_SCHEMA),
+    )
+    queries = fixture_queries()[:20]
+    want, ties = _ranked_exact(Searcher(spark, fresh).topk(queries, k=10))
+    assert ties >= 10, "copies must produce exact ties in the top k"
+    got, _ = _ranked_exact(query_with_deltas(spark, idx, queries, k=10))
+    assert got == want
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    got, _ = _ranked_exact(Searcher(spark, idx).topk(queries, k=10))
+    assert got == want
+    assert load_stats(idx) == load_stats(fresh)
+
+
+def test_legacy_checkpoints_fail_loudly_on_resume_and_fold(spark, tmp_path):
+    """A flat/ checkpoint written by an older engine — no _RUNS marker (the
+    old chunks= layout), or runs without doc_len (the old shed layout) —
+    makes both a resume and a fold raise a RuntimeError that names what is
+    missing and says to rebuild. The fold raises before anything moves:
+    the delta batch stays pending and no fold marker is written."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "base")
+    build_index(
+        spark, index_dir=base, cfg=CFG,
+        documents=generate_documents_df(spark, 40, seed=5, partitions=2),
+    )
+    src = str(tmp_path / "in")
+    spark.createDataFrame(
+        [gen_document(i, 5) for i in range(40, 50)], DOCUMENTS_SCHEMA
+    ).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, base, CFG).awaitTermination(120)
+
+    def no_marker(idx):
+        os.remove(os.path.join(idx, "flat", "_RUNS"))
+
+    def shed_doc_len(idx):
+        for d, _, names in os.walk(os.path.join(idx, "flat")):
+            for n in names:
+                if n.endswith(".parquet"):
+                    p = os.path.join(d, n)
+                    pq.write_table(pq.read_table(p).drop(["doc_len"]), p)
+
+    for name, corrupt, match in (
+        ("no_marker", no_marker, "no _RUNS marker"),
+        ("shed", shed_doc_len, "missing columns doc_len"),
+    ):
+        idx = str(tmp_path / name)
+        shutil.copytree(base, idx)
+        corrupt(idx)
+        with pytest.raises(RuntimeError, match=match) as e:
+            build_index(spark, index_dir=idx, cfg=CFG)
+        assert "rebuild" in str(e.value)
+        with pytest.raises(RuntimeError, match=match):
+            fold_deltas_into_index(spark, idx, CFG)
+        assert not os.path.exists(
+            os.path.join(idx, "meta", "fold_commit.json"))
+        assert len(incremental._delta_batches(
+            incremental.IndexFS(idx, spark), idx)) == 1
