@@ -2,7 +2,8 @@
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[] parallelism (default: the cores this
+                      process may use)
 
 Headline queries:
   q_index_build   THE north-star metric: the real engine build — fused
@@ -45,19 +46,24 @@ def build_session(cpus: int):
 
     from quickb_spark.session import tune_builder
 
+    # driver heap: half the host's RAM, 3/4 of it pre-touched
+    heap_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 21
     return (
         tune_builder(SparkSession.builder).master(f"local[{cpus}]")
         .appName("quickb_spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", f"{heap_mb}m")
         # pre-size + pre-touch the heap during (untimed) session startup:
         # lazy heap growth makes the shuffle-heavy queries pay guest page
         # faults mid-measurement — on a contended virtualized host that is
         # kernel-time, not engine time (measured 2x on the scaling bench)
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("QKB_DRIVER_JAVA_OPTS", "-Xms12g -XX:+AlwaysPreTouch"),
+            os.environ.get(
+                "QKB_DRIVER_JAVA_OPTS",
+                f"-Xms{heap_mb * 3 // 4}m -XX:+AlwaysPreTouch",
+            ),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -77,7 +83,8 @@ def build_session(cpus: int):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from pyspark.sql import functions as F

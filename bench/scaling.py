@@ -60,8 +60,8 @@ def run_level(
          str(cpus), corpus, work],
         capture_output=True, text=True, cwd=REPO, timeout=3600, env=env,
     )
-    # keep each worker's full output (phase timings under QKB_BUILD_TIMING=1
-    # land here) so per-phase scaling stays auditable after the fact
+    # keep each worker's full output (its per-phase timings included) so
+    # per-phase scaling stays auditable after the fact
     log_dir = os.path.join(REPO, "BENCH", "logs")
     os.makedirs(log_dir, exist_ok=True)
     stamp = time.strftime("%Y%m%d-%H%M%S")

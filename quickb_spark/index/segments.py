@@ -64,7 +64,6 @@ identity partitioning on `bucket` without touching the logic):
 from __future__ import annotations
 
 import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -227,7 +226,6 @@ def build_index(
         raise ValueError("pass at most one of chunks= or documents=")
     cfg = cfg or EngineConfig()
     nb = cfg.index.term_buckets
-    _dbg = os.environ.get("QKB_BUILD_TIMING") == "1"
     _t0 = time.perf_counter()
 
     def _mark(label: str) -> None:
@@ -235,8 +233,6 @@ def build_index(
         now = time.perf_counter()
         if timings is not None:
             timings[label] = round(timings.get(label, 0.0) + now - _t0, 2)
-        if _dbg:
-            print(f"[build_index] {label}: {now - _t0:.1f}s", flush=True)
         _t0 = now
     # ALL side-file I/O (markers, meta JSONs, stats) goes through the
     # Hadoop FileSystem of the index dir, so hdfs:///s3a:///file:// index

@@ -21,8 +21,8 @@ A long-lived Searcher keeps the per-batch path free of fixed costs:
   pyarrow cannot list raises `UnreachableIndexError` naming its URI;
 - global per-term df comes from the build-time lexicon (segments.py phase
   3). At `preload()` (index open) the whole lexicon loads DRIVER-side into
-  two sorted NumPy arrays when it fits QKB_LEX_DRIVER_MB (default 1024 —
-  a (term_h, df) pair is 16 bytes, so the default holds ~67M terms; the
+  two sorted NumPy arrays when it fits min(1 GiB, RAM/16) of parquet
+  (a (term_h, df) pair is 16 bytes, so 1 GiB holds ~67M terms; the
   4M-doc fixture's vocabulary is ~3 orders of magnitude under that), the
   same way Lucene loads the term dictionary at reader open: a df lookup
   is then a searchsorted probe, and NO Spark job exists on the serving
@@ -48,7 +48,6 @@ listings and dfs would otherwise serve the old segment files.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,7 +56,7 @@ from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.functions.hashing import bucket_of, xxhash64
 from quickb_spark.functions.tokenize import tokenize_py
 from quickb_spark.index.segments import load_stats
-from quickb_spark.query.serve_direct import TopK, driver_map
+from quickb_spark.query.serve_direct import TopK, _host_budget, driver_map
 from quickb_spark.query.wand import _auto_ranges
 
 __all__ = ["Searcher", "TopK", "UnreachableIndexError"]
@@ -158,13 +157,13 @@ class Searcher:
         bucket files are read on the driver_map pool, no Spark job.
 
         Skipped (returns False) when the lexicon's on-disk parquet exceeds
-        `max_mb` (default QKB_LEX_DRIVER_MB, 1024 — decoded pairs are 16
-        bytes/term, so the parquet cap keeps the driver arrays well under
-        ~2 GB even at ~100M terms); lookups then read each missing term's
-        rows. Raises UnreachableIndexError when pyarrow cannot list the
-        index's filesystem."""
+        `max_mb` (default min(1 GiB, RAM/16) — decoded pairs are 16
+        bytes/term, so 1 GiB keeps the driver arrays well under ~2 GB even
+        at ~100M terms); lookups then read each missing term's rows.
+        Raises UnreachableIndexError when pyarrow cannot list the index's
+        filesystem."""
         if max_mb is None:
-            max_mb = int(os.environ.get("QKB_LEX_DRIVER_MB", "1024"))
+            max_mb = _host_budget("driver lexicon", 1 << 30, 16) >> 20
         lex = self._read_lexicon(list(range(self.n_buckets)), max_mb)
         if lex is None:
             return False
@@ -221,8 +220,7 @@ class Searcher:
         order = np.argsort(th, kind="stable")
         return th[order], df[order]
 
-    def preload(self, phrase: bool = False,
-                pretouch_mb: int | None = None) -> int:
+    def preload(self, phrase: bool = False, pretouch_mb: int = 0) -> int:
         """Index-open for serving (the warm open a search server does
         before taking traffic): load the term dictionary driver-side
         (load_lexicon), then decode every segment file once so the first
@@ -233,11 +231,10 @@ class Searcher:
         shared cache and keeps them memory-mapped for driver-path calls,
         and range tasks memory-map the same entries. Otherwise a decode job
         and per-slot worker rounds warm the executor workers; pretouch_mb
-        (default QKB_SERVE_PRETOUCH_MB) also pre-grows each worker's
-        malloc arena and always takes that path. Opt-in: sparse workloads
-        may prefer lazy loading. Returns the decoded byte count; raises
-        UnreachableIndexError when pyarrow cannot list the index's
-        filesystem."""
+        > 0 also pre-grows each worker's malloc arena and always takes
+        that path. Opt-in: sparse workloads may prefer lazy loading.
+        Returns the decoded byte count; raises UnreachableIndexError when
+        pyarrow cannot list the index's filesystem."""
         if self._lex_mem is None:
             self.load_lexicon()
         files = self._files_for(list(range(self.n_buckets)))

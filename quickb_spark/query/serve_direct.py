@@ -40,10 +40,9 @@ driver keeps its own for driver-path plans):
 the R range tasks of a batch, and every later batch a serving process
 handles, re-read a candidate file zero times instead of once per range.
 This is the decoded-block cache every serving engine keeps; entries are
-fingerprinted by (size, mtime) so a rebuilt index invalidates, and the
-budget is QKB_SERVE_CACHE_MB per worker process (default 6144 — size it
-ABOVE the hot working set: a budget just under it turns the LRU into
-sequential-scan thrash; 0 disables). Measured on the 4M index at 8
+fingerprinted by (size, mtime) so a rebuilt index invalidates, and each
+process's budget is derived from the host (_cache_budget). Measured on
+the 4M index at 8
 cores: warm 50-query batch 29.3s uncached -> 15.4s cached (see
 BENCH/query_decompose_r4.json). `Searcher.preload()` loads the tables at
 server construction — the Lucene-style index open — so even the FIRST
@@ -102,22 +101,12 @@ _POS_COLS = ["pos_stream", "block_pos_off"]
 
 #: Per-process decoded-table cache (executor workers, and the driver for
 #: driver-path plans): (path, want_pos) -> (fingerprint, table). LRU by
-#: access order, bounded by QKB_SERVE_CACHE_MB of Arrow buffer bytes per
+#: access order, bounded by _cache_budget() Arrow buffer bytes per
 #: process. Every read or write of it holds _TBL_LOCK: threads serving
 #: driver-path calls on one driver share it.
 _TBL_CACHE: "OrderedDict[tuple[str, bool], tuple]" = OrderedDict()
 _TBL_CACHE_BYTES = [0]
 _TBL_LOCK = threading.Lock()
-
-
-def _cache_budget() -> int:
-    import os
-
-    # default sized ABOVE the 4M-doc fixture index's decoded candidate set
-    # (~2.1 GB): a budget just under the working set turns the LRU into a
-    # sequential-scan thrash (each new file evicts the next task's first
-    # file) — measured as warm batches running at cold speed
-    return int(os.environ.get("QKB_SERVE_CACHE_MB", "6144")) << 20
 
 
 def _shm_dir() -> str | None:
@@ -151,8 +140,8 @@ def _shm_dir() -> str | None:
 #: quarter (3.9 GiB) would hold only one.
 _SHM_BUDGET_DIVISOR = 2
 _SHM_BUDGET_CAP = 16384 << 20
-#: shm dir -> default budget in bytes, derived once per process.
-_SHM_BUDGETS: dict[str, int] = {}
+#: budget name (or shm dir) -> bytes, derived once per process.
+_BUDGETS: dict[str, int] = {}
 
 
 def _phys_ram_bytes() -> int:
@@ -163,6 +152,33 @@ def _phys_ram_bytes() -> int:
         return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     except (OSError, ValueError):
         return 0
+
+
+def _host_budget(name: str, cap: int, share: int) -> int:
+    """min(cap, physical RAM // share) bytes, or cap when RAM is unknown;
+    derived once per process and logged."""
+    import logging
+
+    budget = _BUDGETS.get(name)
+    if budget is None:
+        ram = _phys_ram_bytes()
+        budget = _BUDGETS[name] = min(cap, ram // share) if ram > 0 else cap
+        logging.getLogger(__name__).info(
+            "%s: budget %d MiB (RAM %d MiB / %d, cap %d MiB)",
+            name, budget >> 20, ram >> 20, share, cap >> 20,
+        )
+    return budget
+
+
+def _cache_budget() -> int:
+    """Byte budget of this process's decoded-table LRU: the driver and one
+    Python worker per usable core together stay under half the RAM. The
+    6 GiB cap sits above the 4M-doc index's decoded candidate set (~2.1
+    GB): a budget just under a working set thrashes the LRU."""
+    import os
+
+    share = 2 * (len(os.sched_getaffinity(0)) + 1)
+    return _host_budget("decoded-table LRU", 6144 << 20, share)
 
 
 def _shm_budget(shm: str) -> int:
@@ -179,7 +195,7 @@ def _shm_budget(shm: str) -> int:
     env = os.environ.get("QKB_SERVE_SHM_MB")
     if env is not None:
         return int(env) << 20
-    budget = _SHM_BUDGETS.get(shm)
+    budget = _BUDGETS.get(shm)
     if budget is None:
         probe = shm
         while not os.path.isdir(probe) and os.path.dirname(probe) != probe:
@@ -193,7 +209,7 @@ def _shm_budget(shm: str) -> int:
         sizes = [b for b in (fs_bytes, ram) if b > 0]
         budget = min([b // _SHM_BUDGET_DIVISOR for b in sizes]
                      + [_SHM_BUDGET_CAP])
-        _SHM_BUDGETS[shm] = budget
+        _BUDGETS[shm] = budget
         logging.getLogger(__name__).info(
             "shared decoded-table cache %s: budget %d MiB (filesystem %d MiB, "
             "RAM %d MiB)", shm, budget >> 20, fs_bytes >> 20, ram >> 20,
@@ -289,7 +305,7 @@ def driver_map(sc, fn, items: list) -> list:
 
 
 def preload_files(spark, files: list[str], want_pos: bool = False,
-                  rounds: int = 2, pretouch_mb: int | None = None) -> int:
+                  pretouch_mb: int = 0) -> int:
     """Best-effort warm open of the serving caches — the index-open step
     of a serving process (Lucene-style: segments load at reader open, not
     on the first query). Returns the decoded byte count of every file as
@@ -310,14 +326,14 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
     with the cache enabled, a DISTRIBUTED decode first — each file is one
     work unit, LPT-packed by size into at most one task per slot
     (taskpack.run_packed) — publishes every file to the workers' host
-    caches; then `rounds` jobs of one task per slot load every file into
-    their worker's cache (mapping published entries instead of
-    re-decoding; repeats catch workers the scheduler skipped). The return
-    value is then the last round's first task's byte count.
+    caches; then two jobs of one task per slot load every file into their
+    worker's cache (mapping published entries instead of re-decoding; the
+    repeat catches workers the scheduler skipped). The return value is
+    then the last round's first task's byte count.
 
-    pretouch_mb (default QKB_SERVE_PRETOUCH_MB, 0=off): additionally grow
-    each worker's malloc arena by this many MB of touched-then-freed 32MB
-    blocks — the Python-worker analog of the JVM's AlwaysPreTouch. With
+    pretouch_mb (0=off): additionally grow each worker's malloc arena by
+    this many MB of touched-then-freed 32MB blocks — the Python-worker
+    analog of the JVM's AlwaysPreTouch. With
     the arena-reuse env from quickb_spark.session applied, the first
     query batch then allocates its temporaries from already-faulted pages
     instead of paying DRAM-bound page zeroing inside the batch (measured:
@@ -329,8 +345,6 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
 
     sc = spark.sparkContext
     par = max(1, sc.defaultParallelism)
-    if pretouch_mb is None:
-        pretouch_mb = int(os.environ.get("QKB_SERVE_PRETOUCH_MB", "0"))
     shm = _shm_dir()
 
     if shm is not None and not pretouch_mb and _workers_share_cache(sc):
@@ -386,7 +400,7 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
 
     out = 0
     with job_description(sc, "qkb preload: warm worker caches"):
-        for _ in range(max(1, rounds)):
+        for _ in range(2):
             res = sc.parallelize(range(par), par).map(_load).collect()
             out = res[0] if res else 0
     return out
@@ -414,7 +428,6 @@ def _cached_table(path: str, want_pos: bool, evict: bool = True):
 
     import pyarrow as pa
 
-    budget = _cache_budget()
     st = os.stat(path)
     fp = (st.st_size, st.st_mtime_ns)
     modes = (True,) if want_pos else (False, True)
@@ -462,8 +475,7 @@ def _cached_table(path: str, want_pos: bool, evict: bool = True):
                     tbl = mapped
                 if evict:
                     _shm_evict(shm, _shm_budget(shm))
-    if budget <= 0:
-        return tbl
+    budget = _cache_budget()
     with _TBL_LOCK:
         old = _TBL_CACHE.pop(key, None)
         if old is not None:

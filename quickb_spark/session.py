@@ -24,15 +24,16 @@ warm serving tasks drop to ~0 minor faults / ~0 stime and run 25% faster
 (phase-2 merge is DRAM-bound; its temps churn the same way).
 
 Cost: each worker's RSS retains its peak temp arena (~+0.3 GB on the 4M
-serving fixture). Size executors accordingly; override or disable any knob
-via QKB_MALLOC_MMAP_THRESHOLD / QKB_MALLOC_TRIM_THRESHOLD /
-QKB_ARROW_POOL (set to "" to skip a key).
+serving fixture). Size executors accordingly. A variable already set in
+the driver process is passed through as set: to change a value, set the
+real variable before calling `tune_builder`.
 
 These are env vars, not Spark confs, because glibc reads them at process
-start: they must reach the PYTHON WORKER environment. `tune_builder`
-routes them through `spark.executorEnv.*` (cluster executors) AND
-`os.environ` (local[] mode, where workers fork from the driver-side JVM
-and inherit its environment — executorEnv does not apply there).
+start: they must reach the PYTHON WORKER environment. A worker's
+environment is the driver JVM's overlaid with `spark.executorEnv.*`, on
+local masters too, so `tune_builder` writes each resolved value to both
+`spark.executorEnv.*` and `os.environ` (which the JVM gateway inherits
+at launch).
 """
 
 from __future__ import annotations
@@ -45,32 +46,26 @@ __all__ = ["worker_memory_env", "tune_builder"]
 #: threshold keeps every observed serving/merge temp block arena-resident;
 #: blocks above it still mmap/munmap (bounded RSS for pathological sizes).
 _DEFAULTS = {
-    "MALLOC_MMAP_THRESHOLD_": ("QKB_MALLOC_MMAP_THRESHOLD", "536870912"),
-    "MALLOC_TRIM_THRESHOLD_": ("QKB_MALLOC_TRIM_THRESHOLD", "536870912"),
-    "ARROW_DEFAULT_MEMORY_POOL": ("QKB_ARROW_POOL", "system"),
+    "MALLOC_MMAP_THRESHOLD_": "536870912",
+    "MALLOC_TRIM_THRESHOLD_": "536870912",
+    "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
 
 def worker_memory_env() -> dict[str, str]:
-    """The worker env vars to apply, after QKB_* overrides; a key whose
-    override is set to the empty string is dropped entirely."""
-    out = {}
-    for key, (ovr, default) in _DEFAULTS.items():
-        val = os.environ.get(ovr)
-        if val == "":
-            continue
-        out[key] = val if val is not None else default
-    return out
+    """The worker env vars to apply: each one's value in this process
+    when set, else its measured default."""
+    return {k: os.environ.get(k, v) for k, v in _DEFAULTS.items()}
 
 
 def tune_builder(builder):
     """Apply worker memory tuning to a SparkSession.Builder (chainable).
 
-    Sets spark.executorEnv.* for cluster executors and os.environ for
-    local[] mode's driver-forked workers. Call BEFORE getOrCreate() and,
-    for local mode, before the JVM gateway starts (the gateway inherits
-    os.environ at launch)."""
+    Writes each resolved value to spark.executorEnv.* and os.environ, so
+    workers and the driver see the same one. Call BEFORE getOrCreate()
+    and before the JVM gateway starts (the gateway inherits os.environ
+    at launch)."""
     for key, val in worker_memory_env().items():
         builder = builder.config(f"spark.executorEnv.{key}", val)
-        os.environ.setdefault(key, val)
+        os.environ[key] = val
     return builder

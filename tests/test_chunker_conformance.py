@@ -1,9 +1,12 @@
 """Byte-identity of our splitter vs the reference RecursiveTokenChunker.
 
-The reference implementation at /root/reference is executed directly (pure
-functions, character mode) as the oracle. tiktoken isn't installed in this
-container; character-length mode never calls it, so a stub module satisfies
-the import (reference src/chunking/utils.py imports it at module scope).
+The oracle is the splitter's output frozen in tests/golden/ after it was
+verified byte-identical to the reference (tests/golden_data.py). When the
+reference checkout is present, its implementation is also executed
+directly (pure functions, character mode) and compared. tiktoken isn't
+installed in this container; character-length mode never calls it, so a
+stub module satisfies the import (reference src/chunking/utils.py imports
+it at module scope).
 """
 
 from __future__ import annotations
@@ -21,6 +24,9 @@ from quickb_spark.config import (
 )
 from quickb_spark.chunking.splitter import split_document, split_text
 from tests.corpus_cases import EDGE_DOCS, random_docs
+from tests.golden_data import case_key, check
+
+GOLDEN = "recursive_token"
 
 
 _STUBS: dict[str, dict] = {
@@ -35,6 +41,8 @@ _STUBS: dict[str, dict] = {
 
 
 def _load_reference_chunker():
+    """The reference RecursiveTokenChunker class, or None when the
+    reference checkout is absent."""
     # The reference package imports network/tokenizer deps at module scope
     # that aren't installed here; character-mode chunking never calls them,
     # so empty stub modules satisfy the imports.
@@ -50,8 +58,8 @@ def _load_reference_chunker():
         sys.path.insert(0, "/root/reference/src")
     try:
         from chunking.recursive_token_chunker import RecursiveTokenChunker
-    except Exception as exc:  # pragma: no cover
-        pytest.skip(f"reference chunker unavailable: {exc}")
+    except ImportError:
+        return None
     return RecursiveTokenChunker
 
 
@@ -73,18 +81,24 @@ def _ref_split(cls, text, seps, size=400, overlap=0):
 @pytest.mark.parametrize("lang,text", EDGE_DOCS)
 def test_edge_docs_match_reference(ref_chunker_cls, lang, text):
     cfg = ChunkerConfig()
-    seps = separators_for_lang(lang, cfg)
-    expected = _ref_split(ref_chunker_cls, text, seps)
-    assert split_document(text, lang, cfg) == expected
+    got = split_document(text, lang, cfg)
+    check(GOLDEN, case_key("edge", lang, text), got)
+    if ref_chunker_cls is not None:
+        seps = separators_for_lang(lang, cfg)
+        assert got == _ref_split(ref_chunker_cls, text, seps)
 
 
 @pytest.mark.parametrize("size,overlap", [(400, 0), (400, 50), (100, 20), (50, 0), (1000, 200), (7, 3)])
 def test_random_docs_match_reference(ref_chunker_cls, size, overlap):
     for lang, text in random_docs(60, seed=size * 1000 + overlap):
-        for seps in (DEFAULT_SEPARATORS, PYTHON_SEPARATORS):
-            expected = _ref_split(ref_chunker_cls, text, seps, size, overlap)
+        for name, seps in (("default", DEFAULT_SEPARATORS),
+                           ("python", PYTHON_SEPARATORS)):
             got = split_text(text, size, overlap, seps)
-            assert got == expected, (lang, size, overlap, seps, text[:80])
+            check(GOLDEN, case_key("random", size, overlap, name, text), got)
+            if ref_chunker_cls is not None:
+                expected = _ref_split(ref_chunker_cls, text, seps, size,
+                                      overlap)
+                assert got == expected, (lang, size, overlap, seps, text[:80])
 
 
 def test_empty_and_whitespace():

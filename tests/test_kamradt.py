@@ -2,8 +2,9 @@
 DIRECTLY with a deterministic embedder injected through its litellm seam
 (the embedding call is the only nondeterministic/network part of the
 reference algorithm; the threshold binary search is pure given
-embeddings), and our implementation must be byte-identical on every
-document."""
+embeddings) when its checkout is present, and our implementation must be
+byte-identical on every document. The verified output is frozen in
+tests/golden/ (tests/golden_data.py)."""
 
 from __future__ import annotations
 
@@ -20,10 +21,14 @@ from quickb_spark.chunking.kamradt import (
 )
 from tests.corpus_cases import EDGE_DOCS, random_docs
 from tests.test_chunker_conformance import _load_reference_chunker  # stubs deps
+from tests.golden_data import case_key, check
+
+GOLDEN = "kamradt"
 
 
 def _ref_kamradt_split(text: str, avg_chunk: int = 400, min_chunk: int = 50):
-    _load_reference_chunker()  # installs stub modules + reference sys.path
+    if _load_reference_chunker() is None:  # installs stubs + sys.path
+        return None
     embed = hash_embedder()
 
     def fake_embedding(model=None, input=None, api_base=None, **kw):
@@ -57,17 +62,21 @@ def _ref_kamradt_split(text: str, avg_chunk: int = 400, min_chunk: int = 50):
 
 @pytest.mark.parametrize("lang,text", EDGE_DOCS)
 def test_edge_docs_match_reference(lang, text):
-    want = _ref_kamradt_split(text)
     got = kamradt_split(text, hash_embedder())
-    assert got == want
+    check(GOLDEN, case_key("edge", text), got)
+    want = _ref_kamradt_split(text)
+    if want is not None:
+        assert got == want
 
 
 @pytest.mark.parametrize("avg_chunk,min_chunk", [(400, 50), (200, 50), (400, 100), (150, 30)])
 def test_random_docs_match_reference(avg_chunk, min_chunk):
     for lang, text in random_docs(25, seed=avg_chunk + min_chunk):
-        want = _ref_kamradt_split(text, avg_chunk, min_chunk)
         got = kamradt_split(text, hash_embedder(), avg_chunk, min_chunk)
-        assert got == want, (lang, avg_chunk, min_chunk, text[:80])
+        check(GOLDEN, case_key("random", avg_chunk, min_chunk, text), got)
+        want = _ref_kamradt_split(text, avg_chunk, min_chunk)
+        if want is not None:
+            assert got == want, (lang, avg_chunk, min_chunk, text[:80])
 
 
 def test_combine_pieces_windows():

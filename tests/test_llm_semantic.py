@@ -1,8 +1,10 @@
 """LLMSemanticChunker conformance: the reference pipeline is executed
 DIRECTLY with the deterministic responder injected through its litellm
 completion seam (the LLM call is the only nondeterministic/network part;
-window assembly, protocol parsing, and merging are pure), and our
-implementation must be byte-identical on every document."""
+window assembly, protocol parsing, and merging are pure) when its checkout
+is present, and our implementation must be byte-identical on every
+document. The verified output is frozen in tests/golden/
+(tests/golden_data.py)."""
 
 from __future__ import annotations
 
@@ -19,6 +21,9 @@ from quickb_spark.chunking.llm_semantic import (
 )
 from tests.corpus_cases import EDGE_DOCS, random_docs
 from tests.test_chunker_conformance import _load_reference_chunker  # stubs deps
+from tests.golden_data import case_key, check
+
+GOLDEN = "llm_semantic"
 
 
 class _FakeTqdm:
@@ -36,7 +41,8 @@ class _FakeTqdm:
 
 
 def _ref_llm_split(text: str):
-    _load_reference_chunker()  # installs stub modules + reference sys.path
+    if _load_reference_chunker() is None:  # installs stubs + sys.path
+        return None
     import chunking.llm_semantic_chunker as ref_mod
 
     def fake_completion(model=None, messages=None, temperature=None,
@@ -66,16 +72,20 @@ def _ref_llm_split(text: str):
 
 @pytest.mark.parametrize("lang,text", EDGE_DOCS)
 def test_edge_docs_match_reference(lang, text):
-    want = _ref_llm_split(text)
     got = llm_semantic_split(text)
-    assert got == want
+    check(GOLDEN, case_key("edge", text), got)
+    want = _ref_llm_split(text)
+    if want is not None:
+        assert got == want
 
 
 def test_random_docs_match_reference():
     for lang, text in random_docs(40, seed=808):
-        want = _ref_llm_split(text)
         got = llm_semantic_split(text)
-        assert got == want, (lang, text[:80])
+        check(GOLDEN, case_key("random", text), got)
+        want = _ref_llm_split(text)
+        if want is not None:
+            assert got == want, (lang, text[:80])
 
 
 def test_parse_split_response():

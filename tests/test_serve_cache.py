@@ -1,7 +1,8 @@
 """Per-worker decoded-table cache of the direct serving path: fingerprint
-invalidation, LRU byte-budget eviction, and the disable switch. Pure
-Python/pyarrow — no SparkSession (the cache lives inside executor worker
-processes; end-to-end identity is covered by tests/test_searcher.py)."""
+invalidation, LRU byte-budget eviction, and the budgets derived from the
+host. Pure Python/pyarrow — no SparkSession (the cache lives inside
+executor worker processes; end-to-end identity is covered by
+tests/test_searcher.py)."""
 
 from __future__ import annotations
 
@@ -52,7 +53,7 @@ def _fresh_cache(monkeypatch):
 
 
 def test_cache_hit_and_fingerprint_invalidation(tmp_path, monkeypatch):
-    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "64")
+    monkeypatch.setattr(sd, "_cache_budget", lambda: 64 << 20)
     p = tmp_path / "seg.parquet"
     _seg_file(p, 50, seed=1)
     a = sd._cached_table(str(p), want_pos=False)
@@ -68,7 +69,7 @@ def test_cache_hit_and_fingerprint_invalidation(tmp_path, monkeypatch):
 
 
 def test_cache_lru_eviction_respects_budget(tmp_path, monkeypatch):
-    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "1")  # 1 MiB budget
+    monkeypatch.setattr(sd, "_cache_budget", lambda: 1 << 20)
     paths = []
     for i in range(6):
         p = tmp_path / f"seg{i}.parquet"
@@ -83,22 +84,13 @@ def test_cache_lru_eviction_respects_budget(tmp_path, monkeypatch):
     assert (paths[0], False) not in sd._TBL_CACHE
 
 
-def test_cache_disable_reads_fresh(tmp_path, monkeypatch):
-    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "0")
-    p = tmp_path / "seg.parquet"
-    _seg_file(p, 10, seed=3)
-    a = sd._cached_table(str(p), want_pos=False)
-    b = sd._cached_table(str(p), want_pos=False)
-    assert a is not b and not sd._TBL_CACHE and sd._TBL_CACHE_BYTES[0] == 0
-
-
 def test_cache_thread_safe_under_eviction(tmp_path, monkeypatch):
     """Threads sharing one process's LRU (driver-path callers) while the
     budget forces evictions: every read returns its file's table and the
     byte count matches the entries left."""
     from concurrent.futures import ThreadPoolExecutor
 
-    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "1")
+    monkeypatch.setattr(sd, "_cache_budget", lambda: 1 << 20)
     paths = []
     for i in range(6):
         p = tmp_path / f"seg{i}.parquet"
@@ -270,7 +262,7 @@ def test_shm_budget_default_fits_a_small_host(tmp_path, monkeypatch):
     the cache filesystem and RAM, so a small host's cache stays below its
     RAM even on a large tmpfs."""
     monkeypatch.delenv("QKB_SERVE_SHM_MB", raising=False)
-    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    monkeypatch.setattr(sd, "_BUDGETS", {})
     ram = 2 << 30
 
     class _Vfs:
@@ -284,18 +276,75 @@ def test_shm_budget_default_fits_a_small_host(tmp_path, monkeypatch):
     assert 0 < budget < ram
     # a small filesystem bounds it too
     _Vfs.f_blocks = (256 << 20) // 4096
-    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    monkeypatch.setattr(sd, "_BUDGETS", {})
     assert 0 < sd._shm_budget(shm) < 256 << 20
     # computed once per process: a later call reuses the value
     _Vfs.f_blocks = (64 << 30) // 4096
     assert sd._shm_budget(shm) < 256 << 20
     # a large host is capped
     monkeypatch.setattr(sd, "_phys_ram_bytes", lambda: 256 << 30)
-    monkeypatch.setattr(sd, "_SHM_BUDGETS", {})
+    monkeypatch.setattr(sd, "_BUDGETS", {})
     assert sd._shm_budget(shm) == sd._SHM_BUDGET_CAP
     # the env var still overrides
     monkeypatch.setenv("QKB_SERVE_SHM_MB", "7")
     assert sd._shm_budget(shm) == 7 << 20
+
+
+def _fake_host(monkeypatch, ram: int, cores: int) -> None:
+    monkeypatch.setattr(sd, "_BUDGETS", {})
+    monkeypatch.setattr(sd, "_phys_ram_bytes", lambda: ram)
+    monkeypatch.setattr(os, "sched_getaffinity",
+                        lambda _pid: set(range(cores)))
+
+
+def _lexicon_cap_mb() -> int:
+    """The max_mb Searcher.load_lexicon passes when the caller sets none."""
+    from quickb_spark.query.searcher import Searcher
+
+    s = Searcher.__new__(Searcher)
+    s.n_buckets = 1
+    seen = []
+    s._read_lexicon = lambda _buckets, max_mb: seen.append(max_mb)
+    assert s.load_lexicon() is False
+    return seen[0]
+
+
+def test_host_budgets_fit_a_small_host(monkeypatch):
+    """On a 2 GiB, 4-core host the driver and one worker per core hold
+    LRUs that together stay under half the RAM, and the driver lexicon
+    cap is 1/16 of the RAM."""
+    _fake_host(monkeypatch, 2 << 30, 4)
+    budget = sd._cache_budget()
+    assert budget == (2 << 30) // 10
+    assert 5 * budget <= 1 << 30
+    assert _lexicon_cap_mb() == 128
+    # a process pinned to one core leaves room for fewer workers
+    _fake_host(monkeypatch, 2 << 30, 1)
+    assert sd._cache_budget() == (2 << 30) // 4
+
+
+def test_host_budgets_fit_a_large_host(monkeypatch):
+    """A large host, or one whose RAM is unknown, gets the caps."""
+    for ram in (256 << 30, 0):
+        _fake_host(monkeypatch, ram, 4)
+        assert sd._cache_budget() == 6144 << 20
+        assert _lexicon_cap_mb() == 1024
+
+
+def test_host_budgets_derived_and_logged_once(monkeypatch, caplog):
+    import logging
+
+    _fake_host(monkeypatch, 2 << 30, 4)
+    with caplog.at_level(logging.INFO, logger=sd.__name__):
+        first = sd._cache_budget()
+        _lexicon_cap_mb()
+        # a later probe of the host is not consulted again
+        monkeypatch.setattr(sd, "_phys_ram_bytes", lambda: 256 << 30)
+        assert sd._cache_budget() == first
+        assert _lexicon_cap_mb() == 128
+    logged = [r.getMessage() for r in caplog.records]
+    assert sum("decoded-table LRU" in m for m in logged) == 1
+    assert sum("driver lexicon" in m for m in logged) == 1
 
 
 def test_driver_open_needs_the_workers_cache_settings(tmp_path,

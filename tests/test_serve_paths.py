@@ -181,7 +181,7 @@ def test_concurrent_topk_matches_serial(spark, built, monkeypatch):
     the serial answers and leave the LRU's byte count consistent."""
     idx, phrases = built
     monkeypatch.setenv("QKB_SERVE_SHM_DIR", "")  # every miss decodes
-    monkeypatch.setenv("QKB_SERVE_CACHE_MB", "1")
+    monkeypatch.setattr(sd, "_cache_budget", lambda: 1 << 20)
     s = _searcher(spark, idx)
     calls = [
         ([q], {}) for q in QUERIES[:6]

@@ -1,29 +1,24 @@
 """Worker memory tuning (quickb_spark/session.py): env resolution and
 builder application. The performance effect is recorded in
 BENCH/query_decompose_r4.json (r4d); here we pin the plumbing — defaults,
-QKB_* overrides, empty-string disables, and executorEnv conf keys."""
+values preset in the driver passed through, and executorEnv conf keys."""
 
 import os
 from unittest import mock
 
-from quickb_spark.session import tune_builder, worker_memory_env
+from quickb_spark.session import _DEFAULTS, tune_builder, worker_memory_env
+
+
+def _without_tuning_env() -> dict:
+    return {k: v for k, v in os.environ.items() if k not in _DEFAULTS}
 
 
 def test_defaults_present():
-    env = worker_memory_env()
+    with mock.patch.dict(os.environ, _without_tuning_env(), clear=True):
+        env = worker_memory_env()
     assert env["MALLOC_MMAP_THRESHOLD_"] == "536870912"
     assert env["MALLOC_TRIM_THRESHOLD_"] == "536870912"
     assert env["ARROW_DEFAULT_MEMORY_POOL"] == "system"
-
-
-def test_override_and_disable():
-    with mock.patch.dict(os.environ, {
-        "QKB_MALLOC_MMAP_THRESHOLD": "1048576",
-        "QKB_ARROW_POOL": "",  # empty string drops the key entirely
-    }):
-        env = worker_memory_env()
-    assert env["MALLOC_MMAP_THRESHOLD_"] == "1048576"
-    assert "ARROW_DEFAULT_MEMORY_POOL" not in env
 
 
 class _FakeBuilder:
@@ -38,14 +33,12 @@ class _FakeBuilder:
 def test_tune_builder_sets_executor_env_and_process_env():
     b = _FakeBuilder()
     # keep the test hermetic: drop any pre-set process env for these keys
-    clean = {k: v for k, v in os.environ.items()
-             if k not in worker_memory_env()}
-    with mock.patch.dict(os.environ, clean, clear=True):
+    with mock.patch.dict(os.environ, _without_tuning_env(), clear=True):
         out = tune_builder(b)
         assert out is b
-        for k, v in worker_memory_env().items():
+        for k, v in _DEFAULTS.items():
             assert b.conf[f"spark.executorEnv.{k}"] == v
-            # local[] mode: forked workers inherit the driver process env
+            # the driver process (and the JVM it launches) gets the same
             assert os.environ[k] == v
 
 
@@ -56,3 +49,16 @@ def test_tune_builder_does_not_clobber_existing_process_env():
     ):
         tune_builder(b)
         assert os.environ["MALLOC_MMAP_THRESHOLD_"] == "7777"
+
+
+def test_preset_env_reaches_executor_env():
+    """A value set in the driver before tune_builder is the one the
+    workers get: spark.executorEnv.* overlays the worker environment on
+    every master, so writing the default there would override it."""
+    b = _FakeBuilder()
+    with mock.patch.dict(
+        os.environ, {"MALLOC_MMAP_THRESHOLD_": "7777"}
+    ):
+        tune_builder(b)
+        assert os.environ["MALLOC_MMAP_THRESHOLD_"] == "7777"
+        assert b.conf["spark.executorEnv.MALLOC_MMAP_THRESHOLD_"] == "7777"
