@@ -240,9 +240,11 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
         # the scale corpus dirs hold many few-MB files; default
         # 128MB maxPartitionBytes + 4MB openCost would coalesce them into a
         # handful of scan partitions for the Spark-side scans (the
-        # documents= staging write, the verification reads). build_index's
-        # phases read their files with pyarrow and never consult these (at
-        # production scale files are row-group sized and this is moot)
+        # verification reads). build_index reads a plain parquet scan's
+        # files in place with pyarrow and never consults these; only a
+        # documents= DataFrame of another plan shape is staged by a Spark
+        # write (at production scale files are row-group sized and this
+        # is moot)
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         # lz4 shuffle compression ON (the Spark default): even with shuffle

@@ -36,12 +36,14 @@ class IndexFS:
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError("IndexFS needs an active SparkSession")
-        self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-        self._fs = self._path(base).getFileSystem(self._conf)
+        # resolved once: each package hop is a py4j round trip
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
+        self._IOUtils = spark._jvm.org.apache.commons.io.IOUtils
+        conf = spark._jsc.hadoopConfiguration()
+        self._fs = self._path(base).getFileSystem(conf)
 
     def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
+        return self._Path(p)
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._path(path)))
@@ -65,9 +67,7 @@ class IndexFS:
     def read_text(self, path: str) -> str:
         stream = self._fs.open(self._path(path))
         try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
+            return self._IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
 

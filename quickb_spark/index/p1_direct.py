@@ -1,8 +1,9 @@
 """Phase-1 build as batched direct-pyarrow tasks writing sorted runs.
 
 This is the only phase 1 of the engine: every build input (`corpus_uri=`,
-a staged `documents=` or `chunks=` DataFrame) and every streaming delta
-batch runs it. Why it looks like this (round-3 measurement): a fused
+a `documents=` DataFrame read in place or staged, a staged `chunks=`
+DataFrame), given as a file listing [(path, bytes)], and every streaming
+delta batch runs it. Why it looks like this (round-3 measurement): a fused
 chunk+tokenize pandas UDF whose OUTPUT — ~10^8 per-chunk term arrays —
 crosses the JVM<->Python Arrow channel has a large component that does
 NOT parallelize with cores (decomposed: kernel+channel 131.4s @4c ->
@@ -91,6 +92,9 @@ from quickb_spark.taskpack import job_description, lpt_bins, run_packed
 
 __all__ = [
     "list_parquet_files",
+    "documents_files",
+    "file_listing",
+    "scan_leaf",
     "plan_groups",
     "build_flat_runs",
     "presample_hot_direct",
@@ -115,19 +119,84 @@ _SAMPLE_UNITS = 64
 
 
 def list_parquet_files(uri: str) -> list[tuple[str, int]]:
-    """[(absolute-path, bytes)] of the data files under a parquet dir/URI,
-    sorted by path (a deterministic base for the group plan)."""
+    """[(path, bytes)] of the data files under a parquet dir/URI (paths as
+    pyarrow_fs_for takes them), sorted: the group plan's base."""
     from pyarrow import fs as pafs
 
     fsys, root = pyarrow_fs_for(uri)
+    local = isinstance(fsys, pafs.LocalFileSystem)
+    prefix = "" if local else uri[: uri.rstrip("/").rfind(root.rstrip("/"))]
     infos = fsys.get_file_info(pafs.FileSelector(root, recursive=True))
     out = [
-        (i.path, int(i.size or 0))
+        (prefix + i.path, int(i.size or 0))
         for i in infos
         if i.type == pafs.FileType.File and i.base_name.endswith(".parquet")
     ]
     out.sort()
     return out
+
+
+def file_listing(uris: list[str]) -> list[tuple[str, int]] | None:
+    """[(path, bytes)] of Hadoop's percent-encoded file URIs, sorted, `file:`
+    ones decoded; None when there are none or pyarrow cannot reach one."""
+    from urllib.parse import unquote, urlsplit
+
+    from pyarrow import fs as pafs
+
+    paths = [unquote(urlsplit(u).path) if u.startswith("file:") else u
+             for u in uris]
+    try:
+        fsys, _ = pyarrow_fs_for(paths[0])
+        infos = fsys.get_file_info([pyarrow_fs_for(p)[1] for p in paths])
+    except (IndexError, OSError, ValueError, NotImplementedError):
+        return None
+    if any(i.type != pafs.FileType.File for i in infos):
+        return None
+    return sorted((p, int(i.size)) for p, i in zip(paths, infos))
+
+
+def _class_name(obj) -> str:
+    return obj.getClass().getSimpleName()
+
+
+def scan_leaf(df):
+    """(class name, node) of the analyzed plan's leaf under `SubqueryAlias`
+    nodes and `Project`s of bare columns (the optimized plan costs ~0.3 s
+    cold), or None (a computed or renamed column, or a documents column
+    that is not a string)."""
+    types = dict(df.dtypes)
+    if any(types.get(c) != "string" for c in DOC_COLUMNS):
+        return None
+    plan = df._jdf.queryExecution().analyzed()
+    while True:
+        name = _class_name(plan)
+        if name == "Project":
+            exprs = plan.projectList()
+            kinds = {_class_name(exprs.apply(i)) for i in range(exprs.size())}
+            if kinds != {"AttributeReference"}:  # an alias renames a column
+                return None
+        elif name != "SubqueryAlias":
+            return name, plan
+        plan = plan.child()
+
+
+def documents_files(documents) -> list[tuple[str, int]] | None:
+    """The file listing of a plain parquet scan (scan_leaf over a parquet
+    `HadoopFsRelation`, no documents column a partition column), or None
+    for a filter, an in-memory DataFrame or any other plan."""
+    leaf = scan_leaf(documents)
+    if leaf is None or leaf[0] != "LogicalRelation":
+        return None
+    rel = leaf[1].relation()
+    if (
+        _class_name(rel) != "HadoopFsRelation"
+        or _class_name(rel.fileFormat()) != "ParquetFileFormat"
+        or not set(DOC_COLUMNS).isdisjoint(rel.partitionSchema().fieldNames())
+    ):
+        return None
+    seq = documents.sparkSession._jvm.scala.collection.immutable.ArraySeq
+    uris = seq.unsafeWrapArray(rel.location().inputFiles()).mkString("\n")
+    return file_listing(uris.split("\n")) if uris else None
 
 
 def plan_groups(
@@ -275,7 +344,6 @@ class _TaskAccumulator:
 def _p1_task(
     task_id: int,
     paths: list[str],
-    corpus_uri: str,
     flat_uri: str,
     ds_uri: str,
     chunker_cfg: ChunkerConfig,
@@ -298,7 +366,6 @@ def _p1_task(
     # executors don't have (real clusters pin slots; the scaling protocol
     # must too). Idempotent per reused worker process.
     pa.set_cpu_count(1)
-    fsys, _ = pyarrow_fs_for(corpus_uri)
     ofs, flat_root = pyarrow_fs_for(flat_uri)
     _, ds_root = pyarrow_fs_for(ds_uri)
 
@@ -306,7 +373,8 @@ def _p1_task(
     repo_h: dict[str, int] = {}
     pending = 0
     for path in paths:
-        with fsys.open_input_file(path) as f:
+        fsys, fpath = pyarrow_fs_for(path)
+        with fsys.open_input_file(fpath) as f:
             pf = pq.ParquetFile(f)
             # row-group iteration bounds task memory by the writer's row
             # group size, not the file size (256MB corpus files stay cheap)
@@ -439,7 +507,7 @@ def _p1_task(
 
 def build_flat_runs(
     spark,
-    corpus_uri: str,
+    files: list[tuple[str, int]],
     flat_dir: str,
     doc_stats_dir: str,
     cfg: EngineConfig,
@@ -447,17 +515,16 @@ def build_flat_runs(
     n_tasks: int | None = None,
     chunked: bool = False,
 ) -> dict:
-    """Plan + run the direct phase 1 over the parquet files under
-    `corpus_uri`: documents, or pre-chunked (doc_id, text) rows when
-    `chunked`. -> {n_docs, sum_dl, n_postings, buckets}; `buckets` lists
-    the term buckets that received postings.
+    """Plan + run the direct phase 1 over the parquet `files` [(path,
+    bytes)]: documents, or pre-chunked (doc_id, text) rows when `chunked`.
+    -> {n_docs, sum_dl, n_postings, buckets}; `buckets` lists the term
+    buckets that received postings.
 
-    Raises (before launching any task) if the corpus/flat FS scheme is not
-    reachable from Python.
+    Raises (before launching any task) if there are no files or the flat
+    FS scheme is not reachable from Python.
     """
-    files = list_parquet_files(corpus_uri)
     if not files:
-        raise ValueError(f"no parquet data files under {corpus_uri}")
+        raise ValueError("no parquet data files to build from")
     cores = spark.sparkContext.defaultParallelism
     if n_tasks is None:
         total = sum(s for _, s in files)
@@ -495,7 +562,7 @@ def build_flat_runs(
     def _run(item):
         tid, paths = item
         return _p1_task(
-            tid, paths, corpus_uri, flat_dir, doc_stats_dir,
+            tid, paths, flat_dir, doc_stats_dir,
             chunker_cfg, hot_h, nb, sb, chunked,
         )
 
@@ -521,7 +588,7 @@ def build_flat_runs(
 
 def _sample_task(
     path: str, k: int, nk: int, per_file_frac: float,
-    corpus_uri: str, chunker_cfg: ChunkerConfig, chunked: bool = False,
+    chunker_cfg: ChunkerConfig, chunked: bool = False,
 ) -> tuple[int, int, Counter]:
     """Hot-term presample worker: df-per-term over the k-th of nk evenly
     spaced row slices of one file, sampling per_file_frac of its rows
@@ -533,7 +600,7 @@ def _sample_task(
 
     pa.set_cpu_count(1)  # one core slot per task (see _p1_task)
 
-    fsys, _ = pyarrow_fs_for(corpus_uri)
+    fsys, fpath = pyarrow_fs_for(path)
     df: Counter = Counter()
     n_chunks = 0
     n_postings = 0
@@ -542,7 +609,7 @@ def _sample_task(
     # [lo, lo+take) are fetched — same sampled rows as a whole-file read
     # (asserted in tests/test_p1_direct.py), a fraction of the bytes. At a
     # 2% sample this cuts most of phase 0's read volume.
-    with fsys.open_input_file(path) as f:
+    with fsys.open_input_file(fpath) as f:
         pf = pq.ParquetFile(f)
         n = pf.metadata.num_rows
         lo = (n * k) // nk
@@ -641,7 +708,7 @@ def _hot_from_samples(
 
 def presample_hot_direct(
     spark,
-    corpus_uri: str,
+    files: list[tuple[str, int]],
     cfg: EngineConfig,
     frac: float,
     sample_margin: float,
@@ -649,8 +716,8 @@ def presample_hot_direct(
     chunked: bool = False,
 ) -> tuple[list[str], int]:
     """Phase-0 hot-term detection over a ~frac row sample, striped across
-    FILES (a row sample's df statistics on uniformly written corpora) of
-    documents, or of pre-chunked rows when `chunked`.
+    the parquet `files` (a row sample's df statistics on uniformly written
+    corpora) of documents, or of pre-chunked rows when `chunked`.
     -> (hot_terms sorted, est_total_postings).
 
     The sample is spread over a FIXED number of work units (64), each
@@ -661,12 +728,12 @@ def presample_hot_direct(
     sampled work is small, so one task per unit would be almost all
     Spark's per-task fixed cost. Results merge in unit order, so the hot
     set does not depend on the packing either."""
-    units, costs, eff_frac = _sample_units(list_parquet_files(corpus_uri), frac)
+    units, costs, eff_frac = _sample_units(files, frac)
     chunker_cfg = cfg.chunker
 
     def _run(unit):
         path, k, nk, pf = unit
-        return _sample_task(path, k, nk, pf, corpus_uri, chunker_cfg, chunked)
+        return _sample_task(path, k, nk, pf, chunker_cfg, chunked)
 
     parts = run_packed(
         spark.sparkContext, _run, units, costs,

@@ -4,8 +4,8 @@ Build pipeline (SURVEY.md §7 step 3, north-star core) — format v5. One
 engine builds every index, whatever its input, and feeds the streaming
 delta tier (streaming/incremental.py):
 
-  input ──► `corpus_uri=` (a parquet documents table) is read in place;
-             a `documents=` DataFrame, or a pre-chunked `chunks=`
+  input ──► `corpus_uri=` and a plain parquet-scan `documents=` are read
+             in place; any other `documents=`, or a pre-chunked `chunks=`
              (doc_id, text) DataFrame, is staged to <index>/_staged_input/
              with one Spark parquet write, deleted once phase 1 commits
         ──► phase 0: hot-term detection on a ~2% file-striped input
@@ -180,8 +180,8 @@ def check_flat_layout(fs: IndexFS, flat_dir: str) -> None:
         problems.append(f"no {RUNS_MARKER} marker")
     runs = list_parquet_files(flat_dir)
     if runs:
-        fsys, _ = pyarrow_fs_for(flat_dir)
-        with fsys.open_input_file(runs[0][0]) as f:
+        fsys, path = pyarrow_fs_for(runs[0][0])
+        with fsys.open_input_file(path) as f:
             names = pq.ParquetFile(f).schema_arrow.names
         missing = [c for c in _RUN_KEY_COLUMNS if c not in names]
         if missing:
@@ -210,17 +210,19 @@ def build_index(
     Input is `corpus_uri` (the documents table's parquet location), the
     `documents` DataFrame, or a pre-chunked `chunks` DataFrame with a long
     `doc_id` and a string `text` column (chunking.udf.chunk_documents or
-    any registry chunker). All three run the one engine: phase 0 samples
-    hot terms (p1_direct.presample_hot_direct), phase 1 writes per-bucket
-    sorted runs in batched pyarrow tasks that never cross the
-    JVM<->Python Arrow channel (p1_direct.build_flat_runs), and phase 2
-    k-way merge-encodes them (p2_direct.merge_encode_buckets). A
-    `documents` or `chunks` DataFrame is first staged to
-    `<index_dir>/_staged_input/` with one Spark parquet write, and the
-    staged copy is deleted once phase 1 has committed. `corpus_uri` wins
-    when given with either. A `chunks=chunk_documents(docs)` build is
-    byte-identical to a `documents=docs` build under the same hot set
-    (tests/test_p1_direct.py).
+    any registry chunker). All three run the one engine on one listing of
+    the input files: phase 0 samples hot terms
+    (p1_direct.presample_hot_direct), phase 1 writes per-bucket sorted
+    runs in batched pyarrow tasks that never cross the JVM<->Python Arrow
+    channel (p1_direct.build_flat_runs), and phase 2 k-way merge-encodes
+    them (p2_direct.merge_encode_buckets). A plain parquet scan
+    `documents=spark.read.parquet(dir)` is read in place like
+    `corpus_uri=dir` (p1_direct.documents_files); any other `documents`
+    plan and every `chunks` DataFrame is staged to
+    `<index_dir>/_staged_input/` with one Spark parquet write, deleted once
+    phase 1 has committed. `corpus_uri` wins when given with either. A
+    `chunks=chunk_documents(docs)` build is byte-identical to a
+    `documents=docs` build under the same hot set (tests/test_p1_direct.py).
     """
     if chunks is not None and documents is not None:
         raise ValueError("pass at most one of chunks= or documents=")
@@ -245,24 +247,31 @@ def build_index(
     staged_dir = join_path(index_dir, STAGED_INPUT)
 
     p1_needed = not fs.exists(join_path(flat_dir, "_SUCCESS"))
-    # the input shape phase 0 and phase 1 read: pre-chunked rows or documents
+    # the input files phase 0 and phase 1 read, and their shape
     chunked = False
-    if p1_needed and corpus_uri is None:
-        staged = documents if documents is not None else chunks
-        if staged is None:
-            raise ValueError(
-                "no usable input (chunks=/documents=/corpus_uri=) and no "
-                f"existing flat checkpoint at {flat_dir}"
-            )
-        chunked = documents is None
-        stage_documents(spark, staged, staged_dir, chunked)
-        corpus_uri = staged_dir
-        _mark(f"phase1 stage {'chunks' if chunked else 'documents'}")
     if p1_needed:
-        from quickb_spark.index.p1_direct import list_parquet_files
+        from quickb_spark.index import p1_direct
 
-        if not list_parquet_files(corpus_uri):
-            raise ValueError(f"no parquet data files under {corpus_uri}")
+        if corpus_uri is not None:
+            files = p1_direct.list_parquet_files(corpus_uri)
+        elif documents is not None and (
+            files := p1_direct.documents_files(documents)
+        ):
+            _mark("phase1 read documents in place")
+        else:
+            staged = documents if documents is not None else chunks
+            if staged is None:
+                raise ValueError(
+                    "no usable input (chunks=/documents=/corpus_uri=) and no "
+                    f"existing flat checkpoint at {flat_dir}"
+                )
+            chunked = documents is None
+            stage_documents(spark, staged, staged_dir, chunked)
+            _mark(f"phase1 stage {'chunks' if chunked else 'documents'}")
+            files = p1_direct.list_parquet_files(staged_dir)
+        if not files:
+            where = corpus_uri or staged_dir
+            raise ValueError(f"no parquet data files under {where}")
 
     # ---- phase 0: hot-term detection on a ~2% input sample, BEFORE phase 1.
     # Salt is a pure function of (term in hot set, doc_id), so knowing the
@@ -271,11 +280,9 @@ def build_index(
     # with the same salt assignment it started with; the streaming delta
     # tier salts with the same persisted set.
     if p1_needed and not fs.exists(hot_path):
-        from quickb_spark.index.p1_direct import presample_hot_direct
-
         frac = _HOT_PRESAMPLE_FRACTION
-        hot, est_postings = presample_hot_direct(
-            spark, corpus_uri, cfg, frac, _HOT_SAMPLE_MARGIN, _HOT_MAX_TERMS,
+        hot, est_postings = p1_direct.presample_hot_direct(
+            spark, files, cfg, frac, _HOT_SAMPLE_MARGIN, _HOT_MAX_TERMS,
             chunked=chunked,
         )
         fs.write_text_atomic(
@@ -298,10 +305,8 @@ def build_index(
     # ---- phase 1: sorted runs per (task, bucket) plus doc-stats runs -----
     p1_metrics: dict | None = None
     if p1_needed:
-        from quickb_spark.index.p1_direct import build_flat_runs
-
-        p1_metrics = build_flat_runs(
-            spark, corpus_uri, flat_dir,
+        p1_metrics = p1_direct.build_flat_runs(
+            spark, files, flat_dir,
             join_path(index_dir, "doc_stats"), cfg, hot_terms,
             chunked=chunked,
         )

@@ -5,9 +5,10 @@ stream and become queryable in two tiers, the classic base+delta design.
 Every tier is written by the same direct engine as the base build:
 
 1. **Ingest** (`start_incremental_ingest`): readStream over a documents
-   source → `foreachBatch` stages each micro-batch to parquet and runs the
-   phase-1 tasks on it (p1_direct.build_flat_runs), salted with the base's
-   persisted hot set. A batch lands as
+   source → `foreachBatch` runs the phase-1 tasks (p1_direct.build_flat_runs)
+   on each micro-batch, salted with the base's persisted hot set: a plain
+   parquet file stream's epoch files in place, any other batch staged to
+   parquet first. A batch lands as
 
      flat_delta/ingest_batch=<stream>-<epoch>/flat/bucket=<b>/run-t<t>.parquet
      flat_delta/ingest_batch=<stream>-<epoch>/doc_stats/run-t<t>.parquet
@@ -108,9 +109,11 @@ def _ingest_batch(
     cfg: EngineConfig,
     stream: str,
     epoch: int,
+    files: list[tuple[str, int]] | None = None,
 ) -> None:
-    """Write one micro-batch of documents as a committed delta batch."""
-    from quickb_spark.index.p1_direct import build_flat_runs
+    """Write one micro-batch as a committed delta batch, read from `files`
+    if given, else in place if a plain parquet scan, else staged."""
+    from quickb_spark.index import p1_direct
 
     fs = IndexFS(index_dir, spark)
     if epoch <= _folded_epochs(fs, index_dir).get(stream, -1):
@@ -128,13 +131,50 @@ def _ingest_batch(
         ),
     )
     staged = join_path(bdir, STAGED_INPUT)
-    stage_documents(spark, docs, staged)
-    summary = build_flat_runs(
-        spark, staged, join_path(bdir, "flat"), join_path(bdir, "doc_stats"),
+    files = files or p1_direct.documents_files(docs)
+    if not files:
+        stage_documents(spark, docs, staged)
+        files = p1_direct.list_parquet_files(staged)
+    summary = p1_direct.build_flat_runs(
+        spark, files, join_path(bdir, "flat"), join_path(bdir, "doc_stats"),
         icfg, stats["hot_terms"],
     )
     fs.delete(staged)
     fs.write_text_atomic(join_path(bdir, BATCH_MARKER), json.dumps(summary))
+
+
+def _reads_in_place(stream_docs: DataFrame) -> bool:
+    """Is each micro-batch the rows of the files its parquet source read
+    (scan_leaf over a `StreamingRelation`)? The sink cannot tell: its
+    `LogicalRDD` plan shows neither the files nor any transformation."""
+    from quickb_spark.index.p1_direct import DOC_COLUMNS, scan_leaf
+
+    leaf = scan_leaf(stream_docs)
+    if leaf is None or leaf[0] != "StreamingRelation":
+        return False
+    source = leaf[1].dataSource()
+    parts = source.sourceInfo().partitionColumns().mkString("\n").split("\n")
+    fmt = source.className().rsplit(".", 1)[-1]
+    return fmt in ("parquet", "ParquetFileFormat") and (
+        set(DOC_COLUMNS).isdisjoint(parts))
+
+
+def _epoch_files(fs: IndexFS, ckpt: str, epoch: int) -> list | None:
+    """The files the file source logged for `epoch`: `sources/0/<epoch>` or
+    `<epoch>.compact`, a `v1` line then JSON lines {path, timestamp,
+    batchId}. None (stage the batch) if that log is missing or not `v1`."""
+    from quickb_spark.index.p1_direct import file_listing
+
+    log = join_path(ckpt, "sources", "0", str(epoch))
+    path = next((p for p in (log, log + ".compact") if fs.exists(p)), None)
+    lines = fs.read_text(path).splitlines() if path else []
+    if lines[:1] != ["v1"]:
+        return None
+    return file_listing([
+        e["path"]
+        for e in map(json.loads, filter(None, lines[1:]))
+        if e["batchId"] == epoch
+    ])
 
 
 def start_incremental_ingest(
@@ -151,18 +191,25 @@ def start_incremental_ingest(
     flat_delta/ingest_batch=<stream>-<epoch>. The index must already have
     a base (build_index), whose buckets, salts and hot set the batches
     reuse. The checkpoint (default <index>/stream_checkpoint) outlives
-    folds, so a restarted stream resumes after the files it has read."""
+    folds, so a restarted stream resumes after the files it has read.
+
+    A plain parquet file stream (`spark.readStream.schema(s).parquet(dir)`)
+    is read in place: each epoch, a replay too, reads the files its source
+    logged in this checkpoint. Other streams' micro-batches are staged."""
     cfg = cfg or EngineConfig()
     ckpt = checkpoint or join_path(index_dir, "stream_checkpoint")
+    ckpt_fs = IndexFS(ckpt, spark)
+    in_place = _reads_in_place(stream_docs)
     stream_id: list[str] = []
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if not stream_id:
             # the query id, written to the checkpoint before any batch runs
-            meta = IndexFS(ckpt, spark).read_text(join_path(ckpt, "metadata"))
+            meta = ckpt_fs.read_text(join_path(ckpt, "metadata"))
             stream_id.append(json.loads(meta.splitlines()[0])["id"][:8])
-        _ingest_batch(spark, batch_df, index_dir, cfg, stream_id[0],
-                      int(epoch_id))
+        epoch = int(epoch_id)
+        _ingest_batch(spark, batch_df, index_dir, cfg, stream_id[0], epoch,
+                      _epoch_files(ckpt_fs, ckpt, epoch) if in_place else None)
 
     writer = stream_docs.writeStream.foreachBatch(sink).option(
         "checkpointLocation", ckpt

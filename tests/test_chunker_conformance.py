@@ -11,6 +11,7 @@ it at module scope).
 
 from __future__ import annotations
 
+import os
 import sys
 import types
 
@@ -40,9 +41,21 @@ _STUBS: dict[str, dict] = {
 }
 
 
+#: The reference checkout's source root, beside this repository.
+_REFERENCE_SRC = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference", "src",
+)
+
+
 def _load_reference_chunker():
     """The reference RecursiveTokenChunker class, or None when the
     reference checkout is absent."""
+    if not os.path.isdir(_REFERENCE_SRC):
+        # no stubs then: they would shadow the real modules' ImportError
+        # (quickb_spark.chunking.fixed_token.tiktoken_codec relies on it)
+        # for the rest of the process
+        return None
     # The reference package imports network/tokenizer deps at module scope
     # that aren't installed here; character-mode chunking never calls them,
     # so empty stub modules satisfy the imports.
@@ -54,13 +67,28 @@ def _load_reference_chunker():
             for k, v in attrs.items():
                 setattr(stub, k, v)
             sys.modules[mod] = stub
-    if "/root/reference/src" not in sys.path:
-        sys.path.insert(0, "/root/reference/src")
+    if _REFERENCE_SRC not in sys.path:
+        sys.path.insert(0, _REFERENCE_SRC)
     try:
         from chunking.recursive_token_chunker import RecursiveTokenChunker
     except ImportError:
         return None
     return RecursiveTokenChunker
+
+
+def test_loader_leaves_tiktoken_import_error_intact():
+    """Loading the reference chunker (which installs stub modules only
+    beside a reference checkout) leaves tiktoken_codec() raising its
+    designed ImportError in this process when tiktoken is not installed."""
+    from quickb_spark.chunking.fixed_token import tiktoken_codec
+
+    _load_reference_chunker()
+    if os.path.isdir(_REFERENCE_SRC):
+        pytest.skip("the reference checkout stubs tiktoken by design")
+    if hasattr(sys.modules.get("tiktoken"), "get_encoding"):
+        pytest.skip("tiktoken is installed")
+    with pytest.raises(ImportError, match="tiktoken"):
+        tiktoken_codec()
 
 
 @pytest.fixture(scope="module")

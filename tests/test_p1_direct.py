@@ -27,7 +27,11 @@ from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 from quickb_spark.functions.hashing import xxhash64 as xxh_str
 from quickb_spark.index.encode import decode_posting_list, decode_positions
-from quickb_spark.index.p1_direct import list_parquet_files, plan_groups
+from quickb_spark.index.p1_direct import (
+    DOC_COLUMNS,
+    list_parquet_files,
+    plan_groups,
+)
 from quickb_spark.index.segments import build_index, load_stats
 from quickb_spark.index.xxh import (
     chain_strings,
@@ -118,7 +122,9 @@ def test_chunks_build_byte_identical_to_corpus_uri_build(both_indexes):
 def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
                                                            tmp_path):
     """A chunks= build stages its input with one Spark write and then runs
-    the documents= build's jobs: phase 0, phase 1 and one phase-2 wave.
+    the documents= build's jobs: phase 0, phase 1 and one phase-2 wave. A
+    documents= build over createDataFrame stages too; one over a plain
+    parquet scan reads the scan's files in place and runs no staging job.
     Jobs are counted with the status tracker over a job group the test
     owns."""
     sc = spark.sparkContext
@@ -126,6 +132,8 @@ def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
     counts = {}
     for name, inp in (
         ("documents", {"documents": docs}),
+        ("documents_in_memory",
+         {"documents": spark.createDataFrame(docs.collect(), docs.schema)}),
         ("chunks", {"chunks": chunk_documents(docs, _cfg())}),
     ):
         gid = f"test-build-jobs-{name}"
@@ -137,7 +145,7 @@ def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         counts[name] = len(sc.statusTracker().getJobIdsForGroup(gid))
-    assert counts["chunks"] == counts["documents"] == 4, counts
+    assert counts == {"documents": 3, "documents_in_memory": 4, "chunks": 4}
 
 
 def test_hash_bit_identity(spark):
@@ -479,7 +487,7 @@ def test_presample_rowgroup_pruning_identical(corpus):
     files = [p for p, _ in list_parquet_files(corpus)][:3]
     for path in files:
         for k, nk, frac in ((0, 1, 0.3), (1, 3, 0.5), (2, 3, 0.07)):
-            got = _sample_task(path, k, nk, frac, corpus, cfg)
+            got = _sample_task(path, k, nk, frac, cfg)
             # whole-file reference implementation (the pre-round-4 logic)
             tbl = pq.read_table(path, columns=["lang", "content"])
             n = tbl.num_rows
@@ -531,19 +539,31 @@ def _parquet_bytes(root: str) -> dict[str, bytes]:
     return out
 
 
+def _no_staging(*_args, **_kwargs):
+    raise AssertionError("staged an input that can be read in place")
+
+
 def test_documents_build_equals_corpus_uri_build(spark, corpus, both_indexes,
-                                                 tmp_path):
-    """build_index(documents=...) stages the DataFrame and runs the same
-    engine: segment and lexicon files byte-identical to the corpus_uri=
-    build, equal stats and doc stats, and no staged copy left behind."""
+                                                 tmp_path, monkeypatch):
+    """build_index(documents=spark.read.parquet(dir)) reads the scan's own
+    files in place (no staging write) and runs the same engine: segment
+    and lexicon files byte-identical to the corpus_uri= build, equal stats
+    and doc stats, and no staged copy left behind."""
+    from quickb_spark.index import segments
     from quickb_spark.index.segments import STAGED_INPUT
 
     _, idx_di = both_indexes
     idx = str(tmp_path / "from_documents")
     _seed_hot(idx)
-    build_index(
-        spark, index_dir=idx, cfg=_cfg(), documents=spark.read.parquet(corpus)
-    )
+    timings = {}
+    with monkeypatch.context() as m:
+        m.setattr(segments, "stage_documents", _no_staging)
+        build_index(
+            spark, index_dir=idx, cfg=_cfg(), timings=timings,
+            documents=spark.read.parquet(corpus).select(*DOC_COLUMNS),
+        )
+    assert "phase1 read documents in place" in timings
+    assert not any("stage" in label for label in timings)
     assert not os.path.exists(os.path.join(idx, STAGED_INPUT))
     assert load_stats(idx) == load_stats(idx_di)
     for sub in ("segments", "lexicon"):
@@ -555,6 +575,69 @@ def test_documents_build_equals_corpus_uri_build(spark, corpus, both_indexes,
         for p in (idx, idx_di)
     ]
     assert ds[0] == ds[1]
+
+
+def test_documents_path_with_space_and_percent_builds_in_place(
+    spark, corpus, both_indexes, tmp_path, monkeypatch
+):
+    """Hadoop lists a scan's files as percent-encoded URIs; a corpus under a
+    directory named with a space and a `%` is still read in place, to the
+    same index as the corpus_uri= build."""
+    from quickb_spark.index import segments
+
+    _, idx_di = both_indexes
+    odd = str(tmp_path / "a b%20c" / "documents")
+    shutil.copytree(corpus, odd)
+    idx = str(tmp_path / "odd")
+    _seed_hot(idx)
+    with monkeypatch.context() as m:
+        m.setattr(segments, "stage_documents", _no_staging)
+        build_index(spark, index_dir=idx, cfg=_cfg(),
+                    documents=spark.read.parquet(odd))
+    assert _sha256_tree(idx) == _sha256_tree(idx_di)
+
+
+@pytest.mark.parametrize("shape", ["filter", "alias", "in_memory", "partitioned"])
+def test_documents_build_stages_other_plans(spark, corpus, tmp_path,
+                                            monkeypatch, shape):
+    """A documents= DataFrame that is not a plain parquet scan is staged,
+    and its index equals a corpus_uri= rebuild of the rows it yields: a
+    filter's rows are left out, a column aliased as `content` is indexed
+    under that alias, createDataFrame rows and a repo-partitioned parquet
+    dir (its `repo` is in the paths, not the files) build like any rows."""
+    from quickb_spark.index import segments
+
+    docs = spark.read.parquet(corpus)
+    if shape == "filter":
+        df = docs.where(F.col("lang") != "python")
+    elif shape == "alias":
+        df = docs.select("repo", "path", "commit", "lang",
+                         F.col("path").alias("content"))
+    elif shape == "in_memory":
+        df = spark.createDataFrame(docs.collect(), docs.schema)
+    else:
+        part = str(tmp_path / "partitioned")
+        docs.write.partitionBy("repo").parquet(part)
+        df = spark.read.parquet(part)
+    ref = str(tmp_path / "rows")
+    df.select(*DOC_COLUMNS).write.parquet(ref)
+    staged = []
+    real_stage = segments.stage_documents
+
+    def spy(*args, **kwargs):
+        staged.append(args)
+        return real_stage(*args, **kwargs)
+
+    idx, want = str(tmp_path / "idx"), str(tmp_path / "want")
+    for d in (idx, want):
+        _seed_hot(d)
+    with monkeypatch.context() as m:
+        m.setattr(segments, "stage_documents", spy)
+        build_index(spark, index_dir=idx, cfg=_cfg(), documents=df)
+    assert len(staged) == 1
+    build_index(spark, index_dir=want, cfg=_cfg(), corpus_uri=ref)
+    assert load_stats(idx)["n_docs"] > 0
+    assert _sha256_tree(idx) == _sha256_tree(want)
 
 
 def test_duplicated_posting_fails_loudly(spark, both_indexes, tmp_path):
@@ -597,13 +680,15 @@ def test_presample_packed_matches_unit_by_unit(spark, corpus, max_terms):
     prev_cpus = pa.cpu_count()
     try:
         parts = [
-            _sample_task(p, k, nk, pf, corpus, cfg.chunker)
+            _sample_task(p, k, nk, pf, cfg.chunker)
             for p, k, nk, pf in units
         ]
     finally:
         pa.set_cpu_count(prev_cpus)
     want = _hot_from_samples(parts, eff, cfg, margin, max_terms)
-    got = presample_hot_direct(spark, corpus, cfg, frac, margin, max_terms)
+    got = presample_hot_direct(
+        spark, list_parquet_files(corpus), cfg, frac, margin, max_terms
+    )
     assert got == want
     assert 0 < len(got[0]) <= max_terms and got[1] > 0
 

@@ -210,38 +210,24 @@ def test_restarted_stream_does_not_reingest_folded_docs(spark, tmp_path):
     assert (idx / "meta" / "stats.json").read_text() == stats
 
 
-def test_fold_on_corpus_uri_index_equals_rebuild(spark, tmp_path):
-    """Fold on an index built with corpus_uri= (the direct engine users
-    run) equals a from-scratch corpus_uri= build over base + delta bit for
-    bit: stats, lexicon and segment rows, and top-k compared with ==,
-    ties included (the delta copies base docs under new paths)."""
+def _build_from_rows(spark, tmp_path, name, docs):
+    """A corpus_uri= index over `docs` under a pinned hot set."""
     import json
     import os
 
-    rows = [gen_document(i, 21) for i in range(150)]
-    base, new = rows[:120], rows[120:]
-    new += [(r, f"{p}.copy", c, lang, text) for r, p, c, lang, text in base[:20]]
-    hot = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
-           "est_postings": 0}
+    corpus = str(tmp_path / f"{name}_corpus")
+    spark.createDataFrame(docs, DOCUMENTS_SCHEMA).write.parquet(corpus)
+    idx = str(tmp_path / name)
+    os.makedirs(os.path.join(idx, "meta"))
+    with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
+        json.dump({"hot_terms": ["def", "return", "self"],
+                   "sample_fraction": 0.02, "est_postings": 0}, f)
+    build_index(spark, index_dir=idx, cfg=CFG, corpus_uri=corpus)
+    return idx
 
-    def build(name, docs):
-        corpus = str(tmp_path / f"{name}_corpus")
-        spark.createDataFrame(docs, DOCUMENTS_SCHEMA).write.parquet(corpus)
-        idx = str(tmp_path / name)
-        os.makedirs(os.path.join(idx, "meta"))
-        with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
-            json.dump(hot, f)
-        build_index(spark, index_dir=idx, cfg=CFG, corpus_uri=corpus)
-        return idx
 
-    idx = build("idx", base)
-    src = str(tmp_path / "in")
-    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
-    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
-    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
-    assert fold_deltas_into_index(spark, idx, CFG) > 0
-    fresh = build("fresh", base + new)
-
+def _assert_same_index(spark, idx, fresh):
+    """Equal stats, lexicon rows and segment rows."""
     assert load_stats(idx) == load_stats(fresh)
     for sub in ("lexicon", "segments"):
         got, want = (
@@ -249,6 +235,26 @@ def test_fold_on_corpus_uri_index_equals_rebuild(spark, tmp_path):
             for p in (idx, fresh)
         )
         assert got and got == want, sub
+
+
+def test_fold_on_corpus_uri_index_equals_rebuild(spark, tmp_path):
+    """Fold on an index built with corpus_uri= (the direct engine users
+    run) equals a from-scratch corpus_uri= build over base + delta bit for
+    bit: stats, lexicon and segment rows, and top-k compared with ==,
+    ties included (the delta copies base docs under new paths)."""
+    rows = [gen_document(i, 21) for i in range(150)]
+    base, new = rows[:120], rows[120:]
+    new += [(r, f"{p}.copy", c, lang, text) for r, p, c, lang, text in base[:20]]
+
+    idx = _build_from_rows(spark, tmp_path, "idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    fresh = _build_from_rows(spark, tmp_path, "fresh", base + new)
+
+    _assert_same_index(spark, idx, fresh)
     queries = fixture_queries()[:20]
     got = sorted(map(tuple, Searcher(spark, idx).topk(queries, k=10)))
     want = sorted(map(tuple, Searcher(spark, fresh).topk(queries, k=10)))
@@ -256,6 +262,139 @@ def test_fold_on_corpus_uri_index_equals_rebuild(spark, tmp_path):
     assert sum(
         a[0] == b[0] and a[3] == b[3] for a, b in zip(got, got[1:])
     ) >= 10, "copies must produce exact ties in the top k"
+
+
+def _no_staging(*_args, **_kwargs):
+    raise AssertionError("staged a micro-batch that can be read in place")
+
+
+def _run_stream(spark, stream, idx, ckpt=None):
+    q = start_incremental_ingest(spark, stream, idx, CFG, checkpoint=ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None, q.exception()
+
+
+def test_parquet_stream_ingests_in_place(spark, tmp_path, monkeypatch):
+    """A plain parquet file stream, here with columns selected, is read in
+    place: no micro-batch is staged, and the delta tier, then the folded
+    index, equal a rebuild over base + delta."""
+    rows = [gen_document(i, 23) for i in range(100)]
+    base, new = rows[:70], rows[70:]
+    idx = _build_from_rows(spark, tmp_path, "idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src).select(
+        "repo", "path", "commit", "lang", "content")
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "stage_documents", _no_staging)
+        _run_stream(spark, stream, idx)
+    fresh = _build_from_rows(spark, tmp_path, "fresh", rows)
+    queries = fixture_queries()[:15]
+    want = sorted(map(tuple, Searcher(spark, fresh).topk(queries, k=10)))
+    assert sorted(map(tuple, query_with_deltas(spark, idx, queries, k=10))) == want
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    _assert_same_index(spark, idx, fresh)
+
+
+def test_stream_in_place_crosses_a_compacted_source_log(
+    spark, tmp_path, monkeypatch
+):
+    """One file per epoch over 11 files: the file source compacts its log
+    at batch 9 (`9.compact`, holding batches 0-9), and every epoch, that
+    one included, reads exactly its own file in place. The folded index
+    equals a rebuild."""
+    rows = [gen_document(i, 29) for i in range(104)]
+    base, new = rows[:60], rows[60:]
+    idx = _build_from_rows(spark, tmp_path, "idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).repartition(11).write.parquet(src)
+    assert len(list((tmp_path / "in").glob("*.parquet"))) == 11
+    stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    ckpt = str(tmp_path / "ckpt")
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "stage_documents", _no_staging)
+        _run_stream(spark, stream, idx, ckpt)
+    logs = {p.name for p in (tmp_path / "ckpt" / "sources" / "0").iterdir()}
+    assert "9.compact" in logs and "10" in logs
+    batches = incremental._delta_batches(incremental.IndexFS(idx, spark), idx)
+    assert len(batches) == 11
+    assert sum(m["n_docs"] for _, m in batches) > len(new)  # chunks, not docs
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    _assert_same_index(spark, idx, _build_from_rows(spark, tmp_path, "fresh", rows))
+
+
+def test_filtered_stream_stages_and_drops_filtered_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A stream with a filter cannot be read in place: its micro-batches
+    are staged, and the rows the filter drops are not indexed."""
+    rows = [gen_document(i, 37) for i in range(100)]
+    base, new = rows[:70], rows[70:]
+    kept = [r for r in new if r[3] != "python"]
+    assert 0 < len(kept) < len(new)
+    idx = _build_from_rows(spark, tmp_path, "idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src).where(
+        F.col("lang") != "python")
+    staged = []
+    real_stage = incremental.stage_documents
+
+    def spy(*args, **kwargs):
+        staged.append(args)
+        return real_stage(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "stage_documents", spy)
+        _run_stream(spark, stream, idx)
+    assert staged
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    _assert_same_index(
+        spark, idx, _build_from_rows(spark, tmp_path, "fresh", base + kept))
+
+
+def test_replayed_epoch_reads_its_files_again(spark, tmp_path, monkeypatch):
+    """A restarted stream that replays an unfolded epoch (its commit-log
+    entry removed) takes that epoch's files from the source log again and
+    rewrites its batch whole: the delta tier still equals a rebuild."""
+    rows = [gen_document(i, 41) for i in range(100)]
+    base, new = rows[:70], rows[70:]
+    idx = _build_from_rows(spark, tmp_path, "idx", base)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(new, DOCUMENTS_SCHEMA).repartition(2).write.parquet(src)
+    ckpt = tmp_path / "ckpt"
+
+    def run():
+        stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        _run_stream(spark, stream, idx, str(ckpt))
+
+    read = []
+    real_epoch_files = incremental._epoch_files
+
+    def spy(fs, ck, epoch):
+        files = real_epoch_files(fs, ck, epoch)
+        read.append((epoch, files))
+        return files
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "stage_documents", _no_staging)
+        m.setattr(incremental, "_epoch_files", spy)
+        run()
+        (ckpt / "commits" / "1").unlink()
+        (ckpt / "commits" / ".1.crc").unlink(missing_ok=True)
+        run()
+    assert [e for e, _ in read] == [0, 1, 1]
+    assert read[1][1] == read[2][1] and len(read[2][1]) == 1
+    fs = incremental.IndexFS(idx, spark)
+    assert len(incremental._delta_batches(fs, idx)) == 2
+    fresh = _build_from_rows(spark, tmp_path, "fresh", rows)
+    queries = fixture_queries()[:15]
+    want = sorted(map(tuple, Searcher(spark, fresh).topk(queries, k=10)))
+    assert sorted(map(tuple, query_with_deltas(spark, idx, queries, k=10))) == want
+    assert fold_deltas_into_index(spark, idx, CFG) > 0
+    _assert_same_index(spark, idx, fresh)
 
 
 def test_gen_document_prefix_stability():
