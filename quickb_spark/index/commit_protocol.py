@@ -7,10 +7,9 @@ bucket -> committed-metadata that is written only AFTER a wave's data has
 fully landed. Two implementations:
 
 - `LedgerCommitProtocol` (default): ONE atomic JSON file at
-  `meta/commits.json`, written through the index dir's Hadoop FileSystem
-  (hdfs:///s3a:///file:// alike). This is the protocol every test and the
-  scaling bench run; it is exactly the previous hard-wired behavior of
-  index/segments.py, now behind the seam.
+  `meta/commits.json`, written through the index root's pyarrow filesystem
+  (quickb_spark.fs; plain, file:// and s3:// roots alike). This is the
+  protocol every test and the scaling bench run.
 - `IcebergCommitProtocol`: the same ledger kept as single-row-per-bucket
   upserts into an Iceberg table — each wave commit becomes an Iceberg
   snapshot, giving the index the catalog-native commit/rollback semantics
@@ -21,8 +20,8 @@ fully landed. Two implementations:
   integration test self-skips exactly like the input-side seam.
 
 `build_index(commit_protocol=...)` accepts either; `load_commits` /
-`save_commits` / `invalidate_buckets` in index/segments.py remain as
-wrappers over the default ledger for API stability.
+`invalidate_buckets` in index/segments.py remain as wrappers over the
+default ledger for API stability.
 """
 
 from __future__ import annotations
@@ -66,10 +65,9 @@ class LedgerCommitProtocol(CommitProtocol):
 
     Metas for a wave are only ever written together AFTER the wave's data
     has fully landed, so per-bucket files would add no recovery
-    granularity — only O(buckets) driver<->FS round-trips per wave
-    (measured ~3s per 64-bucket wave on this sandbox's py4j path, worse on
-    object stores). A torn write (non-atomic FS) parses as an empty
-    ledger: the affected buckets re-encode idempotently."""
+    granularity — only O(buckets) driver<->FS round-trips per wave (each
+    a request on an object store). A torn write (non-atomic FS) parses as
+    an empty ledger: the affected buckets re-encode idempotently."""
 
     def __init__(self, fs: IndexFS, index_dir: str) -> None:
         self.fs = fs

@@ -1,10 +1,12 @@
 """Posting-list compression: delta-gap + varbyte, with block-max metadata.
 
-Pure NumPy kernels (no Spark imports) — they run inside applyInPandas groups
-during segment build and inside the WAND scorer at query time. Fully
-vectorized: the varbyte encoder emits all 10 potential byte planes of the
-uint64 stream with masks (no per-value Python loop); the decoder scans
-continuation bits with cumulative masks.
+Pure NumPy kernels (no Spark imports): the reference codec the phase-2
+merge tasks are held byte-identical to (p2_direct.encode_sorted_groups),
+the varbyte codec phase 1 and the serving decode share, and the block-max
+metadata the scorer rebuilds at query time. Fully vectorized: the varbyte
+encoder emits all 10 potential byte planes of the uint64 stream with masks
+(no per-value Python loop); the decoder scans continuation bits with
+cumulative masks.
 
 Layout per (term, salt) posting list:
   doc stream   varbyte(gaps of order-preserving uint64-mapped docIDs)
@@ -131,16 +133,15 @@ def block_meta(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Per-block (last_doc, max_tf, min_dl) for block-max WAND."""
     n = len(doc_ids)
-    nb = (n + block_size - 1) // block_size
-    last_doc = np.empty(nb, dtype=np.int64)
-    max_tf = np.empty(nb, dtype=np.int64)
-    min_dl = np.empty(nb, dtype=np.int64)
-    for b in range(nb):
-        lo, hi = b * block_size, min((b + 1) * block_size, n)
-        last_doc[b] = doc_ids[hi - 1]
-        max_tf[b] = tfs[lo:hi].max()
-        min_dl[b] = dls[lo:hi].min()
-    return last_doc, max_tf, min_dl
+    if not n:
+        return tuple(np.empty(0, dtype=np.int64) for _ in range(3))
+    starts = np.arange(0, n, block_size)
+    last = np.minimum(starts + block_size, n) - 1
+    return (
+        np.asarray(doc_ids)[last].astype(np.int64, copy=False),
+        np.maximum.reduceat(tfs, starts).astype(np.int64, copy=False),
+        np.minimum.reduceat(dls, starts).astype(np.int64, copy=False),
+    )
 
 
 def encode_posting_list(
@@ -165,8 +166,8 @@ def encode_posting_list(
     The doc-gap delta RESETS to an absolute value at every block start, and
     per-block BYTE offsets into the three streams are returned — together
     they make any block-aligned sub-range of the list independently
-    decodable, which is what lets the query side slice streams JVM-side and
-    decode lazily instead of shipping whole hot posting lists to one task.
+    decodable, which is what lets a range task read and decode only the
+    blocks of its docID range instead of a whole hot posting list.
     """
     order = np.argsort(doc_ids, kind="stable")
     doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]

@@ -76,12 +76,12 @@ from collections import Counter, defaultdict
 import numpy as np
 
 from quickb_spark.config import TOKEN_PATTERN, ChunkerConfig, EngineConfig
+from quickb_spark.fs import IndexFS, file_listing, join_path, pyarrow_fs_for
 from quickb_spark.functions.hashing import xxhash64 as _xxh_str
 from quickb_spark.index.encode import varbyte_encode, varbyte_lengths
 from quickb_spark.index.p2_direct import (
     binary_array as _binary_array,
     gather_slices as _gather_slices,
-    pyarrow_fs_for,
 )
 from quickb_spark.index.xxh import (
     hash_bytes_vec,
@@ -91,9 +91,7 @@ from quickb_spark.index.xxh import (
 from quickb_spark.taskpack import job_description, lpt_bins, run_packed
 
 __all__ = [
-    "list_parquet_files",
     "documents_files",
-    "file_listing",
     "scan_leaf",
     "plan_groups",
     "build_flat_runs",
@@ -116,43 +114,6 @@ CHUNK_COLUMNS = ["doc_id", "text"]
 #: Phase-0 sample work units: fixed, so the sampled rows (and the hot set)
 #: do not depend on cluster size.
 _SAMPLE_UNITS = 64
-
-
-def list_parquet_files(uri: str) -> list[tuple[str, int]]:
-    """[(path, bytes)] of the data files under a parquet dir/URI (paths as
-    pyarrow_fs_for takes them), sorted: the group plan's base."""
-    from pyarrow import fs as pafs
-
-    fsys, root = pyarrow_fs_for(uri)
-    local = isinstance(fsys, pafs.LocalFileSystem)
-    prefix = "" if local else uri[: uri.rstrip("/").rfind(root.rstrip("/"))]
-    infos = fsys.get_file_info(pafs.FileSelector(root, recursive=True))
-    out = [
-        (prefix + i.path, int(i.size or 0))
-        for i in infos
-        if i.type == pafs.FileType.File and i.base_name.endswith(".parquet")
-    ]
-    out.sort()
-    return out
-
-
-def file_listing(uris: list[str]) -> list[tuple[str, int]] | None:
-    """[(path, bytes)] of Hadoop's percent-encoded file URIs, sorted, `file:`
-    ones decoded; None when there are none or pyarrow cannot reach one."""
-    from urllib.parse import unquote, urlsplit
-
-    from pyarrow import fs as pafs
-
-    paths = [unquote(urlsplit(u).path) if u.startswith("file:") else u
-             for u in uris]
-    try:
-        fsys, _ = pyarrow_fs_for(paths[0])
-        infos = fsys.get_file_info([pyarrow_fs_for(p)[1] for p in paths])
-    except (IndexError, OSError, ValueError, NotImplementedError):
-        return None
-    if any(i.type != pafs.FileType.File for i in infos):
-        return None
-    return sorted((p, int(i.size)) for p, i in zip(paths, infos))
 
 
 def _class_name(obj) -> str:
@@ -545,14 +506,9 @@ def build_flat_runs(
     groups = plan_groups(files, int(n_tasks))
 
     # wipe any partial previous attempt (no _SUCCESS => not resumable)
-    ofs, flat_root = pyarrow_fs_for(flat_dir)
-    from pyarrow import fs as pafs
-
+    fs = IndexFS(flat_dir)
     for d in (flat_dir, doc_stats_dir):
-        _, root = pyarrow_fs_for(d)
-        info = ofs.get_file_info(root)
-        if info.type != pafs.FileType.NotFound:
-            ofs.delete_dir(root)
+        fs.delete(d)
 
     chunker_cfg = cfg.chunker
     nb = cfg.index.term_buckets
@@ -573,11 +529,11 @@ def build_flat_runs(
             .map(_run)
             .collect()
         )
-    ofs.create_dir(flat_root, recursive=True)
-    with ofs.open_output_stream(f"{flat_root.rstrip('/')}/{RUNS_MARKER}") as f:
-        f.write(json.dumps({"n_tasks": len(groups)}).encode())
-    with ofs.open_output_stream(f"{flat_root.rstrip('/')}/_SUCCESS") as f:
-        f.write(b"")
+    fs.mkdirs(flat_dir)
+    fs.write_text_atomic(
+        join_path(flat_dir, RUNS_MARKER), json.dumps({"n_tasks": len(groups)})
+    )
+    fs.write_text_atomic(join_path(flat_dir, "_SUCCESS"), "")
     return {
         "n_docs": sum(r["n_docs"] for r in rows),
         "sum_dl": sum(r["sum_dl"] for r in rows),

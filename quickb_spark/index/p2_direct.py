@@ -24,11 +24,11 @@ Scale notes (the 100 TB story):
   bucket at ~1-4 GB on a real corpus — the same dial as Spark's shuffle
   partition count. A larger-than-memory bucket would stream row-group
   k-way merges instead; not needed at this corpus scale;
-- storage goes through `pyarrow.fs.FileSystem.from_uri`, so file:// and
+- storage goes through quickb_spark.fs (pyarrow.fs), so file:// and
   s3:// checkpoints work the same way (object stores are the realistic home
-  of a 10^12-file index; there is no data-locality to lose). Schemes
-  pyarrow cannot open locally (e.g. hdfs:// without libhdfs) raise at
-  listing time and fail the build;
+  of a 10^12-file index; there is no data-locality to lose). A root
+  pyarrow cannot open (e.g. hdfs:// without libhdfs) fails the build
+  before any job;
 - a merge unit that finds its runs malformed (a group not strictly
   doc_id-sorted, e.g. a duplicated posting) returns the ValueError as its
   summary and `merge_encode_buckets` re-raises it in the driver, so
@@ -46,13 +46,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from quickb_spark.fs import list_bucket_files, pyarrow_fs_for
 from quickb_spark.taskpack import run_packed
 
 __all__ = [
     "merge_encode_buckets",
     "encode_sorted_groups",
-    "list_bucket_files",
-    "pyarrow_fs_for",
     "gather_slices",
     "binary_array",
 ]
@@ -64,45 +63,6 @@ _CHECKPOINT_COLS = ["term_h", "salt", "doc_id", "tf", "doc_len", "pos_vb"]
 #: bytes (snappy parquet -> numpy columns + sort/gather scratch). Used by
 #: the merge memory guard to size term-granular splits.
 _RUN_MEM_EXPANSION = 3
-
-
-def pyarrow_fs_for(uri: str):
-    """-> (pyarrow FileSystem, path-without-scheme) for a path or URI.
-
-    Accepts plain paths, file:/p, file:///p, s3://..., hdfs://... — the
-    Hadoop-FS side (quickb_spark.fs.IndexFS) and this must agree on what a
-    path means; both treat scheme-less as the local filesystem."""
-    from pyarrow import fs as pafs
-
-    if "://" not in uri and not uri.startswith("file:"):
-        return pafs.LocalFileSystem(), uri
-    if uri.startswith("file:"):
-        # normalize file:/p and file:///p to a local path
-        path = uri[len("file:") :]
-        while path.startswith("//"):
-            path = path[1:]
-        return pafs.LocalFileSystem(), path
-    fsys, path = pafs.FileSystem.from_uri(uri)
-    return fsys, path
-
-
-def list_bucket_files(flat_dir: str, buckets: list[int]) -> list[tuple[int, str, int]]:
-    """[(bucket, file-path, bytes)] for the given buckets' checkpoint dirs,
-    listed with pyarrow (same FS the encode tasks will read through)."""
-    from pyarrow import fs as pafs
-
-    fsys, root = pyarrow_fs_for(flat_dir)
-    out: list[tuple[int, str, int]] = []
-    for b in buckets:
-        sel = pafs.FileSelector(
-            f"{root.rstrip('/')}/bucket={b}", recursive=True, allow_not_found=True
-        )
-        for info in fsys.get_file_info(sel):
-            if info.type == pafs.FileType.File and info.base_name.endswith(
-                ".parquet"
-            ):
-                out.append((b, info.path, int(info.size or 0)))
-    return out
 
 
 def gather_slices(src, off: np.ndarray, order: np.ndarray):

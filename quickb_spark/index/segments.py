@@ -67,17 +67,16 @@ import json
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quickb_spark.config import EngineConfig
-from quickb_spark.fs import IndexFS, join_path
+from quickb_spark.fs import IndexFS, join_path, list_parquet_files, pyarrow_fs_for
+from quickb_spark.index.commit_protocol import LedgerCommitProtocol
 
 __all__ = [
     "build_index",
     "segments_meta",
     "load_stats",
     "load_commits",
-    "save_commits",
     "invalidate_buckets",
     "check_flat_layout",
 ]
@@ -146,22 +145,12 @@ _HOT_MAX_TERMS = 2000
 
 def load_commits(fs: IndexFS, index_dir: str) -> dict[int, dict]:
     """bucket -> committed meta via the default JSON-ledger protocol."""
-    from quickb_spark.index.commit_protocol import LedgerCommitProtocol
-
     return LedgerCommitProtocol(fs, index_dir).load()
-
-
-def save_commits(fs: IndexFS, index_dir: str, commits: dict[int, dict]) -> None:
-    from quickb_spark.index.commit_protocol import LedgerCommitProtocol
-
-    LedgerCommitProtocol(fs, index_dir).save(commits)
 
 
 def invalidate_buckets(fs: IndexFS, index_dir: str, buckets: list[int]) -> None:
     """Drop buckets from the commit ledger so the next build_index call
     re-encodes them (used by the streaming delta fold)."""
-    from quickb_spark.index.commit_protocol import LedgerCommitProtocol
-
     LedgerCommitProtocol(fs, index_dir).invalidate(buckets)
 
 
@@ -172,8 +161,7 @@ def check_flat_layout(fs: IndexFS, flat_dir: str) -> None:
     engine's layout would silently mis-encode, so it must be rebuilt."""
     import pyarrow.parquet as pq
 
-    from quickb_spark.index.p1_direct import RUNS_MARKER, list_parquet_files
-    from quickb_spark.index.p2_direct import pyarrow_fs_for
+    from quickb_spark.index.p1_direct import RUNS_MARKER
 
     problems = []
     if not fs.exists(join_path(flat_dir, RUNS_MARKER)):
@@ -192,6 +180,24 @@ def check_flat_layout(fs: IndexFS, flat_dir: str) -> None:
             f"({'; '.join(problems)}) — delete the index dir and rebuild; "
             f"index format v{FORMAT_VERSION} cannot resume or fold it"
         )
+
+
+def _checkpoint_scalars(index_dir: str) -> tuple[int, int, int]:
+    """(n_docs, token sum, n_postings) of a committed flat checkpoint, read
+    in the driver with pyarrow: the doc-stats runs' doc_len column and the
+    flat runs' row counts from their parquet footers. The same integers
+    phase 1's task summaries carry, so stats.json comes out identical."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    def runs(name: str):
+        d = join_path(index_dir, name)
+        fsys, _ = pyarrow_fs_for(d)
+        paths = [pyarrow_fs_for(p)[1] for p, _ in list_parquet_files(d)]
+        return ds.dataset(paths, format="parquet", filesystem=fsys)
+
+    dl = runs("doc_stats").to_table(columns=["doc_len"]).column("doc_len")
+    return len(dl), int(pc.sum(dl).as_py() or 0), runs("flat").count_rows()
 
 
 def build_index(
@@ -236,10 +242,10 @@ def build_index(
         if timings is not None:
             timings[label] = round(timings.get(label, 0.0) + now - _t0, 2)
         _t0 = now
-    # ALL side-file I/O (markers, meta JSONs, stats) goes through the
-    # Hadoop FileSystem of the index dir, so hdfs:///s3a:///file:// index
-    # roots resume exactly like local ones
-    fs = IndexFS(index_dir or ".", spark)
+    # side files (markers, meta JSONs, stats) go through the index root's
+    # pyarrow filesystem like its data files; a root pyarrow cannot reach
+    # raises UnreachableIndexError here, before any Spark job
+    fs = IndexFS(index_dir or ".")
     fs.mkdirs(join_path(index_dir, "meta"))
     flat_dir = join_path(index_dir, "flat")
     stats_path = join_path(index_dir, "meta", "stats.json")
@@ -253,7 +259,7 @@ def build_index(
         from quickb_spark.index import p1_direct
 
         if corpus_uri is not None:
-            files = p1_direct.list_parquet_files(corpus_uri)
+            files = list_parquet_files(corpus_uri)
         elif documents is not None and (
             files := p1_direct.documents_files(documents)
         ):
@@ -268,7 +274,7 @@ def build_index(
             chunked = documents is None
             stage_documents(spark, staged, staged_dir, chunked)
             _mark(f"phase1 stage {'chunks' if chunked else 'documents'}")
-            files = p1_direct.list_parquet_files(staged_dir)
+            files = list_parquet_files(staged_dir)
         if not files:
             where = corpus_uri or staged_dir
             raise ValueError(f"no parquet data files under {where}")
@@ -326,14 +332,8 @@ def build_index(
             avgdl = p1_metrics["sum_dl"] / n_docs if n_docs else 0.0
             total_postings = p1_metrics["n_postings"]
         else:  # resume path: phase 1 done in a previous process
-            row = (
-                spark.read.parquet(join_path(index_dir, "doc_stats"))
-                .agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl"))
-                .collect()[0]
-            )
-            n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-            # parquet metadata-only count
-            total_postings = spark.read.parquet(flat_dir).count()
+            n_docs, sum_dl, total_postings = _checkpoint_scalars(index_dir)
+            avgdl = sum_dl / n_docs if n_docs else 0.0
         fs.write_text_atomic(
             stats_path,
             json.dumps(
@@ -355,8 +355,6 @@ def build_index(
 
     # ---- phase 2: per-bucket-wave merge-encode, idempotent, resumable ----
     if commit_protocol is None:
-        from quickb_spark.index.commit_protocol import LedgerCommitProtocol
-
         commit_protocol = LedgerCommitProtocol(fs, index_dir)
     commits = commit_protocol.load()
     pending = [b for b in range(nb) if b not in commits]
@@ -418,7 +416,7 @@ def _run_waves(
 
 def segments_meta(spark: SparkSession, index_dir: str) -> DataFrame:
     """Per-partition lineage + metrics as a DataFrame (FIXTURES.md §6)."""
-    fs = IndexFS(index_dir, spark)
+    fs = IndexFS(index_dir)
     rows = [m for _, m in sorted(load_commits(fs, index_dir).items())]
     schema = (
         "segment_id string, partition_id int, salt int, term_count long, "
@@ -429,14 +427,8 @@ def segments_meta(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def load_stats(index_dir: str) -> dict:
-    from pyspark.sql import SparkSession
-
     stats_path = join_path(index_dir, "meta", "stats.json")
-    if SparkSession.getActiveSession() is not None:
-        stats = json.loads(IndexFS(index_dir).read_text(stats_path))
-    else:
-        with open(stats_path) as f:  # no session: plain local fallback
-            stats = json.load(f)
+    stats = json.loads(IndexFS(index_dir).read_text(stats_path))
     # fail fast on format drift: v3 changed stream layout (per-block absolute
     # delta resets + byte offsets) and the checkpoint schema — decoding an
     # older index with this code would silently produce wrong doc_ids for

@@ -53,6 +53,11 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from quickb_spark.config import BM25_B, BM25_K1
+from quickb_spark.fs import (
+    UnreachableIndexError,
+    list_bucket_files,
+    pyarrow_fs_for,
+)
 from quickb_spark.functions.hashing import bucket_of, xxhash64
 from quickb_spark.functions.tokenize import tokenize_py
 from quickb_spark.index.segments import load_stats
@@ -66,11 +71,6 @@ __all__ = ["Searcher", "TopK", "UnreachableIndexError"]
 #: dict without limit. Simple FIFO eviction — a serving workload's hot
 #: terms re-enter the cache on first miss.
 _DF_CACHE_MAX = 262_144
-
-
-class UnreachableIndexError(OSError):
-    """pyarrow cannot list the index's filesystem, so no range task could
-    read its segment files."""
 
 
 class ExtraPostings(NamedTuple):
@@ -131,19 +131,7 @@ class Searcher:
         """Cached candidate segment files for the buckets."""
         missing = [b for b in buckets if b not in self._seg_files]
         if missing:
-            from quickb_spark.index import p2_direct
-
-            try:
-                listed = p2_direct.list_bucket_files(
-                    f"{self.index_dir}/segments", missing
-                )
-            except (OSError, ValueError, NotImplementedError) as e:
-                # pyarrow: ArrowIOError / ArrowInvalid (unknown scheme) /
-                # ArrowNotImplementedError
-                raise UnreachableIndexError(
-                    f"cannot list the segment files of index "
-                    f"{self.index_dir!r} with pyarrow: {e}"
-                ) from e
+            listed = list_bucket_files(f"{self.index_dir}/segments", missing)
             by_b: dict[int, list[str]] = {b: [] for b in missing}
             for b, p, _sz in listed:
                 by_b[b].append(p)
@@ -183,18 +171,9 @@ class Searcher:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from quickb_spark.index import p2_direct
-
         lex_dir = f"{self.index_dir}/lexicon"
-        try:
-            fsys, _ = p2_direct.pyarrow_fs_for(lex_dir)
-            listed = p2_direct.list_bucket_files(lex_dir, buckets)
-        except (OSError, ValueError, NotImplementedError) as e:
-            # as in _files_for
-            raise UnreachableIndexError(
-                f"cannot list the lexicon files of index {self.index_dir!r} "
-                f"with pyarrow: {e}"
-            ) from e
+        listed = list_bucket_files(lex_dir, buckets)
+        fsys, _ = pyarrow_fs_for(lex_dir)
         if max_mb is not None and sum(sz for _, _, sz in listed) > max_mb << 20:
             return None
         keep = None if terms is None else pc.field("term_h").isin(

@@ -717,20 +717,12 @@ def _phrase_topk(structs, seq, k, block_size, slop: int = 0):
     sloppy generalization is the union of `keys + d` for d in
     [1, slop + 1] (token positions are < 2^31, so +d never crosses the
     slot boundary of the composite). No per-document loop."""
-    uniq = list(dict.fromkeys(seq))
-    if not uniq or any(t not in structs for t in uniq):
+    from quickb_spark.query.wand import _intersect, _sum_topk
+
+    hit = _intersect(structs, seq)
+    if hit is None:
         return [], []
-    base = min(uniq, key=lambda t: len(structs[t]["docs"]))
-    cand = structs[base]["docs"]
-    for t in uniq:
-        d = structs[t]["docs"]
-        if not len(d):
-            return [], []
-        pos = np.minimum(np.searchsorted(d, cand), len(d) - 1)
-        cand = cand[d[pos] == cand]
-        if not len(cand):
-            return [], []
-    idx_of = {t: np.searchsorted(structs[t]["docs"], cand) for t in uniq}
+    cand, idx_of = hit
     keys = _candidate_pos_keys(structs[seq[0]], idx_of[seq[0]])
     for t in seq[1:]:
         if not len(keys):
@@ -750,12 +742,7 @@ def _phrase_topk(structs, seq, k, block_size, slop: int = 0):
     if not len(keys):
         return [], []
     slots = np.unique(keys >> np.int64(32))
-    docs_v = cand[slots]
-    score = np.zeros(len(slots))
-    for t in uniq:  # same add order as _conj_topk (fp-identical)
-        score += structs[t]["scores"][idx_of[t][slots]]
-    order = np.lexsort((docs_v, -score))[:k]
-    return docs_v[order].tolist(), score[order].tolist()
+    return _sum_topk(structs, idx_of, cand[slots], k, slots)
 
 
 class RangePlan(NamedTuple):

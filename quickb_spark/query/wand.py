@@ -274,30 +274,48 @@ def _idf_of(term, dfs, n_docs):
     return float(np.log(1.0 + (n_docs - df_total + 0.5) / (df_total + 0.5)))
 
 
-def _conj_topk(structs, terms, k):
-    """Conjunctive (all-terms) top-k within one range: docs containing
-    EVERY query term, scored with the same BM25 sum as any-mode queries,
-    ranked (score desc, doc asc). The candidate set is the sorted-array
-    intersection of the terms' doc lists (smallest-first); ranges
-    partition the doc space, so per-range lists merge exactly."""
+def _intersect(structs, terms):
+    """-> (cand, idx_of): the docs holding EVERY term (sorted-array
+    intersection of the terms' doc lists, smallest first) and, per
+    distinct term in query order, the indices of `cand` in its struct;
+    None when no doc holds them all."""
     uniq = list(dict.fromkeys(terms))
     if not uniq or any(t not in structs for t in uniq):
-        return [], []
+        return None
     base = min(uniq, key=lambda t: len(structs[t]["docs"]))
     cand = structs[base]["docs"]
     for t in uniq:
         d = structs[t]["docs"]
         if not len(d):
-            return [], []
+            return None
         pos = np.minimum(np.searchsorted(d, cand), len(d) - 1)
         cand = cand[d[pos] == cand]
         if not len(cand):
-            return [], []
-    score = np.zeros(len(cand))
-    for t in uniq:
-        score += structs[t]["scores"][np.searchsorted(structs[t]["docs"], cand)]
-    order = np.lexsort((cand, -score))[:k]
-    return cand[order].tolist(), score[order].tolist()
+            return None
+    return cand, {t: np.searchsorted(structs[t]["docs"], cand) for t in uniq}
+
+
+def _sum_topk(structs, idx_of, docs, k, keep=slice(None)):
+    """Top-k of `docs` = cand[keep] by the BM25 sum over `idx_of`'s terms,
+    added in query order (so AND and phrase scores are fp-identical),
+    ranked (score desc, doc asc) -> (doc_ids, scores) lists."""
+    score = np.zeros(len(docs))
+    for t, idx in idx_of.items():
+        score += structs[t]["scores"][idx[keep]]
+    order = np.lexsort((docs, -score))[:k]
+    return docs[order].tolist(), score[order].tolist()
+
+
+def _conj_topk(structs, terms, k):
+    """Conjunctive (all-terms) top-k within one range: docs containing
+    EVERY query term, scored with the same BM25 sum as any-mode queries,
+    ranked (score desc, doc asc). Ranges partition the doc space, so
+    per-range lists merge exactly."""
+    hit = _intersect(structs, terms)
+    if hit is None:
+        return [], []
+    cand, idx_of = hit
+    return _sum_topk(structs, idx_of, cand, k)
 
 
 def _score_query_set(structs, terms_by_query, k, k1, b, avgdl):

@@ -53,7 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from quickb_spark.config import BM25_B, BM25_K1, EngineConfig
-from quickb_spark.fs import IndexFS, join_path
+from quickb_spark.fs import (
+    IndexFS,
+    file_listing,
+    join_path,
+    list_bucket_files,
+    list_parquet_files,
+)
 from quickb_spark.index.segments import (
     STAGED_INPUT,
     check_flat_layout,
@@ -115,7 +121,7 @@ def _ingest_batch(
     if given, else in place if a plain parquet scan, else staged."""
     from quickb_spark.index import p1_direct
 
-    fs = IndexFS(index_dir, spark)
+    fs = IndexFS(index_dir)
     if epoch <= _folded_epochs(fs, index_dir).get(stream, -1):
         return  # a replay of an epoch a fold already consumed
     bdir = _batch_dir(index_dir, f"{stream}-{epoch}")
@@ -134,7 +140,7 @@ def _ingest_batch(
     files = files or p1_direct.documents_files(docs)
     if not files:
         stage_documents(spark, docs, staged)
-        files = p1_direct.list_parquet_files(staged)
+        files = list_parquet_files(staged)
     summary = p1_direct.build_flat_runs(
         spark, files, join_path(bdir, "flat"), join_path(bdir, "doc_stats"),
         icfg, stats["hot_terms"],
@@ -163,8 +169,6 @@ def _epoch_files(fs: IndexFS, ckpt: str, epoch: int) -> list | None:
     """The files the file source logged for `epoch`: `sources/0/<epoch>` or
     `<epoch>.compact`, a `v1` line then JSON lines {path, timestamp,
     batchId}. None (stage the batch) if that log is missing or not `v1`."""
-    from quickb_spark.index.p1_direct import file_listing
-
     log = join_path(ckpt, "sources", "0", str(epoch))
     path = next((p for p in (log, log + ".compact") if fs.exists(p)), None)
     lines = fs.read_text(path).splitlines() if path else []
@@ -195,10 +199,12 @@ def start_incremental_ingest(
 
     A plain parquet file stream (`spark.readStream.schema(s).parquet(dir)`)
     is read in place: each epoch, a replay too, reads the files its source
-    logged in this checkpoint. Other streams' micro-batches are staged."""
+    logged in this checkpoint. Other streams' micro-batches are staged.
+    Raises UnreachableIndexError, before the stream starts, when pyarrow
+    cannot reach the checkpoint."""
     cfg = cfg or EngineConfig()
     ckpt = checkpoint or join_path(index_dir, "stream_checkpoint")
-    ckpt_fs = IndexFS(ckpt, spark)
+    ckpt_fs = IndexFS(ckpt)
     in_place = _reads_in_place(stream_docs)
     stream_id: list[str] = []
 
@@ -241,7 +247,9 @@ def _delta_batches(fs: IndexFS, index_dir: str) -> list[tuple[str, dict]]:
     return out
 
 
-def _delta_postings(index_dir: str, batches, terms: list[str], n_buckets: int):
+def _delta_postings(
+    fs: IndexFS, index_dir: str, batches, terms: list[str], n_buckets: int
+):
     """The given terms' postings in the delta tier, read in the driver with
     pyarrow from the runs of the terms' buckets, plus the tier's doc count
     and token sum from the batch markers. -> searcher.ExtraPostings.
@@ -253,31 +261,21 @@ def _delta_postings(index_dir: str, batches, terms: list[str], n_buckets: int):
     import pyarrow.dataset as ds
 
     from quickb_spark.functions.hashing import xxhash64
-    from quickb_spark.index import p2_direct
-    from quickb_spark.query.searcher import ExtraPostings, UnreachableIndexError
+    from quickb_spark.query.searcher import ExtraPostings
 
     by_h = {xxhash64(t): t for t in terms}
     want = {h % n_buckets for h in by_h}
-    try:
-        fsys, _ = p2_direct.pyarrow_fs_for(index_dir)
-        paths = [
-            p
-            for key, m in batches
-            for _b, p, _sz in p2_direct.list_bucket_files(
-                join_path(_batch_dir(index_dir, key), "flat"),
-                sorted(want.intersection(m["buckets"])),
-            )
-        ]
-    except (OSError, ValueError, NotImplementedError) as e:
-        # pyarrow: ArrowInvalid (unknown scheme) / ArrowIOError /
-        # ArrowNotImplementedError, as in Searcher._files_for
-        raise UnreachableIndexError(
-            f"cannot reach the delta files of index {index_dir!r} with "
-            f"pyarrow: {e}"
-        ) from e
+    paths = [
+        p
+        for key, m in batches
+        for _b, p, _sz in list_bucket_files(
+            join_path(_batch_dir(index_dir, key), "flat"),
+            sorted(want.intersection(m["buckets"])),
+        )
+    ]
     postings = {}
     if paths:
-        tbl = ds.dataset(paths, format="parquet", filesystem=fsys).to_table(
+        tbl = ds.dataset(paths, format="parquet", filesystem=fs.fs).to_table(
             columns=["term_h", "doc_id", "tf", "doc_len"],
             filter=pc.field("term_h").isin(pa.array(list(by_h), pa.int64())),
         )
@@ -326,11 +324,12 @@ def query_with_deltas(
 
     s = Searcher(spark, index_dir, k1, b)
     toks_by_q = _tokenize(queries)
-    batches = _delta_batches(IndexFS(index_dir, spark), index_dir)
+    fs = IndexFS(index_dir)
+    batches = _delta_batches(fs, index_dir)
     extra = None
     if batches:
         terms = sorted({t for toks in toks_by_q.values() for t in toks})
-        extra = _delta_postings(index_dir, batches, terms, s.n_buckets)
+        extra = _delta_postings(fs, index_dir, batches, terms, s.n_buckets)
     return s._serve(s._plan(toks_by_q, k, extra=extra))
 
 
@@ -383,7 +382,7 @@ def _finish_fold(
     )
     invalidate_buckets(fs, index_dir, marker["touched"])
     build_index(spark, index_dir=index_dir, cfg=cfg)
-    fs.delete(_fold_marker(index_dir), recursive=False)
+    fs.delete(_fold_marker(index_dir))
 
 
 def fold_deltas_into_index(
@@ -403,7 +402,7 @@ def fold_deltas_into_index(
     checkpoint is an older engine layout (segments.check_flat_layout); it
     must be rebuilt."""
     cfg = cfg or EngineConfig()
-    fs = IndexFS(index_dir, spark)
+    fs = IndexFS(index_dir)
     if fs.exists(_fold_marker(index_dir)):
         _finish_fold(
             spark, fs, index_dir,

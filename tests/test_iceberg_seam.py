@@ -87,7 +87,7 @@ def test_commit_protocol_seam_ledger(spark, tmp_path):
 
     docs = generate_documents_df(spark, 60, seed=5, partitions=2)
     idx = str(tmp_path / "idx_seam")
-    fs = IndexFS(idx, spark)
+    fs = IndexFS(idx)
     proto = LedgerCommitProtocol(fs, idx)
     build_index(
         spark, index_dir=idx, cfg=CFG, documents=docs, commit_protocol=proto

@@ -27,11 +27,8 @@ from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 from quickb_spark.functions.hashing import xxhash64 as xxh_str
 from quickb_spark.index.encode import decode_posting_list, decode_positions
-from quickb_spark.index.p1_direct import (
-    DOC_COLUMNS,
-    list_parquet_files,
-    plan_groups,
-)
+from quickb_spark.fs import list_parquet_files
+from quickb_spark.index.p1_direct import DOC_COLUMNS, plan_groups
 from quickb_spark.index.segments import build_index, load_stats
 from quickb_spark.index.xxh import (
     chain_strings,
@@ -653,7 +650,7 @@ def test_duplicated_posting_fails_loudly(spark, both_indexes, tmp_path):
     bdir = os.path.join(idx, "flat", "bucket=3")
     run = sorted(n for n in os.listdir(bdir) if n.endswith(".parquet"))[0]
     shutil.copy(os.path.join(bdir, run), os.path.join(bdir, "run-dup.parquet"))
-    invalidate_buckets(IndexFS(idx, spark), idx, [3])
+    invalidate_buckets(IndexFS(idx), idx, [3])
     with pytest.raises(ValueError, match=r"bucket=3\b"):
         build_index(spark, index_dir=idx, cfg=_cfg())
 
@@ -701,7 +698,8 @@ def test_packed_merge_files_match_unit_by_unit(spark, both_indexes, tmp_path):
 
     import pyarrow as pa
 
-    from quickb_spark.index.p2_direct import _merge_one_bucket, list_bucket_files
+    from quickb_spark.fs import list_bucket_files
+    from quickb_spark.index.p2_direct import _merge_one_bucket
 
     _, idx_di = both_indexes
     flat = os.path.join(idx_di, "flat")

@@ -156,14 +156,14 @@ def test_unreachable_index_fs_raises(spark, built, monkeypatch):
     """An index whose filesystem pyarrow cannot list has no serving path:
     topk and preload raise an error naming the index, never an empty or
     silently degraded result."""
-    from quickb_spark.index import p2_direct
+    from quickb_spark import fs
     from quickb_spark.query.searcher import UnreachableIndexError
 
     def unreachable(*_args, **_kwargs):
         raise OSError("no pyarrow filesystem for this scheme")
 
-    monkeypatch.setattr(p2_direct, "list_bucket_files", unreachable)
     s = Searcher(spark, built)
+    monkeypatch.setattr(fs, "pyarrow_fs_for", unreachable)
     with pytest.raises(UnreachableIndexError, match=re.escape(built)):
         s.topk(fixture_queries()[:4], k=5)
     with pytest.raises(UnreachableIndexError, match=re.escape(built)):

@@ -204,7 +204,7 @@ def test_resume_skips_done_buckets(spark, chunks, tmp_path):
     idx = str(tmp_path / "resume_idx")
     cfg = CFG
     build_index(spark, chunks, idx, cfg, wave_size=4)
-    fs = IndexFS(idx, spark)
+    fs = IndexFS(idx)
     metas_before = load_commits(fs, idx)
     assert set(metas_before) == set(range(cfg.index.term_buckets))
 

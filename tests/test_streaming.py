@@ -109,7 +109,7 @@ def test_fold_crash_recovery_exactly_once(spark, tmp_path, monkeypatch):
         m.setattr(incremental, "_move_runs", crash_on_third_move)
         with pytest.raises(RuntimeError, match="simulated crash"):
             fold_deltas_into_index(spark, idx, CFG)
-    fs = IndexFS(idx, spark)
+    fs = IndexFS(idx)
     assert fs.exists(incremental._fold_marker(idx))
     # the public API recovers from the marker and finishes exactly once
     assert fold_deltas_into_index(spark, idx, CFG) == 0
@@ -155,7 +155,7 @@ def test_fold_keeps_a_batch_that_commits_during_the_fold(
     with monkeypatch.context() as m:
         m.setattr(incremental, "_finish_fold", commit_late_batch_then_finish)
         assert fold_deltas_into_index(spark, idx, CFG) > 0
-    pending = incremental._delta_batches(IndexFS(idx, spark), idx)
+    pending = incremental._delta_batches(IndexFS(idx), idx)
     assert [key for key, _ in pending] == ["late0000-0"]
 
     fresh = str(tmp_path / "fresh")
@@ -195,7 +195,7 @@ def test_restarted_stream_does_not_reingest_folded_docs(spark, tmp_path):
     assert load_stats(str(idx))["n_docs"] > n_base
 
     run_stream()  # nothing new to read
-    fs = IndexFS(str(idx), spark)
+    fs = IndexFS(str(idx))
     assert incremental._delta_batches(fs, str(idx)) == []
 
     commits = idx / "stream_checkpoint" / "commits"
@@ -317,7 +317,7 @@ def test_stream_in_place_crosses_a_compacted_source_log(
         _run_stream(spark, stream, idx, ckpt)
     logs = {p.name for p in (tmp_path / "ckpt" / "sources" / "0").iterdir()}
     assert "9.compact" in logs and "10" in logs
-    batches = incremental._delta_batches(incremental.IndexFS(idx, spark), idx)
+    batches = incremental._delta_batches(incremental.IndexFS(idx), idx)
     assert len(batches) == 11
     assert sum(m["n_docs"] for _, m in batches) > len(new)  # chunks, not docs
     assert fold_deltas_into_index(spark, idx, CFG) > 0
@@ -387,7 +387,7 @@ def test_replayed_epoch_reads_its_files_again(spark, tmp_path, monkeypatch):
         run()
     assert [e for e, _ in read] == [0, 1, 1]
     assert read[1][1] == read[2][1] and len(read[2][1]) == 1
-    fs = incremental.IndexFS(idx, spark)
+    fs = incremental.IndexFS(idx)
     assert len(incremental._delta_batches(fs, idx)) == 2
     fresh = _build_from_rows(spark, tmp_path, "fresh", rows)
     queries = fixture_queries()[:15]
@@ -483,7 +483,7 @@ def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch)
 
     import pyarrow as pa
 
-    from quickb_spark.index import p2_direct
+    from quickb_spark import fs
     from quickb_spark.query.searcher import UnreachableIndexError
 
     base = generate_documents_df(spark, 60, seed=11, partitions=2)
@@ -526,7 +526,7 @@ def test_delta_reads_skip_staged_and_foreign_files(spark, tmp_path, monkeypatch)
         raise pa.ArrowInvalid(f"unrecognized filesystem type in URI: {uri}")
 
     with monkeypatch.context() as m:
-        m.setattr(p2_direct, "pyarrow_fs_for", unreachable)
+        m.setattr(fs, "pyarrow_fs_for", unreachable)
         with pytest.raises(UnreachableIndexError, match="idx"):
             query_with_deltas(spark, str(idx), qdf, k=10)
 
@@ -647,4 +647,4 @@ def test_legacy_checkpoints_fail_loudly_on_resume_and_fold(spark, tmp_path):
         assert not os.path.exists(
             os.path.join(idx, "meta", "fold_commit.json"))
         assert len(incremental._delta_batches(
-            incremental.IndexFS(idx, spark), idx)) == 1
+            incremental.IndexFS(idx), idx)) == 1
