@@ -7,7 +7,7 @@ Env:
 
 Headline queries:
   q_index_build   THE north-star metric: the real engine build — fused
-                  chunk+tokenize, salted bucketed checkpoint, delta+varbyte
+                  chunk+tokenize, bucketed sorted-runs checkpoint, delta+varbyte
                   block-max segments (files/sec derived from it)
   q_wand_batch    50-query BM25 top-k batch over the compressed segment
                   index (docID-range-parallel WAND serving, one-shot API)
@@ -115,12 +115,7 @@ def main() -> None:
         return _T()
 
     cfg = EngineConfig(
-        index=IndexConfig(
-            hot_term_doc_fraction=0.05,
-            hot_term_min_df=500,
-            salt_buckets=16,
-            term_buckets=64,
-        )
+        index=IndexConfig(term_buckets=64)
     )
 
     docs_src = gate.load(spark, sf_dir, "documents")

@@ -1,6 +1,6 @@
 """Subprocess worker for the scaling bench: one parallelism level per process.
 
-Builds the full compressed index (chunk → tokenize → salted shuffle →
+Builds the full compressed index (chunk → tokenize → sorted runs →
 varbyte segments) over a corpus parquet and runs the BM25/WAND query batch.
 Prints one JSON line. Invoked by bench/scaling.py as
 
@@ -272,9 +272,6 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
 
     cfg = EngineConfig(
         index=IndexConfig(
-            hot_term_doc_fraction=0.05,
-            hot_term_min_df=500,
-            salt_buckets=16,
             term_buckets=64,
             # same task size at EVERY level (see IndexConfig.p1_task_bytes);
             # 8MB keeps a task's working set comfortably cache-friendly on

@@ -9,7 +9,7 @@ Cluster usage (north rule: multi-executor, --py-files):
       --input <documents table path or parquet dir> \\
       --index-dir <output index root> \\
       [--input-format parquet|iceberg] [--term-buckets 4096] \\
-      [--salt-buckets 64] [--wave-size 256] [--resume]
+      [--wave-size 256]
 
 The INPUT may be an Iceberg table (needs the iceberg-spark runtime jar on
 the cluster). The index itself is written as bucket-partitioned parquet
@@ -38,9 +38,6 @@ def main() -> None:
         "--input-format", default="parquet", choices=["parquet", "iceberg"]
     )
     ap.add_argument("--term-buckets", type=int, default=64)
-    ap.add_argument("--salt-buckets", type=int, default=16)
-    ap.add_argument("--hot-min-df", type=int, default=10_000)
-    ap.add_argument("--hot-doc-fraction", type=float, default=0.05)
     ap.add_argument("--wave-size", type=int, default=64)
     ap.add_argument("--no-positions", action="store_true")
     args = ap.parse_args()
@@ -58,9 +55,6 @@ def main() -> None:
     cfg = EngineConfig(
         index=IndexConfig(
             term_buckets=args.term_buckets,
-            salt_buckets=args.salt_buckets,
-            hot_term_min_df=args.hot_min_df,
-            hot_term_doc_fraction=args.hot_doc_fraction,
             store_positions=not args.no_positions,
         )
     )

@@ -3,7 +3,7 @@
 A from-scratch re-expression of the data-processing capabilities of
 mdean77a/QuicKB (reference at /root/reference, studied for semantics only):
 corpus ingest → deterministic recursive-character chunking → code-aware
-tokenization → salted inverted-index build (delta-gap + varbyte postings with
+tokenization → bucketed inverted-index build (delta-gap + varbyte postings with
 block-max metadata) → BM25 top-k query serving (DAAT with block-max WAND),
 plus the dedup / similarity / text-analysis operators a large-scale
 training-data pipeline needs.

@@ -75,13 +75,12 @@ class ChunkerConfig:
 class IndexConfig:
     """Inverted-index build parameters."""
 
-    #: Terms appearing in more than this fraction of documents are "hot" and
-    #: get salted across sub-partitions (the Zipfian `def`/`import` problem).
+    #: Ignored: hot-term salting is gone (phase 2 cuts long posting lists
+    #: into doc-range rows, index/p2_direct.py). The three fields stay
+    #: accepted only because the benchmark's spec still passes them; its
+    #: next declared change drops them, and these fields with it.
     hot_term_doc_fraction: float = 0.05
-    #: Minimum absolute df before a term can be considered hot (avoids salting
-    #: everything in tiny corpora).
     hot_term_min_df: int = 10_000
-    #: Number of salt sub-partitions for hot terms.
     salt_buckets: int = 16
     #: Posting docs per compressed block (block-max WAND granularity).
     block_size: int = 128
@@ -107,10 +106,8 @@ class IndexConfig:
     p1_task_bytes: int = 32 << 20
 
     def __post_init__(self) -> None:
-        if not 0.0 < self.hot_term_doc_fraction <= 1.0:
-            raise ValueError("hot_term_doc_fraction must be in (0, 1]")
-        if self.salt_buckets < 1 or self.block_size < 1 or self.term_buckets < 1:
-            raise ValueError("salt_buckets/block_size/term_buckets must be >= 1")
+        if self.block_size < 1 or self.term_buckets < 1:
+            raise ValueError("block_size/term_buckets must be >= 1")
         if self.p2_task_mem_bytes < 1 << 20:
             raise ValueError("p2_task_mem_bytes must be >= 1 MiB")
         if self.p1_task_bytes < 1:

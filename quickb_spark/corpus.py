@@ -5,7 +5,7 @@ Generates the BASELINE.json input_hint table shape
 with a fixed seed — no external data, no network. Content is template-
 generated source text covering every chunker edge case (FIXTURES.md) and a
 Zipfian token skew (`def`, `import`, `return` in most python docs) that
-drives the hot-term salting path.
+gives the index long posting lists (multi-block rows, split big buckets).
 
 Generation is row-index-deterministic, so any slice of the corpus is stable
 across runs, partitionings, and scale factors. For Spark-side generation at

@@ -190,18 +190,13 @@ _GATE_INDEX_CACHE: dict[str, str] = {}
 
 def _gate_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per process) a compressed segment index over the sf_dir
-    documents corpus, exercising the full salted/resumable build in-gate."""
+    documents corpus, exercising the full bucketed/resumable build in-gate."""
     if sf_dir not in _GATE_INDEX_CACHE:
         from quickb_spark.index.segments import build_index
 
         idx = tempfile.mkdtemp(prefix="qkb_gate_idx_")
         cfg = EngineConfig(
-            index=IndexConfig(
-                hot_term_doc_fraction=0.05,
-                hot_term_min_df=100,
-                salt_buckets=8,
-                term_buckets=32,
-            )
+            index=IndexConfig(term_buckets=32)
         )
         build_index(
             spark, index_dir=idx, cfg=cfg, documents=gate._as_corpus(spark, sf_dir)

@@ -2,7 +2,7 @@
 
 This is the correctness spine (SURVEY.md §7 step 2): chunk → tokenize →
 per-document (term, tf, positions) → flat postings. The compressed,
-salted, segment-file layer (quickb_spark.index.segments) is built on top
+bucketed, segment-file layer (quickb_spark.index.segments) is built on top
 and verified against this one.
 
 Scale design notes (100 TB / 1000 executors):

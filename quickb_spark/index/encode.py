@@ -8,7 +8,8 @@ encoder emits all 10 potential byte planes of the uint64 stream with masks
 (no per-value Python loop); the decoder scans continuation bits with
 cumulative masks.
 
-Layout per (term, salt) posting list:
+Layout per segment row (one term's posting list, or one doc-range part of
+a list longer than p2_direct._ROW_POSTINGS):
   doc stream   varbyte(gaps of order-preserving uint64-mapped docIDs)
   tf stream    varbyte(tf values)
   dl stream    varbyte(doc lengths) — inlining dl makes query-time scoring

@@ -15,10 +15,10 @@ that follows from both measurements:
 
   driver plans FEW, BIG, size-balanced file groups (LPT assignment,
   ~2-4 tasks per core) -> one Spark task per group -> each task reads ITS
-  input parquet files with pyarrow, tokenizes, hashes terms, salts hot
-  terms, lexsorts its postings by (bucket, term_h, salt, doc_id) and
-  writes ONE SORTED RUN per term bucket plus a doc-stats run — only a
-  one-row summary ever crosses the Python<->JVM boundary.
+  input parquet files with pyarrow, tokenizes, hashes terms, lexsorts
+  its postings by (bucket, term_h, doc_id) and writes ONE SORTED RUN per
+  term bucket plus a doc-stats run — only a one-row summary ever crosses
+  the Python<->JVM boundary.
 
 Two input shapes, passed down from build_index as `chunked`:
 
@@ -49,11 +49,11 @@ Scale notes (the 100 TB story):
   file:// and s3:// work identically; schemes pyarrow cannot reach raise
   at planning time.
 - the streaming delta tier runs the same tasks per micro-batch
-  (streaming/incremental.py), salted with the base's persisted hot set;
-  a fold moves those runs into the base checkpoint unchanged.
-- hot-term salting happens in-task from the pre-sampled hot set (phase 0),
-  with salt = pmod(xxhash64(doc_id), salt_buckets) bit-identical to the
-  JVM expression (asserted in tests/test_p1_direct.py).
+  (streaming/incremental.py) with the base's term_buckets; a fold moves
+  those runs into the base checkpoint unchanged.
+- no sampling pass precedes the tasks: a hot term's list is bounded in
+  phase 2, which knows every term's exact df and cuts a long list into
+  doc-range rows (p2_direct._ROW_POSTINGS).
 - determinism/idempotency: run file names are a pure function of the task
   id, the group plan is a pure function of the (sorted) file listing, and
   a task retry rewrites exactly its own files; the run layout is committed
@@ -71,7 +71,7 @@ from __future__ import annotations
 
 import json
 import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import numpy as np
 
@@ -83,19 +83,14 @@ from quickb_spark.index.p2_direct import (
     binary_array as _binary_array,
     gather_slices as _gather_slices,
 )
-from quickb_spark.index.xxh import (
-    hash_bytes_vec,
-    hash_int_tail,
-    hash_long_array,
-)
-from quickb_spark.taskpack import job_description, lpt_bins, run_packed
+from quickb_spark.index.xxh import hash_bytes_vec, hash_int_tail
+from quickb_spark.taskpack import job_description, lpt_bins
 
 __all__ = [
     "documents_files",
     "scan_leaf",
     "plan_groups",
     "build_flat_runs",
-    "presample_hot_direct",
     "RUNS_MARKER",
 ]
 
@@ -110,10 +105,6 @@ _TOKEN_RE = re.compile(TOKEN_PATTERN)
 DOC_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 #: The pre-chunked columns phase 1 reads (`chunked` input shape).
 CHUNK_COLUMNS = ["doc_id", "text"]
-
-#: Phase-0 sample work units: fixed, so the sampled rows (and the hot set)
-#: do not depend on cluster size.
-_SAMPLE_UNITS = 64
 
 
 def _class_name(obj) -> str:
@@ -308,9 +299,7 @@ def _p1_task(
     flat_uri: str,
     ds_uri: str,
     chunker_cfg: ChunkerConfig,
-    hot_h_sorted: np.ndarray,
     nb: int,
-    salt_buckets: int,
     chunked: bool = False,
     sub_batch_docs: int = 2048,
 ) -> dict:
@@ -392,23 +381,11 @@ def _p1_task(
     term_h, doc_id, tf, pos_buf, pos_off, pdl, cid, cdl = acc.concat()
     n = len(term_h)
 
-    # salt (bit-identical to the JVM column: pmod(xxhash64(doc_id), sb) for
-    # hot terms, 0 otherwise) and bucket (pmod(term_h, nb))
-    if len(hot_h_sorted):
-        j = np.searchsorted(hot_h_sorted, term_h)
-        j[j == len(hot_h_sorted)] = 0
-        is_hot = hot_h_sorted[j] == term_h
-    else:
-        is_hot = np.zeros(n, dtype=bool)
-    salt = np.where(
-        is_hot, hash_long_array(doc_id) % np.int64(salt_buckets), 0
-    ).astype(np.int32)
-    bucket = (term_h % np.int64(nb)).astype(np.int32)
+    bucket = (term_h % np.int64(nb)).astype(np.int32)  # pmod(term_h, nb)
 
-    order = np.lexsort((doc_id, salt, term_h, bucket))
+    order = np.lexsort((doc_id, term_h, bucket))
     bucket_s = bucket[order]
     term_s = term_h[order]
-    salt_s = salt[order]
     doc_s = doc_id[order]
     tf_s = tf[order]
     dl_s = pdl[order]
@@ -429,7 +406,6 @@ def _p1_task(
         run = pa.table(
             {
                 "term_h": pa.array(term_s[lo:hi], type=pa.int64()),
-                "salt": pa.array(salt_s[lo:hi], type=pa.int32()),
                 "doc_id": pa.array(doc_s[lo:hi], type=pa.int64()),
                 "tf": pa.array(tf_s[lo:hi], type=pa.int32()),
                 "doc_len": pa.array(dl_s[lo:hi], type=pa.int64()),
@@ -472,7 +448,6 @@ def build_flat_runs(
     flat_dir: str,
     doc_stats_dir: str,
     cfg: EngineConfig,
-    hot_terms: list[str],
     n_tasks: int | None = None,
     chunked: bool = False,
 ) -> dict:
@@ -512,14 +487,11 @@ def build_flat_runs(
 
     chunker_cfg = cfg.chunker
     nb = cfg.index.term_buckets
-    sb = cfg.index.salt_buckets
-    hot_h = np.sort(np.array([_xxh_str(t) for t in hot_terms], dtype=np.int64))
 
     def _run(item):
         tid, paths = item
         return _p1_task(
-            tid, paths, flat_dir, doc_stats_dir,
-            chunker_cfg, hot_h, nb, sb, chunked,
+            tid, paths, flat_dir, doc_stats_dir, chunker_cfg, nb, chunked,
         )
 
     sc = spark.sparkContext
@@ -542,157 +514,11 @@ def build_flat_runs(
     }
 
 
-def _sample_task(
-    path: str, k: int, nk: int, per_file_frac: float,
-    chunker_cfg: ChunkerConfig, chunked: bool = False,
-) -> tuple[int, int, Counter]:
-    """Hot-term presample worker: df-per-term over the k-th of nk evenly
-    spaced row slices of one file, sampling per_file_frac of its rows
-    (documents, or pre-chunked rows when `chunked`)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from quickb_spark.chunking.splitter import split_document
-
-    pa.set_cpu_count(1)  # one core slot per task (see _p1_task)
-
-    fsys, fpath = pyarrow_fs_for(path)
-    df: Counter = Counter()
-    n_chunks = 0
-    n_postings = 0
-    # Row-group-pruned read: the sampled slice is a deterministic function
-    # of the file's row count alone, so only the row groups covering
-    # [lo, lo+take) are fetched — same sampled rows as a whole-file read
-    # (asserted in tests/test_p1_direct.py), a fraction of the bytes. At a
-    # 2% sample this cuts most of phase 0's read volume.
-    with fsys.open_input_file(fpath) as f:
-        pf = pq.ParquetFile(f)
-        n = pf.metadata.num_rows
-        lo = (n * k) // nk
-        take = max(1, int(round(n * per_file_frac / nk))) if n else 0
-        take = max(0, min(take, n - lo))
-        rg_rows = [
-            pf.metadata.row_group(i).num_rows
-            for i in range(pf.num_row_groups)
-        ]
-        rg_starts = [0]
-        for c in rg_rows:
-            rg_starts.append(rg_starts[-1] + c)
-        pick = [
-            i
-            for i in range(len(rg_rows))
-            if rg_starts[i] < lo + take and rg_starts[i + 1] > lo
-        ]
-        cols = ["text"] if chunked else ["lang", "content"]
-        if take and pick:
-            tbl = pf.read_row_groups(pick, columns=cols)
-            sl = tbl.slice(lo - rg_starts[pick[0]], take)
-        else:
-            sl = pf.schema_arrow.empty_table()
-    if chunked:
-        texts = sl.column("text").to_pylist()
-    else:
-        texts = (
-            text
-            for lang, content in zip(
-                sl.column("lang").to_pylist(), sl.column("content").to_pylist()
-            )
-            if content
-            for text in split_document(content, lang, chunker_cfg)
-        )
-    for text in texts:
-        if not text:
-            continue
-        # distinct terms in first-occurrence order, not set order: the
-        # Counter's insertion order breaks df ties at the max_terms cut,
-        # and set order would tie it to the process's PYTHONHASHSEED
-        toks = list(dict.fromkeys(_TOKEN_RE.findall(text.lower())))
-        if not toks:
-            continue
-        n_chunks += 1
-        n_postings += len(toks)
-        df.update(toks)
-    return n_chunks, n_postings, df
-
-
-def _sample_units(
-    files: list[tuple[str, int]], frac: float
-) -> tuple[list[tuple[str, int, int, float]], list[float], float]:
-    """Phase-0 sample plan over the sorted corpus listing.
-    -> (units [(path, k, nk, per_file_frac)], per-unit cost estimate,
-    effective sample fraction). A pure function of the listing: the same
-    rows are sampled at every cluster size."""
-    files_used = min(len(files), _SAMPLE_UNITS)
-    fstride = len(files) // files_used
-    chosen = files[::fstride][:files_used]
-    per_file_frac = min(1.0, frac * len(files) / files_used)
-    slices_per_file = max(1, _SAMPLE_UNITS // files_used)
-    eff_frac = files_used * per_file_frac / len(files)
-    units, costs = [], []
-    for path, sz in chosen:
-        for k in range(slices_per_file):
-            units.append((path, k, slices_per_file, per_file_frac))
-            costs.append(sz / slices_per_file)
-    return units, costs, eff_frac
-
-
-def _hot_from_samples(
-    parts: list[tuple[int, int, Counter]],
-    eff_frac: float,
-    cfg: EngineConfig,
-    sample_margin: float,
-    max_terms: int,
-) -> tuple[list[str], int]:
-    """Reduce per-unit sample results -> (hot_terms sorted, est_postings).
-    `parts` must be in unit order: Counter insertion order breaks df ties
-    at the max_terms cut."""
-    n_chunks = sum(p[0] for p in parts)
-    est_postings = int(sum(p[1] for p in parts) / eff_frac)
-    df: Counter = Counter()
-    for p in parts:
-        df.update(p[2])
-    thresh = (
-        max(
-            cfg.index.hot_term_min_df * eff_frac,
-            n_chunks * cfg.index.hot_term_doc_fraction,
-        )
-        * sample_margin
-    )
-    hot = [t for t, c in df.most_common(max_terms * 4) if c > thresh][:max_terms]
-    return sorted(hot), est_postings
-
-
-def presample_hot_direct(
-    spark,
-    files: list[tuple[str, int]],
-    cfg: EngineConfig,
-    frac: float,
-    sample_margin: float,
-    max_terms: int,
-    chunked: bool = False,
-) -> tuple[list[str], int]:
-    """Phase-0 hot-term detection over a ~frac row sample, striped across
-    the parquet `files` (a row sample's df statistics on uniformly written
-    corpora) of documents, or of pre-chunked rows when `chunked`.
-    -> (hot_terms sorted, est_total_postings).
-
-    The sample is spread over a FIXED number of work units (64), each
-    reading an evenly-spaced row slice of one file. The unit count being
-    level-independent keeps the sampled rows (and therefore the hot set
-    and salt assignment) identical at every parallelism. The units are
-    LPT-packed into at most one task per slot (taskpack.run_packed): the
-    sampled work is small, so one task per unit would be almost all
-    Spark's per-task fixed cost. Results merge in unit order, so the hot
-    set does not depend on the packing either."""
-    units, costs, eff_frac = _sample_units(files, frac)
-    chunker_cfg = cfg.chunker
-
-    def _run(unit):
-        path, k, nk, pf = unit
-        return _sample_task(path, k, nk, pf, chunker_cfg, chunked)
-
-    parts = run_packed(
-        spark.sparkContext, _run, units, costs,
-        label="qkb phase0: hot-term sample",
-    )
-    return _hot_from_samples(parts, eff_frac, cfg, sample_margin, max_terms)
+def presample_hot_direct(*_args, **_kwargs):
+    """Never called: the phase-0 hot-term sample is gone (phase 2 cuts long
+    posting lists by doc range instead). The name stays only because the
+    benchmark's traced runs (perfbench/tracing.py `WRAPPED`) look it up,
+    and the benchmark harness changes only in a declared benchmark change;
+    that change drops the lookup and this stub with it."""
+    raise NotImplementedError("phase 0 was removed; build_index needs none")

@@ -1,16 +1,19 @@
 """Phase-2 k-way merge-encode of the sorted runs (direct pyarrow IO).
 
 Phase 1 (index/p1_direct.py) leaves one run per (task, bucket), each
-sorted by (term_h, salt, doc_id). `merge_encode_buckets` turns a wave of
+sorted by (term_h, doc_id). `merge_encode_buckets` turns a wave of
 buckets into segments: one work unit per BUCKET (or per term-split of a
 big bucket), LPT-packed into at most one Spark task per slot
 (taskpack.run_packed). Each unit reads its bucket's runs with pyarrow,
 merges them (the runs are disjoint by doc, so the global order is one
 stable lexsort over the concatenated columns plus one byte-slice gather),
-encodes every (term_h, salt) group in whole-input NumPy passes
+encodes every term's posting list in whole-input NumPy passes
 (`encode_sorted_groups`) and writes BOTH the bucket's segment file and its
-(term_h, df) lexicon rows. Only a one-row summary per unit crosses the
-Python<->JVM boundary: routing per-posting rows through Spark's Python-UDF
+(term_h, df) lexicon rows. A list longer than `_ROW_POSTINGS` is written
+as consecutive doc-range rows (`part` 0, 1, ...): the merge knows each
+term's exact df, so no sample decides it, and one term's rows are
+doc-ordered and doc-disjoint, so serving concatenates them as they come.
+Only a one-row summary per unit crosses the Python<->JVM boundary: routing per-posting rows through Spark's Python-UDF
 Arrow channel was measured as the scaling ceiling of the whole build
 (~20-30 s per million documents regardless of core count, BENCH/
 BASELINE.md). This is the north star's layout: per-partition sorted
@@ -57,12 +60,24 @@ __all__ = [
 ]
 
 #: The sorted-run columns phase 2 reads (pos_vb only with positions).
-_CHECKPOINT_COLS = ["term_h", "salt", "doc_id", "tf", "doc_len", "pos_vb"]
+_CHECKPOINT_COLS = ["term_h", "doc_id", "tf", "doc_len", "pos_vb"]
 
 #: Conservative decoded-working-set multiplier over a bucket's on-disk run
 #: bytes (snappy parquet -> numpy columns + sort/gather scratch). Used by
 #: the merge memory guard to size term-granular splits.
 _RUN_MEM_EXPANSION = 3
+
+#: Postings per segment row: a longer posting list is cut into consecutive
+#: doc-range rows of this many postings (the last one shorter). It keeps
+#: every row's byte streams far under Arrow's 2 GiB binary cell and bounds
+#: what one row costs to decode. `merge_encode_buckets` rounds it down to a
+#: multiple of the block size, so rows split on block boundaries.
+_ROW_POSTINGS = 1 << 20
+
+
+def _row_postings(block_size: int) -> int:
+    """_ROW_POSTINGS rounded down to a multiple of `block_size`."""
+    return max(1, _ROW_POSTINGS // block_size) * block_size
 
 
 def gather_slices(src, off: np.ndarray, order: np.ndarray):
@@ -104,7 +119,6 @@ def binary_array(values, off: np.ndarray):
 
 def encode_sorted_groups(
     idx: np.ndarray,
-    salt: np.ndarray,
     doc_id: np.ndarray,
     tf: np.ndarray,
     doc_len: np.ndarray,
@@ -113,9 +127,17 @@ def encode_sorted_groups(
     block_size: int,
     store_positions: bool,
     src_label: str,
+    row_postings: int | None = None,
 ):
     """The vectorized whole-input encode core: postings sorted by
-    (term_h, salt, doc_id) -> (segment pyarrow Table, n_groups, max_salt).
+    (term_h, doc_id) -> (segment pyarrow Table, n_groups, max_part).
+
+    A group (one segment row) is one term's postings of one `part` =
+    rank_in_term // row_postings, so a list longer than `row_postings`
+    becomes consecutive doc-range rows in doc order. Every row starts a
+    block; with `row_postings` a multiple of `block_size` (the default,
+    `_row_postings(block_size)`) only a list's last row ends in a short
+    block.
 
     The input holds ~1e3-1e5 posting-list groups of ~1e2 postings each;
     calling the per-group encoder (index/encode.py) costs ~0.7ms of NumPy
@@ -132,16 +154,19 @@ def encode_sorted_groups(
 
     from quickb_spark.index.encode import to_u64, varbyte_encode, varbyte_lengths
 
+    row_postings = row_postings or _row_postings(block_size)
     n = len(idx)
+    # each posting's rank within its term; a group starts at every
+    # row_postings-th rank
+    rank = np.arange(n, dtype=np.int64)
     if n:
-        change = np.flatnonzero((idx[1:] != idx[:-1]) | (salt[1:] != salt[:-1])) + 1
-        starts = np.concatenate(([0], change)).astype(np.int64)
-        ends = np.concatenate((change, [n])).astype(np.int64)
-    else:
-        starts = ends = np.empty(0, dtype=np.int64)
+        t_starts = np.flatnonzero(np.r_[True, idx[1:] != idx[:-1]])
+        rank -= np.repeat(t_starts, np.diff(np.append(t_starts, n)))
+    part, pos_in_group = np.divmod(rank, row_postings)
+    starts = np.flatnonzero(pos_in_group == 0)
+    ends = np.append(starts[1:], n) if n else starts
     n_groups = len(starts)
     sizes = ends - starts
-    pos_in_group = np.arange(n, dtype=np.int64) - np.repeat(starts, sizes)
     # sortedness check by COMPARISON in order-preserving u64 space —
     # np.diff on raw int64 doc_ids overflows when an adjacent gap exceeds
     # 2^63 (near-certain for df<=3 posting lists, whose two docs land
@@ -211,7 +236,7 @@ def encode_sorted_groups(
     out_tbl = pa.table(
         {
             "term_h": pa.array(idx[starts], type=pa.int64()),
-            "salt": pa.array(salt[starts].astype(np.int32), type=pa.int32()),
+            "part": pa.array(part[starts].astype(np.int32), type=pa.int32()),
             "df_part": pa.array(sizes, type=pa.int64()),
             "cf_part": pa.array(
                 np.add.reduceat(tf.astype(np.int64), starts) if n
@@ -239,8 +264,8 @@ def encode_sorted_groups(
             "block_pos_off": _list_array(pos_boff),
         }
     )
-    max_salt = int(salt.max()) if n else 0
-    return out_tbl, n_groups, max_salt
+    max_part = int(part.max()) if n else 0
+    return out_tbl, n_groups, max_part
 
 
 def _merge_one_bucket(
@@ -253,9 +278,10 @@ def _merge_one_bucket(
     store_positions: bool,
     nsplits: int = 1,
     split_id: int = 0,
+    row_postings: int | None = None,
 ) -> dict:
     """k-way merge one bucket's sorted runs -> one segment file + its
-    lexicon rows. Each run is sorted by (term_h, salt, doc_id) and the keys
+    lexicon rows. Each run is sorted by (term_h, doc_id) and the keys
     are disjoint-by-doc across runs, so the global order is one stable
     lexsort of the concatenated columns; position slices follow with one
     vectorized byte gather.
@@ -268,11 +294,11 @@ def _merge_one_bucket(
     working set is ~1/nsplits of the bucket (plus one run's transient) —
     this is what makes nsplits a real MEMORY bound, not just a
     work-balance knob (merge_encode_buckets sizes it from both). Every
-    (term, salt) group stays whole, each term's lexicon row is written
-    exactly once, and the extra cost is only re-reading the bucket's runs
-    per split. At a larger scale the next step down is (term, salt)-
-    granular splitting with a df-summing lexicon read; not needed at this
-    corpus size."""
+    term's posting list stays whole in one unit, each term's lexicon row is
+    written exactly once, and the extra cost is only re-reading the
+    bucket's runs per split. At a larger scale the next step down is
+    splitting one term's list by doc range across units, with a df-summing
+    lexicon read; not needed at this corpus size."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -298,14 +324,12 @@ def _merge_one_bucket(
     del tbls
     n = tbl.num_rows
     idx = tbl.column("term_h").to_numpy(zero_copy_only=False)
-    salt = tbl.column("salt").to_numpy(zero_copy_only=False)
     doc_id = tbl.column("doc_id").to_numpy(zero_copy_only=False)
     tf = tbl.column("tf").to_numpy(zero_copy_only=False)
 
     # merge: signed-int64 lexsort, the runs' in-task sort order
-    order = np.lexsort((doc_id, salt, idx))
+    order = np.lexsort((doc_id, idx))
     idx_s = idx[order]
-    salt_s = salt[order]
     doc_s = doc_id[order]
     tf_s = tf[order]
     dl_s = tbl.column("doc_len").to_numpy(zero_copy_only=False)[order]
@@ -330,9 +354,9 @@ def _merge_one_bucket(
         pos_vals, pos_off_s = b"", np.zeros(len(order) + 1, dtype=np.int64)
     del tbl
 
-    out_tbl, n_groups, max_salt = encode_sorted_groups(
-        idx_s, salt_s, doc_s, tf_s, dl_s, pos_off_s, pos_vals,
-        block_size, store_positions, f"bucket={bucket} runs",
+    out_tbl, n_groups, max_part = encode_sorted_groups(
+        idx_s, doc_s, tf_s, dl_s, pos_off_s, pos_vals,
+        block_size, store_positions, f"bucket={bucket} runs", row_postings,
     )
 
     dest_dir = f"{seg_root.rstrip('/')}/bucket={bucket}"
@@ -374,7 +398,7 @@ def _merge_one_bucket(
         "n_groups": int(n_groups),
         "n_terms": int(len(lex_term)),
         "n_postings": int(len(order)),
-        "max_salt": max_salt,
+        "max_part": max_part,
         "out_bytes": int(sz),
     }
 
@@ -453,13 +477,15 @@ def merge_encode_buckets(
                 (b, [p for p, _ in paths], nsplits, k, bsize / nsplits)
             )
     work.sort(key=lambda t: -t[4])
+    # read here, in the driver, so the tasks' closure carries the value
+    row_postings = _row_postings(block_size)
 
     def _run(item):
         b, paths, nsplits, k, _est = item
         try:
             return _merge_one_bucket(
                 b, paths, flat_dir, seg_dir, lex_dir,
-                block_size, store_positions, nsplits, k,
+                block_size, store_positions, nsplits, k, row_postings,
             )
         except ValueError as e:  # malformed runs: deterministic, no retry
             return {"bucket": b, "error": str(e)}
@@ -480,6 +506,6 @@ def merge_encode_buckets(
             a["n_groups"] += s["n_groups"]
             a["n_terms"] += s["n_terms"]
             a["n_postings"] += s["n_postings"]
-            a["max_salt"] = max(a["max_salt"], s["max_salt"])
+            a["max_part"] = max(a["max_part"], s["max_part"])
             a["out_bytes"] += s["out_bytes"]
     return list(agg.values())

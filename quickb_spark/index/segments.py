@@ -1,6 +1,6 @@
-"""Compressed, salted, bucketed index segments — the real index layout.
+"""Compressed, bucketed index segments — the real index layout.
 
-Build pipeline (SURVEY.md §7 step 3, north-star core) — format v5. One
+Build pipeline (SURVEY.md §7 step 3, north-star core) — format v6. One
 engine builds every index, whatever its input, and feeds the streaming
 delta tier (streaming/incremental.py):
 
@@ -8,14 +8,11 @@ delta tier (streaming/incremental.py):
              in place; any other `documents=`, or a pre-chunked `chunks=`
              (doc_id, text) DataFrame, is staged to <index>/_staged_input/
              with one Spark parquet write, deleted once phase 1 commits
-        ──► phase 0: hot-term detection on a ~2% file-striped input
-             sample, BEFORE phase 1 (so the salt is known up front),
-             persisted to meta/hot_terms.json   (p1_direct, one packed job)
         ──► phase 1: batched pyarrow tasks chunk (documents only) +
-             tokenize their files, hash terms to term_h = xxhash64(term),
-             salt hot terms, and write one run per (task, bucket) sorted by
-             (term_h, salt, doc_id), plus a doc-stats run; the corpus
-             scalars come back with the task summaries
+             tokenize their files, hash terms to term_h = xxhash64(term)
+             and write one run per (task, bucket) sorted by
+             (term_h, doc_id), plus a doc-stats run; the corpus scalars
+             come back with the task summaries
                                               (p1_direct.build_flat_runs)
         ──► phase 2: per wave, one unit per bucket (or per term split of
              a big bucket), LPT-packed into at most one task per slot,
@@ -23,24 +20,27 @@ delta tier (streaming/incremental.py):
              varbyte + block-max segment AND its (term_h, df) lexicon
              in-task              (p2_direct.merge_encode_buckets)
 
+An index read in place builds in two Spark jobs, phase 1 and phase 2
+(one phase-2 job per wave of buckets).
+
 Nothing but task summaries crosses the JVM<->Python Arrow channel. The
 `chunks=` input exists because the registry's semantic and fixed-token
 chunkers cannot run inside a phase-1 task; `RecursiveTokenChunker` output
 (chunking.udf.chunk_documents) builds the same index as its documents.
 
-Skew (the Zipfian `def`/`import` problem): hot terms get
-`salt = pmod(xxhash64(doc_id), S)` so no single encode group exceeds
-df_hot/S postings. The sampled threshold keeps a 2x safety margin —
-salting a borderline-cold term is harmless (query-side re-merge is
-unconditional), missing a hot one is not. Salted sub-lists are re-merged
-at query time (quickb_spark.query.wand).
+Skew (the Zipfian `def`/`import` problem): phase 2 knows every term's
+exact df, so a posting list longer than p2_direct._ROW_POSTINGS is written
+as consecutive doc-range rows (`part` 0, 1, ...) with no sample to decide
+it. One term's rows are doc-ordered and doc-disjoint: serving concatenates
+them in order, with no re-merge (quickb_spark.query.wand). A Zipf-hot
+bucket is still split by term hash across phase-2 units.
 
 Resumability: phase 1 commits with flat/_SUCCESS and the flat/_RUNS
 layout marker. Phase 2 is per-bucket idempotent: a bucket's segment and
 lexicon dirs are rewritten wholly, then the wave's commits are saved in
 the ledger; on restart, committed buckets are skipped and their data is
 untouched (lineage preserved). A checkpoint written by an older engine
-(no _RUNS marker, or runs missing salt/term_h/doc_len) is refused with a
+(no _RUNS marker, or runs missing term_h/doc_len) is refused with a
 rebuild message. A fold (streaming/incremental.py) moves delta runs into
 flat/, invalidates the touched buckets and calls build_index to
 merge-encode them again. `segments_meta()` exposes the whole build
@@ -53,7 +53,6 @@ identity partitioning on `bucket` without touching the logic):
   <index_dir>/doc_stats/run-*.parquet        (doc_id, doc_len) runs
   <index_dir>/segments/bucket=<b>/...        encoded posting lists
   <index_dir>/lexicon/bucket=<b>/...         (term_h, df) global-df lexicon
-  <index_dir>/meta/hot_terms.json            pre-sampled hot-term set
   <index_dir>/meta/commits.json              per-partition lineage + metrics
                                              ledger (one atomic file; one
                                              entry per bucket)
@@ -98,7 +97,11 @@ __all__ = [
 #: block-aligned slice of the POSITION stream is now independently
 #: decodable too, which is what lets the phrase query path position-verify
 #: only candidate postings instead of decoding whole hot posting lists.
-FORMAT_VERSION = 5
+#: v6 drops hash salting: runs carry no `salt` column, and a segment row is
+#: one doc-range `part` of a term's list (a new row every _ROW_POSTINGS
+#: postings), so a term's rows are doc-ordered; `stats.json` has no
+#: `hot_terms` or `salt_buckets`.
+FORMAT_VERSION = 6
 
 #: Where build_index stages a documents= or chunks= DataFrame (deleted
 #: after phase 1).
@@ -106,7 +109,7 @@ STAGED_INPUT = "_staged_input"
 
 #: Columns a sorted run must carry; a checkpoint without them is an older
 #: engine's layout.
-_RUN_KEY_COLUMNS = ("salt", "term_h", "doc_len")
+_RUN_KEY_COLUMNS = ("term_h", "doc_len")
 
 
 def stage_documents(
@@ -123,17 +126,6 @@ def stage_documents(
         documents.select(*(CHUNK_COLUMNS if chunked else DOC_COLUMNS)).write.mode(
             "overwrite"
         ).parquet(dest)
-
-
-#: Input-sample fraction for PRE-phase-1 hot-term detection (tokenizes ~2%
-#: of the raw input once; detecting hot terms before phase 1 lets the salt
-#: be baked into the checkpoint so phase 2 needs no shuffle at all).
-_HOT_PRESAMPLE_FRACTION = 0.02
-#: Safety margin on the sampled threshold: include anything whose estimated
-#: df exceeds half the hot threshold (over-salting is benign).
-_HOT_SAMPLE_MARGIN = 0.5
-#: Upper bound on the hot set (isin-literal plan size guard).
-_HOT_MAX_TERMS = 2000
 
 
 # The commit ledger lives behind a pluggable CommitProtocol seam
@@ -156,8 +148,8 @@ def invalidate_buckets(fs: IndexFS, index_dir: str, buckets: list[int]) -> None:
 
 def check_flat_layout(fs: IndexFS, flat_dir: str) -> None:
     """Raise RuntimeError unless `flat_dir` holds this engine's sorted-runs
-    checkpoint: the _RUNS marker, and runs carrying salt, term_h and
-    doc_len (one run's footer is read). Resuming or folding an older
+    checkpoint: the _RUNS marker, and runs carrying term_h and doc_len
+    (one run's footer is read). Resuming or folding an older
     engine's layout would silently mis-encode, so it must be rebuilt."""
     import pyarrow.parquet as pq
 
@@ -217,9 +209,8 @@ def build_index(
     `documents` DataFrame, or a pre-chunked `chunks` DataFrame with a long
     `doc_id` and a string `text` column (chunking.udf.chunk_documents or
     any registry chunker). All three run the one engine on one listing of
-    the input files: phase 0 samples hot terms
-    (p1_direct.presample_hot_direct), phase 1 writes per-bucket sorted
-    runs in batched pyarrow tasks that never cross the JVM<->Python Arrow
+    the input files: phase 1 writes per-bucket sorted runs in batched
+    pyarrow tasks that never cross the JVM<->Python Arrow
     channel (p1_direct.build_flat_runs), and phase 2 k-way merge-encodes
     them (p2_direct.merge_encode_buckets). A plain parquet scan
     `documents=spark.read.parquet(dir)` is read in place like
@@ -228,7 +219,7 @@ def build_index(
     `<index_dir>/_staged_input/` with one Spark parquet write, deleted once
     phase 1 has committed. `corpus_uri` wins when given with either. A
     `chunks=chunk_documents(docs)` build is byte-identical to a
-    `documents=docs` build under the same hot set (tests/test_p1_direct.py).
+    `documents=docs` build (tests/test_p1_direct.py).
     """
     if chunks is not None and documents is not None:
         raise ValueError("pass at most one of chunks= or documents=")
@@ -249,11 +240,10 @@ def build_index(
     fs.mkdirs(join_path(index_dir, "meta"))
     flat_dir = join_path(index_dir, "flat")
     stats_path = join_path(index_dir, "meta", "stats.json")
-    hot_path = join_path(index_dir, "meta", "hot_terms.json")
     staged_dir = join_path(index_dir, STAGED_INPUT)
 
     p1_needed = not fs.exists(join_path(flat_dir, "_SUCCESS"))
-    # the input files phase 0 and phase 1 read, and their shape
+    # the input files phase 1 reads, and their shape
     chunked = False
     if p1_needed:
         from quickb_spark.index import p1_direct
@@ -279,42 +269,12 @@ def build_index(
             where = corpus_uri or staged_dir
             raise ValueError(f"no parquet data files under {where}")
 
-    # ---- phase 0: hot-term detection on a ~2% input sample, BEFORE phase 1.
-    # Salt is a pure function of (term in hot set, doc_id), so knowing the
-    # hot set up front lets phase 1 write the checkpoint already salted,
-    # keyed and sorted. Persisted before phase 1 so a crashed build resumes
-    # with the same salt assignment it started with; the streaming delta
-    # tier salts with the same persisted set.
-    if p1_needed and not fs.exists(hot_path):
-        frac = _HOT_PRESAMPLE_FRACTION
-        hot, est_postings = p1_direct.presample_hot_direct(
-            spark, files, cfg, frac, _HOT_SAMPLE_MARGIN, _HOT_MAX_TERMS,
-            chunked=chunked,
-        )
-        fs.write_text_atomic(
-            hot_path,
-            json.dumps(
-                {
-                    "hot_terms": hot,
-                    "sample_fraction": frac,
-                    "est_postings": est_postings,
-                }
-            ),
-        )
-        _mark("phase0 hot-term presample")
-    hot_terms: list[str] = (
-        json.loads(fs.read_text(hot_path)).get("hot_terms", [])
-        if fs.exists(hot_path)
-        else []
-    )
-
     # ---- phase 1: sorted runs per (task, bucket) plus doc-stats runs -----
     p1_metrics: dict | None = None
     if p1_needed:
         p1_metrics = p1_direct.build_flat_runs(
             spark, files, flat_dir,
-            join_path(index_dir, "doc_stats"), cfg, hot_terms,
-            chunked=chunked,
+            join_path(index_dir, "doc_stats"), cfg, chunked=chunked,
         )
     # phase 1 has committed (its _SUCCESS exists), so a staged input copy
     # is no longer needed, also when an earlier call crashed before
@@ -343,13 +303,13 @@ def build_index(
                     "avgdl": avgdl,
                     "n_postings": total_postings,
                     "term_buckets": nb,
-                    "salt_buckets": cfg.index.salt_buckets,
                     "block_size": cfg.index.block_size,
                     "store_positions": cfg.index.store_positions,
-                    "hot_terms": hot_terms,
                 }
             ),
         )
+    else:  # resuming another format's index fails with the rebuild message
+        load_stats(index_dir)
 
     _mark("phase1b stats")
 
@@ -401,7 +361,9 @@ def _run_waves(
             commits[b] = {
                 "segment_id": f"seg-{b:05d}",
                 "partition_id": b,
-                "salt": int(s["max_salt"]) if s else 0,
+                # FIXTURES.md §6 keeps the column name `salt`; it holds
+                # the bucket's largest doc-range part (0 for short lists)
+                "salt": int(s["max_part"]) if s else 0,
                 "term_count": int(s["n_terms"]) if s else 0,
                 "posting_count": int(s["n_postings"]) if s else 0,
                 "input_rows": int(s["n_postings"]) if s else 0,

@@ -7,7 +7,9 @@ and of Spark-side readers of the index:
 
   doc_id = F.xxhash64("repo", "path", "commit", chunk_idx)   (strings + int)
   term_h = F.xxhash64("term")                                 (string)
-  salt   = F.pmod(F.xxhash64("doc_id"), salt_buckets)         (long)
+  split  = F.pmod(F.xxhash64("term_h"), nsplits)               (long)
+
+(the last is phase 2's term split of a big bucket, index/p2_direct.py).
 
 Spark's XxHash64 expression (`org.apache.spark.sql.catalyst.expressions.
 XXH64`, a Java port of Yann Collet's public XXH64, seed 42) chains multiple

@@ -676,7 +676,7 @@ def _candidate_pos_keys(struct, cand_idx: np.ndarray) -> np.ndarray:
     (< 2^31), slots < 2^31 — the composite never overflows."""
     perm = struct["perm"]
     part_starts = struct["part_starts"]
-    flat_idx = perm[cand_idx]
+    flat_idx = cand_idx if perm is None else perm[cand_idx]
     part_i = np.searchsorted(part_starts, flat_idx, "right") - 1
     out = []
     for pi in np.unique(part_i):

@@ -11,10 +11,12 @@ Each range task decodes ONLY its slices, so per-task memory is bounded by
 candidate_postings/R. Ranges partition the doc space, so per-range top-k
 lists merge exactly (a doc's full score is computed in exactly one range).
 
-`_build_struct` re-merges salted sub-lists per term (hot-term salting is
-a build-time artifact — queries see one logical posting list) and
-recomputes block-max metadata on the merged arrays. The batch kernel is
-`_dense_topk`: a shared sorted doc domain is built ONCE per range, each
+`_build_struct` joins a term's parts into one logical posting list. A
+long list is stored as consecutive doc-range rows (index format v6), so
+its parts are already doc-ordered and concatenate as they come; only the
+streaming delta tier's postings, which interleave with the segment rows,
+need a re-merge. Block-max metadata is recomputed on the joined arrays.
+The batch kernel is `_dense_topk`: a shared sorted doc domain is built ONCE per range, each
 term gets a precomputed dense index column, and every query in the batch
 scores via buffered fancy-index adds into one reused accumulator. Above
 AUTO_EXACT_MAX_POSTINGS candidate postings per query it first applies the
@@ -32,9 +34,10 @@ evaluated — results are EXACTLY the exhaustive scorer's.
 Correctness guardrails:
 - upper bounds come from (max_tf, min_dl): BM25 is monotonically increasing
   in tf and decreasing in dl, so idf·S(max_tf, min_dl) bounds every doc in
-  scope; block bounds are recomputed post-merge so salting can't break them.
-- df for idf is the GLOBAL per-term df over all salted rows, planned in the
-  driver — a range never sees a partial df.
+  scope; block bounds are recomputed on the joined list, so a row or range
+  boundary cannot break them.
+- df for idf is the GLOBAL per-term df over all of a term's rows, planned
+  in the driver — a range never sees a partial df.
 - slices are block-aligned (supersets of the range); the range task trims
   the decoded arrays to [lo, hi] so boundary docs are scored exactly once.
 """
@@ -246,15 +249,22 @@ def _range_bounds(r_count: int) -> list[tuple[int, int, int]]:
 
 
 def _build_struct(parts, idf, k1, b, avgdl):
-    """Merge a term's range-trimmed slice parts (salt sub-lists + partial
-    segment rows) into one scoring struct: stable argsort re-merge (keys
-    are doc-disjoint across parts, so part order cannot affect results),
-    block-max metadata rebuilt on the merged arrays."""
-    docs = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    order = np.argsort(docs, kind="stable")  # salt re-merge
-    docs, tfs, dls = docs[order], tfs[order], dls[order]
+    """Join a term's range-trimmed, doc-sorted, doc-disjoint parts (its
+    segment rows in row order, then any delta-tier postings) into one
+    scoring struct, with block-max metadata rebuilt on the joined arrays.
+    Parts in doc order are concatenated; parts that interleave (delta
+    postings) are merged by a stable argsort, and `perm` maps the merged
+    order back to the concatenation (None: the identity)."""
+    if len(parts) == 1:
+        docs, tfs, dls = parts[0]
+    else:
+        docs = np.concatenate([p[0] for p in parts])
+        tfs = np.concatenate([p[1] for p in parts])
+        dls = np.concatenate([p[2] for p in parts])
+    order = None
+    if any(p[0][-1] >= q[0][0] for p, q in zip(parts, parts[1:])):
+        order = np.argsort(docs, kind="stable")
+        docs, tfs, dls = docs[order], tfs[order], dls[order]
     last_doc, max_tf, min_dl = block_meta(docs, tfs, dls, 128)
     return {
         "docs": docs,

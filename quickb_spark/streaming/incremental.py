@@ -6,9 +6,9 @@ Every tier is written by the same direct engine as the base build:
 
 1. **Ingest** (`start_incremental_ingest`): readStream over a documents
    source → `foreachBatch` runs the phase-1 tasks (p1_direct.build_flat_runs)
-   on each micro-batch, salted with the base's persisted hot set: a plain
-   parquet file stream's epoch files in place, any other batch staged to
-   parquet first. A batch lands as
+   on each micro-batch with the base's term buckets: a plain parquet file
+   stream's epoch files in place, any other batch staged to parquet
+   first. A batch lands as
 
      flat_delta/ingest_batch=<stream>-<epoch>/flat/bucket=<b>/run-t<t>.parquet
      flat_delta/ingest_batch=<stream>-<epoch>/doc_stats/run-t<t>.parquet
@@ -127,13 +127,11 @@ def _ingest_batch(
     bdir = _batch_dir(index_dir, f"{stream}-{epoch}")
     fs.delete(bdir)  # a replayed epoch rewrites its batch whole
     stats = load_stats(index_dir)
-    # bucket and salt exactly as the base did, whatever cfg says
+    # bucket exactly as the base did, whatever cfg says
     icfg = dataclasses.replace(
         cfg,
         index=dataclasses.replace(
-            cfg.index,
-            term_buckets=int(stats["term_buckets"]),
-            salt_buckets=int(stats["salt_buckets"]),
+            cfg.index, term_buckets=int(stats["term_buckets"])
         ),
     )
     staged = join_path(bdir, STAGED_INPUT)
@@ -143,7 +141,7 @@ def _ingest_batch(
         files = list_parquet_files(staged)
     summary = p1_direct.build_flat_runs(
         spark, files, join_path(bdir, "flat"), join_path(bdir, "doc_stats"),
-        icfg, stats["hot_terms"],
+        icfg,
     )
     fs.delete(staged)
     fs.write_text_atomic(join_path(bdir, BATCH_MARKER), json.dumps(summary))
@@ -193,9 +191,9 @@ def start_incremental_ingest(
 
     Each micro-batch lands as a committed delta batch under
     flat_delta/ingest_batch=<stream>-<epoch>. The index must already have
-    a base (build_index), whose buckets, salts and hot set the batches
-    reuse. The checkpoint (default <index>/stream_checkpoint) outlives
-    folds, so a restarted stream resumes after the files it has read.
+    a base (build_index), whose term buckets the batches reuse. The
+    checkpoint (default <index>/stream_checkpoint) outlives folds, so a
+    restarted stream resumes after the files it has read.
 
     A plain parquet file stream (`spark.readStream.schema(s).parquet(dir)`)
     is read in place: each epoch, a replay too, reads the files its source

@@ -29,9 +29,6 @@ from quickb_spark.query.wand import bm25_topk_segments
 
 CFG = EngineConfig(
     index=IndexConfig(
-        hot_term_doc_fraction=0.2,
-        hot_term_min_df=50,
-        salt_buckets=4,
         block_size=32,
         term_buckets=8,
     )

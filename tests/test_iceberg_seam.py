@@ -22,7 +22,7 @@ import pytest
 from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 
-CFG = EngineConfig(index=IndexConfig(term_buckets=8, salt_buckets=4))
+CFG = EngineConfig(index=IndexConfig(term_buckets=8))
 
 
 def _iceberg_on_classpath(spark) -> bool:

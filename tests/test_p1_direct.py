@@ -1,7 +1,6 @@
 """The build engine: bit-identity of its hashes + input-shape equivalence.
 
-Phase 1 (index/p1_direct.py) mints doc_ids, term hashes and salts in
-Python; chunking.udf.chunk_documents mints doc ids with the JVM
+Phase 1 (index/p1_direct.py) mints doc_ids and term hashes in Python; chunking.udf.chunk_documents mints doc ids with the JVM
 expression xxhash64(repo, path, commit, chunk_idx). These tests pin (a)
 bit-identity of every hash the two share with the JVM expressions, and
 (b) full index equivalence — stats, doc stats, lexicon, decoded posting
@@ -14,7 +13,6 @@ same phase-1 tasks).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -40,19 +38,13 @@ from quickb_spark.query.searcher import Searcher
 
 N_DOCS = 400
 
-# pinned hot set: the two input shapes sample DIFFERENT rows (chunk rows
-# vs document rows) — equivalence must be tested under the same salt
-# assignment, so both builds read this pre-seeded file
-_HOT = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
-        "est_postings": 60_000}
+# Zipf-hot terms of the fixture corpus (most python docs hold them)
+_HOT_TERMS = ("def", "return", "self")
 
 
 def _cfg() -> EngineConfig:
     return EngineConfig(
-        index=IndexConfig(
-            term_buckets=8, salt_buckets=4,
-            hot_term_min_df=5, hot_term_doc_fraction=0.02,
-        )
+        index=IndexConfig(term_buckets=8)
     )
 
 
@@ -63,19 +55,11 @@ def corpus(spark, tmp_path_factory):
     return path
 
 
-def _seed_hot(index_dir: str) -> None:
-    os.makedirs(os.path.join(index_dir, "meta"), exist_ok=True)
-    with open(os.path.join(index_dir, "meta", "hot_terms.json"), "w") as f:
-        json.dump(_HOT, f)
-
-
 @pytest.fixture(scope="module")
 def both_indexes(spark, corpus, tmp_path_factory):
     root = tmp_path_factory.mktemp("p1idx")
     idx_ch = str(root / "chunks")
     idx_di = str(root / "direct")
-    _seed_hot(idx_ch)
-    _seed_hot(idx_di)
     build_index(
         spark, index_dir=idx_ch, cfg=_cfg(),
         chunks=chunk_documents(spark.read.parquet(corpus), _cfg()),
@@ -105,8 +89,8 @@ def _sha256_tree(index_dir: str) -> dict[str, str]:
 
 def test_chunks_build_byte_identical_to_corpus_uri_build(both_indexes):
     """build_index(chunks=chunk_documents(docs)) runs the same phase-1
-    tasks over the staged (doc_id, text) rows: under the same hot set its
-    segment and lexicon files and stats.json are byte-identical to the
+    tasks over the staged (doc_id, text) rows: its segment and lexicon
+    files and stats.json are byte-identical to the
     corpus_uri= build, and no staged copy is left behind."""
     from quickb_spark.index.segments import STAGED_INPUT
 
@@ -119,7 +103,7 @@ def test_chunks_build_byte_identical_to_corpus_uri_build(both_indexes):
 def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
                                                            tmp_path):
     """A chunks= build stages its input with one Spark write and then runs
-    the documents= build's jobs: phase 0, phase 1 and one phase-2 wave. A
+    the documents= build's jobs: phase 1 and one phase-2 wave. A
     documents= build over createDataFrame stages too; one over a plain
     parquet scan reads the scan's files in place and runs no staging job.
     Jobs are counted with the status tracker over a job group the test
@@ -142,7 +126,31 @@ def test_chunks_build_runs_as_many_jobs_as_documents_build(spark, corpus,
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         counts[name] = len(sc.statusTracker().getJobIdsForGroup(gid))
-    assert counts == {"documents": 3, "documents_in_memory": 4, "chunks": 4}
+    assert counts == {"documents": 2, "documents_in_memory": 3, "chunks": 3}
+
+
+def test_corpus_uri_build_runs_two_jobs_and_samples_nothing(spark, corpus,
+                                                          tmp_path):
+    """A corpus_uri= build runs exactly two Spark jobs, phase 1 and one
+    phase-2 wave: no sampling job precedes phase 1, no phase0 label is
+    timed, and no hot-term file or salt setting is written."""
+    sc = spark.sparkContext
+    idx = str(tmp_path / "two_jobs")
+    gid = "test-build-jobs-corpus-uri"
+    timings = {}
+    sc.setJobGroup(gid, gid)
+    try:
+        build_index(spark, index_dir=idx, cfg=_cfg(), corpus_uri=corpus,
+                    timings=timings)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 2
+    assert not any(label.startswith("phase0") for label in timings)
+    assert not os.path.exists(os.path.join(idx, "meta", "hot_terms.json"))
+    stats = load_stats(idx)
+    assert stats["format_version"] == 6
+    assert not {"hot_terms", "salt_buckets"} & set(stats)
 
 
 def test_hash_bit_identity(spark):
@@ -168,7 +176,7 @@ def test_hash_bit_identity(spark):
     for row, w4, (r, *_rest) in zip(got, want4, rows):
         assert row["h4"] == int(w4)
         assert row["h1"] == xxh_str(r)
-    # long path + pmod (the salt column)
+    # long path + pmod (phase 2's term split of a big bucket)
     longs = [0, 1, -1, 2**62, -(2**62), 42]
     ldf = spark.createDataFrame([(v,) for v in longs], "v long")
     got_l = ldf.select(
@@ -234,7 +242,7 @@ def test_lexicon_identical(spark, both_indexes):
 
 def _postings_map(spark, index_dir: str, term_hs: list[int]):
     """term_h -> sorted [(doc_id, tf, dl, positions-tuple)] merged across
-    salt groups and partial segment rows."""
+    a term's segment rows."""
     stats = load_stats(index_dir)
     rows = (
         spark.read.parquet(os.path.join(index_dir, "segments"))
@@ -266,9 +274,9 @@ def test_posting_lists_identical(spark, both_indexes):
         .limit(40)
         .collect()
     )
-    # hottest terms (salted, multi-block) + the pinned hot set
+    # hottest terms (multi-block) + the fixture's Zipf-hot terms
     term_hs = sorted({int(r["term_h"]) for r in lex} |
-                     {xxh_str(t) for t in _HOT["hot_terms"]})
+                     {xxh_str(t) for t in _HOT_TERMS})
     pm_ch = _postings_map(spark, idx_ch, term_hs)
     pm_di = _postings_map(spark, idx_di, term_hs)
     assert pm_ch == pm_di
@@ -363,7 +371,7 @@ def test_runs_carry_doc_len_by_default(spark, both_indexes):
     level and is gone."""
     _, idx_di = both_indexes
     names = _run_schemas(idx_di)
-    assert {"term_h", "salt", "doc_id", "tf", "doc_len", "pos_vb"} <= names
+    assert names == {"term_h", "doc_id", "tf", "doc_len", "pos_vb"}
 
 
 def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
@@ -379,8 +387,8 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
 
     rng = np.random.default_rng(7)
     # few docs x many terms (big bucket): each term's
-    # postings are a sorted subset of the doc pool, so every (term, salt)
-    # group is strictly doc-increasing while the bucket's bytes are
+    # postings are a sorted subset of the doc pool, so every term's list
+    # is strictly doc-increasing while the bucket's bytes are
     # dominated by incompressible per-posting position payloads
     n_pool, n_terms, per_term, pos_bytes = 60, 2000, 50, 30
     n = n_terms * per_term
@@ -400,7 +408,6 @@ def test_memory_guard_splits_and_fails_fast(spark, tmp_path):
     run = pa.table(
         {
             "term_h": pa.array(th, type=pa.int64()),
-            "salt": pa.array(np.zeros(n, np.int32), type=pa.int32()),
             "doc_id": pa.array(did, type=pa.int64()),
             "tf": pa.array(np.ones(n, np.int32), type=pa.int32()),
             "doc_len": pa.array(np.full(n, 3, np.int64), type=pa.int64()),
@@ -471,44 +478,6 @@ def _decode_seg_dir(spark, seg_dir, term_hs, block_size):
     return {h: (sorted(p), sorted(ps)) for h, (p, ps) in out.items()}
 
 
-def test_presample_rowgroup_pruning_identical(corpus):
-    """The row-group-pruned presample reads EXACTLY the rows the whole-file
-    slice read (the hot set is seeded/deterministic — assert equality)."""
-    import pyarrow.parquet as pq
-
-    from quickb_spark.chunking.splitter import split_document
-    from quickb_spark.config import TOKEN_PATTERN
-    from quickb_spark.index.p1_direct import _TOKEN_RE, _sample_task
-
-    cfg = _cfg().chunker
-    files = [p for p, _ in list_parquet_files(corpus)][:3]
-    for path in files:
-        for k, nk, frac in ((0, 1, 0.3), (1, 3, 0.5), (2, 3, 0.07)):
-            got = _sample_task(path, k, nk, frac, cfg)
-            # whole-file reference implementation (the pre-round-4 logic)
-            tbl = pq.read_table(path, columns=["lang", "content"])
-            n = tbl.num_rows
-            lo = (n * k) // nk
-            take = max(1, int(round(n * frac / nk))) if n else 0
-            sl = tbl.slice(lo, max(0, min(take, n - lo)))
-            from collections import Counter
-
-            df, n_chunks, n_postings = Counter(), 0, 0
-            for lang, content in zip(
-                sl.column("lang").to_pylist(), sl.column("content").to_pylist()
-            ):
-                if not content:
-                    continue
-                for text in split_document(content, lang, cfg):
-                    toks = set(_TOKEN_RE.findall(text.lower()))
-                    if not toks:
-                        continue
-                    n_chunks += 1
-                    n_postings += len(toks)
-                    df.update(toks)
-            assert got == (n_chunks, n_postings, df)
-
-
 def test_runs_checkpoint_resume(spark, both_indexes, tmp_path):
     """A direct-built index re-encodes from its sorted-runs checkpoint with
     no input at all (commit ledger wiped -> full phase-2 re-merge)."""
@@ -551,7 +520,6 @@ def test_documents_build_equals_corpus_uri_build(spark, corpus, both_indexes,
 
     _, idx_di = both_indexes
     idx = str(tmp_path / "from_documents")
-    _seed_hot(idx)
     timings = {}
     with monkeypatch.context() as m:
         m.setattr(segments, "stage_documents", _no_staging)
@@ -586,7 +554,6 @@ def test_documents_path_with_space_and_percent_builds_in_place(
     odd = str(tmp_path / "a b%20c" / "documents")
     shutil.copytree(corpus, odd)
     idx = str(tmp_path / "odd")
-    _seed_hot(idx)
     with monkeypatch.context() as m:
         m.setattr(segments, "stage_documents", _no_staging)
         build_index(spark, index_dir=idx, cfg=_cfg(),
@@ -626,8 +593,6 @@ def test_documents_build_stages_other_plans(spark, corpus, tmp_path,
         return real_stage(*args, **kwargs)
 
     idx, want = str(tmp_path / "idx"), str(tmp_path / "want")
-    for d in (idx, want):
-        _seed_hot(d)
     with monkeypatch.context() as m:
         m.setattr(segments, "stage_documents", spy)
         build_index(spark, index_dir=idx, cfg=_cfg(), documents=df)
@@ -653,41 +618,6 @@ def test_duplicated_posting_fails_loudly(spark, both_indexes, tmp_path):
     invalidate_buckets(IndexFS(idx), idx, [3])
     with pytest.raises(ValueError, match=r"bucket=3\b"):
         build_index(spark, index_dir=idx, cfg=_cfg())
-
-
-@pytest.mark.parametrize("max_terms", [5, 2000])
-def test_presample_packed_matches_unit_by_unit(spark, corpus, max_terms):
-    """Packing the phase-0 sample units into per-slot tasks must not move
-    the hot set: the result equals running every unit one by one in the
-    driver and merging in unit order (Counter insertion order breaks df
-    ties at the max_terms cut, so the merge order is part of the answer)."""
-    import pyarrow as pa
-
-    from quickb_spark.index.p1_direct import (
-        _hot_from_samples,
-        _sample_task,
-        _sample_units,
-        presample_hot_direct,
-    )
-
-    cfg = _cfg()
-    frac, margin = 0.3, 0.5
-    units, _costs, eff = _sample_units(list_parquet_files(corpus), frac)
-    assert len(units) > spark.sparkContext.defaultParallelism
-    prev_cpus = pa.cpu_count()
-    try:
-        parts = [
-            _sample_task(p, k, nk, pf, cfg.chunker)
-            for p, k, nk, pf in units
-        ]
-    finally:
-        pa.set_cpu_count(prev_cpus)
-    want = _hot_from_samples(parts, eff, cfg, margin, max_terms)
-    got = presample_hot_direct(
-        spark, list_parquet_files(corpus), cfg, frac, margin, max_terms
-    )
-    assert got == want
-    assert 0 < len(got[0]) <= max_terms and got[1] > 0
 
 
 def test_packed_merge_files_match_unit_by_unit(spark, both_indexes, tmp_path):
@@ -730,7 +660,6 @@ def test_engine_jobs_keep_caller_job_labels(spark, corpus, tmp_path):
     job description and job group as they found them."""
     sc = spark.sparkContext
     idx = str(tmp_path / "labels")
-    _seed_hot(idx)
     sc.setJobGroup("test-caller-group", "caller description")
     try:
         build_index(spark, index_dir=idx, cfg=_cfg(), corpus_uri=corpus)

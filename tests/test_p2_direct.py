@@ -1,6 +1,7 @@
 """Phase-2 vectorized encoder vs the reference per-list codec.
 
-The build encodes every (term_h, salt) group of a bucket in whole-input
+The build encodes every segment row (a term's posting list, or one
+doc-range part of a long one) of a bucket in whole-input
 vectorized passes (index/p2_direct.encode_sorted_groups). The reference
 codec encodes one posting list at a time (index/encode.encode_posting_list).
 Every segment row must be BYTE-IDENTICAL to the reference encoding of its
@@ -25,9 +26,6 @@ from quickb_spark.query.wand import bm25_topk_segments
 
 CFG = EngineConfig(
     index=IndexConfig(
-        hot_term_doc_fraction=0.2,
-        hot_term_min_df=50,
-        salt_buckets=4,
         block_size=32,
         term_buckets=16,
     )
@@ -85,9 +83,8 @@ def test_direct_handles_gaps_over_2_63():
 
     doc_ids = np.array([-(2**62) - 5, 2**62 + 7], dtype=np.int64)  # gap > 2^63
     pos = b"\x01\x02\x05"
-    tbl, n_groups, max_salt = encode_sorted_groups(
+    tbl, n_groups, max_part = encode_sorted_groups(
         np.array([123456789, 123456789], dtype=np.int64),
-        np.zeros(2, dtype=np.int32),
         doc_ids,
         np.array([2, 1], dtype=np.int64),
         np.array([10, 20], dtype=np.int64),
@@ -95,7 +92,7 @@ def test_direct_handles_gaps_over_2_63():
         pos,
         128, True, "test",
     )
-    assert n_groups == 1 and max_salt == 0
+    assert n_groups == 1 and max_part == 0
     row = tbl.to_pylist()[0]
     assert row["df_part"] == 2
     ref = encode_posting_list(
@@ -111,7 +108,6 @@ def test_direct_handles_gaps_over_2_63():
 def test_direct_no_positions(spark, tmp_path):
     cfg = EngineConfig(
         index=IndexConfig(
-            hot_term_doc_fraction=0.2, hot_term_min_df=50, salt_buckets=4,
             block_size=32, term_buckets=16, store_positions=False,
         )
     )

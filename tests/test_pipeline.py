@@ -9,7 +9,7 @@ from quickb_spark.config import EngineConfig, IndexConfig
 from quickb_spark.corpus import fixture_queries, generate_documents_df
 from quickb_spark.pipeline import PipelineConfig, PipelineStage, run_pipeline
 
-CFG = EngineConfig(index=IndexConfig(term_buckets=8, salt_buckets=4))
+CFG = EngineConfig(index=IndexConfig(term_buckets=8))
 
 
 def _ranked(df):

@@ -1,5 +1,6 @@
 """Compressed segment build + BM25 serving: correctness vs the brute-force
-oracle, salting behavior, resumability (SURVEY.md §5 items 2, 3, 6, 7)."""
+oracle, one doc-ordered row per term, resumability (SURVEY.md §5 items 2,
+3, 6, 7)."""
 
 from __future__ import annotations
 
@@ -29,12 +30,9 @@ from tests.oracle_bm25 import OracleIndex
 
 N_DOCS = 250
 
-# tiny hot threshold so the fixture corpus actually triggers salting
+# small blocks so hot terms' lists span many blocks
 CFG = EngineConfig(
     index=IndexConfig(
-        hot_term_doc_fraction=0.2,
-        hot_term_min_df=50,
-        salt_buckets=4,
         block_size=32,
         term_buckets=16,
     )
@@ -85,24 +83,23 @@ def test_segments_decode_to_oracle_postings(spark, built, oracle):
     inv = {xxhash64(t): t for t in oracle.postings}
     seg = spark.read.parquet(f"{built}/segments").collect()
     got: dict[str, dict[int, int]] = {}
-    salts: dict[str, int] = {}
     for r in seg:
         docs, tfs = decode_posting_list(
             r["doc_stream"], r["tf_stream"], r["df_part"], block_size=CFG.index.block_size
         )
         term = inv[int(r["term_h"])]
-        plist = got.setdefault(term, {})
-        for d, tf in zip(docs.tolist(), tfs.tolist()):
-            assert d not in plist, "salted sub-lists must be disjoint"
-            plist[d] = tf
-        salts[term] = max(salts.get(term, 0), r["salt"])
+        # every list is far below the doc-range row threshold: one row
+        # (part 0) per term, strictly doc-ordered
+        assert term not in got, f"{term!r} has more than one segment row"
+        assert r["part"] == 0
+        assert (docs[1:] > docs[:-1]).all()
+        got[term] = dict(zip(docs.tolist(), tfs.tolist()))
     expected = {
         t: {d: len(p) for d, p in pl.items()} for t, pl in oracle.postings.items()
     }
     assert got == expected
-    # skew test: `def` (in most python docs) must actually have been salted
-    assert salts.get("def", 0) > 0, f"hot term not salted (salts: def={salts.get('def')})"
-    assert salts.get("zzz", -1) in (-1, 0)
+    # skew: `def` (in most python docs) spans many blocks in its one row
+    assert len(got["def"]) > 4 * CFG.index.block_size
 
 
 def test_segment_positions_roundtrip_to_oracle(spark, built, oracle):
@@ -245,11 +242,11 @@ def test_segments_meta_table(spark, built):
 
 
 def test_format_version_fail_fast(spark, built, tmp_path):
-    """v3 format discipline: a stats.json without the current
-    format_version must be rejected by every reader (silently decoding an
-    old layout would produce wrong doc_ids past the first block), and a
-    pre-v3 flat checkpoint (no baked-in salt column) must refuse to
-    resume."""
+    """Format discipline: a stats.json without the current format_version
+    (none, or v5's) must be rejected by every reader (silently decoding an
+    old layout would produce wrong doc_ids past the first block) and by a
+    resumed build, and a flat checkpoint whose runs lack doc_len must
+    refuse to resume."""
     import re
 
     from quickb_spark.index.segments import FORMAT_VERSION
@@ -266,12 +263,25 @@ def test_format_version_fail_fast(spark, built, tmp_path):
     with pytest.raises(RuntimeError, match="format_version"):
         load_stats(old)
 
-    # pre-v3 checkpoint (salt column missing) -> build_index refuses resume
+    # a v5 index (salted runs, hot_terms in stats.json) -> the rebuild
+    # message, from a reader and from a resumed build
+    v5 = str(tmp_path / "v5_idx")
+    shutil.copytree(built, v5)
+    json.dump(
+        st | {"format_version": 5, "salt_buckets": 4, "hot_terms": ["def"]},
+        open(f"{v5}/meta/stats.json", "w"),
+    )
+    for refuse in (lambda: load_stats(v5),
+                   lambda: build_index(spark, index_dir=v5, cfg=CFG)):
+        with pytest.raises(RuntimeError, match="rebuild the index"):
+            refuse()
+
+    # runs without doc_len -> build_index refuses resume
     legacy = str(tmp_path / "legacy_idx")
-    spark.read.parquet(f"{built}/flat").drop("salt").write.partitionBy(
+    spark.read.parquet(f"{built}/flat").drop("doc_len").write.partitionBy(
         "bucket"
     ).parquet(f"{legacy}/flat")
-    with pytest.raises(RuntimeError, match=re.escape("salt")):
+    with pytest.raises(RuntimeError, match=re.escape("doc_len")):
         build_index(spark, index_dir=legacy, cfg=CFG)
 
 

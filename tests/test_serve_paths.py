@@ -9,6 +9,7 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -24,9 +25,6 @@ from quickb_spark.query.searcher import Searcher
 
 CFG = EngineConfig(
     index=IndexConfig(
-        hot_term_doc_fraction=0.2,
-        hot_term_min_df=50,
-        salt_buckets=4,
         block_size=32,
         term_buckets=8,
     )
@@ -178,10 +176,15 @@ def test_any_mode_reuses_phrase_preload(spark, built, tmp_path):
 def test_concurrent_topk_matches_serial(spark, built, monkeypatch):
     """8 threads on one Searcher, scoring in the driver while a 1 MiB
     budget keeps the shared decoded-table LRU evicting, return exactly
-    the serial answers and leave the LRU's byte count consistent."""
+    the serial answers and leave the LRU's byte count consistent. The LRU
+    starts empty: tables earlier tests left in it would make every call a
+    hit, and a hit never enforces the budget."""
     idx, phrases = built
     monkeypatch.setenv("QKB_SERVE_SHM_DIR", "")  # every miss decodes
     monkeypatch.setattr(sd, "_cache_budget", lambda: 1 << 20)
+    with sd._TBL_LOCK:
+        monkeypatch.setattr(sd, "_TBL_CACHE", OrderedDict())
+        monkeypatch.setattr(sd, "_TBL_CACHE_BYTES", [0])
     s = _searcher(spark, idx)
     calls = [
         ([q], {}) for q in QUERIES[:6]

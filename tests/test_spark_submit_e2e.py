@@ -33,8 +33,6 @@ N_DOCS = 300
 N_QUERIES = 6
 BUILD_ARGS = [
     "--term-buckets", "8",
-    "--salt-buckets", "2",
-    "--hot-min-df", "100",
     "--wave-size", "8",
 ]
 
@@ -140,9 +138,7 @@ def test_spark_submit_py_files_cluster_e2e(spark, tmp_path):
     # reference: same corpus + config, built and served in THIS process
     idx_local = os.path.join(work, "idx_local")
     cfg = EngineConfig(
-        index=IndexConfig(
-            term_buckets=8, salt_buckets=2, hot_term_min_df=100
-        )
+        index=IndexConfig(term_buckets=8)
     )
     build_index(
         spark, index_dir=idx_local, cfg=cfg, wave_size=8,

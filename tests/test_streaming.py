@@ -20,12 +20,7 @@ from quickb_spark.streaming.incremental import (
 )
 
 CFG = EngineConfig(
-    index=IndexConfig(
-        hot_term_doc_fraction=0.2,
-        hot_term_min_df=40,
-        salt_buckets=4,
-        term_buckets=8,
-    )
+    index=IndexConfig(term_buckets=8)
 )
 
 N_BASE, N_NEW = 150, 40
@@ -211,17 +206,10 @@ def test_restarted_stream_does_not_reingest_folded_docs(spark, tmp_path):
 
 
 def _build_from_rows(spark, tmp_path, name, docs):
-    """A corpus_uri= index over `docs` under a pinned hot set."""
-    import json
-    import os
-
+    """A corpus_uri= index over `docs`."""
     corpus = str(tmp_path / f"{name}_corpus")
     spark.createDataFrame(docs, DOCUMENTS_SCHEMA).write.parquet(corpus)
     idx = str(tmp_path / name)
-    os.makedirs(os.path.join(idx, "meta"))
-    with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
-        json.dump({"hot_terms": ["def", "return", "self"],
-                   "sample_fraction": 0.02, "est_postings": 0}, f)
     build_index(spark, index_dir=idx, cfg=CFG, corpus_uri=corpus)
     return idx
 
@@ -552,26 +540,14 @@ def test_fold_on_pipeline_index_equals_rebuild(spark, tmp_path):
     chunks=) takes streaming deltas like any other: query_with_deltas and
     then the folded index equal a documents= rebuild over base + delta,
     scores compared with ==, tied docs in doc_id order."""
-    import json
-    import os
-
     from quickb_spark.pipeline import PipelineConfig, run_pipeline
 
     rows = [gen_document(i, 31) for i in range(120)]
     base, new = rows[:100], rows[100:]
     new += [(r, f"{p}.copy", c, lang, text) for r, p, c, lang, text in base[:20]]
-    hot = {"hot_terms": ["def", "return", "self"], "sample_fraction": 0.02,
-           "est_postings": 0}
-
-    def seed_hot(idx):
-        os.makedirs(os.path.join(idx, "meta"))
-        with open(os.path.join(idx, "meta", "hot_terms.json"), "w") as f:
-            json.dump(hot, f)
-
     docs_path = str(tmp_path / "docs")
     spark.createDataFrame(base, DOCUMENTS_SCHEMA).write.parquet(docs_path)
     idx = str(tmp_path / "idx")
-    seed_hot(idx)
     run_pipeline(
         spark,
         PipelineConfig(documents_path=docs_path, index_dir=idx, engine=CFG,
@@ -583,7 +559,6 @@ def test_fold_on_pipeline_index_equals_rebuild(spark, tmp_path):
     start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
 
     fresh = str(tmp_path / "fresh")
-    seed_hot(fresh)
     build_index(
         spark, index_dir=fresh, cfg=CFG,
         documents=spark.createDataFrame(base + new, DOCUMENTS_SCHEMA),
