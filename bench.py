@@ -129,13 +129,13 @@ def main() -> None:
     qdf = spark.createDataFrame(fixture_queries(), ["query_id", "query_text"])
 
     # warm-up: miniature full build + query (JIT/codegen + worker pool).
-    # The mini build runs the SAME direct phase-0/1/2 path as the timed
+    # The mini build runs the SAME direct phase-1/2 path as the timed
     # build (corpus_uri=, not documents=): round-4's bench warmed only the
     # channel path's pandas-UDF workers, so the timed build paid ~5-6s of
     # first-use RDD-worker imports + cold task code inside its window —
     # that, not the engine, was most of the r4 q_index_build "regression"
-    # at sf0.1 (reproduced by the round-5 run-layout A/B: rep-0 phase-0
-    # 6.4s, every warm rep 0.5s).
+    # at sf0.1 (reproduced by the round-5 run-layout A/B: the first job of
+    # rep 0 took 6.4s, of every warm rep 0.5s).
     # 2 files per task slot: the direct phase-1 plans min(len(files), cores)
     # tasks on tiny corpora, so fewer files than cores would warm only a
     # subset of the worker pool (8 files warmed 8 of 32 workers — the

@@ -16,3 +16,8 @@ posting-list encoding, WAND scoring), zero custom Catalyst rules.
 __version__ = "0.1.0"
 
 from quickb_spark.config import EngineConfig  # noqa: F401
+from quickb_spark.session import keep_zip_directories
+
+# every process that imports the engine (each worker that unpickles an
+# engine closure) stops re-reading zip archives on every task
+keep_zip_directories()

@@ -1,10 +1,14 @@
 """Driver-side task packing: many fixed work units, one Spark task per slot.
 
 A Python RDD task has a fixed cost (worker hand-off, closure unpickle,
-result pickle) that does not depend on how much work it carries. Engine
-phases whose work units are many and small — the 64 phase-0 sample slices,
-the phase-2 bucket/term-split merges, the per-file preload decode — paid
-that cost once per UNIT. `run_packed` keeps the units (so every output is
+result pickle) that does not depend on how much work it carries. A
+trivial 2-task job on a 2-slot local master (4-vCPU VM) takes ~0.1 s:
+~0.08 s from submit to the task function's start, ~0.02 s from its end to
+the collected result. (Another 0.15-0.2 s of zip directory re-reads per
+task came before the function until `session.keep_zip_directories`.)
+Engine phases whose work units are many and small — the phase-2
+bucket/term-split merges, the per-file preload decode — paid that cost
+once per UNIT. `run_packed` keeps the units (so every output is
 exactly what the unit computes on its own) and changes only how they map
 to tasks: LPT bin-packing (longest processing time first; each unit,
 largest first, goes to the least-loaded task) into at most
